@@ -239,10 +239,7 @@ object ScaleBench {
     // assert its exactness before the budgeted plan builds
     def one(sampled: DataFrame, truth: => DataFrame, full: => DataFrame)
         : (Double, Long, Long, Double) = {
-      // the brute tier returns before the budget match and so never
-      // touches lastCapReport — clear any stale report from earlier
-      // timed queries before asserting the truth run stayed exact
-      DedupOps.lastCapReport = None
+      // every Jaccard plan sets lastCapReport: after this count it describes truth
       val t = truth.count()
       require(t > 0, "recallProbe: empty ground truth — enlarge the sample")
       require(DedupOps.lastCapReport.isEmpty,

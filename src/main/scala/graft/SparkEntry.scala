@@ -42,10 +42,13 @@ private[graft] object Queries {
   private def cust(s: SparkSession, d: String) = Tables.customer(s, d)
 
   /** Per-sf fixture directory for queries that write their own input or
-    * sink at construction time — one place to relocate the fixture root.
+    * sink at construction time: `target/fixtures` under the working
+    * directory (the project base under sbt), so each checkout writes its
+    * own.
     */
   private def fixtureDir(d: String, prefix: String): String =
-    s"/root/repo/target/fixtures/${prefix}_${new java.io.File(d).getName}"
+    new java.io.File(s"target/fixtures/${prefix}_${new java.io.File(d).getName}")
+      .getAbsolutePath
 
   // ================================================================ flagship
   /** TPC-H Q1: scan → pushed filter → hash agg (partial+final, single

@@ -245,15 +245,20 @@ object GraftFunctions {
       "graft_vtable_props" -> (vtablePropsPlan _),
       "graft_register_vtable" -> (vtableRegisterPlan _))
 
-  /** Idempotent per-session registration. */
+  /** Idempotent per-session registration: a function or table function
+    * already in the session registry (an earlier call, or the
+    * [[GraftSqlExtensions]] injection) is left as it is.
+    */
   def register(spark: SparkSession): Unit = {
+    val registry = spark.sessionState.functionRegistry
     fns.foreach { case (name, builder) =>
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        name, builder, "built-in")
+      if (!registry.functionExists(FunctionIdentifier(name)))
+        registry.createOrReplaceTempFunction(name, builder, "built-in")
     }
+    val tableRegistry = spark.sessionState.tableFunctionRegistry
     tableFns.foreach { case (name, builder) =>
-      spark.sessionState.tableFunctionRegistry.createOrReplaceTempFunction(
-        name, builder, "built-in")
+      if (!tableRegistry.functionExists(FunctionIdentifier(name)))
+        tableRegistry.createOrReplaceTempFunction(name, builder, "built-in")
     }
     // sessions built without spark.sql.extensions still get the
     // versioned-table data-skipping rule (the experimental batch runs

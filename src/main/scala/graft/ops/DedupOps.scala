@@ -276,280 +276,301 @@ object DedupOps {
     (0 until maxDistance + 1).map(slices)
   }
 
-
-  // ------------------------------------------------- prefix-filter join
-  /** Slack-conservative ceiling for candidate bounds: t·sz computed in
-    * doubles can land one ulp ABOVE the exact rational (e.g. 0.55·100 →
-    * 55.000000000000007, ceil → 56), which would over-tighten the filter
-    * and drop true pairs whose Jaccard equals the threshold exactly.
-    * Subtracting 1e-6 (far above accumulated double error for any
-    * realistic set size, far below 1) makes every bound err on the LOOSE
-    * side only — a slightly wider candidate set is always safe because
-    * final verification is exact.
+  // ------------------------------------------------- exact Jaccard pairs
+  /** Slack-conservative ceiling for candidate bounds: t·sz in doubles can
+    * land one ulp ABOVE the exact rational (0.55·100 → 55.000000000000007,
+    * ceil → 56) and drop pairs whose Jaccard equals the threshold exactly.
+    * Subtracting 1e-6 makes every bound err on the LOOSE side only — safe,
+    * because final verification is exact.
     */
   private def ceilSafe(c: Column): Column = ceil(c - lit(1e-6))
 
-  /** Collect the (cap-bounded) distinct-token dictionary to the driver and
-    * attach per-`keyCols`-group dense-id arrays (`ids`) and packed bitsets
-    * (`bits`). `toks` must be a persisted single-column ("tok") DataFrame
-    * of the distinct tokens; it is unpersisted after the collect.
+  /** Per-`keyCols`-group token-id bitsets (`sz`, `bits`) over the
+    * driver-side dictionary `dict` (≤ [[MaxBitsetUniverse]] tokens).
     */
   private def attachBitsets(docs: DataFrame, keyCols: Seq[String],
-                            toks: DataFrame, universe: Long): DataFrame = {
+                            dict: Array[String]): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
-    val nWords = ((universe + 63) / 64).toInt
-    val dictLocal = toks.orderBy("tok").select("tok").as[String]
-      .collect().zipWithIndex
-    toks.unpersist()
-    val dict = spark.createDataFrame(dictLocal.toSeq).toDF("tok", "tid")
-    docs.select(keyCols.map(col) :+ explode(col("sh")).as("tok"): _*)
-      .join(broadcast(dict), "tok")
-      .groupBy(keyCols.map(col): _*)
+    val keys = keyCols.map(col)
+    docs.select(keys :+ explode(col("sh")).as("tok"): _*)
+      .join(broadcast(dict.toSeq.zipWithIndex.toDF("tok", "tid")), "tok")
+      .groupBy(keys: _*)
       .agg(collect_list(col("tid")).as("ids"))
-      .withColumn("bits",
-        graft.functions.VectorExpressions.idsToBitset(col("ids"), nWords))
+      .select(keys :+ size(col("ids")).as("sz") :+ graft.functions.VectorExpressions
+        .idsToBitset(col("ids"), (dict.length + 63) / 64).as("bits"): _*)
   }
 
   /** GLOBAL exact Jaccard similarity join — every pair with J ≥ threshold
-    * across the whole corpus, NO blocking column — via the prefix filter
-    * (AllPairs/PPJoin family, public literature).
+    * across the whole corpus, NO blocking column. Tiers ([[JaccardPlan]]):
+    *  - bitset: ≤ `bruteMaxDocs` docs whose token universe fits
+    *    `maxBitsetUniverse` brute-force all pairs as a broadcast nested
+    *    loop over per-doc bitsets, popcount verify in the join condition;
+    *  - prefix: the AllPairs/PPJoin prefix filter. Under any canonical
+    *    token order, sets with J ≥ t share a token in their first
+    *    |X| − ⌈t·|X|⌉ + 1 tokens (given the size filter t·|A| ≤ |B| ≤
+    *    |A|/t), so the prefix-token equi-join is a candidate superset,
+    *    verified by the sorted merge-scan kernel. Tokens go RAREST-FIRST
+    *    by document frequency. Pruning scales with universe diversity:
+    *    ~73% of pairs on a 377-gram corpus, far more on Zipfian text;
+    *  - escalated: sampled prefix-join total over `candidatePairBudget`.
     *
-    * Theorem used: under any canonical total order of the token universe,
-    * two sets with J(A,B) ≥ t share at least one token in their first
-    * |X| − ⌈t·|X|⌉ + 1 tokens, PROVIDED the size filter
-    * t·|A| ≤ |B| ≤ |A|/t holds (pairs outside it cannot reach t). So the
-    * candidate set from the prefix-token equi-join is a superset of the
-    * answer — exact verification keeps precision, the theorem guarantees
-    * recall.
-    *
-    * Plan shape at scale: tokens ordered RAREST-FIRST by global document
-    * frequency (one aggregation; broadcast back), so prefix tokens are the
-    * most selective — the candidate join on a rare token touches few docs.
-    * Shuffles: df-aggregation, per-doc regroup, candidate equi-join on
-    * token, pair distinct, exact verify via the sorted-merge kernel.
-    * Never materializes all pairs.
-    *
-    * Selectivity caveat (measured): pruning power scales with token-universe
-    * diversity. The synthetic bench corpus has only ~377 distinct 3-grams,
-    * so prefixes prune just ~73% of the pair space; real text (50k+ trigram
-    * universe, Zipfian) yields rare prefix tokens that touch a handful of
-    * docs each. The positional filter (PPJoin) recovers part of the gap.
+    * Pins the result holds until Spark's ContextCleaner drops it with the
+    * plan: bitset — one localCheckpoint of (id, sz, bits); prefix — none;
+    * escalated — the DISK_ONLY raw-text pin with one band chunk, else one
+    * DISK_ONLY pin of verified pairs per chunk.
     */
   def jaccardPairsGlobal(df: DataFrame, idCol: String, textCol: String,
                          n: Int = 3, threshold: Double = 0.6,
                          bruteMaxDocs: Long = BruteForceMaxDocs,
                          maxBitsetUniverse: Long = MaxBitsetUniverse,
-                         candidatePairBudget: Option[Long] = None): DataFrame = {
-    val docs = ScanSpread.spread(
-        df.select(col(idCol).as("id"), col(textCol).as("__t")), col("id"))
-      .select(col("id"), sortedShingles(col("__t"), n).as("sh"))
-    // Cost-based tier choice, same spirit as Spark picking broadcast vs
-    // shuffle joins from size stats: when the corpus is small enough that
-    // N² cheap verifications beat the prefix join's machinery AND the
-    // token universe fits a dictionary, brute-force all pairs with bitset
-    // popcounts (a 48-byte-per-doc broadcast nested loop). Past either
-    // bound, the AllPairs/PPJoin prefix filter is the path that scales.
-    val nDocs = docs.count()
-    // the prefix tier's input: the raw pipeline, or — when the brute
-    // probe ran but the universe overflowed the dictionary — the already
-    // materialized small relation (bounded), saving the re-scan
-    var prefixInput = docs
-    if (nDocs <= bruteMaxDocs) {
-      // probe cost is bounded: it only runs on <= bruteMaxDocs corpora.
-      // Pin the shingled relation ONCE (bounded: ≤ bruteMaxDocs rows of
-      // (id, sh)) — the universe probe and the bitset attachment below
-      // would otherwise each re-run the scan + shingle kernel, and at
-      // this corpus size the per-pass fixed cost (scan + spread shuffle
-      // + kernel) is a measurable fraction of the whole query. The
-      // prefix tier never pins: its input is unbounded.
-      val small = docs.localCheckpoint()
-      val toks = small.select(explode(col("sh")).as("tok")).distinct().persist()
-      val universe = toks.count()
-      if (universe <= maxBitsetUniverse) {
-        // localCheckpoint: a self-join re-executes its subtree per side, so
-        // without materialization the explode→dict-join→groupBy pipeline
-        // would run twice. The checkpointed relation is 48 B/doc (id, sz,
-        // ⌈U/64⌉-word bitset) — bounded by bruteMaxDocs, trivially resident.
-        val withBits = attachBitsets(small, Seq("id"), toks, universe)
-          .select(col("id"), size(col("ids")).as("sz"), col("bits"))
-          .localCheckpoint()
-        small.unpersist()
-        // size-band ints reject most pairs before any popcount runs
-        // (And evaluates left to right). The jac projection + filter below
-        // gets optimizer-pushed INTO the join condition
-        // (PushPredicateThroughJoin) — the shape we want: a failing pair
-        // dies during condition eval, before a join output row ever
-        // materializes; only surviving pairs pay a second popcount in the
-        // projection. Pinned in DedupSpec so a planner change can't
-        // silently regress to materialize-all-pairs-then-filter.
-        // The size bound `ceil(sz·t)` is precomputed PER ROW (`lo`): the
-        // nested loop evaluates its condition O(n²) times, and
-        // `b.sz >= a.lo && a.sz >= b.lo` is two long compares per pair vs
-        // two double multiplies + two ceils — same predicate exactly
-        // (a.sz >= ceil(b.sz·t) ⇔ a.sz >= b.lo by definition of lo).
-        // Measured neutral at sf0.1 (BNLJ row iteration + popcounts
-        // dominate there); kept because the arithmetic saved scales with
-        // the evaluated-pair count, which grows quadratically.
-        val banded = withBits.withColumn("lo",
-          ceilSafe(col("sz") * threshold).cast("long"))
-        return broadcast(banded.as("a")).join(banded.as("b"),
-            col("a.id") < col("b.id") &&
-              col("b.sz") >= col("a.lo") &&
-              col("a.sz") >= col("b.lo"))
-          .select(col("a.id").as("id_a"), col("b.id").as("id_b"),
-            graft.functions.VectorExpressions
-              .bitsetJaccard(col("a.bits"), col("b.bits")).as("jac"))
-          .filter(col("jac") >= threshold)
+                         candidatePairBudget: Option[Long] = None): DataFrame =
+    jaccardPairs(df, idCol, textCol, None, n, threshold, bruteMaxDocs,
+      maxBitsetUniverse, candidatePairBudget)
+
+  /** Exact Jaccard pairs WITHIN a blocking column — corpora with a natural
+    * partition key (source, shard, cluster id). Null keys never pair.
+    * Tiers ([[JaccardPlan]]): the block equi-join verified by dense-id
+    * bitsets when the token universe fits `maxBitsetUniverse`, by the
+    * sorted merge-scan kernel otherwise; within-block MinHash-LSH when the
+    * exact pair total Σ C(n_blk, 2) exceeds `candidatePairBudget`.
+    *
+    * Pins the result holds until Spark's ContextCleaner drops it with the
+    * plan: bitset — one localCheckpoint of (id, blk, sz, bits);
+    * merge-scan — none; escalated — as in [[jaccardPairsGlobal]].
+    */
+  def jaccardPairsBlocked(df: DataFrame, idCol: String, textCol: String,
+                          blockCol: String, n: Int = 3,
+                          threshold: Double = 0.6,
+                          maxBitsetUniverse: Long = MaxBitsetUniverse,
+                          candidatePairBudget: Option[Long] = None): DataFrame =
+    jaccardPairs(df, idCol, textCol, Some(blockCol), n, threshold,
+      BruteForceMaxDocs, maxBitsetUniverse, candidatePairBudget)
+
+  /** The Jaccard tier decision, a pure function of measured stats. They
+    * arrive by name and are read at most once, so a probe job runs only
+    * when the decision needs its answer.
+    *
+    * The budget bounds the evaluated-pair total it was measured for.
+    * Within blocks that is the exact Σ C(n_blk, 2), the cost of BOTH exact
+    * tiers, so it is checked first; globally it is the sampled prefix-join
+    * total, checked once the bitset tier (N² bounded by `bruteMaxDocs`) is
+    * ruled out. Over budget, candidates come from MinHash-LSH bands — a
+    * band key hashes r minhashes of the WHOLE set, so docs sharing one hot
+    * token no longer collide — and verification stays exact. A pair at J
+    * = t is found w.p. ≥ 1 − (1 − t^r)^bands − 0.0013 (the est-filter's 3σ
+    * tail; `margin` is that floor, σ = sqrt(t(1−t)/k)), higher above t.
+    */
+  private[graft] object JaccardPlan {
+    sealed trait Tier
+    case object Bitset extends Tier
+    /** Sorted merge-scan verify, within blocks or behind the prefix join. */
+    case object MergeScan extends Tier
+    final case class Escalated(report: CapReport, margin: Double) extends Tier
+
+    def choose(blocked: Boolean, docs: => Option[Long], pairTotal: => Long,
+               universe: => Long, budget: Option[Long], budgetSource: String,
+               bruteMaxDocs: Long, maxBitsetUniverse: Long, threshold: Double,
+               lshShape: => (Int, Int)): Tier = {
+      lazy val total = pairTotal
+      lazy val over = budget.exists(total > _)
+      def escalated = {
+        val (bands, r) = lshShape
+        val k = bands * r
+        val bound = 1.0 - math.pow(1.0 - math.pow(threshold, r), bands) - 0.0013
+        Escalated(CapReport(total, budget.get, bands, r, bound, budgetSource),
+          math.max(0.0, threshold -
+            3.0 * math.sqrt(threshold * (1 - threshold) / k) - 1.0 / k))
       }
-      toks.unpersist()
-      prefixInput = small
+      if (blocked && over) escalated
+      else if ((blocked || docs.exists(_ <= bruteMaxDocs)) &&
+          universe <= maxBitsetUniverse) Bitset
+      else if (over) escalated
+      else MergeScan
     }
-    val docsSz = prefixInput.withColumn("sz", size(col("sh")))
-    val tokens = docsSz.select(col("id"), col("sz"), explode(col("sh")).as("tok"))
-    // global document frequency (shingles are distinct per doc)
+  }
+
+  /** The planner behind both entry points: measure what
+    * [[JaccardPlan.choose]] reads, then build the chosen tier over all docs
+    * (`blockCol` None) or within blocks (an equi-join on `blk`).
+    *
+    * It pins only what the returned plan reads. Construction-only
+    * relations — the token dictionary, and the bounded pin taken on ≤
+    * `bruteMaxDocs` docs so the universe probe and the bitset attachment
+    * share one scan + shingle pass — are released before return; a tier
+    * that falls through re-reads the unpinned input.
+    */
+  private def jaccardPairs(df: DataFrame, idCol: String, textCol: String,
+                           blockCol: Option[String], n: Int, threshold: Double,
+                           bruteMaxDocs: Long, maxBitsetUniverse: Long,
+                           candidatePairBudget: Option[Long]): DataFrame = {
+    val spark = df.sparkSession
+    import spark.implicits._
+    val blk = blockCol.map(_ => "blk")
+    val keyNames = "id" +: blk.toSeq
+    val keys = keyNames.map(col)
+    def project(text: String) = df.select(col(idCol).as("id") +:
+      blockCol.toSeq.map(c => col(c).as("blk")) :+ col(textCol).as(text): _*)
+    val docs = ScanSpread.spread(project("__t"), col("id"))
+      .select(keys :+ sortedShingles(col("__t"), n).as("sh"): _*)
+    // null-keyed rows never satisfy `a.blk === b.blk`
+    val joinable = blk.fold(docs)(b => docs.filter(col(b).isNotNull))
+    val (budget, budgetSource) = resolveCandidateBudget(spark, candidatePairBudget)
+
+    val scratch = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+    def construction(pin: DataFrame): DataFrame = { scratch += pin; pin }
+    // (per-block all-pairs total, joinable docs): one exact aggregate
+    lazy val blockHist = joinable.groupBy("blk").agg(count(lit(1)).as("c"))
+      .agg(coalesce(sum((col("c") * (col("c") - lit(1)) / 2).cast("long")), lit(0L)),
+        coalesce(sum(col("c")), lit(0L)))
+      .as[(Long, Long)].first()
+    lazy val nDocs: Option[Long] =
+      if (blk.isEmpty) Some(docs.count()) else budget.map(_ => blockHist._2)
+    lazy val bounded = nDocs.exists(_ <= bruteMaxDocs)
+    lazy val exactIn =
+      if (bounded) construction(joinable.localCheckpoint()) else joinable
+    lazy val tokens = construction(
+      exactIn.select(explode(col("sh")).as("tok")).distinct().persist())
+    def universe: Long = {
+      // unbounded input: a 1000-doc sample's universe is a lower bound, so
+      // when even it overflows the cap the full distinct pass is skipped
+      val lower = if (bounded) 0L
+        else exactIn.limit(1000).select(explode(col("sh"))).distinct().count()
+      if (lower > maxBitsetUniverse) lower else tokens.count()
+    }
+    lazy val prefix = prefixRelation(docs, threshold)
+    def sampledPrefixTotal: Long = {
+      // Σ_tok C(prefix-df(tok), 2) over a deterministic xxhash64(id) sample
+      // of ~5 000 docs, scaled by 1/p² (unbiased; exact when the sample is
+      // the corpus). Hot tokens dominate the sum: measured 211.3e9 sampled
+      // vs 213.6e9 exact at 500k docs, 1-in-100
+      val invP = math.max(1L, nDocs.get / 5000L)
+      val sample = if (invP == 1L) prefix
+        else prefix.filter(pmod(xxhash64(col("id")), lit(invP)) === 0)
+      val hist = sample.groupBy("tok").agg(count(lit(1)).as("c"))
+        .groupBy("c").agg(count(lit(1))).as[(Long, Long)].collect()
+      (hist.iterator.map { case (c, m) => m * (c * (c - 1) / 2.0) }.sum *
+        invP * invP).toLong
+    }
+    // both exact tiers reject by size band first: J ≥ t needs
+    // b.sz ≥ ⌈a.sz·t⌉ and symmetrically, precomputed per ROW as `lo`. The
+    // jac filter is pushed INTO the join condition, so a failing pair dies
+    // before a join row materializes (pinned in DedupSpec)
+    def pairsOf(sides: DataFrame, jac: Column): DataFrame = {
+      val banded = sides.withColumn("lo", ceilSafe(col("sz") * threshold).cast("long"))
+      val cond = col("a.id") < col("b.id") &&
+        col("b.sz") >= col("a.lo") && col("a.sz") >= col("b.lo")
+      (blk match {
+        case None => broadcast(banded.as("a")).join(banded.as("b"), cond)
+        case Some(b) => banded.as("a").join(banded.as("b"),
+          col(s"a.$b") === col(s"b.$b") && cond)
+      }).select(col("a.id").as("id_a"), col("b.id").as("id_b"), jac.as("jac"))
+        .filter(col("jac") >= threshold)
+    }
+
+    try {
+      val tier = JaccardPlan.choose(blk.nonEmpty, nDocs,
+        blk.fold(sampledPrefixTotal)(_ => blockHist._1), universe, budget,
+        budgetSource, bruteMaxDocs, maxBitsetUniverse, threshold,
+        resolveLshShape(spark, threshold))
+      lastCapReport = tier match {
+        case JaccardPlan.Escalated(rep, margin) =>
+          System.err.println(s"[graft] jaccardPairs${blk.fold("Global")(_ => "Blocked")}: " +
+            s"the exact tier would evaluate ${rep.candidatesBefore} candidate " +
+            s"pairs (budget ${rep.budget} from ${rep.source}) — escalating the " +
+            s"candidate generator to MinHash-LSH (${rep.bands} bands x " +
+            f"${rep.rowsPerBand} rows, est-filter margin $margin%.3f); " +
+            "verification stays exact (precision 1.0), per-pair recall at " +
+            f"J=$threshold >= ${rep.recallBoundAtThreshold}%.6f and higher above it")
+          Some(rep)
+        case _ => None
+      }
+      tier match {
+        case JaccardPlan.Bitset =>
+          // materialized: the self-join would run the explode → dict-join
+          // → groupBy pipeline once per side. 48 B per doc at the default cap
+          val dict = tokens.as[String].collect().sorted
+          pairsOf(attachBitsets(exactIn, keyNames, dict).localCheckpoint(),
+            graft.functions.VectorExpressions.bitsetJaccard(col("a.bits"), col("b.bits")))
+        case JaccardPlan.MergeScan if blk.nonEmpty =>
+          pairsOf(joinable.withColumn("sz", size(col("sh"))),
+            graft.functions.VectorExpressions
+              .jaccardSortedGE(col("a.sh"), col("b.sh"), threshold))
+        case JaccardPlan.MergeScan =>
+          prefixPairs(docs, prefix, threshold)
+        case JaccardPlan.Escalated(rep, margin) =>
+          // RAW text, not shingle arrays (see verifyJaccardRaw), on disk
+          // (see escalatedLshPairs)
+          val raw = project("txt").localCheckpoint(eager = true,
+            org.apache.spark.storage.StorageLevel.DISK_ONLY)
+          val sigs = raw.select(keys :+ minhashSignature(sortedShingles(col("txt"), n),
+            rep.bands * rep.rowsPerBand).as("sig"): _*)
+          val pairs = escalatedLshPairs(sigs, rep.bands, rep.rowsPerBand, margin,
+            blk, verifyJaccardRaw(raw, n, threshold))
+          // with band chunks every verified chunk is materialized, and
+          // only the single-chunk plan still reads the raw pin
+          if (resolveBandChunks(spark, rep.bands) > 1) construction(raw)
+          pairs
+      }
+    } finally scratch.foreach(release)
+  }
+
+  /** Drop a construction-time pin. `Dataset.unpersist` reaches only the
+    * CacheManager; a localCheckpoint's blocks belong to its RDD.
+    */
+  private def release(pin: DataFrame): Unit = pin.queryExecution.logical match {
+    case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.unpersist(blocking = false)
+    case _ => pin.unpersist()
+  }
+
+  /** PPJoin prefix rows (id, sz, pos, tok, lo) of an (id, sh) relation:
+    * tokens rarest-first by global document frequency (one aggregation,
+    * broadcast back), prefix length sz − ⌈t·sz⌉ + 1.
+    */
+  private def prefixRelation(docs: DataFrame, threshold: Double): DataFrame = {
+    val tokens = docs.select(col("id"), size(col("sh")).as("sz"),
+      explode(col("sh")).as("tok"))
     val tokDf = tokens.groupBy("tok").agg(count(lit(1)).as("tdf"))
-    // rarest-first canonical order; prefix length = sz - ceil(t*sz) + 1
-    val prefix = tokens.join(broadcast(tokDf), "tok")
+    tokens.join(broadcast(tokDf), "tok")
       .groupBy("id", "sz")
       .agg(array_sort(collect_list(struct(col("tdf"), col("tok")))).as("ordered"))
       .select(col("id"), col("sz"),
         posexplode(slice(col("ordered"), lit(1),
           (col("sz") - ceilSafe(col("sz") * threshold) + 1).cast("int")))
           .as(Seq("pos", "p")))
-      // per-row size bound (see the brute tier): the candidate join re-
-      // evaluates its condition once per equi-matching row pair, so the
-      // ceil(sz·t) arithmetic moves out of the join into this projection
       .select(col("id"), col("sz"), col("pos"), col("p.tok").as("tok"),
         ceilSafe(col("sz") * threshold).cast("long").as("lo"))
-    // PPJoin positional filter: for a true pair, its FIRST shared token in
-    // canonical order bounds the overlap by the suffix sizes from the match
-    // (0-based pos → suffix incl. match = sz − pos); prune pairs where no
-    // match can reach the required ⌈t/(1+t)·(|A|+|B|)⌉. Still a superset —
-    // verification is exact.
-    val minOverlap = ceilSafe((col("a.sz") + col("b.sz")) * (threshold / (1 + threshold)))
-    // DENSITY-ADAPTIVE CANDIDATE BUDGET (opt-in): on adversarially dense
-    // corpora — a small token universe, or replication-style mutation
-    // where hot prefix tokens mix thousands of docs that are NOT
-    // pairwise similar — the prefix join's evaluated-pair count
-    // Σ_tok C(prefix-df(tok), 2) is the scale ceiling, not the
-    // algorithm. With a budget set, that total is measured from a
-    // deterministic doc SAMPLE (xxhash64(id)-bucketed, ≥20k docs; the
-    // per-token pair count scales as p², so the sample total / p² is an
-    // unbiased estimator — exact when the sample is the whole corpus)
-    // against the prefix-token bucket histogram; when it exceeds the
-    // budget the candidate GENERATOR escalates from single-token prefix
-    // buckets to MinHash-LSH bands: a band key hashes 5 minhashes of the
-    // WHOLE set, so dissimilar docs sharing one hot token no longer
-    // collide — candidate volume tracks true near-dup density instead
-    // of token density. Verification stays EXACT either way (precision
-    // 1.0 always).
-    //
-    // SAMPLED-RECALL CONTRACT when the budget binds (logged + probed —
-    // no silent caps): a pair at Jaccard exactly t is found with
-    // probability ≥ (1 − (1 − t^5)^12) − 0.0013 (MinHash band-collision
-    // theory minus the est-filter's 3σ one-sided tail; ≈0.990 at t=0.8,
-    // and higher above t); below-budget corpora are byte-identical to
-    // the exact prefix path — both spec-pinned in DedupSpec.
-    val cands = {
-      val exactCands = () => prefix.as("a").join(prefix.as("b"),
-          col("a.tok") === col("b.tok") && col("a.id") < col("b.id") &&
-            col("b.sz") >= col("a.lo") &&
-            col("a.sz") >= col("b.lo") &&
-            (least(col("a.sz") - col("a.pos"), col("b.sz") - col("b.pos"))
-              >= minOverlap))
-        .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
-        .distinct()
-      resolveCandidateBudget(df.sparkSession, candidatePairBudget) match {
-        case (None, _) => lastCapReport = None; exactCands()
-        case (Some(budget), budgetSource) =>
-          val spark2 = df.sparkSession
-          import spark2.implicits._
-          // tier decision from a sample: building the FULL prefix
-          // relation (per-doc rarest-first sort) just to count it would
-          // cost a large fraction of the exact join itself on the very
-          // corpora that need the escape hatch. 5k docs is plenty: the
-          // total is dominated by the hot-token buckets, so the summed
-          // estimator's relative error is well under 1% at any corpus
-          // size that can afford the exact path at all (measured 211.3e9
-          // sampled vs 213.6e9 exact at 500k docs, 1-in-100)
-          val sampleTarget = 5000L
-          val invP = math.max(1L, nDocs / sampleTarget) // sample 1-in-invP
-          val samplePrefix =
-            if (invP == 1L) prefix
-            else prefix.filter(pmod(xxhash64(col("id")), lit(invP)) === 0)
-          val hist = samplePrefix.groupBy("tok").agg(count(lit(1)).as("c"))
-            .groupBy("c").agg(count(lit(1)).as("m"))
-            .as[(Long, Long)].collect()
-          val total = (hist.iterator.map { case (c, m) =>
-            m * (c * (c - 1) / 2.0) }.sum * invP * invP).toLong
-          if (total <= budget) { lastCapReport = None; exactCands() }
-          else {
-            // 12 bands x 5 rows (k=60): sharper than the classic 16x4 —
-            // on densely-similar corpora (every doc at J~0.5-0.7 of every
-            // other, the adversarial shape that trips the budget) band
-            // collision at sub-threshold J falls as J^r, so r=5 cuts the
-            // noise bucket volume ~an order of magnitude while the
-            // at-threshold recall bound stays >= 1-(1-t^5)^12 (0.991 at
-            // t=0.8). A slack-margined signature-agreement filter INSIDE
-            // the join condition (margin 3 sigma below t, sigma =
-            // sqrt(t(1-t)/k) — one-sided tail <= 0.0013 at J=t) makes
-            // sub-threshold bucket pairs die during condition evaluation
-            // instead of materializing into the distinct.
-            val (bands, r) = resolveLshShape(spark2, threshold)
-            val k = bands * r
-            val bandBound = 1.0 - math.pow(1.0 - math.pow(threshold, r), bands)
-            val estTail = 0.0013
-            val bound = bandBound - estTail
-            val margin = math.max(0.0, threshold -
-              3.0 * math.sqrt(threshold * (1 - threshold) / k) - 1.0 / k)
-            val rep = CapReport(candidatesBefore = total, budget = budget,
-              bands = bands, rowsPerBand = r,
-              recallBoundAtThreshold = bound, source = budgetSource)
-            lastCapReport = Some(rep)
-            System.err.println(s"[graft] jaccardPairsGlobal: exact prefix " +
-              s"join would evaluate $total candidate pairs (budget " +
-              s"$budget from $budgetSource) — escalating the candidate generator to " +
-              s"MinHash-LSH ($bands bands x $r rows, est-filter margin " +
-              f"$margin%.3f); verification stays exact (precision 1.0), " +
-              f"per-pair recall at J=$threshold >= $bound%.6f and higher " +
-              "above it")
-            // pin RAW text, not shingle arrays (see verifyJaccardRaw):
-            // ~10× slimmer scratch and verify-join rows; signatures
-            // shingle inline in one pass. DISK_ONLY — dedup scratch
-            // must not hold heap (see escalatedLshPairs)
-            val raw = df.select(col(idCol).as("id"), col(textCol).as("txt"))
-              .localCheckpoint(eager = true,
-                org.apache.spark.storage.StorageLevel.DISK_ONLY)
-            val sigs = raw.select(col("id"), minhashSignature(
-              sortedShingles(col("txt"), n), k).as("sig"))
-            val pairs = escalatedLshPairs(sigs, bands, r, margin,
-              blockKeyed = false,
-              verify = verifyJaccardRaw(raw, n, threshold))
-            // chunked mode materialized every verified chunk — the raw
-            // pin is consumed; single-chunk mode still needs it
-            if (resolveBandChunks(spark2, bands) > 1) raw.unpersist()
-            return pairs
-          }
-      }
-    }
-    // Distinct BEFORE verification here — the opposite order from the LSH
-    // paths, measured both ways: prefix candidates repeat per shared
-    // prefix token (~2× here), and a candidate row is only 16 bytes of
-    // ids, so deduplicating first halves the (relatively expensive)
-    // merge-scan verifications for less than the verify-first variant
-    // saves in shuffle. (A bitset-verify variant — dense token ids, pair
-    // bitsets carried through the candidate join — was measured 2-3×
-    // SLOWER here: when prefixes prune weakly the candidate join's row
-    // WIDTH dominates, so skinny 16-byte candidates win; the bitset path
-    // lives in jaccardPairsBlocked where rows pass through one block join.)
-    verifyJaccard(docs, threshold)(cands)
   }
 
-  /** How the candidate budget bound on the LAST budgeted
-    * [[jaccardPairsGlobal]] plan built on this driver — the "no silent
-    * caps" probe (specs assert it; the operator also logs one stderr
-    * line). None when the budget was absent or did not bind.
+  /** The prefix tier's pairs: the prefix equi-join, size-band and
+    * PPJoin-positional filtered (a true pair's FIRST shared token bounds
+    * its overlap by the suffix sizes from the match, sz − pos, which must
+    * reach ⌈t/(1+t)·(|A|+|B|)⌉), then the merge-scan verify against the
+    * (id, sh) `docs`. Distinct BEFORE verification (measured both ways):
+    * candidates repeat per shared prefix token and a row is 16 bytes of
+    * ids, so deduplicating first halves the verifications.
+    */
+  private def prefixPairs(docs: DataFrame, prefix: DataFrame,
+                          threshold: Double): DataFrame = {
+    val minOverlap = ceilSafe((col("a.sz") + col("b.sz")) * (threshold / (1 + threshold)))
+    prefix.as("a").join(prefix.as("b"),
+        col("a.tok") === col("b.tok") && col("a.id") < col("b.id") &&
+          col("b.sz") >= col("a.lo") && col("a.sz") >= col("b.lo") &&
+          (least(col("a.sz") - col("a.pos"), col("b.sz") - col("b.pos"))
+            >= minOverlap))
+      .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
+      .distinct()
+      .join(docs.select(col("id").as("id_a"), col("sh").as("sh_a")), Seq("id_a"))
+      .join(docs.select(col("id").as("id_b"), col("sh").as("sh_b")), Seq("id_b"))
+      .select(col("id_a"), col("id_b"), graft.functions.VectorExpressions
+        .jaccardSortedGE(col("sh_a"), col("sh_b"), threshold).as("jac"))
+      .filter(col("jac") >= threshold)
+  }
+
+  /** How the candidate budget bound on the LAST Jaccard pair plan built
+    * on this driver — the "no silent caps" probe (specs assert it; the
+    * planner also logs one stderr line). None when the budget was absent
+    * or did not bind.
     */
   @volatile var lastCapReport: Option[CapReport] = None
 
@@ -585,13 +606,9 @@ object DedupOps {
 
   /** Band-group chunking for the budget-ESCALATED candidate joins:
     * `auto` (default, ~4 bands per chunk) | an int chunk count | `1` to
-    * disable. Chunks run SEQUENTIALLY (each materialized before the next
-    * starts), so the concurrent working set of the banded self-join +
-    * pair distinct divides by the chunk count — the knob that sets the
-    * suite's executor-memory floor. Output is byte-identical to
-    * unchunked (spec-pinned): a pair colliding in two band groups
-    * appears in both chunk outputs and the final dedup restores the
-    * exact unchunked pair set.
+    * disable. Chunks run SEQUENTIALLY, so the concurrent working set of
+    * the banded self-join + pair distinct divides by the chunk count.
+    * Output equals unchunked (spec-pinned; see [[escalatedLshPairs]]).
     */
   val LshBandChunksConf = "spark.graft.dedup.lsh.bandChunks"
 
@@ -734,31 +751,12 @@ object DedupOps {
     }
   }
 
-  /** The exact-verification tail both Jaccard pair paths share: attach
-    * each candidate's shingle arrays from `base` (must carry (id, sh)),
-    * compute exact Jaccard with the sorted merge-scan kernel, keep
-    * `>= threshold`. Precision 1.0 by construction.
-    */
-  private def verifyJaccard(base: DataFrame, threshold: Double)
-                           (cands: DataFrame): DataFrame =
-    cands
-      .join(base.select(col("id").as("id_a"), col("sh").as("sh_a")), Seq("id_a"))
-      .join(base.select(col("id").as("id_b"), col("sh").as("sh_b")), Seq("id_b"))
-      .select(col("id_a"), col("id_b"),
-        graft.functions.VectorExpressions
-          .jaccardSortedGE(col("sh_a"), col("sh_b"), threshold).as("jac"))
-      .filter(col("jac") >= threshold)
-
-  /** The escalated tiers' verification tail, from RAW text: `base`
-    * carries (id, txt) and the shingle arrays are recomputed INSIDE the
-    * verify projection (same deterministic kernel — identical jac).
-    * Rationale: per-doc shingle arrays are ~10× the raw text (every
-    * n-gram repeats n characters plus array overhead), and the verify
-    * joins shuffle base rows per candidate — at the 5M-doc decade the
-    * shingle-pinned variant's scratch (pin + two SMJ sorts of wide
-    * rows) exhausted local disk, while shingling twice per VERIFIED
-    * candidate is codegen-cheap and proportional to the (small)
-    * candidate count.
+  /** The escalated tier's verification from RAW text: `base` carries
+    * (id, txt) and the shingles are recomputed INSIDE the verify
+    * projection (same kernel — identical jac). Shingle arrays are ~10× the
+    * raw text, and the verify joins shuffle base rows per candidate: at
+    * the 5M-doc decade a shingle-pinned variant exhausted local disk,
+    * while shingling twice per candidate is codegen-cheap.
     */
   private def verifyJaccardRaw(base: DataFrame, n: Int, threshold: Double)
                               (cands: DataFrame): DataFrame =
@@ -771,25 +769,6 @@ object DedupOps {
           threshold).as("jac"))
       .filter(col("jac") >= threshold)
 
-  /** Shared escalated tier both budget-escalated paths run: the banded
-    * self-join + per-chunk EXACT verification, band-chunked per
-    * [[LshBandChunksConf]]. Two measured 100× pathologies motivate the
-    * chunking, and both divide by the chunk count:
-    *  - the unchunked banded join's per-task working set (hot-band
-    *    bucket pairs streaming through the candidate distinct) was the
-    *    per-suite MEMORY floor (executor OOM at 20 g);
-    *  - the verification join shuffles each candidate's shingle arrays
-    *    (~KBs per row), so verifying the full candidate set in one job
-    *    was the per-suite DISK floor (spill exhaustion at the
-    *    recall-raising 20×3 shape, whose noisier bands admit ~3× the
-    *    candidates of 12×5).
-    * Each chunk is verified and materialized (eager localCheckpoint =
-    * the sequencing point) before the next starts, so the concurrent
-    * working set — heap AND spill — is one chunk's; verified pairs are
-    * tiny. A pair colliding in two band groups verifies in both chunks
-    * (same exact jac) and the final dedup restores exactly the
-    * unchunked pair set — spec-pinned in DedupSpec.
-    */
   /** Banded explode over minhash signatures for bands [lo, hi): one row
     * per (id, band) with `bhash` = hash of the band's signature slice,
     * seeded by the TRUE band index — so a chunk's (band, bhash) keys are
@@ -806,31 +785,37 @@ object DedupOps {
       .as(Seq("band", "bhash")): _*)
   }
 
+  /** The escalated Jaccard tier: the banded self-join (within `blk` when
+    * set) + per-chunk EXACT verification, band-chunked per
+    * [[LshBandChunksConf]]. Two measured 100× pathologies motivate the
+    * chunking, and both divide by the chunk count:
+    *  - the unchunked banded join's per-task working set (hot-band
+    *    bucket pairs streaming through the candidate distinct) was the
+    *    per-suite MEMORY floor (executor OOM at 20 g);
+    *  - the verification join shuffles each candidate's text, so
+    *    verifying the full candidate set in one job was the per-suite
+    *    DISK floor (spill exhaustion at the recall-raising 20×3 shape).
+    * Each chunk is verified and materialized (eager localCheckpoint =
+    * the sequencing point) before the next starts, so the concurrent
+    * working set — heap AND spill — is one chunk's; verified pairs are
+    * tiny. Output equals the unchunked pair set (spec-pinned).
+    */
   private def escalatedLshPairs(sigs: DataFrame, bands: Int, r: Int,
-                                margin: Double, blockKeyed: Boolean,
+                                margin: Double, blk: Option[String],
                                 verify: DataFrame => DataFrame): DataFrame = {
-    val spark = sigs.sparkSession
-    val k = bands * r
-    val nChunks = resolveBandChunks(spark, bands)
-    def bandedOf(src: DataFrame, lo: Int, hi: Int): DataFrame =
-      bandedExplode(src, r, lo, hi,
-        extraCols = if (blockKeyed) Seq("blk") else Nil)
+    val nChunks = resolveBandChunks(sigs.sparkSession, bands)
     // hot-bucket-salted banded self-join (see bandedCandidatePairs): a
     // boilerplate cluster's bucket must not pin one task on C(m,2)
     // estimator evaluations while the rest of the executor idles
-    def candsOf(banded: DataFrame): DataFrame =
-      bandedCandidatePairs(banded,
-          if (blockKeyed) Seq("blk") else Nil, margin)
+    def candsOf(src: DataFrame, lo: Int, hi: Int): DataFrame =
+      bandedCandidatePairs(bandedExplode(src, r, lo, hi, blk.toSeq), blk.toSeq, margin)
         .select(col("id_a"), col("id_b"))
         .distinct()
     // DISK_ONLY scratch: the escalated tier runs on exactly the corpora
-    // big enough to trip the budget, inside suites whose earlier queries
-    // already hold heap — its pinned relations (shingled docs, k-long
-    // signatures, candidate ids) must not compete for executor heap with
-    // its own sorts. Local-disk reads re-deserialize, a cost the chunk
-    // structure amortizes (each pin is read ≤ 2× per chunk).
+    // big enough to trip the budget — its pins must not compete for
+    // executor heap with its own sorts (each is read ≤ 2× per chunk)
     val scratch = org.apache.spark.storage.StorageLevel.DISK_ONLY
-    if (nChunks <= 1) verify(candsOf(bandedOf(sigs, 0, bands)))
+    if (nChunks <= 1) verify(candsOf(sigs, 0, bands))
     else {
       // signatures materialized ONCE (narrow: id + k longs); each chunk
       // re-explodes only ITS bands from the pinned relation
@@ -842,13 +827,13 @@ object DedupOps {
       // this a high-J pair colliding in every band would verify once
       // per chunk (measured 14× wall blowup at 100×)
       var seen: DataFrame = null
-      val freshPins = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+      val pins = scala.collection.mutable.ArrayBuffer(pinned)
       val out = (0 until nChunks).map { i =>
-        val c = candsOf(bandedOf(pinned, bounds(i), bounds(i + 1)))
+        val c = candsOf(pinned, bounds(i), bounds(i + 1))
         val fresh = (if (seen == null) c
                      else c.join(seen, Seq("id_a", "id_b"), "left_anti"))
           .localCheckpoint(eager = true, scratch)
-        freshPins += fresh
+        pins += fresh
         seen = if (seen == null) fresh else seen.unionByName(fresh)
         val v = verify(fresh).localCheckpoint(eager = true, scratch)
         // reap chunk i's shuffle files BEFORE chunk i+1 writes its own:
@@ -861,12 +846,9 @@ object DedupOps {
         v
       }.reduce(_ unionByName _)
       // fresh sets are disjoint by construction — the union IS the
-      // verified pair set of the unchunked run, no final dedup needed.
-      // Everything below fed only the (now-materialized) verified
-      // chunks: release the scratch blocks eagerly rather than holding
-      // disk until the Datasets are GC'd
-      freshPins.foreach(_.unpersist())
-      pinned.unpersist()
+      // verified pair set of the unchunked run. The signature and fresh
+      // pins fed only the materialized chunks: release them now
+      pins.foreach(release)
       out
     }
   }
@@ -937,139 +919,6 @@ object DedupOps {
     * cheap the per-pair verify is.
     */
   val BruteForceMaxDocs: Long = 10000L
-
-  /** Exact Jaccard pairs WITHIN a blocking column (all pairs per block,
-    * verified exactly) — the shape for corpora with a natural partition key
-    * (source, shard, near-dup cluster id). Uses the same adaptive
-    * verification as [[jaccardPairsGlobal]]: dense-id bitsets when the
-    * token universe fits a dictionary, sorted merge-scan otherwise.
-    */
-  def jaccardPairsBlocked(df: DataFrame, idCol: String, textCol: String,
-                          blockCol: String, n: Int = 3,
-                          threshold: Double = 0.6,
-                          maxBitsetUniverse: Long = MaxBitsetUniverse,
-                          candidatePairBudget: Option[Long] = None): DataFrame = {
-    val docs = ScanSpread.spread(df.select(col(idCol).as("id"),
-        col(blockCol).as("blk"), col(textCol).as("__t")), col("id"))
-      .select(col("id"), col("blk"), sortedShingles(col("__t"), n).as("sh"))
-    // CANDIDATE BUDGET (opt-in), the blocked twin of the global path's:
-    // within-block all-pairs is quadratic in the block size BY SEMANTICS,
-    // so on a corpus whose blocks grow with it the evaluated-pair total
-    // Σ_blk C(n_blk, 2) is the scale ceiling. Unlike the global prefix
-    // path the total here is EXACT and one cheap distributed aggregate
-    // (block histogram), no sampling. Over budget, the candidate
-    // GENERATOR escalates to MinHash-LSH bands WITHIN blocks (band key =
-    // (blk, band, bhash)) with exact verification — precision 1.0, the
-    // same logged sampled-recall contract (≥ 1-(1-t^5)^12 − est tail at
-    // J = t), no silent caps.
-    val (overBudget, smallPin) = resolveCandidateBudget(df.sparkSession,
-        candidatePairBudget) match {
-      case (None, _) => lastCapReport = None; (false, None)
-      case (Some(budget), budgetSource) =>
-        // null-keyed rows never join (`a.blk === b.blk` skips nulls), so
-        // the histogram must not count their pseudo-block toward the
-        // exact-tier cost — it would force a recall-losing escalation on
-        // a corpus whose REAL evaluated-pair total is under budget
-        val row = docs.filter(col("blk").isNotNull)
-          .groupBy("blk").agg(count(lit(1)).as("c"))
-          .agg(sum((col("c") * (col("c") - lit(1)) / 2).cast("long")).as("t"),
-            sum(col("c")).as("nd"))
-          .first()
-        val total = if (row.isNullAt(0)) 0L else row.getLong(0)
-        if (total <= budget) {
-          lastCapReport = None
-          // bounded corpus under budget: pin the shingled joinable rows
-          // ONCE — the universe probes and the bitset attachment below
-          // would each re-run the scan + shingle kernel otherwise, and at
-          // this size the per-pass fixed cost is a measurable fraction of
-          // the query. Dropping null-block rows here is exact: they can
-          // never satisfy `a.blk === b.blk`. Unbounded corpora never pin.
-          val nd = if (row.isNullAt(1)) 0L else row.getLong(1)
-          val pin = if (nd <= BruteForceMaxDocs)
-            Some(docs.filter(col("blk").isNotNull).localCheckpoint())
-          else None
-          (false, pin)
-        }
-        else {
-          val (bands, r) = resolveLshShape(df.sparkSession, threshold)
-          val k = bands * r
-          val bound = 1.0 - math.pow(1.0 - math.pow(threshold, r), bands) - 0.0013
-          lastCapReport = Some(CapReport(candidatesBefore = total,
-            budget = budget, bands = bands, rowsPerBand = r,
-            recallBoundAtThreshold = bound, source = budgetSource))
-          System.err.println(s"[graft] jaccardPairsBlocked: per-block " +
-            s"all-pairs would evaluate $total candidate pairs (budget " +
-            s"$budget from $budgetSource) — escalating the candidate " +
-            s"generator to within-block MinHash-LSH ($bands bands x $r " +
-            f"rows); verification stays exact (precision 1.0), per-pair " +
-            f"recall at J=$threshold >= $bound%.6f and higher above it")
-          (true, None)
-        }
-    }
-    if (overBudget) {
-      val (bands, r) = resolveLshShape(df.sparkSession, threshold)
-      val k = bands * r
-      val margin = math.max(0.0, threshold -
-        3.0 * math.sqrt(threshold * (1 - threshold) / k) - 1.0 / k)
-      // one execution per side, like the bitset tier: the signature pass
-      // and BOTH verification joins would otherwise re-run the full
-      // corpus source scan — two extra passes on precisely the corpora
-      // big enough to trip the budget. RAW text, DISK_ONLY: see
-      // verifyJaccardRaw / escalatedLshPairs
-      val raw = df.select(col(idCol).as("id"), col(blockCol).as("blk"),
-          col(textCol).as("txt"))
-        .localCheckpoint(eager = true,
-          org.apache.spark.storage.StorageLevel.DISK_ONLY)
-      val sigs = raw.select(col("id"), col("blk"), minhashSignature(
-        sortedShingles(col("txt"), n), k).as("sig"))
-      val pairs = escalatedLshPairs(sigs, bands, r, margin, blockKeyed = true,
-        verify = verifyJaccardRaw(raw, n, threshold))
-      if (resolveBandChunks(df.sparkSession, bands) > 1) raw.unpersist()
-      return pairs
-    }
-    // size-band rejection shared by both exact tiers: |A∩B| ≤ min sizes,
-    // so J ≥ t needs b.sz ≥ ⌈a.sz·t⌉ (and symmetrically) — two long
-    // compares per evaluated pair, precomputed per ROW as `lo` (the join
-    // condition runs O(block²) times; see the global brute tier)
-    val sizeBand = col("b.sz") >= col("a.lo") && col("a.sz") >= col("b.lo")
-    val pairsOf: (DataFrame, Column) => DataFrame = (sides, jac) => {
-      val banded = sides.withColumn("lo",
-        ceilSafe(col("sz") * threshold).cast("long"))
-      banded.as("a").join(banded.as("b"),
-          col("a.blk") === col("b.blk") && col("a.id") < col("b.id") &&
-            sizeBand)
-        .select(col("a.id").as("id_a"), col("b.id").as("id_b"), jac.as("jac"))
-        .filter(col("jac") >= threshold)
-    }
-    // Sampled lower-bound pre-probe: a token universe is never smaller
-    // than a 1000-doc sample's, so when even the sample overflows the cap
-    // the full-corpus distinct aggregation (a whole extra pass at 100 TB)
-    // is skipped and the merge-scan path starts immediately.
-    val exactIn = smallPin.getOrElse(docs)
-    val sampleUniverse = exactIn.limit(1000)
-      .select(explode(col("sh")).as("tok")).distinct().count()
-    if (sampleUniverse <= maxBitsetUniverse) {
-      val toks = exactIn.select(explode(col("sh")).as("tok")).distinct().persist()
-      val universe = toks.count()
-      if (universe <= maxBitsetUniverse) {
-        // dictionary collected once (bounded by the cap); block rows carry
-        // ⌈U/64⌉-word bitsets instead of full shingle arrays, and the
-        // per-pair verify is popcounts — see jaccardPairsGlobal.
-        // localCheckpoint: the block self-join would otherwise execute the
-        // explode→dict-join→groupBy pipeline once per side.
-        val withBits = attachBitsets(exactIn, Seq("id", "blk"), toks, universe)
-          .select(col("id"), col("blk"), size(col("ids")).as("sz"), col("bits"))
-          .localCheckpoint()
-        smallPin.foreach(_.unpersist())
-        return pairsOf(withBits,
-          graft.functions.VectorExpressions.bitsetJaccard(col("a.bits"), col("b.bits")))
-      }
-      toks.unpersist()
-    }
-    pairsOf(exactIn.withColumn("sz", size(col("sh"))),
-      graft.functions.VectorExpressions
-        .jaccardSortedGE(col("a.sh"), col("b.sh"), threshold))
-  }
 
   // ------------------------------------------------------------- SimHash
   /** 64-bit SimHash over a token array: per-token xxhash64 (seed 42, same

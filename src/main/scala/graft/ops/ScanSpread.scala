@@ -1,6 +1,8 @@
 package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.plans.logical.{Filter, LocalRelation, LogicalPlan, Project}
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 
 /** Scan-parallelism repair for CPU-heavy per-row kernels.
   *
@@ -19,13 +21,28 @@ import org.apache.spark.sql.{Column, DataFrame}
   * assignment (deterministic key, not round-robin — §2.5's rand caveat).
   * At scale the input is already many splits and this returns the input
   * unchanged, so no plan at or above the split count pays anything.
+  *
+  * The decision reads only the optimized logical plan, and runs nothing:
+  * the split count is read only for a non-streaming chain of
+  * Project/Filter over one file or local relation, whose `.rdd` partition
+  * count plans the scan without a job. Any other input (a join, an
+  * aggregate, a cached relation, a stream) is returned unchanged: under
+  * AQE `.rdd` on a plan with an exchange runs the upstream shuffles, and
+  * on a stream it throws.
   */
 private[graft] object ScanSpread {
-  def spread(df: DataFrame, key: Column): DataFrame = {
-    val p = df.sparkSession.sparkContext.defaultParallelism
-    // toRdd finalizes the physical plan without running a job; its
-    // partition count is the scan's split count for file sources
-    val scanParts = df.rdd.getNumPartitions
-    if (scanParts >= p) df else df.repartition(p, key)
+  def spread(df: DataFrame, key: Column): DataFrame =
+    if (df.isStreaming || !bareScan(df.queryExecution.optimizedPlan)) df
+    else {
+      val p = df.sparkSession.sparkContext.defaultParallelism
+      if (df.rdd.getNumPartitions >= p) df else df.repartition(p, key)
+    }
+
+  private def bareScan(plan: LogicalPlan): Boolean = plan match {
+    case Project(_, child) => bareScan(child)
+    case Filter(_, child) => bareScan(child)
+    case r: LogicalRelation => r.relation.isInstanceOf[HadoopFsRelation]
+    case _: LocalRelation => true
+    case _ => false
   }
 }

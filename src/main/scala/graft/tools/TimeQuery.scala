@@ -22,8 +22,6 @@ object TimeQuery {
       .config("spark.ui.enabled", "false")
       .config("spark.hadoop.fs.file.impl",
         classOf[graft.fs.FastLocalFileSystem].getName)
-      .config("spark.shuffle.sort.bypassMergeThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_BYPASS_THRESHOLD", "200"))
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val sc = spark.sparkContext

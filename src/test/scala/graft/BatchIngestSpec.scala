@@ -12,7 +12,7 @@ class BatchIngestSpec extends SparkSuite {
   import spark.implicits._
 
   private def freshDirs(tag: String): (String, String, String) = {
-    val base = s"/root/repo/target/fixtures/batch_ingest_$tag"
+    val base = new java.io.File(s"target/fixtures/batch_ingest_$tag").getAbsolutePath
     val p = new java.io.File(base)
     if (p.exists()) org.apache.commons.io.FileUtils.deleteDirectory(p)
     (s"$base/pages", s"$base/warehouse", s"$base/ckpt.json")

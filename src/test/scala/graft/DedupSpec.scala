@@ -642,4 +642,94 @@ class DedupSpec extends SparkSuite {
     assert(disagree.isEmpty,
       s"kernel disagrees with levenshtein: ${disagree.take(5).mkString(", ")}")
   }
+
+  /** Spark jobs `f` launches: tagged by job group and counted by a
+    * listener. The listener bus delivers in order, so once a trailing
+    * sentinel job is seen every earlier job has been counted.
+    */
+  private def jobsLaunchedBy(f: => Any): Int = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val group = s"jobs-launched-by-${System.nanoTime()}"
+    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        groups.add(Option(e.properties)
+          .flatMap(p => Option(p.getProperty("spark.jobGroup.id"))).getOrElse(""))
+    }
+    sc.addSparkListener(listener)
+    def inGroup(g: String)(body: => Any): Unit = {
+      sc.setJobGroup(g, g)
+      try body finally sc.clearJobGroup()
+    }
+    try {
+      inGroup(group)(f)
+      inGroup(s"$group-sentinel")(sc.parallelize(Seq(1), 1).count())
+      val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
+      while (!groups.contains(s"$group-sentinel") && System.nanoTime() < deadline)
+        Thread.sleep(10)
+      assert(groups.contains(s"$group-sentinel"), "listener never saw the sentinel job")
+      groups.toArray.count(_ == group)
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("ScanSpread: a streaming input comes back unchanged, nothing thrown") {
+    val stream = spark.readStream.format("rate").load()
+      .select($"value".as("id"), $"value".cast("string").as("text"))
+    assert(graft.ops.ScanSpread.spread(stream, $"id") eq stream)
+  }
+
+  test("ScanSpread: a join input comes back unchanged and launches no job") {
+    def join() = spark.range(0, 2000).join(spark.range(0, 2000), "id")
+    // the listener sees the jobs a partition count runs on such an input
+    // (a fresh Dataset: `.rdd` is memoized per Dataset)
+    assert(jobsLaunchedBy(join().rdd.getNumPartitions) > 0)
+    val joined = join()
+    var out: org.apache.spark.sql.DataFrame = null
+    assert(jobsLaunchedBy { out = graft.ops.ScanSpread.spread(joined, $"id") } == 0)
+    assert(out eq joined)
+    // a bare file scan reads its split count, also without a job
+    val dir = java.nio.file.Files.createTempDirectory("spread").toString + "/t"
+    spark.range(0, 100).write.parquet(dir)
+    val bare = spark.read.parquet(dir).select($"id").filter($"id" >= 0)
+    assert(jobsLaunchedBy(graft.ops.ScanSpread.spread(bare, $"id")) == 0)
+  }
+
+  test("Jaccard planner pins: each tier keeps exactly the pins its plan reads, every call") {
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.execution.LogicalRDD
+    val sc = spark.sparkContext
+    val sample = docs.limit(400).cache()
+    sample.count()
+    // results stay referenced: a result's pins live as long as its plan
+    val held = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+    def global(cap: Long = DedupOps.MaxBitsetUniverse, brute: Long = DedupOps.BruteForceMaxDocs,
+               budget: Option[Long] = None) = () =>
+      DedupOps.jaccardPairsGlobal(sample, "doc_id", "text", 3, 0.6, bruteMaxDocs = brute,
+        maxBitsetUniverse = cap, candidatePairBudget = budget)
+    def blocked(cap: Long = DedupOps.MaxBitsetUniverse, budget: Option[Long]) = () =>
+      DedupOps.jaccardPairsBlocked(sample, "doc_id", "text", "source", 3, 0.6,
+        maxBitsetUniverse = cap, candidatePairBudget = budget)
+    // (tier, band chunks, call, pins its result reads)
+    val tiers = Seq(
+      ("global bitset", "auto", global(), 1),
+      ("global bitset overflow -> prefix", "auto", global(cap = 0L), 0),
+      ("blocked bitset", "auto", blocked(budget = Some(Long.MaxValue)), 1),
+      ("blocked bitset overflow -> merge-scan", "auto",
+        blocked(cap = 0L, budget = Some(Long.MaxValue)), 0),
+      ("global escalated, one chunk", "1", global(brute = 0L, budget = Some(20000L)), 1),
+      ("global escalated, 4 chunks", "4", global(brute = 0L, budget = Some(20000L)), 4),
+      ("blocked escalated, one chunk", "1", blocked(budget = Some(1000L)), 1),
+      ("blocked escalated, 4 chunks", "4", blocked(budget = Some(1000L)), 4))
+    try for ((tier, chunks, call, expected) <- tiers; i <- 1 to 5) {
+      spark.conf.set(DedupOps.LshBandChunksConf, chunks)
+      val before = sc.getPersistentRDDs.keySet
+      val out = call()
+      held += out
+      val grown = sc.getPersistentRDDs.keySet -- before
+      val reads = out.queryExecution.analyzed.collect { case r: LogicalRDD => r.rdd.id }.toSet
+      assert(grown == reads && grown.size == expected,
+        s"$tier, call $i: pins grew by $grown, the plan reads $reads (want $expected)")
+    } finally spark.conf.unset(DedupOps.LshBandChunksConf)
+  }
 }

@@ -39,7 +39,7 @@ class LayoutOpsSpec extends SparkSuite {
           .cast("double").as("w"))
         .agg(avg($"w")).as[Double].collect().head
 
-    val base = "/root/repo/target/fixtures/zorder_test"
+    val base = new java.io.File("target/fixtures/zorder_test").getAbsolutePath
     // linear layout: range-partition + sort by x only
     df.repartitionByRange(64, $"x").sortWithinPartitions("x")
       .write.mode("overwrite").parquet(s"$base/linear")

@@ -11,7 +11,7 @@ import graft.sources.{PagedManifest, PagedScanBuilder}
 class PagedSourceSpec extends SparkSuite {
 
   private lazy val dir = {
-    val d = s"/root/repo/target/fixtures/paged_spec_${new java.io.File(sf).getName}"
+    val d = new java.io.File(s"target/fixtures/paged_spec_${new java.io.File(sf).getName}").getAbsolutePath
     if (!new java.io.File(d, "_manifest.json").exists()) {
       PagedManifest.writeFixture(
         Tables.orders(spark, sf)

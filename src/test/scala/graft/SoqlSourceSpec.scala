@@ -18,7 +18,7 @@ class SoqlSourceSpec extends SparkSuite {
     "o_orderkey bigint, o_custkey bigint, o_totalprice double, o_orderpriority string"
 
   private lazy val dir = {
-    val d = s"/root/repo/target/fixtures/paged_spec_${new java.io.File(sf).getName}"
+    val d = new java.io.File(s"target/fixtures/paged_spec_${new java.io.File(sf).getName}").getAbsolutePath
     if (!new java.io.File(d, "_manifest.json").exists()) {
       PagedManifest.writeFixture(
         Tables.orders(spark, sf)

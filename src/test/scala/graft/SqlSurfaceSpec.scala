@@ -42,4 +42,58 @@ class SqlSurfaceSpec extends SparkSuite {
       assert(r.getInt(2) == 8, "one bucket per hash table")
     }
   }
+
+  test("register is idempotent on a GraftSqlExtensions session: no function replaced") {
+    import org.apache.logging.log4j.LogManager
+    import org.apache.logging.log4j.core.{LogEvent, Logger}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.spark.sql.SparkSession
+    import org.apache.spark.sql.catalyst.FunctionIdentifier
+    // a second session on the suite's context; create() may take a vacant
+    // active slot, which the suite session keeps
+    val shared = spark
+    val ext = SparkSession.builder()
+      .withExtensions(new graft.functions.GraftSqlExtensions).create()
+    SparkSession.setActiveSession(shared)
+    SparkSession.setDefaultSession(shared)
+    val fns = ext.sessionState.functionRegistry
+    val tableFns = ext.sessionState.tableFunctionRegistry
+    def snapshot() = (
+      fns.listFunction().filter(_.funcName.startsWith("graft_"))
+        .map(id => id -> fns.lookupFunction(id).orNull).toMap,
+      tableFns.listFunction().filter(_.funcName.startsWith("graft_"))
+        .map(id => id -> tableFns.lookupFunction(id).orNull).toMap)
+    val logged = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val appender = new AbstractAppender("register-spec", null, null, true,
+        org.apache.logging.log4j.core.config.Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit = logged.add(e.getMessage.getFormattedMessage)
+    }
+    appender.start()
+    val root = LogManager.getRootLogger.asInstanceOf[Logger]
+    root.addAppender(appender)
+    def replaced = logged.toArray.count(_.toString.contains("replaced a previously registered"))
+    try {
+      val (before, beforeTables) = snapshot()
+      assert(before.nonEmpty && beforeTables.nonEmpty, "the extension injects graft functions")
+      GraftFunctions.register(ext)
+      GraftFunctions.register(ext)
+      val (after, afterTables) = snapshot()
+      assert(after.keySet == before.keySet && afterTables.keySet == beforeTables.keySet)
+      assert(before.forall { case (id, info) => after(id) eq info },
+        "register must leave injected functions in place")
+      assert(beforeTables.forall { case (id, info) => afterTables(id) eq info },
+        "register must leave injected table functions in place")
+      assert(replaced == 0, logged.toArray.mkString("\n"))
+      // the capture sees a real replacement
+      val probe = FunctionIdentifier("graft_register_spec_probe")
+      Seq(before.keys.head, before.keys.last).foreach { id =>
+        fns.registerFunction(probe, fns.lookupFunction(id).get,
+          fns.lookupFunctionBuilder(id).get)
+      }
+      assert(replaced == 1, logged.toArray.mkString("\n"))
+    } finally {
+      root.removeAppender(appender)
+      appender.stop()
+    }
+  }
 }
