@@ -35,22 +35,14 @@ object Bench {
     (single, multi)
   }
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val sfDir = GraftSession.sfDir
     // Per-query wall-clock budget: a single query drifting past this is an
     // in-round red flag (the suite's slowest steady-state query runs ~7 s
     // at sf0.1). Reported as "over_budget" in the JSON line + a loud
     // stderr banner rather than a nonzero exit — the driver reads rc!=0 as
     // "bench broken", which would bury the signal instead of surfacing it.
     val budgetSec = sys.env.getOrElse("SPARK_GRAFT_QUERY_BUDGET_SEC", "20").toDouble
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.hadoop.fs.file.impl",
-        classOf[graft.fs.FastLocalFileSystem].getName)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
     // Warmup: touch every table (file listing, parquet footers, reader JIT)
     // and run the flagship once so timings measure execution rather than
     // first-query session initialization.
@@ -104,7 +96,7 @@ object Bench {
     // JIT, the conservative number. `steady_sec` is the second pass —
     // what a long-lived cluster session runs after warmup. Keeping the
     // headline cold preserves metric semantics across rounds.
-    val calPre = calibrate(cpus.toInt)
+    val calPre = calibrate(GraftSession.cpus)
     val cold = runAll()
     // Inter-pass hygiene: drop cached relations accumulated by the cold
     // sweep and let the JVM compact before timing steady-state — otherwise
@@ -113,9 +105,9 @@ object Bench {
     // Codegen/JIT caches survive, which is what "steady" means.
     spark.catalog.clearCache()
     System.gc()
-    val calMid = calibrate(cpus.toInt)
+    val calMid = calibrate(GraftSession.cpus)
     val steadyRaw = runAll()
-    val calPost = calibrate(cpus.toInt)
+    val calPost = calibrate(GraftSession.cpus)
     // Outlier re-timing: a steady time >3x its own cold time on code the
     // round didn't touch is (empirically, r6+r7) host noise or GC debt,
     // not plan drift. Re-run those once and report min(steady, rerun) so a

@@ -147,7 +147,6 @@ object ScaleBench {
   private def mvProbe(spark: SparkSession, base: String, mult: Int,
                       work: String): (Double, Double, Double) = {
     import graft.ops.{VersionedTable => VT, ViewOps}
-    graft.functions.GraftFunctions.register(spark) // installs the rewrite rule
     val src = s"$work/src"; val view = s"$work/view"
     val fs = new org.apache.hadoop.fs.Path(work)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -276,16 +275,8 @@ object ScaleBench {
   }
 
   def main(args: Array[String]): Unit = {
-    val base = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.ui.enabled", "false")
-      .config("spark.hadoop.fs.file.impl",
-        classOf[graft.fs.FastLocalFileSystem].getName)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val base = GraftSession.sfDir
+    val spark = GraftSession()
     def sec(v: Double) = f"$v%.3f"
     val d10 = "target/scale/sf1"
     val d100 = "target/scale/sf10"

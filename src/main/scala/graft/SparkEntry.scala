@@ -21,6 +21,9 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     Queries.aggGroup(spark, "/root/testdata/sf0.001")
 
+  /** Every registered query, run as `fn(spark, sfDir)` on a [[GraftSession]]
+    * session or one on which [[graft.functions.GraftFunctions.register]]
+    * ran: the queries install no function or rule themselves. */
   def queries: Map[String, (SparkSession, String) => DataFrame] = Queries.all
 
   def oracleSql: Map[String, String] = Queries.oracles
@@ -1264,7 +1267,6 @@ private[graft] object Queries {
     * recursive-CTE transitive closure (the [[dedupNear]] oracle shape).
     */
   def componentsSql(s: SparkSession, d: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     Tables.documents(s, d).createOrReplaceTempView("cc_docs")
     s.sql(
       """CREATE OR REPLACE TEMP VIEW cc_edges AS
@@ -2500,7 +2502,6 @@ private[graft] object Queries {
     */
   def pruneSql(s: SparkSession, d: String): DataFrame = {
     val VT = graft.ops.VersionedTable
-    graft.functions.GraftFunctions.register(s)
     val dir = fixtureDir(d, "vtable_sql")
     val fs = new org.apache.hadoop.fs.Path(dir)
       .getFileSystem(s.sparkContext.hadoopConfiguration)
@@ -2536,7 +2537,6 @@ private[graft] object Queries {
     */
   def aggMeta(s: SparkSession, d: String): DataFrame = {
     val VT = graft.ops.VersionedTable
-    graft.functions.GraftFunctions.register(s)
     val dir = fixtureDir(d, "vtable_meta")
     val fs = new org.apache.hadoop.fs.Path(dir)
       .getFileSystem(s.sparkContext.hadoopConfiguration)
@@ -2624,7 +2624,6 @@ private[graft] object Queries {
     */
   def mvRewrite(s: SparkSession, d: String): DataFrame = {
     val VT = graft.ops.VersionedTable
-    graft.functions.GraftFunctions.register(s)
     val src = fixtureDir(d, "vtable_mv")
     val view = fixtureDir(d, "vtable_mv_view")
     val fs = new org.apache.hadoop.fs.Path(src)
@@ -2769,7 +2768,6 @@ private[graft] object Queries {
     */
   def mergeSql(s: SparkSession, d: String): DataFrame = {
     val VT = graft.ops.VersionedTable
-    graft.functions.GraftFunctions.register(s)
     val dir = fixtureDir(d, "vtable_dml_merge")
     val fs = new org.apache.hadoop.fs.Path(dir)
       .getFileSystem(s.sparkContext.hadoopConfiguration)
@@ -2905,7 +2903,6 @@ private[graft] object Queries {
     * recomputes the CTAS + merge from scratch in DuckDB.
     */
   def ddlSql(s: SparkSession, d: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val name = s"cust_ddl_${new java.io.File(d).getName}"
     val G = graft.sql.GraftSql
     G.sql(s, s"DROP TABLE IF EXISTS graft_vtable('$name') PURGE").collect()
@@ -2947,7 +2944,6 @@ private[graft] object Queries {
     * table (reference/scripts/setup_db.py:33, load.py:114).
     */
   def catalogSql(s: SparkSession, d: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     s.conf.set("spark.sql.catalog.graft",
       classOf[graft.catalog.GraftTableCatalog].getName)
     val name = s"cust_cat_${new java.io.File(d).getName}".replace('.', '_')
@@ -3019,7 +3015,6 @@ private[graft] object Queries {
     * reference's core operator (reference/scripts/load.py:114-147).
     */
   def catalogMerge(s: SparkSession, d: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     s.conf.set("spark.sql.catalog.graft",
       classOf[graft.catalog.GraftTableCatalog].getName)
     val name = s"cust_catm_${new java.io.File(d).getName}".replace('.', '_')
@@ -3099,7 +3094,6 @@ private[graft] object Queries {
     * `spark.databricks.delta.schema.autoMerge` / WITH SCHEMA EVOLUTION.
     */
   def catalogMergeEvolve(s: SparkSession, d: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     s.conf.set("spark.sql.catalog.graft",
       classOf[graft.catalog.GraftTableCatalog].getName)
     val name = s"cust_catme_${new java.io.File(d).getName}".replace('.', '_')
@@ -3188,7 +3182,6 @@ private[graft] object Queries {
     * the byte-identical no-rewrite invariants file-level.
     */
   def colmapSql(s: SparkSession, d: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val name = s"cust_colmap_${new java.io.File(d).getName}"
     val G = graft.sql.GraftSql
     G.sql(s, s"DROP TABLE IF EXISTS graft_vtable('$name') PURGE").collect()
@@ -3229,7 +3222,6 @@ private[graft] object Queries {
       |ORDER BY c_custkey""".stripMargin
 
   def maintenanceSql(s: SparkSession, d: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val name = s"ord_maint_${new java.io.File(d).getName}"
     val G = graft.sql.GraftSql
     G.sql(s, s"DROP TABLE IF EXISTS graft_vtable('$name') PURGE").collect()
@@ -3298,7 +3290,6 @@ private[graft] object Queries {
     * containment guard; this query pins the end-to-end SQL content).
     */
   def replaceWhereSql(s: SparkSession, d: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val name = s"ord_replw_${new java.io.File(d).getName}"
     val G = graft.sql.GraftSql
     G.sql(s, s"DROP TABLE IF EXISTS graft_vtable('$name') PURGE").collect()
@@ -3343,7 +3334,6 @@ private[graft] object Queries {
     * independence invariants file-level).
     */
   def cloneSql(s: SparkSession, d: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val suffix = new java.io.File(d).getName
     val src = s"cl_src_$suffix"; val dst = s"cl_dst_$suffix"
     val G = graft.sql.GraftSql
@@ -3386,7 +3376,6 @@ private[graft] object Queries {
     * recomputes the surviving rows directly.
     */
   def deleteDv(s: SparkSession, d: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val VT = graft.ops.VersionedTable
     val dir = fixtureDir(d, "dv_tbl")
     val fs = new org.apache.hadoop.fs.Path(dir)
@@ -3433,7 +3422,6 @@ private[graft] object Queries {
     * size+mtime byte-stability file-level.
     */
   def updateDv(s: SparkSession, d: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val VT = graft.ops.VersionedTable
     val dir = fixtureDir(d, "dv_upd_tbl")
     val fs = new org.apache.hadoop.fs.Path(dir)
@@ -3507,7 +3495,6 @@ private[graft] object Queries {
     * no patches + pending DVs after, source row count untouched).
     */
   def dvCompose(s: SparkSession, d: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val VT = graft.ops.VersionedTable
     val dir = fixtureDir(d, "dv_comp_tbl")
     val cloneDir = fixtureDir(d, "dv_comp_clone")
@@ -3621,7 +3608,6 @@ private[graft] object Queries {
       VT.currentVersion(s, dir).get).files.size
     require(files < 8,
       s"q_auto_compact: 8 one-file appends must not accumulate, got $files")
-    graft.functions.GraftFunctions.register(s)
     s.sql(
       s"""SELECT c_custkey, c_nationkey, cents
          |FROM graft_vtable('$dir')
@@ -3646,7 +3632,6 @@ private[graft] object Queries {
     * idea), so "the table as of t" is never ambiguous.
     */
   def timeTravelTs(s: SparkSession, d: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val name = s"tt_ts_${new java.io.File(d).getName}"
     val G = graft.sql.GraftSql
     G.sql(s, s"DROP TABLE IF EXISTS graft_vtable('$name') PURGE").collect()
@@ -3709,7 +3694,6 @@ private[graft] object Queries {
     */
   def streamSink(s: SparkSession, d: String): DataFrame = {
     val VT = graft.ops.VersionedTable
-    graft.functions.GraftFunctions.register(s)
     val src = fixtureDir(d, "sink_stream_src")
     val tbl = fixtureDir(d, "sink_stream_tbl")
     val ckpt = fixtureDir(d, "sink_stream_ckpt")
@@ -3763,7 +3747,6 @@ private[graft] object Queries {
     */
   def streamTable(s: SparkSession, d: String): DataFrame = {
     val VT = graft.ops.VersionedTable
-    graft.functions.GraftFunctions.register(s)
     val tbl = fixtureDir(d, "tbl_stream_src")
     val out = fixtureDir(d, "tbl_stream_out")
     val ckpt = fixtureDir(d, "tbl_stream_ckpt")

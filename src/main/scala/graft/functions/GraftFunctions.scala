@@ -2,17 +2,19 @@ package graft.functions
 
 import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.catalyst.analysis.FunctionRegistryBase
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.catalyst.rules.Rule
 
 /** SQL surface for the native kernels: after registration every graft
   * function is callable from `spark.sql(...)` / `selectExpr` by name, so a
   * SQL-only user gets the same codegen'd hot paths as the Column API.
   *
-  * Two registration routes:
-  *  - [[GraftFunctions.register]] — imperative, per-session.
-  *  - [[GraftSqlExtensions]] — the production path: set
-  *    `spark.sql.extensions=graft.functions.GraftSqlExtensions` and every
-  *    session (including thrift/connect-served ones) has the functions.
+  * Two install routes read the same function lists and rule table:
+  *  - [[GraftSqlExtensions]] — the production path, injected by
+  *    [[graft.GraftSession]] or `spark.sql.extensions`.
+  *  - [[GraftFunctions.register]] — for a session built without it.
   */
 object GraftFunctions {
 
@@ -60,8 +62,7 @@ object GraftFunctions {
     * analysis time, exactly when a lakehouse catalog would pin a
     * snapshot, so a query plan never sees a moving table.
     */
-  private def vtablePlan(es: Seq[Expression])
-      : org.apache.spark.sql.catalyst.plans.logical.LogicalPlan = {
+  private def vtablePlan(es: Seq[Expression]): LogicalPlan = {
     require(es.nonEmpty && es.size <= 2,
       "graft_vtable takes (name-or-dir) or (name-or-dir, version | timestamp)")
     val spark = SparkSession.active
@@ -112,8 +113,7 @@ object GraftFunctions {
     * is the raw wall-clock commit time (NULL for pre-timestamp
     * manifests). Pure manifest reads, no data file opens.
     */
-  private def vtableHistoryPlan(es: Seq[Expression])
-      : org.apache.spark.sql.catalyst.plans.logical.LogicalPlan = {
+  private def vtableHistoryPlan(es: Seq[Expression]): LogicalPlan = {
     require(es.size == 1, "graft_vtable_history takes (dir)")
     val spark = SparkSession.active
     val h = graft.ops.VersionedTable.history(spark,
@@ -134,8 +134,7 @@ object GraftFunctions {
     * versions, O(changed files). Keys are a comma-separated literal (SQL
     * table functions cannot take identifier lists).
     */
-  private def vtableChangesPlan(es: Seq[Expression])
-      : org.apache.spark.sql.catalyst.plans.logical.LogicalPlan = {
+  private def vtableChangesPlan(es: Seq[Expression]): LogicalPlan = {
     require(es.size == 4,
       "graft_vtable_changes takes (dir, fromVersion, toVersion, 'key1[,key2…]')")
     val keys = litString(es(3), "graft_vtable_changes: keys")
@@ -156,8 +155,7 @@ object GraftFunctions {
     * feed a planner consults without touching data, now queryable where
     * planners live.
     */
-  private def vtableStatsPlan(es: Seq[Expression])
-      : org.apache.spark.sql.catalyst.plans.logical.LogicalPlan = {
+  private def vtableStatsPlan(es: Seq[Expression]): LogicalPlan = {
     require(es.nonEmpty && es.size <= 2,
       "graft_vtable_stats takes (dir) or (dir, version)")
     val spark = SparkSession.active
@@ -178,8 +176,7 @@ object GraftFunctions {
     * CHECK constraints (`graft.check.<name>`), the IVM source pin. Pure
     * manifest-header read, no data file opens.
     */
-  private def vtablePropsPlan(es: Seq[Expression])
-      : org.apache.spark.sql.catalyst.plans.logical.LogicalPlan = {
+  private def vtablePropsPlan(es: Seq[Expression]): LogicalPlan = {
     require(es.nonEmpty && es.size <= 2,
       "graft_vtable_props takes (dir) or (dir, version)")
     val spark = SparkSession.active
@@ -201,8 +198,7 @@ object GraftFunctions {
     * SQL DML) can address the table by name. Returns the binding as a
     * one-row relation.
     */
-  private def vtableRegisterPlan(es: Seq[Expression])
-      : org.apache.spark.sql.catalyst.plans.logical.LogicalPlan = {
+  private def vtableRegisterPlan(es: Seq[Expression]): LogicalPlan = {
     require(es.size == 2, "graft_register_vtable takes (name, dir)")
     val spark = SparkSession.active
     val name = litString(es.head, "graft_register_vtable: name")
@@ -222,8 +218,7 @@ object GraftFunctions {
     * One row per distinct node appearing in an edge; `component` is the
     * smallest node id in its component.
     */
-  private def componentsPlan(es: Seq[Expression])
-      : org.apache.spark.sql.catalyst.plans.logical.LogicalPlan = {
+  private def componentsPlan(es: Seq[Expression]): LogicalPlan = {
     require(es.size == 3,
       "graft_components takes ('edgesTableOrView', 'srcCol', 'dstCol')")
     val spark = SparkSession.active
@@ -235,8 +230,7 @@ object GraftFunctions {
       .queryExecution.analyzed
   }
 
-  private val tableFns: Seq[(String,
-      Seq[Expression] => org.apache.spark.sql.catalyst.plans.logical.LogicalPlan)] =
+  private val tableFns: Seq[(String, Seq[Expression] => LogicalPlan)] =
     Seq("graft_vtable" -> (vtablePlan _),
       "graft_components" -> (componentsPlan _),
       "graft_vtable_history" -> (vtableHistoryPlan _),
@@ -245,89 +239,73 @@ object GraftFunctions {
       "graft_vtable_props" -> (vtablePropsPlan _),
       "graft_register_vtable" -> (vtableRegisterPlan _))
 
-  /** Idempotent per-session registration: a function or table function
-    * already in the session registry (an earlier call, or the
+  /** Where a graft rule runs on the extension route. */
+  private[functions] sealed trait Phase
+  private[functions] case object PostHocResolution extends Phase
+  private[functions] case object Optimization extends Phase
+
+  /** Every graft logical rule, in install order. [[GraftSqlExtensions]]
+    * injects each at its phase; [[register]] appends them all, in this
+    * order, to `experimental.extraOptimizations` (a fixed-point batch
+    * after the main optimizer, so a later rule sees an earlier rule's
+    * swap on the next iteration).
+    */
+  private[functions] val rules: Seq[(Phase, Rule[LogicalPlan])] = Seq(
+    // catalog DML first: the catalog-read swap would turn the DML target
+    // relation into a read plan
+    PostHocResolution -> graft.plans.VtableCatalogDml,
+    PostHocResolution -> graft.plans.VtableCatalogReads,
+    Optimization -> graft.plans.IntervalJoinRewrite,
+    // the view rewrite wants the pristine Aggregate-over-scan shape, so it
+    // runs before skipping swaps the relation's file index
+    Optimization -> graft.plans.VtableViewRewrite,
+    Optimization -> graft.plans.VtableSkipping,
+    Optimization -> graft.plans.VtableMetadataAgg)
+
+  /** Idempotent per-session install: a function, table function or rule
+    * the session already has (an earlier call, or the
     * [[GraftSqlExtensions]] injection) is left as it is.
     */
   def register(spark: SparkSession): Unit = {
-    val registry = spark.sessionState.functionRegistry
-    fns.foreach { case (name, builder) =>
-      if (!registry.functionExists(FunctionIdentifier(name)))
-        registry.createOrReplaceTempFunction(name, builder, "built-in")
-    }
-    val tableRegistry = spark.sessionState.tableFunctionRegistry
-    tableFns.foreach { case (name, builder) =>
-      if (!tableRegistry.functionExists(FunctionIdentifier(name)))
-        tableRegistry.createOrReplaceTempFunction(name, builder, "built-in")
-    }
-    // sessions built without spark.sql.extensions still get the
-    // versioned-table data-skipping rule (the experimental batch runs
-    // after the main optimizer, same place injected rules land).
-    // VtableCatalogReads runs FIRST (swaps V2-catalog scan relations for
-    // the native tagged read the other rules key off — the batch is a
-    // fixed point, so they see the swap on the next iteration); then
-    // VtableViewRewrite: it wants the pristine Aggregate-over-scan shape
-    // before skipping swaps the relation's file index
-    Seq(graft.plans.VtableCatalogDml, graft.plans.VtableCatalogReads,
-        graft.plans.VtableViewRewrite, graft.plans.VtableSkipping,
-        graft.plans.VtableMetadataAgg).foreach { r =>
-      if (!spark.experimental.extraOptimizations.contains(r))
-        spark.experimental.extraOptimizations =
-          spark.experimental.extraOptimizations :+ r
-    }
+    def install[T](registry: FunctionRegistryBase[T],
+                   fs: Seq[(FunctionIdentifier, ExpressionInfo, Seq[Expression] => T)]): Unit =
+      fs.foreach { case (id, info, builder) =>
+        if (!registry.functionExists(id)) registry.registerFunction(id, info, builder) }
+    install(spark.sessionState.functionRegistry, injected)
+    install(spark.sessionState.tableFunctionRegistry, injectedTable)
+    val installed = spark.sessionState.analyzer.postHocResolutionRules ++
+      spark.sessionState.optimizer.extendedOperatorOptimizationRules ++
+      spark.experimental.extraOptimizations
+    val missing = rules.map(_._2).filterNot(installed.contains)
+    if (missing.nonEmpty)
+      spark.experimental.extraOptimizations =
+        spark.experimental.extraOptimizations ++ missing
   }
 
-  private[functions] def injected: Seq[(FunctionIdentifier,
-      ExpressionInfo, Seq[Expression] => Expression)] =
-    fns.map { case (name, builder) =>
-      (FunctionIdentifier(name),
-        new ExpressionInfo("graft.functions.VectorExpressions", name), builder)
-    }
+  private def withInfo[B](fs: Seq[(String, B)], cls: String) =
+    fs.map { case (name, b) =>
+      (FunctionIdentifier(name), new ExpressionInfo(cls, name), b) }
 
-  private[functions] def injectedTable: Seq[(FunctionIdentifier, ExpressionInfo,
-      Seq[Expression] => org.apache.spark.sql.catalyst.plans.logical.LogicalPlan)] =
-    tableFns.map { case (name, builder) =>
-      (FunctionIdentifier(name),
-        new ExpressionInfo("graft.ops.VersionedTable", name), builder)
-    }
+  private[functions] def injected = withInfo(fns, "graft.functions.VectorExpressions")
+
+  private[functions] def injectedTable = withInfo(tableFns, "graft.ops.VersionedTable")
 }
 
-/** `spark.sql.extensions` injector — registers every graft function at
-  * session build time.
+/** `spark.sql.extensions` injector — installs every graft function, rule
+  * and the DML parser at session build time.
   */
 class GraftSqlExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
+    import GraftFunctions.{Optimization, PostHocResolution, rules}
     GraftFunctions.injected.foreach(ext.injectFunction)
     GraftFunctions.injectedTable.foreach(ext.injectTableFunction)
-    // interval-overlap joins become binned hash joins (see
-    // graft.plans.IntervalJoinRewrite) — injected as an optimizer rule so
-    // SQL/DataFrame users get the distributable plan transparently
-    ext.injectOptimizerRule(_ => graft.plans.IntervalJoinRewrite)
-    // grouped COUNT/SUM/AVG over a versioned table answered from its
-    // maintained incremental view, freshness-gated on the ledger — see
-    // graft.plans.VtableViewRewrite (before skipping: it wants the
-    // pristine Aggregate-over-scan shape)
-    ext.injectOptimizerRule(_ => graft.plans.VtableViewRewrite)
-    // versioned-table manifest data skipping for plain Filter-over-read
-    // plans (SQL WHERE over graft_vtable included) — see
-    // graft.plans.VtableSkipping
-    ext.injectOptimizerRule(_ => graft.plans.VtableSkipping)
-    // metadata-only COUNT/MIN/MAX over an unfiltered versioned read —
-    // answered from the manifest, zero file opens
-    ext.injectOptimizerRule(_ => graft.plans.VtableMetadataAgg)
+    rules.collect { case (Optimization, r) => r }
+      .foreach(r => ext.injectOptimizerRule(_ => r))
     // SQL DML on versioned tables: MERGE INTO / UPDATE / DELETE against
     // graft_vtable('ref') parse here and route through the versioned
     // commits; everything else delegates to Spark's parser untouched
     ext.injectParser((_, delegate) => new graft.sql.GraftSqlParser(delegate))
-    // V2-catalog DML (`MERGE INTO graft.t` / `UPDATE` / arbitrary-
-    // predicate `DELETE`) rewrites into the versioned commits — MUST run
-    // before VtableCatalogReads, which would swap the DML target relation
-    // for a read plan — see graft.plans.VtableCatalogDml
-    ext.injectPostHocResolutionRule(_ => graft.plans.VtableCatalogDml)
-    // V2-catalog reads (`SELECT … FROM graft.t`) swap to the native
-    // versioned read plan — same tagged relation as the TVF, so skipping/
-    // metadata-agg/MV-rewrite apply identically — see
-    // graft.plans.VtableCatalogReads
-    ext.injectPostHocResolutionRule(_ => graft.plans.VtableCatalogReads)
+    rules.collect { case (PostHocResolution, r) => r }
+      .foreach(r => ext.injectPostHocResolutionRule(_ => r))
   }
 }

@@ -697,7 +697,7 @@ object DedupOps {
     * docs, 16×4 banding, t=0.5 (190.5M true pairs): naive 1165 s,
     * salted 258 s — the hot cells spread instead of straggling.
     */
-  private[graft] def bandedCandidatePairs(banded: DataFrame,
+  private def bandedCandidatePairs(banded: DataFrame,
       extraKeys: Seq[String], estFloor: Double): DataFrame = {
     val spark = banded.sparkSession
     val keyNames = extraKeys ++ Seq("band", "bhash")
@@ -772,13 +772,10 @@ object DedupOps {
   /** Banded explode over minhash signatures for bands [lo, hi): one row
     * per (id, band) with `bhash` = hash of the band's signature slice,
     * seeded by the TRUE band index — so a chunk's (band, bhash) keys are
-    * exactly the unchunked keys restricted to its bands. Shared by
-    * [[escalatedLshPairs]] and the plan-capture tool
-    * (graft.tools.ExplainDedupStages) so committed stage plans are
-    * constructed by the same code path that runs in production.
+    * exactly the unchunked keys restricted to its bands.
     */
-  private[graft] def bandedExplode(src: DataFrame, r: Int, lo: Int, hi: Int,
-                                   extraCols: Seq[String] = Nil): DataFrame = {
+  private def bandedExplode(src: DataFrame, r: Int, lo: Int, hi: Int,
+                            extraCols: Seq[String] = Nil): DataFrame = {
     val keep = Seq(col("id"), col("sig")) ++ extraCols.map(col)
     src.select(keep :+ posexplode(array((lo until hi).map(bd =>
         hash(slice(col("sig"), bd * r + 1, r), lit(bd))): _*))

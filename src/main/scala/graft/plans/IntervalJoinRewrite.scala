@@ -21,7 +21,7 @@ import org.apache.spark.sql.types.{BooleanType, DataType, LongType}
   * `PlanHints.overlap`): semantically it IS the plain overlap check, so the
   * query is correct with or without the extension installed. When
   * [[IntervalJoinRewrite]] is active (via `GraftSqlExtensions` or
-  * `spark.experimental.extraOptimizations`), the rule rewrites the join to
+  * `GraftFunctions.register`), the rule rewrites the join to
   * the [[graft.ops.JoinOps.intervalJoin]] shape: both sides explode over
   * the fixed-width bins their intervals cover, the join becomes an equi
   * join on bin id, the exact predicate stays as residual, and the

@@ -2,7 +2,7 @@ package graft.plans
 
 import org.apache.spark.sql.{GraftShim, Row, SparkSession}
 import org.apache.spark.sql.catalyst.analysis.{EliminateSubqueryAliases, UnresolvedAttribute}
-import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeReference, Cast, EqualTo, Expression}
+import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeReference, Cast, CommonExpressionRef, EqualTo, Expression, Literal, RuntimeReplaceable, With}
 import org.apache.spark.sql.catalyst.plans.QueryPlan
 import org.apache.spark.sql.catalyst.plans.logical._
 import org.apache.spark.sql.catalyst.rules.Rule
@@ -85,13 +85,24 @@ object VtableCatalogDml extends Rule[LogicalPlan] {
     * re-resolve them against ITS OWN read of the table (the same contract
     * as the SQL-string front door, which the range miner understands).
     */
-  private def unbind(e: Expression, what: String): Expression = e.transform {
+  private def unbind(e: Expression, what: String): Expression = inlined(e).transform {
     case a: AttributeReference => UnresolvedAttribute.quoted(a.name)
     case s: org.apache.spark.sql.catalyst.expressions.SubqueryExpression =>
       throw new UnsupportedOperationException(
         s"VtableCatalogDml: $what with a subquery is not supported — " +
           "materialize the subquery into the condition first")
   }
+
+  /** The expression as the optimizer route sees it: `BETWEEN` and other
+    * replaceable forms replaced, `With` inlined (by-name refs cannot
+    * re-resolve it) and constants folded (file pruning reads literals). */
+  private def inlined(e: Expression): Expression =
+    e.transformUp { case r: RuntimeReplaceable => r.replacement }
+      .transformUp { case With(child, defs) =>
+        val byId = defs.map(d => d.id -> d.child).toMap
+        child.transformUp { case r: CommonExpressionRef if byId.contains(r.id) => byId(r.id) }
+      }
+      .transformUp { case c if c.foldable && !c.isInstanceOf[Literal] => Literal.create(c.eval(), c.dataType) }
 
   private def splitConj(e: Expression): Seq[Expression] = e match {
     case org.apache.spark.sql.catalyst.expressions.And(l, r) =>

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev harness: capture `.explain("formatted")` for named
   * [[graft.SparkEntry.queries]] entries — the plan evidence the
   * optimization rounds commit under `plans/rNN/`.
@@ -16,8 +14,7 @@ import org.apache.spark.sql.SparkSession
   */
 object ExplainQuery {
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val sfDir = graft.GraftSession.sfDir
     var out = "plans"
     var suffix = "after"
     val confs = scala.collection.mutable.ListBuffer[(String, String)]()
@@ -32,12 +29,7 @@ object ExplainQuery {
         case q => names += q; i += 1
       }
     }
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession()
     confs.foreach { case (k, v) => spark.conf.set(k, v) }
     val dir = java.nio.file.Paths.get(out)
     java.nio.file.Files.createDirectories(dir)
@@ -45,7 +37,7 @@ object ExplainQuery {
       val fn = graft.SparkEntry.queries.getOrElse(q, sys.error(s"unknown query $q"))
       val df = fn(spark, sfDir)
       val header =
-        s"# $q  (.explain(\"formatted\"), data=$sfDir, cpus=$cpus)\n" +
+        s"# $q  (.explain(\"formatted\"), data=$sfDir, cpus=${graft.GraftSession.cpus})\n" +
           (if (confs.nonEmpty)
              confs.map { case (k, v) => s"# conf $k=$v" }.mkString("", "\n", "\n")
            else "") + "\n"

@@ -1,27 +1,23 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerJobEnd}
 
-/** Dev harness: per-Spark-job attribution for a registered query — one
-  * line per job with wall ms, task count, and the call site that launched
-  * it (`JobProfile q_dv_compose [q_...]`). The first thing to look at
-  * when a fixture-heavy query's wall is many small jobs: WHICH operations
-  * launch them and what each one costs. Runs each query once warm (rep 0
-  * discarded) and profiles the second run.
+/** Dev harness: timing and per-Spark-job attribution for registered
+  * queries in one warm JVM — `JobProfile q_dv_compose [q_...] [reps]`.
+  * Each query runs once cold, then `reps` more times (default 1); every
+  * run prints its wall seconds and Spark job count, and the last run also
+  * prints one line per job with wall ms, task count, and the call site
+  * that launched it. The first thing to look at when a fixture-heavy
+  * query's wall is many small jobs: WHICH operations launch them and what
+  * each one costs.
   */
 object JobProfile {
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.hadoop.fs.file.impl",
-        classOf[graft.fs.FastLocalFileSystem].getName)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val sfDir = graft.GraftSession.sfDir
+    val (repArgs, names) = args.partition(_.forall(_.isDigit))
+    val reps = repArgs.lastOption.map(_.toInt).getOrElse(1)
+    val spark = graft.GraftSession()
+    val sc = spark.sparkContext
     case class J(id: Int, t0: Long, site: String, tasks: Int)
     val open = scala.collection.concurrent.TrieMap.empty[Int, J]
     val done = new java.util.concurrent.ConcurrentLinkedQueue[(J, Long)]()
@@ -46,28 +42,31 @@ object JobProfile {
       override def onJobEnd(e: SparkListenerJobEnd): Unit =
         open.remove(e.jobId).foreach(j => done.add((j, System.nanoTime())))
     }
-    args.foreach { q =>
+    sc.addSparkListener(listener)
+    names.foreach { q =>
       val fn = graft.SparkEntry.queries.getOrElse(q, sys.error(s"unknown query $q"))
-      fn(spark, sfDir).count() // warm
-      spark.sparkContext.addSparkListener(listener)
-      done.clear(); open.clear()
-      val t0 = System.nanoTime()
-      fn(spark, sfDir).count()
-      val wall = (System.nanoTime() - t0) / 1e9
-      // listener bus is async: give it a moment to drain
-      Thread.sleep(500)
-      spark.sparkContext.removeSparkListener(listener)
-      println(f"== $q wall=$wall%.3f s jobs=${done.size}%d")
-      import scala.jdk.CollectionConverters._
-      val rows = done.asScala.toSeq.sortBy(_._1.id)
-      var acc = 0L
-      rows.foreach { case (j, t1) =>
-        val ms = (t1 - j.t0) / 1e6
-        acc += (t1 - j.t0)
-        println(f"  job=${j.id}%4d ${ms}%8.1f ms tasks=${j.tasks}%4d  ${j.site}")
+      (0 to reps).foreach { i =>
+        done.clear(); open.clear()
+        val t0 = System.nanoTime()
+        fn(spark, sfDir).count()
+        val wall = (System.nanoTime() - t0) / 1e9
+        // the listener bus is asynchronous: wait until it has delivered
+        // every job-end event of this run
+        org.apache.spark.sql.GraftShim.drainListenerBus(sc)
+        val tag = if (i == 0) "cold" else s"rep$i"
+        println(f"== $q $tag wall=$wall%.3f s jobs=${done.size}%d")
+        if (i == reps) {
+          import scala.jdk.CollectionConverters._
+          val rows = done.asScala.toSeq.sortBy(_._1.id)
+          rows.foreach { case (j, t1) =>
+            println(f"  job=${j.id}%4d ${(t1 - j.t0) / 1e6}%8.1f ms tasks=${j.tasks}%4d  ${j.site}")
+          }
+          val acc = rows.map { case (j, t1) => t1 - j.t0 }.sum
+          println(f"  sum_job_wall=${acc / 1e9}%.3f s (gaps = driver-side work)")
+        }
       }
-      println(f"  sum_job_wall=${acc / 1e9}%.3f s (gaps = driver-side work)")
     }
+    sc.removeSparkListener(listener)
     spark.stop()
   }
 }

@@ -22,6 +22,11 @@ object GraftShim {
                 plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
 
+  /** Block until the asynchronous, `private[spark]` listener bus has
+    * delivered every event posted so far. */
+  def drainListenerBus(sc: org.apache.spark.SparkContext): Unit =
+    sc.listenerBus.waitUntilEmpty()
+
   /** Mine `attr <op> literal` comparisons from a predicate Column's
     * top-level AND conjuncts — Spark 4 Columns are backend-agnostic
     * [[internal.ColumnNode]] trees (`UnresolvedFunction("and"/">="/...)`),
@@ -32,9 +37,6 @@ object GraftShim {
     * exact predicate anyway). OR nodes are never split; anything
     * unrecognized yields nothing — strictly conservative.
     */
-  /** Debug: a Column's node tree rendering (probe aid). */
-  def nodeString(c: Column): String = c.node.toString
-
   /** Re-wrap a streaming micro-batch DataFrame as a BATCH one over the
     * already-planned RDD — the `ForeachBatchSink` trick, needed by any V1
     * [[execution.streaming.Sink]] that wants to run its own actions on

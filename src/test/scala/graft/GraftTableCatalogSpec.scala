@@ -176,7 +176,7 @@ class GraftTableCatalogSpec extends SparkSuite {
     withCatalog { root =>
       val dir = s"$root/t"; mkTable(dir)
       GraftCatalog.register(spark, "cat_fb", dir)
-      // THIS session (register() — the default packaging) must take the
+      // THIS session (GraftSession — the default packaging) must take the
       // native parquet scan: a packaging mistake that silently dropped
       // to the row-based fallback would be a correctness-invisible
       // performance cliff, so the plan shape is the assert
@@ -189,7 +189,7 @@ class GraftTableCatalogSpec extends SparkSuite {
       }.isEmpty, "registered session must never take the V1 fallback")
       // a BARE session (no extensions, no register) still answers —
       // correct, through the V1Scan row-based fallback
-      val bare = spark.newSession()
+      val bare = SparkTestSession.bare()
       bare.conf.set("spark.sql.catalog.graft",
         classOf[graft.catalog.GraftTableCatalog].getName)
       spark.conf.getOption("spark.graft.catalog.path")

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.plans.{IntervalJoinRewrite, PlanHints}
@@ -8,12 +8,13 @@ import graft.plans.{IntervalJoinRewrite, PlanHints}
 class IntervalRewriteSpec extends SparkSuite {
   import spark.implicits._
 
-  private def mk(pre: String, n: Int, seed: Int): DataFrame = {
+  private def mk(pre: String, n: Int, seed: Int,
+                 session: SparkSession = spark): DataFrame = {
     val rnd = new scala.util.Random(seed)
-    (0 until n).map { i =>
+    session.createDataFrame((0 until n).map { i =>
       val s = rnd.nextInt(5000).toLong
       (i.toLong, s, s + rnd.nextInt(400).toLong)
-    }.toDF(s"${pre}_id", s"${pre}_start", s"${pre}_end")
+    }).toDF(s"${pre}_id", s"${pre}_start", s"${pre}_end")
   }
 
   private def joined(a: DataFrame, b: DataFrame): DataFrame =
@@ -27,7 +28,9 @@ class IntervalRewriteSpec extends SparkSuite {
   }
 
   test("rule off: marker predicate is correct but plans a nested loop") {
-    val (a, b) = (mk("a", 80, 1), mk("b", 90, 2))
+    // the suite session carries the rule; a bare one has none
+    val bare = SparkTestSession.bare()
+    val (a, b) = (mk("a", 80, 1, bare), mk("b", 90, 2, bare))
     val df = joined(a, b)
     val p = df.queryExecution.executedPlan.toString
     assert(p.contains("BroadcastNestedLoop") || p.contains("CartesianProduct"),

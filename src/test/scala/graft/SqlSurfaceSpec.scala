@@ -47,15 +47,8 @@ class SqlSurfaceSpec extends SparkSuite {
     import org.apache.logging.log4j.LogManager
     import org.apache.logging.log4j.core.{LogEvent, Logger}
     import org.apache.logging.log4j.core.appender.AbstractAppender
-    import org.apache.spark.sql.SparkSession
     import org.apache.spark.sql.catalyst.FunctionIdentifier
-    // a second session on the suite's context; create() may take a vacant
-    // active slot, which the suite session keeps
-    val shared = spark
-    val ext = SparkSession.builder()
-      .withExtensions(new graft.functions.GraftSqlExtensions).create()
-    SparkSession.setActiveSession(shared)
-    SparkSession.setDefaultSession(shared)
+    val ext = SparkTestSession.extended()
     val fns = ext.sessionState.functionRegistry
     val tableFns = ext.sessionState.tableFunctionRegistry
     def snapshot() = (
@@ -84,6 +77,15 @@ class SqlSurfaceSpec extends SparkSuite {
       assert(beforeTables.forall { case (id, info) => afterTables(id) eq info },
         "register must leave injected table functions in place")
       assert(replaced == 0, logged.toArray.mkString("\n"))
+      // nor any rule: the extension already runs them all, so a copy in
+      // the extra batch would only run each one a second time — on this
+      // session and on the suite's GraftSession one
+      GraftFunctions.register(spark)
+      GraftFunctions.register(spark)
+      Seq(ext, spark).foreach { s =>
+        assert(s.experimental.extraOptimizations.isEmpty,
+          s"register must install no rule twice: ${s.experimental.extraOptimizations}")
+      }
       // the capture sees a real replacement
       val probe = FunctionIdentifier("graft_register_spec_probe")
       Seq(before.keys.head, before.keys.last).foreach { id =>
