@@ -41,7 +41,7 @@ object Bench {
     // at sf0.1). Reported as "over_budget" in the JSON line + a loud
     // stderr banner rather than a nonzero exit — the driver reads rc!=0 as
     // "bench broken", which would bury the signal instead of surfacing it.
-    val budgetSec = sys.env.getOrElse("SPARK_GRAFT_QUERY_BUDGET_SEC", "20").toDouble
+    val budgetSec = 20.0
     val spark = GraftSession()
     // Warmup: touch every table (file listing, parquet footers, reader JIT)
     // and run the flagship once so timings measure execution rather than
@@ -120,7 +120,7 @@ object Bench {
     // sample above an absolute floor — re-running the handful of
     // legitimately-slow queries costs a few seconds and bounds how much
     // contention any single window can inject into the steady total.
-    val retimeFloor = sys.env.getOrElse("SPARK_GRAFT_RETIME_FLOOR_SEC", "2.0").toDouble
+    val retimeFloor = 2.0
     val outliers = steadyRaw.collect {
       case (q, s) if (s > 3 * cold.getOrElse(q, Double.MaxValue) && s > 0.5) || s > retimeFloor => q
     }.toSeq.sorted

@@ -292,128 +292,6 @@ object ScaleBench {
       f""""recall_global":{"measured":$gr%.4f,"found":$gf,"truth":$gt,"stated_bound":$gb%.4f},""" +
         f""""recall_blocked":{"measured":$br%.4f,"found":$bf,"truth":$bt,"stated_bound":$bb%.4f}"""
     }
-    // THIRD decade (5M docs / 2M embeddings): the 100 TB posture rests
-    // on exponents measured to 500k docs; this mode extends the ladder
-    // one more decade for the families whose scale path must flatten it
-    // — the budget-escalated Jaccard pair (the escalation is precisely
-    // what must hold the exponent near 1), banded MinHash-LSH, and the
-    // IVF similarity family. Separate mode: ~1k-partition build + long
-    // timed runs; emits target/scale_decade3.json with per-query
-    // third-decade exponents and the budget-escalation trace
-    // (lastCapReport) for the escalated queries.
-    if (args.contains("--third-decade")) {
-      val d1000 = "target/scale/sf100"
-      buildScaled(spark, base, d1000, 1000)
-      // finer chunking at this scale: one band-group's shuffle + verify
-      // scratch for 5M docs is ~the host's whole free disk at the
-      // default ~4-bands/chunk — 2 bands/chunk halves the peak; recorded
-      // in the artifact (band_chunks) so the exponents are attributable
-      val bandChunks = sys.env.getOrElse("SPARK_GRAFT_BAND_CHUNKS", "6")
-      spark.conf.set(graft.ops.DedupOps.LshBandChunksConf, bandChunks)
-      // candidate counts first and queries cheap→expensive: every line
-      // streams to the log as it lands, so a wall-clock-bounded run
-      // still yields the full candidate ladder and the cheap families
-      // before the big Jaccard pair queries start
-      val lsh3 = Seq(d100, d1000).map(lshCandidates(spark, _))
-      val ivf3 = Seq(d100, d1000).map(ivfCandidates(spark, _))
-      println(s"[scalebench] decade3 lsh_candidates=${lsh3.mkString(",")} " +
-        s"ivf_candidates=${ivf3.mkString(",")}")
-      val qs = Seq("q_dedup_minhash", "q_dedup_embedding_ivf",
-        "q_similarity_ivf", "q_dedup_jaccard_global", "q_ngram_jaccard")
-      def timed(name: String, dir: String): (Double, Option[String]) = {
-        val fn = SparkEntry.queries(name)
-        graft.ops.DedupOps.lastCapReport = None
-        fn(spark, dir).count() // warm
-        val cap = graft.ops.DedupOps.lastCapReport.map(r =>
-          s"""{"candidates_before":${r.candidatesBefore},"budget":${r.budget},""" +
-            s""""bands":${r.bands},"rows_per_band":${r.rowsPerBand},""" +
-            f""""recall_bound":${r.recallBoundAtThreshold}%.4f}""")
-        spark.catalog.clearCache()
-        System.gc()
-        val t0 = System.nanoTime()
-        fn(spark, dir).count()
-        ((System.nanoTime() - t0) / 1e9, cap)
-      }
-      // a single leg failing (the 5M-doc ngram leg once exhausted the
-      // HOST's free disk mid-shuffle) must not lose the whole artifact:
-      // record the leg as dnf and keep going. Each of the two timed runs
-      // is caught independently so a 1000x failure still records the
-      // measured t100x (+cap trace). Only NonFatal throws are recorded as
-      // a clean dnf; a fatal JVM error (OutOfMemoryError etc.) marks the
-      // whole artifact degraded — walls measured after it ran in a
-      // possibly compromised JVM and must not read as valid.
-      var fatalSeen: Option[String] = None
-      def errHead(e: Throwable): String = {
-        val raw = Option(e.getMessage).getOrElse("")
-        val head = raw.linesIterator.toSeq.headOption.getOrElse("")
-        val base = if (head.isEmpty) e.getClass.getSimpleName else head.take(160)
-        // JSON-safe: strip control chars, escape backslash, swap quotes
-        base.replace("\\", "/").replace("\"", "'").filter(c => c >= ' ')
-      }
-      def tryLeg(q: String, dir: String, label: String): Either[String, (Double, Option[String])] =
-        try Right(timed(q, dir))
-        catch {
-          case e if scala.util.control.NonFatal(e) =>
-            val msg = errHead(e)
-            println(s"[scalebench] decade3 $q $label DNF: $msg")
-            Left(msg)
-          case e: Throwable =>
-            val msg = errHead(e)
-            fatalSeen = fatalSeen.orElse(Some(s"$q $label: $msg"))
-            println(s"[scalebench] decade3 $q $label FATAL (artifact degraded): $msg")
-            Left(msg)
-        }
-      val rows3 = qs.map { q =>
-        tryLeg(q, d100, "t100x") match {
-          case Left(msg) => (q, None, None, None, Some(msg))
-          case Right((t100, _)) =>
-            println(f"[scalebench] decade3 $q t100x=$t100%.1f s")
-            tryLeg(q, d1000, "t1000x") match {
-              case Right((t1000, cap)) =>
-                val exp3 = math.log10(math.max(t1000, 1e-3) / math.max(t100, 1e-3))
-                println(f"[scalebench] decade3 $q t1000x=$t1000%.1f s exp3=$exp3%.2f" +
-                  cap.map(c => s" cap=$c").getOrElse(""))
-                (q, Some((t100, t1000, exp3)), cap, None, None: Option[String])
-              case Left(msg) =>
-                // keep the measured 100x wall beside the dnf, plus whatever
-                // escalation trace the failed 1000x attempt got far enough
-                // to record (lastCapReport was reset at its start)
-                val cap100 = graft.ops.DedupOps.lastCapReport.map(r =>
-                  s"""{"candidates_before":${r.candidatesBefore},"budget":${r.budget},""" +
-                    s""""bands":${r.bands},"rows_per_band":${r.rowsPerBand},""" +
-                    f""""recall_bound":${r.recallBoundAtThreshold}%.4f}""")
-                (q, None, cap100, Some(t100), Some(msg))
-            }
-        }
-      }
-      def dexp(v: Seq[Long]): String =
-        sec(math.log10(math.max(v(1), 1).toDouble / math.max(v(0), 1)))
-      val qj = rows3.map {
-        case (q, Some((t100, t1000, e)), cap, _, _) =>
-          s""""$q":{"t100x":${sec(t100)},"t1000x":${sec(t1000)},""" +
-            s""""exp3":${sec(e)}${cap.map(c => s""","cap":$c""").getOrElse("")}}"""
-        case (q, None, cap, t100, err) =>
-          s""""$q":{${t100.map(t => s""""t100x":${sec(t)},""").getOrElse("")}""" +
-            s""""dnf":"${err.getOrElse("")}"""" +
-            s"""${cap.map(c => s""","cap":$c""").getOrElse("")}}"""
-      }.mkString("{", ",", "}")
-      val nd = Seq(d100, d1000).map(d =>
-        spark.read.parquet(s"$d/documents.parquet").count())
-      val out = s"""{"metric":"scale_decade3","docs":[${nd.mkString(",")}],""" +
-        fatalSeen.map(f => s""""degraded":"${f.replace("\\", "/").replace("\"", "'").filter(_ >= ' ')}",""").getOrElse("") +
-        s""""band_chunks":$bandChunks,""" +
-        s""""lsh_candidates":[${lsh3.mkString(",")}],""" +
-        s""""lsh_exponent3":${dexp(lsh3)},""" +
-        s""""emb_ivf_candidates":[${ivf3.mkString(",")}],""" +
-        s""""emb_ivf_exponent3":${dexp(ivf3)},""" +
-        s""""queries":$qj}"""
-      println(out)
-      java.nio.file.Files.write(
-        java.nio.file.Paths.get("target/scale_decade3.json"),
-        out.getBytes("UTF-8"))
-      spark.stop()
-      return
-    }
     if (args.contains("--recall-only")) {
       val out = s"""{"metric":"scale_recall",${recallJson()}}"""
       println(out)

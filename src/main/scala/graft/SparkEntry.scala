@@ -2016,7 +2016,7 @@ private[graft] object Queries {
 
   /** Per-group top-k through the CUSTOM PHYSICAL OPERATOR
     * ([[graft.plans.TopKPerGroup]] → [[graft.plans.TopKStrategy]] →
-    * [[graft.plans.TopKPerGroupExec]], installed via `extraStrategies`):
+    * [[graft.plans.TopKPerGroupExec]], from the graft install table):
     * bounded k-row heaps on both sides of one hash exchange — the shuffle
     * moves ≤ k rows per (group, partition) instead of the whole table, and
     * nothing is ever fully sorted. Oracle = the window row_number form.
@@ -2708,9 +2708,9 @@ private[graft] object Queries {
     val fs = new org.apache.hadoop.fs.Path(dir)
       .getFileSystem(s.sparkContext.hadoopConfiguration)
     fs.delete(new org.apache.hadoop.fs.Path(dir), true)
-    val knobs = Seq("inlineMaxFiles" -> "4", "checkpointInterval" -> "2",
-      "distributedPruneThreshold" -> "6")
-      .map { case (k, v) => s"spark.graft.vtable.$k" -> v }
+    val knobs = Seq("spark.graft.vtable.inlineMaxFiles" -> "4",
+      "spark.graft.vtable.checkpointInterval" -> "2",
+      "spark.graft.vtable.distributedPruneThreshold" -> "6")
     val olds = knobs.map { case (k, _) => k -> s.conf.getOption(k) }
     knobs.foreach { case (k, v) => s.conf.set(k, v) }
     try {

@@ -6,12 +6,14 @@ import org.apache.spark.sql.catalyst.analysis.FunctionRegistryBase
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.catalyst.rules.Rule
+import org.apache.spark.sql.execution.SparkStrategy
 
 /** SQL surface for the native kernels: after registration every graft
   * function is callable from `spark.sql(...)` / `selectExpr` by name, so a
   * SQL-only user gets the same codegen'd hot paths as the Column API.
   *
-  * Two install routes read the same function lists and rule table:
+  * Two install routes read the same function lists, rule table and
+  * strategy list:
   *  - [[GraftSqlExtensions]] — the production path, injected by
   *    [[graft.GraftSession]] or `spark.sql.extensions`.
   *  - [[GraftFunctions.register]] — for a session built without it.
@@ -262,8 +264,15 @@ object GraftFunctions {
     Optimization -> graft.plans.VtableSkipping,
     Optimization -> graft.plans.VtableMetadataAgg)
 
-  /** Idempotent per-session install: a function, table function or rule
-    * the session already has (an earlier call, or the
+  /** Every graft planner strategy. [[GraftSqlExtensions]] injects each;
+    * [[register]] appends the ones the session's planner lacks to
+    * `experimental.extraStrategies`.
+    */
+  private[functions] val strategies: Seq[SparkStrategy] =
+    Seq(graft.plans.TopKStrategy)
+
+  /** Idempotent per-session install: a function, table function, rule or
+    * strategy the session already has (an earlier call, or the
     * [[GraftSqlExtensions]] injection) is left as it is.
     */
   def register(spark: SparkSession): Unit = {
@@ -280,6 +289,12 @@ object GraftFunctions {
     if (missing.nonEmpty)
       spark.experimental.extraOptimizations =
         spark.experimental.extraOptimizations ++ missing
+    val planned = spark.sessionState.planner.extraPlanningStrategies ++
+      spark.experimental.extraStrategies
+    val missingStrategies = strategies.filterNot(planned.contains)
+    if (missingStrategies.nonEmpty)
+      spark.experimental.extraStrategies =
+        spark.experimental.extraStrategies ++ missingStrategies
   }
 
   private def withInfo[B](fs: Seq[(String, B)], cls: String) =
@@ -291,16 +306,17 @@ object GraftFunctions {
   private[functions] def injectedTable = withInfo(tableFns, "graft.ops.VersionedTable")
 }
 
-/** `spark.sql.extensions` injector — installs every graft function, rule
-  * and the DML parser at session build time.
+/** `spark.sql.extensions` injector — installs every graft function, rule,
+  * strategy and the DML parser at session build time.
   */
 class GraftSqlExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
-    import GraftFunctions.{Optimization, PostHocResolution, rules}
+    import GraftFunctions.{Optimization, PostHocResolution, rules, strategies}
     GraftFunctions.injected.foreach(ext.injectFunction)
     GraftFunctions.injectedTable.foreach(ext.injectTableFunction)
     rules.collect { case (Optimization, r) => r }
       .foreach(r => ext.injectOptimizerRule(_ => r))
+    strategies.foreach(s => ext.injectPlannerStrategy(_ => s))
     // SQL DML on versioned tables: MERGE INTO / UPDATE / DELETE against
     // graft_vtable('ref') parse here and route through the versioned
     // commits; everything else delegates to Spark's parser untouched

@@ -472,7 +472,7 @@ object DedupOps {
       val tier = JaccardPlan.choose(blk.nonEmpty, nDocs,
         blk.fold(sampledPrefixTotal)(_ => blockHist._1), universe, budget,
         budgetSource, bruteMaxDocs, maxBitsetUniverse, threshold,
-        resolveLshShape(spark, threshold))
+        resolveLshShape(threshold))
       lastCapReport = tier match {
         case JaccardPlan.Escalated(rep, margin) =>
           System.err.println(s"[graft] jaccardPairs${blk.fold("Global")(_ => "Blocked")}: " +
@@ -589,20 +589,6 @@ object DedupOps {
     * per session instead of rebuilding the jar.
     */
   val CandidateBudgetConf = "spark.graft.dedup.candidatePairBudget"
-
-  /** LSH escalation shape knobs (k = bands × rowsPerBand minhashes).
-    * Unset (the default), the shape is THRESHOLD-ADAPTIVE: see
-    * [[resolveLshShape]].
-    */
-  val LshBandsConf = "spark.graft.dedup.lsh.bands"
-  val LshRowsConf = "spark.graft.dedup.lsh.rowsPerBand"
-
-  /** Minimum at-threshold recall the adaptive shape must bound
-    * (default 0.9): [[resolveLshShape]] picks the sharpest (bands, rows)
-    * split of k=60 minhashes whose band-collision bound
-    * `1-(1-t^r)^b` minus the est-filter tail clears this.
-    */
-  val LshTargetRecallConf = "spark.graft.dedup.lsh.targetRecall"
 
   /** Band-group chunking for the budget-ESCALATED candidate joins:
     * `auto` (default, ~4 bands per chunk) | an int chunk count | `1` to
@@ -860,46 +846,33 @@ object DedupOps {
       case None => (arg, "arg")
     }
 
-  /** The escalated tiers' (bands, rowsPerBand). Explicit confs win;
-    * otherwise THRESHOLD-ADAPTIVE: pick the LARGEST r (steepest
-    * S-curve — at equal recall, larger r admits strictly fewer
-    * sub-threshold collisions) whose minimal band count
+  /** The escalated tiers' (bands, rowsPerBand), THRESHOLD-ADAPTIVE: pick
+    * the LARGEST r (steepest S-curve — at equal recall, larger r admits
+    * strictly fewer sub-threshold collisions) whose minimal band count
     * `b_min = ⌈ln(1−target−tail)/ln(1−t^r)⌉` keeps the signature
     * budget k = r·b ≤ 128 minhashes; bands never drop below the k=60
     * divisor default ⌊60/r⌋, so high thresholds keep their sharper
-    * established shapes. Examples at the default target 0.9:
+    * established shapes. The target is an at-threshold recall of 0.9
+    * (band-collision bound `1-(1-t^r)^b` minus the est-filter tail):
     * t=0.8 → 12×5 (k=60, bound 0.990 — the classic shape, unchanged);
     * t=0.6 → 17×4 (k=68, bound 0.904) — where 12×5 bounds only 0.62
     * and loses a third of true pairs; t=0.5 → 20×3 (k=60, bound
     * 0.930). Sub-threshold noise beyond the bands is held by the
     * in-join est filter, which margins on the FULL k-minhash signature.
     */
-  private[graft] def resolveLshShape(spark: SparkSession,
-                                     threshold: Double): (Int, Int) = {
-    (spark.conf.getOption(LshBandsConf).map(_.trim.toInt),
-     spark.conf.getOption(LshRowsConf).map(_.trim.toInt)) match {
-      case (Some(bands), Some(r)) =>
-        require(bands >= 1 && r >= 1,
-          s"$LshBandsConf/$LshRowsConf must be >= 1, got bands=$bands rows=$r")
-        (bands, r)
-      case (b, ro) =>
-        require(b.isEmpty && ro.isEmpty,
-          s"$LshBandsConf and $LshRowsConf must be set together (or neither)")
-        val target =
-          spark.conf.getOption(LshTargetRecallConf).map(_.trim.toDouble)
-            .getOrElse(0.9)
-        val estTail = 0.0013
-        val need = math.min(target + estTail, 0.999999)
-        (5 to 1 by -1).iterator.map { r =>
-          val tr = math.pow(threshold, r)
-          val bMin =
-            if (tr >= 1.0) 1
-            else math.max(1, math.ceil(
-              math.log(1.0 - need) / math.log(1.0 - tr)).toInt)
-          (math.max(bMin, 60 / r), r)
-        }.find { case (bands, r) => bands * r <= 128 }
-          .getOrElse((60, 1)) // r=1 maximizes the bound; take it even short
-    }
+  private[graft] def resolveLshShape(threshold: Double): (Int, Int) = {
+    val targetRecall = 0.9
+    val estTail = 0.0013
+    val need = targetRecall + estTail
+    (5 to 1 by -1).iterator.map { r =>
+      val tr = math.pow(threshold, r)
+      val bMin =
+        if (tr >= 1.0) 1
+        else math.max(1, math.ceil(
+          math.log(1.0 - need) / math.log(1.0 - tr)).toInt)
+      (math.max(bMin, 60 / r), r)
+    }.find { case (bands, r) => bands.toLong * r <= 128 } // Int would wrap at low t
+      .getOrElse((60, 1)) // r=1 maximizes the bound; take it even short
   }
 
   /** Token-universe cap for the bitset verification path: ⌈U/64⌉ longs per

@@ -2356,12 +2356,7 @@ object VersionedTable {
     // layout maintenance pass, not a per-commit tax. Insert-only
     // commits (nothing touched) keep the changelog's own partitioning —
     // there is no prior granularity to follow.
-    val clustered =
-      if (touchedCount > 0 &&
-          spark.conf.getOption("spark.graft.vtable.granularMergeWrite")
-            .forall(_.toBoolean))
-        merged.coalesce(touchedCount)
-      else merged
+    val clustered = if (touchedCount > 0) merged.coalesce(touchedCount) else merged
     val files = writeCommitFiles(clustered, dir, next, cur.statsCols,
       cur.bloomCols, cur.bloomFpp, cur.props)
     publishCommit(spark, dir, Some(cur), next, op, outDdl, cur.statsCols,

@@ -51,17 +51,12 @@ object Warehouse {
     *    the winner when groups are few (genuine top-k ranking, k > 1).
     *
     * The tiebreak must totally order rows within a key (same contract as
-    * before) for a stable winner. `spark.graft.dedup.forceTopK=true`
-    * pins the custom-operator plan for A/B measurement.
+    * before) for a stable winner.
     */
-  def dedupByKey(df: DataFrame, keys: Seq[String], tiebreak: Seq[Column]): DataFrame = {
-    val forceTopK = df.sparkSession.conf
-      .getOption("spark.graft.dedup.forceTopK").exists(_.toBoolean)
-    val fast = if (forceTopK) None else minStructDedup(df, keys, tiebreak)
-    fast.getOrElse(
+  def dedupByKey(df: DataFrame, keys: Seq[String], tiebreak: Seq[Column]): DataFrame =
+    minStructDedup(df, keys, tiebreak).getOrElse(
       graft.plans.TopKPlans.topKPerGroupSort(df, keys, tiebreak, 1, "__rn")
         .drop("__rn"))
-  }
 
   /** The native-aggregate k = 1 plan when the tiebreak is eligible (see
     * [[dedupByKey]]); None → caller falls back to the custom operator.

@@ -12,8 +12,11 @@ import org.apache.spark.sql.types.IntegerType
 
 /** Whole-operator extension surface: per-group top-k as a first-class
   * physical operator — logical node ([[TopKPerGroup]]), planner strategy
-  * ([[TopKStrategy]]), and physical operator ([[TopKPerGroupExec]]) wired
-  * through `spark.experimental.extraStrategies`.
+  * ([[TopKStrategy]]), and physical operator ([[TopKPerGroupExec]]). The
+  * strategy is in the graft install table
+  * ([[graft.functions.GraftFunctions]]): a [[graft.GraftSession]] session
+  * plans the node, and so does any session `GraftFunctions.register` ran
+  * on.
   *
   * Why a custom operator when a window (`row_number <= k`) expresses the
   * same result: the window plan SORTS every partition's full group contents
@@ -315,18 +318,12 @@ object TopKPerGroupExec {
   }
 }
 
-/** DataFrame-level entry: installs [[TopKStrategy]] into the session (an
-  * idempotent `extraStrategies` append) and plans `df` through the custom
-  * operator. `orderCols` must induce a TOTAL order within each group for a
-  * deterministic result (add a key tiebreak, same rule as any ranking).
+/** DataFrame-level entry: plans `df` through the custom operator, on a
+  * session that has [[TopKStrategy]] (see [[TopKPerGroup]]). `orderCols`
+  * must induce a TOTAL order within each group for a deterministic result
+  * (add a key tiebreak, same rule as any ranking).
   */
 object TopKPlans {
-  def ensureInstalled(spark: org.apache.spark.sql.SparkSession): Unit = {
-    val exp = spark.experimental
-    if (!exp.extraStrategies.contains(TopKStrategy))
-      exp.extraStrategies = exp.extraStrategies :+ TopKStrategy
-  }
-
   def topKPerGroup(df: DataFrame, groupCols: Seq[String],
                    orderCols: Seq[(String, Boolean)], k: Int,
                    rankName: String = "rnk"): DataFrame =
@@ -369,7 +366,6 @@ object TopKPlans {
       "topKPerGroup needs at least one group column (ClusteredDistribution(Nil) " +
         "is unplannable); for a global top-k use orderBy(...).limit(k)")
     val spark = df.sparkSession
-    ensureInstalled(spark)
     val analyzed = df.queryExecution.analyzed
     def attrOf(name: String): Attribute = analyzed.output.filter(_.name == name) match {
       case Seq(a) => a

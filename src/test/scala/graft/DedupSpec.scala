@@ -388,15 +388,7 @@ class DedupSpec extends SparkSuite {
       assert(runGlobal(Some(1L)) == exact,
         "conf=off must force the exact path over a binding argument")
       assert(DedupOps.lastCapReport.isEmpty)
-      // LSH shape knobs reach the escalated tier (and the report)
       spark.conf.set(DedupOps.CandidateBudgetConf, "20000")
-      spark.conf.set(DedupOps.LshBandsConf, "16")
-      spark.conf.set(DedupOps.LshRowsConf, "4")
-      val reshaped = runGlobal(None)
-      val rep2 = DedupOps.lastCapReport
-      assert(rep2.exists(r => r.bands == 16 && r.rowsPerBand == 4),
-        s"LSH shape conf must reach the escalation: $rep2")
-      assert(reshaped.subsetOf(exact))
       // blocked path honors the same conf
       DedupOps.jaccardPairsBlocked(sample, "doc_id", "text", "source", 3, 0.6,
         candidatePairBudget = None).collect()
@@ -405,8 +397,17 @@ class DedupSpec extends SparkSuite {
         s"blocked path must resolve the same conf: $rep3")
     } finally {
       spark.conf.unset(DedupOps.CandidateBudgetConf)
-      spark.conf.unset(DedupOps.LshBandsConf)
-      spark.conf.unset(DedupOps.LshRowsConf)
+    }
+  }
+
+  test("resolveLshShape: the documented shape per threshold, (60, 1) past k = 128") {
+    // 0.02 fits r = 1 in 128 minhashes (115 bands), while its r = 5 band
+    // count (7e8) times 5 is past Int range; 0.01 fits no r and takes
+    // the (60, 1) fallback
+    val shapes = Seq(0.8 -> (12, 5), 0.6 -> (17, 4), 0.5 -> (20, 3),
+      0.02 -> (115, 1), 0.01 -> (60, 1))
+    shapes.foreach { case (t, shape) =>
+      assert(DedupOps.resolveLshShape(t) == shape, s"threshold $t")
     }
   }
 
@@ -445,10 +446,10 @@ class DedupSpec extends SparkSuite {
     intercept[IllegalArgumentException] {
       graft.ops.Warehouse.dedupByKey(df, Seq.empty, Seq($"v")).collect()
     }
-    spark.conf.set("spark.graft.dedup.forceTopK", "true")
-    try intercept[IllegalArgumentException] {
-      graft.ops.Warehouse.dedupByKey(df, Seq.empty, Seq($"v")).collect()
-    } finally spark.conf.unset("spark.graft.dedup.forceTopK")
+    intercept[IllegalArgumentException] {
+      graft.plans.TopKPlans.topKPerGroupSort(df, Seq.empty, Seq($"v"), 1, "__rn")
+        .drop("__rn").collect()
+    }
   }
 
   test("simhash: identical texts at distance 0, different texts far") {

@@ -7,15 +7,15 @@ import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.functions._
 
 import graft.functions.GraftFunctions
-import graft.ops.{GraftCatalog, VersionedTable => VT}
-import graft.plans.PlanHints
+import graft.ops.{GraftCatalog, VersionedTable => VT, Warehouse}
+import graft.plans.{PlanHints, TopKPerGroupExec}
 import graft.sql.GraftSql
 
 /** The two install routes plan alike: the suite's [[GraftSession]]
   * session (the extension) and a bare session upgraded by
-  * [[GraftFunctions.register]] run the same rules, so an interval join, a
-  * pruned versioned read, a catalog read, a catalog DELETE and a graft
-  * MERGE come out the same on both.
+  * [[GraftFunctions.register]] run the same rules and strategies, so an
+  * interval join, a pruned versioned read, a catalog read, a catalog
+  * DELETE, a graft MERGE and a top-k dedup come out the same on both.
   */
 class InstallRoutesSpec extends SparkSuite {
 
@@ -142,5 +142,18 @@ class InstallRoutesSpec extends SparkSuite {
     assert(outs.head._2.size == 101 && outs.head._2((5L, "upd")) &&
       outs.head._2((200L, "ins")))
     assert(outs.distinct.size == 1)
+  }
+
+  test("an expression-tiebreak dedupByKey plans the top-k operator on both routes") {
+    val outs = routes.map { case (route, s) =>
+      val df = s.range(100).select((col("id") % 7).as("k"), col("id").as("v"))
+      // an expression sort item is not eligible for the aggregate plan
+      val out = Warehouse.dedupByKey(df, Seq("k"), Seq((col("v") % 5).asc, col("v").desc))
+      val plan = out.queryExecution.sparkPlan
+      assert(plan.collect { case t: TopKPerGroupExec => t }.nonEmpty,
+        s"$route route: expected the top-k operator:\n$plan")
+      out.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    }
+    assert(outs.head.size == 7 && outs.distinct.size == 1, outs)
   }
 }

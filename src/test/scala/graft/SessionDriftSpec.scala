@@ -6,9 +6,10 @@ import scala.jdk.CollectionConverters._
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Keeps one session builder and one install path: a second
-  * `SparkSession.builder` under `src/main`, or a per-query
-  * `GraftFunctions.register` call in `SparkEntry`, fails here.
+/** Keeps one session builder, one install path and a fixed set of
+  * settings: a second `SparkSession.builder` under `src/main`, a
+  * per-query `GraftFunctions.register` call in `SparkEntry`, or a
+  * settings key outside the allowlist fails here.
   */
 class SessionDriftSpec extends AnyFunSuite {
 
@@ -30,5 +31,33 @@ class SessionDriftSpec extends AnyFunSuite {
   test("SparkEntry calls no GraftFunctions.register") {
     val src = Files.readString(root.resolve("graft/SparkEntry.scala"))
     assert("""GraftFunctions\s*\.\s*register\s*\(""".r.findFirstIn(src).isEmpty)
+  }
+
+  /** Every settings key `src/main` reads; the README "Settings" section
+    * says who sets each one. A new key is added here on purpose.
+    */
+  private val settings = Set(
+    // deployment
+    "spark.graft.catalog.path", "spark.graft.catalog.lockTimeoutMs",
+    "spark.graft.commit.store", "SPARK_GRAFT_SF_DIR", "SPARK_GRAFT_CPUS",
+    "SPARK_GRAFT_BENCH_DETAIL",
+    // thresholds that specs or plan captures lower to reach a path
+    "spark.graft.dedup.candidatePairBudget", "spark.graft.dedup.lsh.bandChunks",
+    "spark.graft.dedup.lsh.saltBucketRows", "spark.graft.dedup.lsh.saltProbeMinBytes",
+    "spark.graft.vtable.inlineMaxFiles", "spark.graft.vtable.checkpointInterval",
+    "spark.graft.vtable.distributedPruneThreshold", "spark.graft.ivm.localFoldRows",
+    "spark.graft.topk.maxGroupsInMemory", "spark.graft.vtable.footerStats",
+    // policy
+    "spark.graft.vtable.cursorStaleHours", "spark.graft.mv.rewrite",
+    // Bench
+    "SPARK_GRAFT_QUERIES", "SPARK_GRAFT_PER_QUERY_GC")
+
+  test("src/main reads exactly the allowlisted settings keys") {
+    // a key built by interpolation leaves its prefix here, which fails too
+    val literal = "\"(SPARK_GRAFT_[A-Z0-9_]+|spark\\.graft\\.[A-Za-z0-9_.]+)".r
+    val keys = sources.flatMap(p =>
+      literal.findAllMatchIn(Files.readString(p)).map(_.group(1))).toSet
+    assert(keys == settings,
+      s"not allowlisted: ${keys -- settings}; no longer read: ${settings -- keys}")
   }
 }

@@ -68,6 +68,10 @@ class SqlSurfaceSpec extends SparkSuite {
     try {
       val (before, beforeTables) = snapshot()
       assert(before.nonEmpty && beforeTables.nonEmpty, "the extension injects graft functions")
+      // a top-k query plans through the injected strategy and installs none
+      graft.plans.TopKPlans.topKPerGroup(
+        ext.range(10).selectExpr("id", "id % 2 AS g"), Seq("g"), Seq("id" -> true), 1)
+        .collect()
       GraftFunctions.register(ext)
       GraftFunctions.register(ext)
       val (after, afterTables) = snapshot()
@@ -77,14 +81,16 @@ class SqlSurfaceSpec extends SparkSuite {
       assert(beforeTables.forall { case (id, info) => afterTables(id) eq info },
         "register must leave injected table functions in place")
       assert(replaced == 0, logged.toArray.mkString("\n"))
-      // nor any rule: the extension already runs them all, so a copy in
-      // the extra batch would only run each one a second time — on this
-      // session and on the suite's GraftSession one
+      // nor any rule or strategy: the extension already runs them all, so
+      // a copy in the extra batch or strategy list would only run each one
+      // a second time — on this session and on the suite's GraftSession one
       GraftFunctions.register(spark)
       GraftFunctions.register(spark)
       Seq(ext, spark).foreach { s =>
         assert(s.experimental.extraOptimizations.isEmpty,
           s"register must install no rule twice: ${s.experimental.extraOptimizations}")
+        assert(s.experimental.extraStrategies.isEmpty,
+          s"register must install no strategy twice: ${s.experimental.extraStrategies}")
       }
       // the capture sees a real replacement
       val probe = FunctionIdentifier("graft_register_spec_probe")

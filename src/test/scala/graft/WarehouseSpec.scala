@@ -46,15 +46,12 @@ class WarehouseSpec extends SparkSuite {
       (2, Some("c"), Some(3.0)), (2, Some("c"), Some(1.0)),
       (3, None, None), (3, None, Some(0.0)))
       .toDF("k", "s", "v")
-    def run(tb: Seq[org.apache.spark.sql.Column], force: Boolean) = {
-      spark.conf.set("spark.graft.dedup.forceTopK", force.toString)
-      try Warehouse.dedupByKey(df, Seq("k"), tb).orderBy("k")
-        .collect().map(_.toSeq).toSeq
-      finally spark.conf.unset("spark.graft.dedup.forceTopK")
-    }
+    def rows(out: org.apache.spark.sql.DataFrame) =
+      out.orderBy("k").collect().map(_.toSeq).toSeq
     for (tb <- Seq(Seq($"s", $"v"), Seq($"s".desc, $"v".desc))) {
-      val fast = run(tb, force = false)
-      val slow = run(tb, force = true)
+      val fast = rows(Warehouse.dedupByKey(df, Seq("k"), tb))
+      val slow = rows(graft.plans.TopKPlans
+        .topKPerGroupSort(df, Seq("k"), tb, 1, "__rn").drop("__rn"))
       assert(fast == slow, s"tiebreak $tb: fast=$fast slow=$slow")
     }
   }
