@@ -319,6 +319,37 @@ object VecKernels {
     out
   }
 
+  /** A shingle array → packed bitset of its tokens' ids in `dict`, a
+    * binary-sorted distinct dictionary: one binary search per shingle,
+    * ⌈|dict|/64⌉ words out. A shingle missing from the dictionary sets no
+    * bit (the dictionary build collects every token, so none is missing).
+    */
+  def shinglesToBitset(sh: ArrayData, dict: Array[UTF8String]): Array[Long] = {
+    val out = new Array[Long]((dict.length + 63) >>> 6)
+    val n = sh.numElements()
+    var i = 0
+    while (i < n) {
+      val id = dictIndex(dict, sh.getUTF8String(i))
+      if (id >= 0) out(id >>> 6) |= (1L << (id & 63))
+      i += 1
+    }
+    out
+  }
+
+  /** Index of `tok` in the binary-sorted `dict`, or -1. */
+  private def dictIndex(dict: Array[UTF8String], tok: UTF8String): Int = {
+    var lo = 0
+    var hi = dict.length - 1
+    while (lo <= hi) {
+      val mid = (lo + hi) >>> 1
+      val cmp = dict(mid).binaryCompare(tok)
+      if (cmp < 0) lo = mid + 1
+      else if (cmp > 0) hi = mid - 1
+      else return mid
+    }
+    -1
+  }
+
   /** Exact Jaccard of two equal-width long bitsets:
     * popcount(AND)/popcount(OR). For a token universe of U distinct values
     * this is U/64 word ops per pair — the verification kernel of choice

@@ -1,5 +1,6 @@
 package graft.functions
 
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{Column, GraftShim}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
@@ -274,6 +275,30 @@ object VectorExpressions {
     override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
   }
 
+  /** Shingle array → packed token-id bitset over a binary-sorted
+    * dictionary — see [[VecKernels.shinglesToBitset]]. The dictionary is a
+    * broadcast handle held as a codegen reference object (its value is
+    * read once per generated-class instance, never inlined into the code);
+    * its owner destroys it once the bitsets are materialized.
+    */
+  case class ShinglesToBitset(child: Expression, dict: Broadcast[Array[UTF8String]])
+      extends UnaryExpression {
+    override def dataType: DataType = ArrayType(LongType, containsNull = false)
+    override def nullIntolerant: Boolean = true
+    override def prettyName: String = "graft_shingles_to_bitset"
+    override protected def nullSafeEval(a: Any): Any =
+      new GenericArrayData(VecKernels.shinglesToBitset(a.asInstanceOf[ArrayData], dict.value))
+    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+      val ref = ctx.addReferenceObj("dict", dict, classOf[Broadcast[_]].getName)
+      val tokens = ctx.addMutableState("org.apache.spark.unsafe.types.UTF8String[]",
+        "dictTokens", v => s"$v = (org.apache.spark.unsafe.types.UTF8String[]) $ref.value();")
+      nullSafeCodeGen(ctx, ev, a =>
+        s"""${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData(
+           |  graft.functions.VecKernels.shinglesToBitset($a, $tokens));""".stripMargin)
+    }
+    override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
+  }
+
   /** Exact Jaccard of two packed long bitsets (popcounts) — see
     * [[VecKernels.bitsetJaccard]].
     */
@@ -488,6 +513,8 @@ object VectorExpressions {
     GraftShim.column(TopCentroids(e(a), m, nprobe))
   def idsToBitset(a: Column, nWords: Int): Column =
     GraftShim.column(IdsToBitset(e(a), nWords))
+  def shinglesToBitset(a: Column, dict: Broadcast[Array[UTF8String]]): Column =
+    GraftShim.column(ShinglesToBitset(e(a), dict))
   def bitsetJaccard(a: Column, b: Column): Column =
     GraftShim.column(BitsetJaccard(e(a), e(b)))
   def textStats(a: Column, stopwords: Seq[String]): Column =

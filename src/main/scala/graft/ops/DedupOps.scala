@@ -1,7 +1,10 @@
 package graft.ops
 
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Deduplication operators for LLM-data pipelines (SURVEY §2.7 north-star):
   * exact, content-hash, MinHash+LSH, SimHash, n-gram Jaccard.
@@ -285,27 +288,29 @@ object DedupOps {
     */
   private def ceilSafe(c: Column): Column = ceil(c - lit(1e-6))
 
-  /** Per-`keyCols`-group token-id bitsets (`sz`, `bits`) over the
-    * driver-side dictionary `dict` (≤ [[MaxBitsetUniverse]] tokens).
+  /** Per-doc token-id bitsets (`keyCols`, `sz`, `bits`) over the broadcast
+    * binary-sorted dictionary `dict` (≤ [[MaxBitsetUniverse]] tokens): one
+    * narrow native projection
+    * ([[graft.functions.VectorExpressions.ShinglesToBitset]]) that binary-
+    * searches each shingle, so the relation keeps `docs`' partitioning —
+    * no explode, join or shuffle. A doc whose shingle array is null or
+    * empty has no token to pair on and is dropped.
     */
   private def attachBitsets(docs: DataFrame, keyCols: Seq[String],
-                            dict: Array[String]): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    val keys = keyCols.map(col)
-    docs.select(keys :+ explode(col("sh")).as("tok"): _*)
-      .join(broadcast(dict.toSeq.zipWithIndex.toDF("tok", "tid")), "tok")
-      .groupBy(keys: _*)
-      .agg(collect_list(col("tid")).as("ids"))
-      .select(keys :+ size(col("ids")).as("sz") :+ graft.functions.VectorExpressions
-        .idsToBitset(col("ids"), (dict.length + 63) / 64).as("bits"): _*)
-  }
+                            dict: Broadcast[Array[UTF8String]]): DataFrame =
+    docs.filter(size(col("sh")) > 0)
+      .select(keyCols.map(col) :+ size(col("sh")).as("sz") :+ graft.functions
+        .VectorExpressions.shinglesToBitset(col("sh"), dict).as("bits"): _*)
 
   /** GLOBAL exact Jaccard similarity join — every pair with J ≥ threshold
     * across the whole corpus, NO blocking column. Tiers ([[JaccardPlan]]):
     *  - bitset: ≤ `bruteMaxDocs` docs whose token universe fits
     *    `maxBitsetUniverse` brute-force all pairs as a broadcast nested
-    *    loop over per-doc bitsets, popcount verify in the join condition;
+    *    loop over per-doc bitsets, popcount verify in the join condition.
+    *    One capped distinct pass over the pinned docs is both the universe
+    *    and the dictionary; a narrow native projection turns each doc's
+    *    shingles into its bitset (no shuffle), and the bitset pin has
+    *    min(cores, docs) partitions, so the nested loop runs on every core;
     *  - prefix: the AllPairs/PPJoin prefix filter. Under any canonical
     *    token order, sets with J ≥ t share a token in their first
     *    |X| − ⌈t·|X|⌉ + 1 tokens (given the size filter t·|A| ≤ |B| ≤
@@ -331,9 +336,12 @@ object DedupOps {
   /** Exact Jaccard pairs WITHIN a blocking column — corpora with a natural
     * partition key (source, shard, cluster id). Null keys never pair.
     * Tiers ([[JaccardPlan]]): the block equi-join verified by dense-id
-    * bitsets when the token universe fits `maxBitsetUniverse`, by the
-    * sorted merge-scan kernel otherwise; within-block MinHash-LSH when the
-    * exact pair total Σ C(n_blk, 2) exceeds `candidatePairBudget`.
+    * bitsets when the token universe fits `maxBitsetUniverse` (built as in
+    * [[jaccardPairsGlobal]]: one capped dictionary pass, over a pin of the
+    * docs when a budget counts them ≤ 10k, and a narrow native projection
+    * to bitsets; the pin is not spread), by the sorted merge-scan
+    * kernel otherwise; within-block MinHash-LSH when the exact pair total
+    * Σ C(n_blk, 2) exceeds `candidatePairBudget`.
     *
     * Pins the result holds until Spark's ContextCleaner drops it with the
     * plan: bitset — one localCheckpoint of (id, blk, sz, bits);
@@ -394,10 +402,10 @@ object DedupOps {
     * [[JaccardPlan.choose]] reads, then build the chosen tier over all docs
     * (`blockCol` None) or within blocks (an equi-join on `blk`).
     *
-    * It pins only what the returned plan reads. Construction-only
-    * relations — the token dictionary, and the bounded pin taken on ≤
+    * It pins only what the returned plan reads. Construction-only state —
+    * the dictionary broadcast, and the bounded pin taken on ≤
     * `bruteMaxDocs` docs so the universe probe and the bitset attachment
-    * share one scan + shingle pass — are released before return; a tier
+    * share one scan + shingle pass — is released before return; a tier
     * that falls through re-reads the unpinned input.
     */
   private def jaccardPairs(df: DataFrame, idCol: String, textCol: String,
@@ -417,27 +425,36 @@ object DedupOps {
     val joinable = blk.fold(docs)(b => docs.filter(col(b).isNotNull))
     val (budget, budgetSource) = resolveCandidateBudget(spark, candidatePairBudget)
 
-    val scratch = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    def construction(pin: DataFrame): DataFrame = { scratch += pin; pin }
+    val scratch = scala.collection.mutable.ArrayBuffer.empty[() => Unit]
+    def construction(pin: DataFrame): DataFrame = { scratch += (() => release(pin)); pin }
     // (per-block all-pairs total, joinable docs): one exact aggregate
     lazy val blockHist = joinable.groupBy("blk").agg(count(lit(1)).as("c"))
       .agg(coalesce(sum((col("c") * (col("c") - lit(1)) / 2).cast("long")), lit(0L)),
         coalesce(sum(col("c")), lit(0L)))
       .as[(Long, Long)].first()
+    // the global doc count is the input's row count: one job over the
+    // input's own splits, without the spread shuffle or Dataset.count's
+    // aggregate exchange
     lazy val nDocs: Option[Long] =
-      if (blk.isEmpty) Some(docs.count()) else budget.map(_ => blockHist._2)
+      if (blk.isEmpty) Some(df.select(col(idCol)).queryExecution.toRdd.count())
+      else budget.map(_ => blockHist._2)
     lazy val bounded = nDocs.exists(_ <= bruteMaxDocs)
     lazy val exactIn =
       if (bounded) construction(joinable.localCheckpoint()) else joinable
-    lazy val tokens = construction(
-      exactIn.select(explode(col("sh")).as("tok")).distinct().persist())
-    def universe: Long = {
-      // unbounded input: a 1000-doc sample's universe is a lower bound, so
-      // when even it overflows the cap the full distinct pass is skipped
-      val lower = if (bounded) 0L
-        else exactIn.limit(1000).select(explode(col("sh"))).distinct().count()
-      if (lower > maxBitsetUniverse) lower else tokens.count()
-    }
+    // ONE distinct pass, capped at cap + 1 tokens, is both the universe the
+    // decision reads (its length; cap + 1 means "over the cap") and the
+    // dictionary
+    lazy val capped = exactIn.select(explode(col("sh"))).distinct()
+      .limit((math.min(math.max(maxBitsetUniverse, 0L), Int.MaxValue - 1L) + 1).toInt)
+      .as[String].collect()
+    def universe: Long =
+      if (bounded) capped.length
+      else {
+        // unbounded input: a 1000-doc sample's universe is a lower bound, so
+        // when even it overflows the cap the full distinct pass is skipped
+        val lower = exactIn.limit(1000).select(explode(col("sh"))).distinct().count()
+        if (lower > maxBitsetUniverse) lower else capped.length
+      }
     lazy val prefix = prefixRelation(docs, threshold)
     def sampledPrefixTotal: Long = {
       // Σ_tok C(prefix-df(tok), 2) over a deterministic xxhash64(id) sample
@@ -487,10 +504,23 @@ object DedupOps {
       }
       tier match {
         case JaccardPlan.Bitset =>
-          // materialized: the self-join would run the explode → dict-join
-          // → groupBy pipeline once per side. 48 B per doc at the default cap
-          val dict = tokens.as[String].collect().sorted
-          pairsOf(attachBitsets(exactIn, keyNames, dict).localCheckpoint(),
+          val dict = spark.sparkContext.broadcast(
+            capped.map(UTF8String.fromString).sortWith(_.binaryCompare(_) < 0))
+          scratch += (() => dict.destroy())
+          // materialized, so both join sides read one attach pass. The pin
+          // keeps exactIn's partitioning, and the global nested-loop join
+          // runs one task per partition of it: a global pin narrower than
+          // min(cores, docs) is spread first so every core verifies pairs.
+          // The blocked equi-join shuffles on `blk` itself
+          val bits = attachBitsets(exactIn, keyNames, dict)
+          val width = math.min(spark.sparkContext.defaultParallelism.toLong,
+            nDocs.getOrElse(0L)).toInt
+          val wide = exactIn.queryExecution.logical match {
+            case r: LogicalRDD if blk.isEmpty && r.rdd.getNumPartitions < width =>
+              bits.repartition(width, col("id"))
+            case _ => bits
+          }
+          pairsOf(wide.localCheckpoint(),
             graft.functions.VectorExpressions.bitsetJaccard(col("a.bits"), col("b.bits")))
         case JaccardPlan.MergeScan if blk.nonEmpty =>
           pairsOf(joinable.withColumn("sz", size(col("sh"))),
@@ -512,14 +542,14 @@ object DedupOps {
           if (resolveBandChunks(spark, rep.bands) > 1) construction(raw)
           pairs
       }
-    } finally scratch.foreach(release)
+    } finally scratch.foreach(_())
   }
 
   /** Drop a construction-time pin. `Dataset.unpersist` reaches only the
     * CacheManager; a localCheckpoint's blocks belong to its RDD.
     */
   private def release(pin: DataFrame): Unit = pin.queryExecution.logical match {
-    case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.unpersist(blocking = false)
+    case r: LogicalRDD => r.rdd.unpersist(blocking = false)
     case _ => pin.unpersist()
   }
 

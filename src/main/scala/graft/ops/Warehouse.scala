@@ -530,10 +530,11 @@ object Warehouse {
     * exchanges moving exactly one column beyond the keys, with matched /
     * insert / delete resolved by null-struct tests in a codegen'd
     * projection (no second pass, no union of three filtered branches —
-    * which would scan the join output three times). When the changelog is
-    * small relative to the snapshot (the steady-state CDC case), AQE
-    * plans the changes side as a broadcast and the snapshot never
-    * shuffles at all.
+    * which would scan the join output three times). The join is
+    * `full_outer`, which Spark cannot plan as a broadcast hash join, so
+    * BOTH sides shuffle on the key however small the changelog is: a merge
+    * pays a hash exchange of every target row it is handed, not only of
+    * the changes.
     */
   def applyChanges(target: DataFrame, changes: DataFrame, keys: Seq[String],
                    deleteCond: Column,

@@ -648,15 +648,21 @@ class DedupSpec extends SparkSuite {
     * listener. The listener bus delivers in order, so once a trailing
     * sentinel job is seen every earlier job has been counted.
     */
-  private def jobsLaunchedBy(f: => Any): Int = {
+  private def jobsLaunchedBy(f: => Any): Int = jobTasksOf(f).size
+
+  /** The task count of each job's final stage, for the jobs `f` launches,
+    * in launch order.
+    */
+  private def jobTasksOf(f: => Any): Seq[Int] = {
     import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     val sc = spark.sparkContext
     val group = s"jobs-launched-by-${System.nanoTime()}"
-    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val groups = new java.util.concurrent.ConcurrentLinkedQueue[(String, Int)]()
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit =
         groups.add(Option(e.properties)
-          .flatMap(p => Option(p.getProperty("spark.jobGroup.id"))).getOrElse(""))
+          .flatMap(p => Option(p.getProperty("spark.jobGroup.id"))).getOrElse("") ->
+          e.stageInfos.maxBy(_.stageId).numTasks)
     }
     sc.addSparkListener(listener)
     def inGroup(g: String)(body: => Any): Unit = {
@@ -666,11 +672,13 @@ class DedupSpec extends SparkSuite {
     try {
       inGroup(group)(f)
       inGroup(s"$group-sentinel")(sc.parallelize(Seq(1), 1).count())
+      import scala.jdk.CollectionConverters._
+      def sentinelSeen = groups.asScala.exists(_._1 == s"$group-sentinel")
       val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
-      while (!groups.contains(s"$group-sentinel") && System.nanoTime() < deadline)
+      while (!sentinelSeen && System.nanoTime() < deadline)
         Thread.sleep(10)
-      assert(groups.contains(s"$group-sentinel"), "listener never saw the sentinel job")
-      groups.toArray.count(_ == group)
+      assert(sentinelSeen, "listener never saw the sentinel job")
+      groups.asScala.toSeq.collect { case (`group`, tasks) => tasks }
     } finally sc.removeSparkListener(listener)
   }
 
@@ -732,5 +740,80 @@ class DedupSpec extends SparkSuite {
       assert(grown == reads && grown.size == expected,
         s"$tier, call $i: pins grew by $grown, the plan reads $reads (want $expected)")
     } finally spark.conf.unset(DedupOps.LshBandChunksConf)
+  }
+
+  test("bitset tier: a bounded global call + collect runs <= 8 jobs, the pair join on every core") {
+    // one parquet file: it scans as one split, which ScanSpread spreads
+    val dir = java.nio.file.Files.createTempDirectory("bitset-jobs").toString + "/docs"
+    docs.limit(400).select($"doc_id", $"text").coalesce(1).write.parquet(dir)
+    val width = math.min(spark.sparkContext.defaultParallelism, 400)
+    def run(df: org.apache.spark.sql.DataFrame) =
+      jobTasksOf(DedupOps.jaccardPairsGlobal(df, "doc_id", "text", 3, 0.6).collect())
+    val shard = run(spark.read.parquet(dir))
+    assert(shard.size <= 8, s"bounded global bitset call + collect: ${shard.size} jobs " +
+      s"(tasks per job ${shard.mkString(", ")}), want <= 8")
+    // the collect's last job is the nested-loop join over the bitset pin
+    assert(shard.last == width, s"pair join ran ${shard.last} tasks, want $width")
+    // a one-partition input that ScanSpread leaves as it is (cached) is
+    // spread before the bitset pin
+    val narrow = docs.limit(400).select($"doc_id", $"text").cache()
+    assert(narrow.rdd.getNumPartitions == 1)
+    val spread = run(narrow)
+    assert(spread.last == width, s"pair join over a one-partition input ran " +
+      s"${spread.last} tasks, want $width")
+    narrow.unpersist()
+  }
+
+  test("bitset tier == merge-scan tier == quadratic join on null, short and duplicate texts") {
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.TestListenerShim.liveBroadcasts
+    val sc = spark.sparkContext
+    val base = docs.limit(60).select($"doc_id", $"text", $"source")
+      .as[(Long, String, String)].collect().toSeq
+    val (t0, s0) = (base.head._2, base.head._3)
+    val corpus = (base ++ Seq[(Long, String, String)](
+      (9001L, null, s0), (9002L, null, s0), // no shingles: never pairs
+      (9003L, "ab", s0), (9004L, "ab", s0), (9005L, "ab", null), // shorter than n
+      (9006L, "", s0), (9007L, "", s0), // one empty shingle each
+      (9008L, t0, s0), (9009L, t0, null), (9010L, t0, "other"))) // duplicates
+      .toDF("doc_id", "text", "source")
+    def rows(df: DataFrame) =
+      df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+    val sh = corpus.select($"doc_id", $"source", DedupOps.sortedShingles($"text", 3).as("sh"))
+    def truth(sameBlock: Boolean) = rows(sh.as("a").join(sh.as("b"),
+        $"a.doc_id" < $"b.doc_id" && (if (sameBlock) $"a.source" === $"b.source" else lit(true)))
+      .select($"a.doc_id", $"b.doc_id", DedupOps.jaccard($"a.sh", $"b.sh").as("jac"))
+      .filter($"jac" >= 0.6))
+    val (global, blocked) = (truth(false), truth(true))
+    assert(Seq((9003L, 9004L), (9003L, 9005L), (9006L, 9007L), (9008L, 9010L))
+      .forall(p => global.contains((p._1, p._2, 1.0))))
+    assert(blocked.contains((9003L, 9004L, 1.0)) && !blocked.exists(_._2 == 9005L))
+    assert(!global.exists(p => Set(p._1, p._2).exists(Set(9001L, 9002L))))
+    val cap = DedupOps.MaxBitsetUniverse
+    val calls = Seq[(String, Set[(Long, Long, Double)], () => DataFrame)](
+      ("global bitset", global, () => DedupOps.jaccardPairsGlobal(corpus, "doc_id", "text", 3, 0.6)),
+      ("global merge-scan", global, () => DedupOps.jaccardPairsGlobal(corpus, "doc_id", "text",
+        3, 0.6, maxBitsetUniverse = 0L)),
+      ("blocked bitset, bounded", blocked, () => DedupOps.jaccardPairsBlocked(corpus, "doc_id",
+        "text", "source", 3, 0.6, cap, candidatePairBudget = Some(Long.MaxValue))),
+      ("blocked bitset, no budget", blocked, () => DedupOps.jaccardPairsBlocked(corpus, "doc_id",
+        "text", "source", 3, 0.6, cap, candidatePairBudget = None)),
+      ("blocked merge-scan", blocked, () => DedupOps.jaccardPairsBlocked(corpus, "doc_id",
+        "text", "source", 3, 0.6, maxBitsetUniverse = 0L)))
+    val pinsBefore = sc.getPersistentRDDs.keySet
+    val broadcastsBefore = liveBroadcasts(sc)
+    for (_ <- 1 to 3; (tier, want, call) <- calls) {
+      val got = rows(call())
+      assert(got == want, s"$tier: missing ${(want -- got).take(3)}, extra ${(got -- want).take(3)}")
+    }
+    // the results are dropped: once the driver collects them, nothing the
+    // calls pinned or broadcast may remain
+    def leftover = (sc.getPersistentRDDs.keySet -- pinsBefore, liveBroadcasts(sc) -- broadcastsBefore)
+    val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
+    while (leftover != ((Set.empty, Set.empty)) && System.nanoTime() < deadline) {
+      System.gc()
+      Thread.sleep(200)
+    }
+    assert(leftover == ((Set.empty, Set.empty)), s"left behind (pins, broadcasts): $leftover")
   }
 }
