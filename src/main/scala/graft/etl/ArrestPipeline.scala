@@ -46,49 +46,57 @@ object ArrestPipeline {
   /** Stage 2 — transform (scripts/transform.py:48-176, operator order from
     * SURVEY §3.1). Input: raw Socrata/CSV-shaped frame (all strings or
     * inferred); output: the 18-column cleaned frame.
+    *
+    * One key/date filter, then one projection with one expression per
+    * output column: the step order of the reference survives inside each
+    * expression (a column is trimmed before it is upper-cased, guarded
+    * or mapped), and a chain of per-step `withColumn`s would re-analyze
+    * an ever deeper plan at every step.
     */
   def transform(raw: DataFrame): DataFrame = {
     // P1 rename: upper-case headers → lower (transform.py:68-73)
-    var df = T.normalizeColumnCase(raw)
     // P5 required-column validation (extract.py:118-122)
-    df = T.requireColumns(df, Seq("arrest_key", "arrest_date"))
-    // P2 add missing expected columns (transform.py:74-76)
-    df = (StringCols ++ Seq("law_cat_cd", "arrest_precinct", "latitude", "longitude"))
-      .foldLeft(df)((d, c) => T.addMissingColumn(d, c, lit(null: String)))
-    // P3 drop the nested geo struct (transform.py:94-97)
-    df = T.dropIfPresent(df, "lon_lat")
-    // F1+F2 key filters (transform.py:101-103)
-    df = T.filterNonBlank(
-      T.dropNullKeys(df, Seq("arrest_key", "arrest_date")),
-      Seq("arrest_key", "arrest_date"))
+    val df = T.requireColumns(T.normalizeColumnCase(raw), Seq("arrest_key", "arrest_date"))
+    // P2 missing expected columns read as NULL strings (transform.py:74-76);
+    // P3 the nested geo struct `lon_lat` is simply never selected
+    // (transform.py:94-97)
+    val have = df.columns.toSet
+    def in(c: String): Column = if (have(c)) col(c) else lit(null: String)
     // E4+E5 lenient date parse with epoch-millis fallback
-    // (transform.py:38-46, :109-115); §1.5 fix: drop rows whose date is
-    // STILL unparseable (reference would violate its NOT NULL at load).
-    df = df.withColumn("arrest_date",
-        T.dateOrEpochMillis(col("arrest_date").cast("string")))
-      .filter(col("arrest_date").isNotNull)
+    // (transform.py:38-46, :109-115)
+    val date = T.dateOrEpochMillis(col("arrest_date").cast("string"))
+    // F1 null keys (transform.py:101, `na.drop`: NaN counts as null) + F2
+    // blank keys (transform.py:102-103); §1.5 fix: drop rows whose date is
+    // STILL unparseable (reference would violate its NOT NULL at load)
+    val keep = Seq("arrest_key", "arrest_date").map { k =>
+      val present = df.schema(k).dataType match {
+        case FloatType | DoubleType => col(k).isNotNull && !isnan(col(k))
+        case _ => col(k).isNotNull
+      }
+      present && trim(col(k)) =!= ""
+    }.reduce(_ && _) && date.isNotNull
     // E1 stringify + ''-for-missing → net-NULL warehouse semantics (§1.4):
     // we keep NULL (the reference's empty strings become NULL at COPY).
-    df = StringCols.foldLeft(df)((d, c) =>
-      d.withColumn(c, nullif(trim(coalesce(col(c).cast("string"), lit(""))), lit(""))))
-    // E2 law-cat domain guard (transform.py:27-35 + load.py:128-131)
-    df = df.withColumn("law_cat_cd", T.lawCategoryGuard(col("law_cat_cd")))
-    // E12 sex domain guard (load.py:136-139)
-    df = df.withColumn("perp_sex", T.sexGuard(col("perp_sex")))
-    // E7/E8 lenient numeric casts; §1.5 fix: "83.0" → 83 int
-    df = df.withColumn("arrest_precinct", T.lenientInt(col("arrest_precinct")))
-      .withColumn("latitude", T.lenientDouble(col("latitude")))
-      .withColumn("longitude", T.lenientDouble(col("longitude")))
-    // E9 sentinel fills (transform.py:137, :144-145)
-    df = T.fillSentinels(df, Map("arrest_precinct" -> -1),
-      Map("latitude" -> 0.0, "longitude" -> 0.0))
-    // E3 borough map with passthrough (transform.py:148-150)
-    df = df.withColumn("arrest_boro",
-      T.mapWithPassthrough(upper(col("arrest_boro")), T.BoroughMap))
-    // E10 uppercase normalization (transform.py:152-159)
-    df = T.upperCols(df, UpperCols)
+    def str(c: String): Column = nullif(trim(T.castToStringEmptyNull(in(c))), lit(""))
+    val out: Map[String, Column] = StringCols.map(c => c -> str(c)).toMap ++
+      // E10 uppercase normalization (transform.py:152-159)
+      UpperCols.map(c => c -> upper(str(c))) ++ Map(
+      "arrest_key" -> col("arrest_key"),
+      "arrest_date" -> date,
+      // E2 law-cat domain guard (transform.py:27-35 + load.py:128-131)
+      "law_cat_cd" -> T.lawCategoryGuard(in("law_cat_cd")),
+      // E12 sex domain guard (load.py:136-139)
+      "perp_sex" -> T.sexGuard(str("perp_sex")),
+      // E3 borough map with passthrough (transform.py:148-150)
+      "arrest_boro" -> T.mapWithPassthrough(upper(str("arrest_boro")), T.BoroughMap),
+      // E7/E8 lenient numeric casts (§1.5 fix: "83.0" → 83) + E9 sentinel
+      // fills (transform.py:137, :144-145) with `na.fill`'s rules: NaN is
+      // missing too for the coordinates
+      "arrest_precinct" -> coalesce(T.lenientInt(in("arrest_precinct")), lit(-1)),
+      "latitude" -> coalesce(nanvl(T.lenientDouble(in("latitude")), lit(null)), lit(0.0)),
+      "longitude" -> coalesce(nanvl(T.lenientDouble(in("longitude")), lit(null)), lit(0.0)))
     // P4 project to the exact load schema (load.py:182-192)
-    df.select(ArrestSchema.fieldNames.map(col).toIndexedSeq: _*)
+    df.filter(keep).select(ArrestSchema.fieldNames.map(c => out(c).as(c)).toIndexedSeq: _*)
   }
 
   /** Stage 3 — load: first-writer-wins upsert into a parquet warehouse
@@ -103,9 +111,7 @@ object ArrestPipeline {
     * warehouse high-water-mark. §1.5 watermark quirk fixed by `>=` + the
     * PK-dedup in [[load]].
     */
-  def incrementalSource(source: DataFrame, warehouse: DataFrame): DataFrame = {
-    val hwm = warehouse.agg(
-      coalesce(max(col("arrest_date")), lit("1900-01-01").cast("date")).as("__hwm"))
-    source.join(broadcast(hwm), col("arrest_date") >= col("__hwm")).drop("__hwm")
-  }
+  def incrementalSource(source: DataFrame, warehouse: DataFrame): DataFrame =
+    W.incrementalAfterWatermark(source, warehouse, "arrest_date",
+      lit("1900-01-01").cast("date"), inclusive = true)
 }

@@ -32,6 +32,10 @@ import graft.ops.VersionedTable.ColStat
   * the all-null ColStat). Commits beyond `maxFooterFiles` also fall back
   * — a serial driver footer loop stops amortizing where a scan starts
   * to.
+  *
+  * The same footer reads serve [[Warehouse]]: a bare parquet warehouse's
+  * watermark ([[columnMax]], same refusal rules) and the row count of the
+  * files a load or staged swap just wrote ([[rowCounts]]).
   */
 object FooterStats {
 
@@ -48,48 +52,88 @@ object FooterStats {
     footer.getBlocks.asScala.map(_.getRowCount).sum
   }
 
+  /** One file's footer: its row count and, per stats column, the exact
+    * (min, max, nullCount) in Catalyst internal form — min/max None when
+    * every value is null.
+    */
+  private final case class Footer(path: Path, rows: Long,
+                          stats: Map[String, (Option[Any], Option[Any], Long)])
+
+  /** Manifest stats of the data files directly under `commitDir`, rendered
+    * as [[ColStat]]s; 0-row files are left out.
+    */
   def lift(spark: SparkSession, commitDir: Path, statsCols: Seq[String],
            schema: StructType): Option[Seq[(String, Long, Map[String, ColStat])]] = {
+    val fs = commitDir.getFileSystem(spark.sessionState.newHadoopConf())
+    val parts =
+      if (!fs.exists(commitDir)) Seq.empty
+      else fs.listStatus(commitDir)
+        .filter(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
+        .sortBy(_.getPath.getName).toSeq
+    val tz = spark.sessionState.conf.sessionLocalTimeZone
+    // 0-row part files carry no data and no information — the scan path
+    // never produced entries for them either
+    liftFiles(spark, parts, statsCols, schema).map(_.filter(_.rows > 0).map { f =>
+      (f.path.getName, f.rows, f.stats.map { case (c, (mn, mx, nulls)) =>
+        val dt = schema(c).dataType
+        c -> ColStat(dt.sql, mn.map(render(_, dt, tz)), mx.map(render(_, dt, tz)), nulls)
+      })
+    })
+  }
+
+  /** [[Footer]]s of the given parquet files, in order; None when any
+    * (file, column) lacks trustworthy stats or there are more than
+    * `maxFooterFiles` files.
+    */
+  private def liftFiles(spark: SparkSession, files: Seq[FileStatus], statsCols: Seq[String],
+                schema: StructType): Option[Seq[Footer]] = {
     val unsupported = statsCols.exists(c => schema(c).dataType match {
       case FloatType | DoubleType => true
       case _ => false
     })
-    if (unsupported) return None
+    if (unsupported || files.length > maxFooterFiles) return None
     val conf = spark.sessionState.newHadoopConf()
-    val fs = commitDir.getFileSystem(conf)
-    if (!fs.exists(commitDir)) return Some(Seq.empty)
-    val parts = fs.listStatus(commitDir)
-      .filter(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
-      .sortBy(_.getPath.getName)
-    if (parts.length > maxFooterFiles) return None
-    val tz = spark.sessionState.conf.sessionLocalTimeZone
-    // footer opens are independent ~ms-scale IO waits: a serial loop puts
-    // file-count × latency on EVERY commit's critical path, so lift in
-    // parallel on a bounded pool (a handful of files stays inline — the
-    // pool would cost more than it saves)
-    val lifted: Seq[Option[(String, Long, Map[String, ColStat])]] =
-      if (parts.length <= 4) parts.toSeq.map(liftOne(_, conf, statsCols, schema, tz))
-      else {
-        val pool = java.util.concurrent.Executors.newFixedThreadPool(
-          math.min(16, parts.length))
-        try {
-          parts.toSeq.map { p =>
-            pool.submit(new java.util.concurrent.Callable[
-                Option[(String, Long, Map[String, ColStat])]] {
-              override def call() = liftOne(p, conf, statsCols, schema, tz)
-            })
-          }.map(_.get())
-        } finally pool.shutdown()
-      }
-    if (lifted.exists(_.isEmpty)) None
-    // 0-row part files carry no data and no information — the scan path
-    // never produced entries for them either
-    else Some(lifted.flatten.filter(_._2 > 0).toSeq)
+    val lifted = parMap(files)(liftOne(_, conf, statsCols, schema))
+    if (lifted.exists(_.isEmpty)) None else Some(lifted.flatten)
   }
 
+  /** MAX of `column` over the given parquet files, from their footers, in
+    * Catalyst internal form: Some(None) when the files hold no non-null
+    * value, None when [[liftFiles]] refuses.
+    */
+  def columnMax(spark: SparkSession, files: Seq[FileStatus], column: String,
+                schema: StructType): Option[Option[Any]] = {
+    val dt = schema(column).dataType
+    liftFiles(spark, files, Seq(column), schema).map(_.flatMap(_.stats(column)._2)
+      .reduceOption((a, b) => if (less(a, b, dt)) b else a))
+  }
+
+  /** Row count of each given parquet file, from its footer. */
+  def rowCounts(spark: SparkSession, files: Seq[FileStatus]): Seq[Long] = {
+    val conf = spark.sessionState.newHadoopConf()
+    parMap(files)(st => rowCount(st.getPath, conf))
+  }
+
+  // footer opens are independent ~ms-scale IO waits: a serial loop puts
+  // file-count × latency on the caller's critical path, so read them in
+  // parallel on a bounded pool (a handful of files stays inline — the
+  // pool would cost more than it saves)
+  private def parMap[B](files: Seq[FileStatus])(f: FileStatus => B): Seq[B] =
+    if (files.length <= 4) files.map(f)
+    else {
+      val pool = java.util.concurrent.Executors.newFixedThreadPool(
+        math.min(16, files.length))
+      try {
+        files.map { st =>
+          pool.submit(new java.util.concurrent.Callable[B] {
+            override def call(): B = f(st)
+          })
+        }.map(_.get())
+      } finally pool.shutdown()
+    }
+
   private def liftOne(st: FileStatus, conf: org.apache.hadoop.conf.Configuration,
-                      statsCols: Seq[String], schema: StructType, tz: String)
-      : Option[(String, Long, Map[String, ColStat])] = {
+                      statsCols: Seq[String], schema: StructType): Option[Footer] = {
     import scala.jdk.CollectionConverters._
     val reader = ParquetFileReader.open(HadoopInputFile.fromPath(st.getPath, conf))
     val footer = try reader.getFooter finally reader.close()
@@ -109,9 +153,9 @@ object FooterStats {
         // `hasNonNullValue == false` does NOT imply all-null: INT96 (and
         // other no-order encodings) record null counts but never values.
         // Only the arithmetic proof nulls == rows licenses the all-null
-        // ColStat — anything else falls back to the scan path, because a
+        // stat — anything else falls back to the scan path, because a
         // fabricated (None, None) stat would let pruning DROP a live file
-        if (nulls == rows) c -> ColStat(dt.sql, None, None, nulls)
+        if (nulls == rows) c -> (None, None, nulls)
         else return None
       } else {
         val pt = chunks.flatten.head.getPrimitiveType
@@ -120,11 +164,10 @@ object FooterStats {
         if (mins.exists(_.isEmpty) || maxs.exists(_.isEmpty)) return None
         val mn = mins.flatten.reduce((a, b) => if (less(a, b, dt)) a else b)
         val mx = maxs.flatten.reduce((a, b) => if (less(a, b, dt)) b else a)
-        c -> ColStat(dt.sql, Some(render(mn, dt, tz)), Some(render(mx, dt, tz)),
-          nulls)
+        c -> (Some(mn), Some(mx), nulls)
       }
     }.toMap
-    Some((st.getPath.getName, rows, perCol))
+    Some(Footer(st.getPath, rows, perCol))
   }
 
   private def minOf(s: Statistics[_]): Any = s.genericGetMin

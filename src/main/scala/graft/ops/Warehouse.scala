@@ -145,37 +145,81 @@ object Warehouse {
     * `INSERT ... SELECT ... ON CONFLICT (arrest_key) DO NOTHING`).
     *
     * Spark-first shape: LEFT ANTI join of incoming against the existing
-    * target keys, then append. The anti join shuffles only the join keys of
-    * the target side after column pruning; when the incoming batch is small
-    * relative to the target (the common incremental case), AQE converts it
-    * to a broadcast of the incoming side. Returns the rows that WOULD be
-    * inserted; the caller appends them to the warehouse path.
+    * target keys, then append. Column pruning leaves only the target's key
+    * columns in the join. Spark cannot build the left side of a left-anti
+    * join, so the side a broadcast can carry is the TARGET's keys
+    * (`BroadcastHashJoin … LeftAnti, BuildRight`): below the broadcast
+    * threshold the warehouse keys are broadcast to the incoming batch;
+    * above it both sides shuffle on the key. Returns the rows that WOULD
+    * be inserted; the caller appends them to the warehouse path.
     */
   def upsertNewRows(incoming: DataFrame, target: DataFrame, keys: Seq[String]): DataFrame =
     incoming.join(target.select(keys.map(col): _*), keys, "left_anti")
 
   /** Full upsert against a parquet warehouse directory: dedup the batch,
     * anti-join against current target keys, append. Idempotent — re-running
-    * with the same batch inserts zero rows (ScalaCheck property in tests).
+    * with the same batch inserts zero rows and adds no file (ScalaCheck
+    * property in tests). A directory with no parquet data files (absent or
+    * pre-created) takes the batch as it is.
+    *
+    * The insert set is written once, with no count before it: the returned
+    * count is the footer row total of the part files this write added (a
+    * listing diff — single writer per directory, the same contract as the
+    * staged swaps). The write's 0-row part files are deleted, and an empty
+    * insert set leaves the listing as it was (no directory is created).
     */
   def upsertIntoParquet(incoming: DataFrame, warehouseDir: String,
                         keys: Seq[String], tiebreak: Seq[Column]): Long = {
     val spark = incoming.sparkSession
     val deduped = dedupByKey(incoming, keys, tiebreak)
-    val upsertFs = new org.apache.hadoop.fs.Path(warehouseDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    recoverRetired(upsertFs, warehouseDir)
-    val exists = upsertFs.exists(new org.apache.hadoop.fs.Path(warehouseDir))
+    val dir = new org.apache.hadoop.fs.Path(warehouseDir)
+    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    recoverRetired(fs, warehouseDir)
+    val existed = fs.exists(dir)
+    val before = if (existed) fs.listStatus(dir).map(_.getPath.getName).toSet else Set.empty[String]
     val toInsert =
-      if (exists) upsertNewRows(deduped, spark.read.parquet(warehouseDir), keys)
+      if (dataFiles(fs, dir).nonEmpty)
+        upsertNewRows(deduped, spark.read.parquet(warehouseDir), keys)
       else deduped
-    // Two actions on the same plan — cache the (small) insert set, not the scan.
-    toInsert.cache()
-    val n = toInsert.count()
-    if (n > 0) toInsert.write.mode("append").parquet(warehouseDir)
-    toInsert.unpersist()
+    toInsert.write.mode("append").parquet(warehouseDir)
+    val added = fs.listStatus(dir).filterNot(st => before(st.getPath.getName)).toSeq
+    val written = added.filter(st => st.isFile && isDataFile(st.getPath.getName))
+    val rows = FooterStats.rowCounts(spark, written)
+    val n = rows.sum
+    val litter =
+      if (n > 0) written.zip(rows).collect { case (st, 0L) => st.getPath }
+      else if (existed) added.map(_.getPath)
+      else Seq(dir)
+    litter.foreach(fs.delete(_, true))
     n
   }
+
+  private def isDataFile(name: String): Boolean =
+    name.endsWith(".parquet") && !name.startsWith("_") && !name.startsWith(".")
+
+  /** The parquet data files under `dir`, recursively (none when it is
+    * absent), skipping the `_`/`.`-prefixed names Spark's reader skips.
+    */
+  private def dataFiles(fs: org.apache.hadoop.fs.FileSystem,
+                        dir: org.apache.hadoop.fs.Path): Seq[org.apache.hadoop.fs.FileStatus] = {
+    def walk(d: org.apache.hadoop.fs.Path): Seq[org.apache.hadoop.fs.FileStatus] =
+      fs.listStatus(d).toSeq.flatMap { st =>
+        val name = st.getPath.getName
+        if (st.isDirectory)
+          if (name.startsWith(".") || (name.startsWith("_") && !name.contains("="))) Nil
+          else walk(st.getPath)
+        else if (isDataFile(name)) Seq(st)
+        else Nil
+      }
+    if (fs.exists(dir)) walk(dir) else Seq.empty
+  }
+
+  /** Rows in the parquet data files under `dir`, summed from their footers:
+    * the row count of a directory a write just produced, with no Spark job.
+    */
+  private def footerRows(spark: SparkSession, fs: org.apache.hadoop.fs.FileSystem,
+                         dir: String): Long =
+    FooterStats.rowCounts(spark, dataFiles(fs, new org.apache.hadoop.fs.Path(dir))).sum
 
   /** Replacing upsert — the last-writer-wins MERGE analog (the reference
     * only has insert-if-absent, `ON CONFLICT DO NOTHING`; warehouses also
@@ -200,11 +244,10 @@ object Warehouse {
         spark.read.parquet(warehouseDir).join(deduped.select(keys.map(col): _*),
           keys, "left_anti").unionByName(deduped)
       else deduped
-    val n = stagedSwap(fs, warehouseDir) { stagingPath =>
+    stagedSwap(fs, warehouseDir) { stagingPath =>
       merged.write.mode("overwrite").parquet(stagingPath)
-      spark.read.parquet(stagingPath).count()
+      footerRows(spark, fs, stagingPath)
     }
-    n
   }
 
   /** Crash-safe replace of `dir`: `write` materializes into a staging dir,
@@ -495,17 +538,58 @@ object Warehouse {
     coalesce(max(col(tsCol)), default)
 
   // ---------------------------------------------------------------- I1
-  /** High-water-mark incremental read (extract.py:103 + :63), composed as a
-    * single plan: scalar-subquery-style max over the warehouse, then a
-    * strict `>` filter on the source. Spark plans the 1-row side as a
-    * broadcast nested loop (free); the filter itself is pushed to the scan.
-    * Fixes the §1.5 watermark quirk when used with [[upsertNewRows]]
-    * (>= + PK dedup would also work; strict > matches the reference).
+  /** High-water-mark incremental read (extract.py:103 + :63): the source
+    * rows after `coalesce(MAX(tsCol), default)` of the warehouse — strict
+    * `>` as in the reference, or `>=` with `inclusive` (the PK dedup of
+    * [[upsertNewRows]] then drops the re-read rows; fixes the §1.5
+    * watermark quirk).
+    *
+    * When `warehouse` is a bare parquet relation (analyzed plan = one
+    * `LogicalRelation`: no filter or projection) and `tsCol` is not a
+    * partition column, the max comes from the footers of the relation's
+    * own file listing — the files its scan would read — on the driver,
+    * with no Spark job, and the source gets a plain filter on a literal.
+    * Otherwise, or when the footers refuse ([[FooterStats.columnMax]]:
+    * untrusted stats, more than 512 files), the max is an aggregate over
+    * the warehouse joined to the source as a broadcast one-row side —
+    * two Spark jobs that scan the whole warehouse.
     */
   def incrementalAfterWatermark(source: DataFrame, warehouse: DataFrame,
-                                tsCol: String, default: Column): DataFrame = {
-    val hwm = warehouse.agg(highWaterMark(warehouse, tsCol, default).as("__hwm"))
-    source.join(broadcast(hwm), col(tsCol) > col("__hwm")).drop("__hwm")
+                                tsCol: String, default: Column,
+                                inclusive: Boolean = false): DataFrame = {
+    def after(hwm: Column): Column = if (inclusive) col(tsCol) >= hwm else col(tsCol) > hwm
+    footerMax(warehouse, tsCol) match {
+      case Some(mx) => source.filter(after(coalesce(mx, default)))
+      case None =>
+        val hwm = warehouse.agg(highWaterMark(warehouse, tsCol, default).as("__hwm"))
+        source.join(broadcast(hwm), after(col("__hwm"))).drop("__hwm")
+    }
+  }
+
+  /** MAX(`tsCol`) of a bare parquet relation as a literal (null when it
+    * holds no non-null value), from its files' footers; None → aggregate.
+    */
+  private def footerMax(warehouse: DataFrame, tsCol: String): Option[Column] = {
+    import org.apache.spark.sql.catalyst.expressions.Literal
+    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+    import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+    val spark = warehouse.sparkSession
+    val resolver = spark.sessionState.conf.resolver
+    warehouse.queryExecution.analyzed match {
+      case l: LogicalRelation => l.relation match {
+        case r: HadoopFsRelation if r.fileFormat.isInstanceOf[ParquetFileFormat] &&
+            !r.partitionSchema.exists(f => resolver(f.name, tsCol)) =>
+          r.dataSchema.find(f => resolver(f.name, tsCol)).flatMap { f =>
+            val files = r.location.listFiles(Nil, Nil).flatMap(_.files).map(_.fileStatus)
+            // an unreadable footer is the scan's failure to report
+            try FooterStats.columnMax(spark, files, f.name, r.dataSchema)
+              .map(mx => org.apache.spark.sql.GraftShim.column(Literal(mx.orNull, f.dataType)))
+            catch { case scala.util.control.NonFatal(_) => None }
+          }
+        case _ => None
+      }
+      case _ => None
+    }
   }
 
   // ---------------------------------------------------------------- CDC apply
@@ -655,7 +739,7 @@ object Warehouse {
     if (!exists && merged.isEmpty) return 0L
     stagedSwap(fs, warehouseDir) { stagingPath =>
       merged.write.mode("overwrite").parquet(stagingPath)
-      spark.read.parquet(stagingPath).count()
+      footerRows(spark, fs, stagingPath)
     }
   }
 
@@ -1016,7 +1100,7 @@ object Warehouse {
     val view = readMergeOnRead(spark, warehouseDir, keys, tiebreak)
     val n = stagedSwap(fs, warehouseDir) { stagingPath =>
       view.write.mode("overwrite").parquet(stagingPath)
-      spark.read.parquet(stagingPath).count()
+      footerRows(spark, fs, stagingPath)
     }
     snapshot.foreach { case (_, dir) =>
       fs.delete(new org.apache.hadoop.fs.Path(dir), true)

@@ -9,6 +9,7 @@ import graft.etl.ArrestPipeline
   * first-writer-wins + idempotence (reference scripts/etl.py:49-53).
   */
 class ArrestPipelineSpec extends SparkSuite {
+  import spark.implicits._
 
   private val dirtyJsonl = Seq(
     // clean row
@@ -84,5 +85,47 @@ class ArrestPipelineSpec extends SparkSuite {
     // hwm = 2023-01-05 (K4); >= keeps K4 only, PK-dedup makes re-load a no-op
     assert(inc.select("arrest_key").collect().map(_.getString(0)).toSet == Set("K4"))
     assert(ArrestPipeline.load(inc, wh) == 0)
+  }
+
+  /** Whether `df`'s optimized plan reads the parquet directory `dir`. */
+  private def scans(df: org.apache.spark.sql.DataFrame, dir: String): Boolean = {
+    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+    val want = new org.apache.hadoop.fs.Path(dir).toUri.getPath
+    df.queryExecution.optimizedPlan.collect { case l: LogicalRelation => l.relation }.exists {
+      case r: HadoopFsRelation => r.location.rootPaths.exists(_.toUri.getPath == want)
+      case _ => false
+    }
+  }
+
+  test("incrementalSource over a bare parquet warehouse: built with no job, counted with no warehouse scan") {
+    val wh = Files.createTempDirectory("warehouse3").toString + "/arrests"
+    val raw = spark.read.json(writeFixture(dirtyJsonl))
+    ArrestPipeline.load(ArrestPipeline.transform(raw), wh)
+    val source = ArrestPipeline.transform(raw).cache()
+    source.count()
+    val warehouse = spark.read.parquet(wh)
+    var inc: org.apache.spark.sql.DataFrame = null
+    assert(jobsLaunchedBy { inc = ArrestPipeline.incrementalSource(source, warehouse) } == 0)
+    assert(!scans(inc, wh), inc.queryExecution.optimizedPlan.treeString)
+    assert(inc.count() == 1) // K4, the max-date row
+    // the aggregate path over the same warehouse reads it and agrees
+    val viaAgg = ArrestPipeline.incrementalSource(source, warehouse.filter(lit(true)))
+    assert(scans(viaAgg, wh))
+    assert(viaAgg.collect().toSet == inc.collect().toSet)
+    source.unpersist()
+  }
+
+  test("incrementalSource: a warehouse of 0-row files only takes the 1900-01-01 default") {
+    val wh = Files.createTempDirectory("warehouse4").toString + "/arrests"
+    spark.createDataFrame(java.util.Collections.emptyList[org.apache.spark.sql.Row](),
+      ArrestPipeline.ArrestSchema).write.parquet(wh)
+    val warehouse = spark.read.parquet(wh)
+    assert(warehouse.inputFiles.nonEmpty)
+    val source = Seq(("A", java.sql.Date.valueOf("1899-12-31")),
+      ("B", java.sql.Date.valueOf("1900-01-01")), ("C", java.sql.Date.valueOf("2023-01-01")))
+      .toDF("arrest_key", "arrest_date")
+    val inc = ArrestPipeline.incrementalSource(source, warehouse)
+    assert(!scans(inc, wh))
+    assert(inc.collect().map(_.getString(0)).toSet == Set("B", "C"))
   }
 }

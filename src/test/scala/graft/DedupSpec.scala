@@ -644,44 +644,6 @@ class DedupSpec extends SparkSuite {
       s"kernel disagrees with levenshtein: ${disagree.take(5).mkString(", ")}")
   }
 
-  /** Spark jobs `f` launches: tagged by job group and counted by a
-    * listener. The listener bus delivers in order, so once a trailing
-    * sentinel job is seen every earlier job has been counted.
-    */
-  private def jobsLaunchedBy(f: => Any): Int = jobTasksOf(f).size
-
-  /** The task count of each job's final stage, for the jobs `f` launches,
-    * in launch order.
-    */
-  private def jobTasksOf(f: => Any): Seq[Int] = {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    val sc = spark.sparkContext
-    val group = s"jobs-launched-by-${System.nanoTime()}"
-    val groups = new java.util.concurrent.ConcurrentLinkedQueue[(String, Int)]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        groups.add(Option(e.properties)
-          .flatMap(p => Option(p.getProperty("spark.jobGroup.id"))).getOrElse("") ->
-          e.stageInfos.maxBy(_.stageId).numTasks)
-    }
-    sc.addSparkListener(listener)
-    def inGroup(g: String)(body: => Any): Unit = {
-      sc.setJobGroup(g, g)
-      try body finally sc.clearJobGroup()
-    }
-    try {
-      inGroup(group)(f)
-      inGroup(s"$group-sentinel")(sc.parallelize(Seq(1), 1).count())
-      import scala.jdk.CollectionConverters._
-      def sentinelSeen = groups.asScala.exists(_._1 == s"$group-sentinel")
-      val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
-      while (!sentinelSeen && System.nanoTime() < deadline)
-        Thread.sleep(10)
-      assert(sentinelSeen, "listener never saw the sentinel job")
-      groups.asScala.toSeq.collect { case (`group`, tasks) => tasks }
-    } finally sc.removeSparkListener(listener)
-  }
-
   test("ScanSpread: a streaming input comes back unchanged, nothing thrown") {
     val stream = spark.readStream.format("rate").load()
       .select($"value".as("id"), $"value".cast("string").as("text"))

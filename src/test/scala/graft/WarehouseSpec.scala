@@ -88,6 +88,114 @@ class WarehouseSpec extends SparkSuite {
     assert(result.passed, result.status.toString)
   }
 
+  /** Names under `dir` (empty when it is absent). */
+  private def listing(dir: String): Set[String] =
+    Option(new java.io.File(dir).list()).map(_.toSet).getOrElse(Set.empty)
+
+  test("upsertIntoParquet: a pre-created target with no parquet data files takes the batch") {
+    val wh = Files.createTempDirectory("precreated").toString + "/t"
+    new java.io.File(wh).mkdirs()
+    new java.io.File(wh, "_SUCCESS").createNewFile()
+    val batch = Seq((1, "b"), (1, "a"), (2, "c")).toDF("k", "v")
+    assert(Warehouse.upsertIntoParquet(batch, wh, Seq("k"), Seq($"v")) == 2)
+    assert(spark.read.parquet(wh).as[(Int, String)].collect().toMap == Map(1 -> "a", 2 -> "c"))
+    assert(Warehouse.upsertIntoParquet(batch, wh, Seq("k"), Seq($"v")) == 0)
+  }
+
+  test("upsertIntoParquet: an empty batch writes nothing, whatever the target") {
+    val empty = Seq.empty[(Int, String)].toDF("k", "v")
+    val root = Files.createTempDirectory("emptybatch").toString
+    // absent target: no directory appears
+    val absent = root + "/absent"
+    assert(Warehouse.upsertIntoParquet(empty, absent, Seq("k"), Seq($"v")) == 0)
+    assert(!new java.io.File(absent).exists())
+    // pre-created empty target: stays empty
+    val bare = root + "/bare"
+    new java.io.File(bare).mkdirs()
+    assert(Warehouse.upsertIntoParquet(empty, bare, Seq("k"), Seq($"v")) == 0)
+    assert(listing(bare).isEmpty, s"left behind: ${listing(bare)}")
+    // existing warehouse: listing unchanged
+    val wh = root + "/wh"
+    assert(Warehouse.upsertIntoParquet(Seq((1, "a")).toDF("k", "v"), wh, Seq("k"), Seq($"v")) == 1)
+    val before = listing(wh)
+    assert(Warehouse.upsertIntoParquet(empty, wh, Seq("k"), Seq($"v")) == 0)
+    assert(listing(wh) == before)
+  }
+
+  test("upsertIntoParquet: re-running a batch inserts 0 rows and adds no file") {
+    val wh = Files.createTempDirectory("rerun").toString + "/t"
+    val batch = (0 until 200).map(i => (i % 150, s"v$i")).toDF("k", "v").repartition(3)
+    assert(Warehouse.upsertIntoParquet(batch, wh, Seq("k"), Seq($"v")) == 150)
+    // every file the load kept holds rows
+    assert(spark.read.parquet(wh).inputFiles.length ==
+      spark.read.parquet(wh).select(input_file_name()).distinct().count())
+    val before = listing(wh)
+    assert(Warehouse.upsertIntoParquet(batch, wh, Seq("k"), Seq($"v")) == 0)
+    assert(listing(wh) == before)
+    assert(spark.read.parquet(wh).count() == 150)
+  }
+
+  test("upsertIntoParquet: a load into an existing warehouse runs <= 4 jobs") {
+    val root = Files.createTempDirectory("loadjobs").toString
+    val wh = root + "/t"
+    Warehouse.upsertIntoParquet((0 until 500).map(i => (i, s"a$i")).toDF("k", "v"),
+      wh, Seq("k"), Seq($"v"))
+    (250 until 750).map(i => (i, s"b$i")).toDF("k", "v").write.parquet(root + "/in")
+    val incoming = spark.read.parquet(root + "/in")
+    var n = -1L
+    val jobs = jobsLaunchedBy {
+      n = Warehouse.upsertIntoParquet(incoming, wh, Seq("k"), Seq($"v"))
+    }
+    assert(n == 250)
+    assert(jobs <= 4, s"load ran $jobs jobs, want <= 4 (schema, dedup map, key broadcast, write)")
+    assert(spark.read.parquet(wh).count() == 750)
+  }
+
+  test("incrementalAfterWatermark: a filtered warehouse falls back to the aggregate, same rows") {
+    val wh = Files.createTempDirectory("wmfilter").toString + "/t"
+    Seq((1, java.sql.Date.valueOf("2024-01-01")), (2, java.sql.Date.valueOf("2024-03-01")))
+      .toDF("k", "d").write.parquet(wh)
+    val source = Seq((7, java.sql.Date.valueOf("2024-01-15")),
+      (8, java.sql.Date.valueOf("2024-02-01")), (9, java.sql.Date.valueOf("2024-03-02")))
+      .toDF("k", "d")
+    val default = lit("1900-01-01").cast("date")
+    def keys(df: org.apache.spark.sql.DataFrame) = df.as[(Int, java.sql.Date)].collect().map(_._1).toSet
+    val bare = spark.read.parquet(wh)
+    assert(keys(Warehouse.incrementalAfterWatermark(source, bare, "d", default)) == Set(9))
+    // the filter leaves 2024-01-01 as the max: the aggregate path must see it
+    val filtered = bare.filter($"k" === 1)
+    val out = Warehouse.incrementalAfterWatermark(source, filtered, "d", default)
+    assert(keys(out) == Set(7, 8, 9))
+    assert(out.queryExecution.optimizedPlan.collect {
+      case a: org.apache.spark.sql.catalyst.plans.logical.Aggregate => a }.nonEmpty)
+  }
+
+  test("incrementalAfterWatermark: a TIMESTAMP watermark from footers equals the aggregate to the µs") {
+    val ts = (s: String) => java.sql.Timestamp.valueOf(s)
+    val source = Seq((1, ts("2024-05-01 10:00:00.123455")), (2, ts("2024-05-01 10:00:00.123456")),
+      (3, ts("2024-05-01 10:00:00.123457"))).toDF("k", "t")
+    val default = lit("1900-01-01").cast("timestamp")
+    for (tsType <- Seq("TIMESTAMP_MICROS", "TIMESTAMP_MILLIS", "INT96")) {
+      val wh = Files.createTempDirectory("wmts").toString + "/t"
+      spark.conf.set("spark.sql.parquet.outputTimestampType", tsType)
+      try Seq((10, ts("2024-04-30 00:00:00")), (11, ts("2024-05-01 10:00:00.123456")),
+        (12, null.asInstanceOf[java.sql.Timestamp])).toDF("k", "t").repartition(2).write.parquet(wh)
+      finally spark.conf.unset("spark.sql.parquet.outputTimestampType")
+      val bare = spark.read.parquet(wh)
+      for (inclusive <- Seq(false, true)) {
+        val viaFooter = Warehouse.incrementalAfterWatermark(source, bare, "t", default, inclusive)
+        val viaAgg = Warehouse.incrementalAfterWatermark(source, bare.filter(lit(true)), "t",
+          default, inclusive)
+        val got = viaFooter.as[(Int, java.sql.Timestamp)].collect().toSet
+        assert(got == viaAgg.as[(Int, java.sql.Timestamp)].collect().toSet, tsType)
+        // MILLIS truncates the stored value itself: both paths see .123
+        val want = if (tsType == "TIMESTAMP_MILLIS") Set(1, 2, 3)
+          else if (inclusive) Set(2, 3) else Set(3)
+        assert(got.map(_._1) == want, s"$tsType inclusive=$inclusive: $got")
+      }
+    }
+  }
+
   test("highWaterMark falls back to default on empty input") {
     val empty = Seq.empty[(String, String)].toDF("k", "d")
     val hwm = empty.agg(Warehouse.highWaterMark(empty, "d", lit("1900-01-01")))
