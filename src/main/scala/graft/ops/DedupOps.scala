@@ -194,7 +194,7 @@ object DedupOps {
     val batchSigs = minhashSignatures(batch, idCol, textCol, n, k)
     val fs = new org.apache.hadoop.fs.Path(sigTableDir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val exists = fs.exists(new org.apache.hadoop.fs.Path(sigTableDir))
+    val exists = Warehouse.hasDataFiles(fs, new org.apache.hadoop.fs.Path(sigTableDir))
     val internal = minhashLshPairsFromSignatures(batchSigs, k, bands, threshold)
     val pairs =
       if (!exists) internal

@@ -34,8 +34,9 @@ import graft.ops.VersionedTable.ColStat
   * to.
   *
   * The same footer reads serve [[Warehouse]]: a bare parquet warehouse's
-  * watermark ([[columnMax]], same refusal rules) and the row count of the
-  * files a load or staged swap just wrote ([[rowCounts]]).
+  * watermark ([[columnMax]], same refusal rules), its Spark row schema
+  * ([[sparkSchema]], read in place of a schema-inference job) and the row
+  * count of the files a load or staged swap just wrote ([[rowCounts]]).
   */
 object FooterStats {
 
@@ -52,6 +53,18 @@ object FooterStats {
     footer.getBlocks.asScala.map(_.getRowCount).sum
   }
 
+  /** The Spark row schema Spark's parquet writer stores in a file's
+    * footer metadata; None when the key is absent or does not parse
+    * (a file another writer produced).
+    */
+  def sparkSchema(path: Path, conf: org.apache.hadoop.conf.Configuration): Option[StructType] = {
+    val reader = ParquetFileReader.open(HadoopInputFile.fromPath(path, conf))
+    val meta = try reader.getFooter.getFileMetaData.getKeyValueMetaData
+               finally reader.close()
+    Option(meta.get("org.apache.spark.sql.parquet.row.metadata")).flatMap(json =>
+      scala.util.Try(DataType.fromJson(json)).toOption.collect { case st: StructType => st })
+  }
+
   /** One file's footer: its row count and, per stats column, the exact
     * (min, max, nullCount) in Catalyst internal form — min/max None when
     * every value is null.
@@ -59,17 +72,12 @@ object FooterStats {
   private final case class Footer(path: Path, rows: Long,
                           stats: Map[String, (Option[Any], Option[Any], Long)])
 
-  /** Manifest stats of the data files directly under `commitDir`, rendered
-    * as [[ColStat]]s; 0-row files are left out.
+  /** Manifest stats of the given parquet files (a commit's part files,
+    * as its write listed them), rendered as [[ColStat]]s; 0-row files are
+    * left out.
     */
-  def lift(spark: SparkSession, commitDir: Path, statsCols: Seq[String],
+  def lift(spark: SparkSession, parts: Seq[FileStatus], statsCols: Seq[String],
            schema: StructType): Option[Seq[(String, Long, Map[String, ColStat])]] = {
-    val fs = commitDir.getFileSystem(spark.sessionState.newHadoopConf())
-    val parts =
-      if (!fs.exists(commitDir)) Seq.empty
-      else fs.listStatus(commitDir)
-        .filter(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
-        .sortBy(_.getPath.getName).toSeq
     val tz = spark.sessionState.conf.sessionLocalTimeZone
     // 0-row part files carry no data and no information — the scan path
     // never produced entries for them either

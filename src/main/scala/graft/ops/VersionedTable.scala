@@ -3,7 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import com.fasterxml.jackson.databind.node.{ArrayNode, ObjectNode}
 
@@ -96,8 +96,8 @@ object VersionedTable {
     * the file's exact row count. Min/max answers "could this range live
     * here"; the bloom answers the sharper "does this KEY live here",
     * which is what point lookups and CDC merges actually ask.
-    */
-  /** `bytes` is the file's on-disk size, stamped at commit time from one
+    *
+    * `bytes` is the file's on-disk size, stamped at commit time from one
     * directory listing (0 in legacy manifests = unknown). It feeds
     * compaction planning and streaming byte-based admission without a
     * per-file `getFileStatus` RPC storm — the Delta `add.size` idea.
@@ -113,8 +113,8 @@ object VersionedTable {
     * of the CURRENT manifest — a replayed streaming micro-batch sees its
     * own id and skips, which is what makes [[commitMerge]] an exactly-once
     * `foreachBatch` sink.
-    */
-  /** `patches` is the merge-on-read chain (Iceberg v2 delete-file /
+    *
+    * `patches` is the merge-on-read chain (Iceberg v2 delete-file /
     * Delta DV idea at row-update granularity): ordered patch file sets,
     * each one deduped CDC batch (payload + `__vt_del` tombstone flag)
     * that SHADOWS earlier patches and the base per key at read time.
@@ -336,45 +336,37 @@ object VersionedTable {
                          validateExisting: Boolean = true): Long = {
     require(name.matches("[A-Za-z_][A-Za-z0-9_]*"),
       s"VersionedTable.addCheckConstraint: invalid constraint name '$name'")
-    val cur = readMeta(spark, dir, currentVersion(spark, dir).getOrElse(
-      throw new IllegalArgumentException(
-        s"VersionedTable.addCheckConstraint: $dir is not a versioned table")))
-    require(!cur.props.contains(CheckPropPrefix + name),
-      s"VersionedTable.addCheckConstraint: constraint '$name' already exists " +
-        s"(${cur.props(CheckPropPrefix + name)}) — drop it first")
-    val e = org.apache.spark.sql.GraftShim.column(
-      spark.sessionState.sqlParser.parseExpression(exprSql))
-    if (validateExisting) {
-      val bad = read(spark, dir).filter(!coalesce(e, lit(true))).limit(1).count()
-      require(bad == 0L,
-        s"VersionedTable.addCheckConstraint: existing rows violate '$name' " +
-          s"($exprSql) — fix the data first or the constraint is a lie")
-    } else {
-      // analysis-only: unknown columns refuse NOW, not at the next commit
-      read(spark, dir).filter(coalesce(e, lit(true))).queryExecution.analyzed
+    withHead(spark, dir, "addCheckConstraint") { cur =>
+      require(!cur.props.contains(CheckPropPrefix + name),
+        s"VersionedTable.addCheckConstraint: constraint '$name' already exists " +
+          s"(${cur.props(CheckPropPrefix + name)}) — drop it first")
+      val e = org.apache.spark.sql.GraftShim.column(
+        spark.sessionState.sqlParser.parseExpression(exprSql))
+      if (validateExisting) {
+        val bad = read(spark, dir).filter(!coalesce(e, lit(true))).limit(1).count()
+        require(bad == 0L,
+          s"VersionedTable.addCheckConstraint: existing rows violate '$name' " +
+            s"($exprSql) — fix the data first or the constraint is a lie")
+      } else {
+        // analysis-only: unknown columns refuse NOW, not at the next commit
+        read(spark, dir).filter(coalesce(e, lit(true))).queryExecution.analyzed
+      }
+      // a metadata commit: a pending patch chain stays as it is
+      publish(spark, dir, cur, ManifestDelta("addConstraint",
+        props = Some(cur.props + (CheckPropPrefix + name -> exprSql)),
+        patches = cur.patches, mergeKeys = cur.mergeKeys))
     }
-    val next = cur.version + 1
-    publishCommit(spark, dir, Some(cur), next, "addConstraint",
-      cur.schemaDdl, cur.statsCols, cur.txns, cur.bloomCols, cur.bloomFpp,
-      cur.patches, cur.mergeKeys, adds = Seq.empty, removes = Seq.empty,
-      props = Some(cur.props + (CheckPropPrefix + name -> exprSql)))
-    next
   }
 
   /** Drop a CHECK constraint (metadata commit). Loud when absent. */
-  def dropCheckConstraint(spark: SparkSession, dir: String, name: String): Long = {
-    val cur = readMeta(spark, dir, currentVersion(spark, dir).getOrElse(
-      throw new IllegalArgumentException(
-        s"VersionedTable.dropCheckConstraint: $dir is not a versioned table")))
-    require(cur.props.contains(CheckPropPrefix + name),
-      s"VersionedTable.dropCheckConstraint: no constraint named '$name'")
-    val next = cur.version + 1
-    publishCommit(spark, dir, Some(cur), next, "dropConstraint",
-      cur.schemaDdl, cur.statsCols, cur.txns, cur.bloomCols, cur.bloomFpp,
-      cur.patches, cur.mergeKeys, adds = Seq.empty, removes = Seq.empty,
-      props = Some(cur.props - (CheckPropPrefix + name)))
-    next
-  }
+  def dropCheckConstraint(spark: SparkSession, dir: String, name: String): Long =
+    withHead(spark, dir, "dropCheckConstraint") { cur =>
+      require(cur.props.contains(CheckPropPrefix + name),
+        s"VersionedTable.dropCheckConstraint: no constraint named '$name'")
+      publish(spark, dir, cur, ManifestDelta("dropConstraint",
+        props = Some(cur.props - (CheckPropPrefix + name)),
+        patches = cur.patches, mergeKeys = cur.mergeKeys))
+    }
 
   // ------------------------------------------------ metadata-scale knobs
   private def confInt(spark: SparkSession, key: String, dflt: Int): Int =
@@ -668,12 +660,6 @@ object VersionedTable {
     }.toSeq
   }
 
-  /** Parse one manifest's HEADER + change description. O(header + delta):
-    * a `delta`/`restore` manifest never carries the table's file list, and
-    * a `full` one only exists when the list is ≤ [[inlineMaxFiles]].
-    * Legacy manifests (pre-checkpoint format, no `mode`/`numFiles`) read
-    * as `full` with counts derived from the inline list.
-    */
   /** Spec instrumentation: manifest-header reads since the last reset —
     * pins O(log n) claims (timestamp resolution) as measured counts, not
     * prose.
@@ -693,6 +679,12 @@ object VersionedTable {
       "its version number will be retaken; the crashed writer's data " +
       "files are orphans that vacuum reclaims."
 
+  /** Parse one manifest's HEADER + change description. O(header + delta):
+    * a `delta`/`restore` manifest never carries the table's file list, and
+    * a `full` one only exists when the list is ≤ [[inlineMaxFiles]].
+    * Legacy manifests (pre-checkpoint format, no `mode`/`numFiles`) read
+    * as `full` with counts derived from the inline list.
+    */
   private[graft] def readMeta(spark: SparkSession, dir: String, version: Long): ManifestMeta = {
     metaReadCount.incrementAndGet()
     val fs = fsOf(spark, dir)
@@ -842,6 +834,13 @@ object VersionedTable {
     }
   }
 
+  /** The file list of `m`: its inline list when it is a `full` manifest
+    * (a genesis head has none), else [[materializeFiles]].
+    */
+  private def filesOf(spark: SparkSession, dir: String,
+                      m: ManifestMeta): Seq[FileEntry] =
+    if (m.mode == "full") m.inlineFiles else materializeFiles(spark, dir, m.version)
+
   /** The file list of version `v` as a DISTRIBUTED relation (columns:
     * path, rows, stats map, blooms map) — base checkpoint read as parquet,
     * bounded delta chain folded as anti-filter + union. This is what lets
@@ -895,59 +894,100 @@ object VersionedTable {
     if (deltas.size >= checkpointInterval(spark)) writeCheckpoint(spark, dir, v)
   }
 
-  /** Publish one commit: maintain header counts incrementally, write a
-    * `full` manifest while the table is small (self-contained one-file
-    * reads) and an O(delta) manifest + periodic checkpoint above
-    * [[inlineMaxFiles]]. `removes` carries (path, rows) so the row total
-    * updates without materializing anything.
+  // ------------------------------------------------------- commit skeleton
+  // withHead { cur => write the data files; publish(cur, ManifestDelta) }
+
+  /** What one commit changes relative to the head it was derived from.
+    * An `Option` field is `None` to carry the head's value and `Some` to
+    * set it. The patch chain (`patches`, `mergeKeys`) is set by every
+    * commit: empty unless the commit names it — the patch commit grows
+    * it, the constraint commits keep it, every other commit leaves none.
     */
-  private def publishCommit(spark: SparkSession, dir: String,
-                            prev: Option[ManifestMeta], version: Long, op: String,
-                            schemaDdl: String, statsCols: Seq[String],
-                            txns: Map[String, Long], bloomCols: Seq[String],
-                            bloomFpp: Double, patches: Seq[Seq[FileEntry]],
-                            mergeKeys: Seq[String], adds: Seq[FileEntry],
-                            removes: Seq[(String, Long)],
-                            props: Option[Map[String, String]] = None,
-                            dvs: Option[Seq[String]] = None): Unit = {
-    val fs = fsOf(spark, dir)
-    val numFiles = prev.map(_.numFiles).getOrElse(0L) - removes.size + adds.size
-    val totalRows = prev.map(_.totalRows).getOrElse(0L) -
-      removes.map(_._2).sum + adds.map(_.rows).sum
-    // table-level props carry forward by default; only create (or an
-    // explicit override) sets them
-    val effProps = props.getOrElse(prev.map(_.props).getOrElse(Map.empty))
-    // adjusted commit time chains from the PREDECESSOR at commit time
-    // (strictly increasing even under clock ties/skew), so TIMESTAMP AS
-    // OF can binary-search headers instead of replaying the whole chain.
-    // A legacy predecessor (no adjTs) seeds from the wall clock.
+  private final case class ManifestDelta(
+      op: String,
+      adds: Seq[FileEntry] = Seq.empty,
+      removes: Seq[FileEntry] = Seq.empty,
+      txn: Option[(String, Long)] = None,
+      schemaDdl: Option[String] = None,
+      statsCols: Option[Seq[String]] = None,
+      bloomCols: Option[Seq[String]] = None,
+      props: Option[Map[String, String]] = None,
+      dvs: Option[Seq[String]] = None,
+      patches: Seq[Seq[FileEntry]] = Seq.empty,
+      mergeKeys: Seq[String] = Seq.empty)
+
+  /** Run `commit` on the table's current manifest. Refuses a directory
+    * that is not a versioned table; a `txn` the head already contains
+    * returns the head's version without running `commit` (per-app
+    * idempotence, see [[Manifest.txns]]).
+    */
+  private def withHead(spark: SparkSession, dir: String, op: String,
+                       txn: Option[(String, Long)] = None)
+                      (commit: ManifestMeta => Long): Long = {
+    val cur = readMeta(spark, dir, currentVersion(spark, dir).getOrElse(
+      throw new IllegalArgumentException(
+        s"VersionedTable.$op: $dir is not a versioned table")))
+    if (alreadyApplied(cur, txn)) cur.version else commit(cur)
+  }
+
+  /** The head a new table's first commit publishes on: version 0, no
+    * files, the table's declared config.
+    */
+  private def genesis(schemaDdl: String, statsCols: Seq[String],
+                      bloomCols: Seq[String], bloomFpp: Double,
+                      props: Map[String, String]): ManifestMeta =
+    ManifestMeta(0L, "", schemaDdl, statsCols, Map.empty, bloomCols, bloomFpp,
+      Seq.empty, Seq.empty, numFiles = 0L, totalRows = 0L, mode = "full",
+      props = props)
+
+  /** `m` stamped as the commit after `prev`. `ts` is the wall clock;
+    * `adjTs` chains from the predecessor (strictly increasing even under
+    * clock ties/skew, so TIMESTAMP AS OF can binary-search headers; a
+    * legacy predecessor with no adjTs seeds from the wall clock);
+    * `firstStampedV` extends the predecessor's verified stamped run when
+    * it is stamped AND itself verified, otherwise `m` starts the run (a
+    * stamped-but-unverified predecessor could hide a legacy skewed clock
+    * below it — claim only what is provable).
+    */
+  private def stamped(prev: ManifestMeta, m: ManifestMeta): ManifestMeta = {
     val now = System.currentTimeMillis()
-    val adj = math.max(
-      prev.map(_.adjTs).filter(_ > 0L).map(_ + 1L).getOrElse(now), now)
-    val header = ManifestMeta(version, op, schemaDdl, statsCols, txns,
-      bloomCols, bloomFpp, patches, mergeKeys, numFiles, totalRows, "delta",
-      props = effProps, ts = now, adjTs = adj,
-      // deletion vectors carry forward unless the commit changes them
-      dvs = dvs.getOrElse(prev.map(_.dvs).getOrElse(Seq.empty)),
-      // the verified stamped-prefix marker: extend the predecessor's run
-      // when it is stamped AND itself verified; otherwise THIS version
-      // starts the run (a stamped-but-unverified predecessor could hide
-      // a legacy skewed clock below it — claim only what is provable)
-      firstStampedV = prev.filter(p => p.adjTs > 0L && p.firstStampedV > 0L)
-        .map(_.firstStampedV).getOrElse(version))
-    if (numFiles <= inlineMaxFiles(spark)) {
-      val prevFiles = prev.map(p => materializeFiles(spark, dir, p.version))
-        .getOrElse(Seq.empty)
-      val rm = removes.map(_._1).toSet
-      val full = prevFiles.filterNot(f => rm(f.path)) ++ adds
-      writeManifestJson(fs, dir, header.copy(mode = "full", inlineFiles = full))
+    m.copy(ts = now,
+      adjTs = math.max(if (prev.adjTs > 0L) prev.adjTs + 1L else now, now),
+      firstStampedV =
+        if (prev.adjTs > 0L && prev.firstStampedV > 0L) prev.firstStampedV
+        else m.version)
+  }
+
+  /** Publish `d` as the version after `prev` and return that version.
+    * Header counts update incrementally; the manifest is `full` while the
+    * table is small (self-contained one-file reads) and an O(delta)
+    * manifest plus a periodic checkpoint above [[inlineMaxFiles]]. The
+    * DV auto-materialize and auto-compaction hooks run after it.
+    */
+  private def publish(spark: SparkSession, dir: String, prev: ManifestMeta,
+                      d: ManifestDelta): Long = {
+    val version = prev.version + 1
+    val header = stamped(prev, ManifestMeta(version, d.op,
+      d.schemaDdl.getOrElse(prev.schemaDdl), d.statsCols.getOrElse(prev.statsCols),
+      txnsAfter(prev, d.txn), d.bloomCols.getOrElse(prev.bloomCols), prev.bloomFpp,
+      d.patches, d.mergeKeys,
+      numFiles = prev.numFiles - d.removes.size + d.adds.size,
+      totalRows = prev.totalRows - d.removes.map(_.rows).sum + d.adds.map(_.rows).sum,
+      mode = "delta", props = d.props.getOrElse(prev.props),
+      dvs = d.dvs.getOrElse(prev.dvs)))
+    val fs = fsOf(spark, dir)
+    if (header.numFiles <= inlineMaxFiles(spark)) {
+      val rm = d.removes.map(_.path).toSet
+      writeManifestJson(fs, dir, header.copy(mode = "full",
+        inlineFiles = filesOf(spark, dir, prev).filterNot(f => rm(f.path)) ++ d.adds))
     } else {
       writeManifestJson(fs, dir, header.copy(
-        adds = adds, removes = removes.map(_._1)))
-      maybeCheckpoint(spark, dir, version, adds.size + removes.size)
+        adds = d.adds, removes = d.removes.map(_.path)))
+      maybeCheckpoint(spark, dir, version, d.adds.size + d.removes.size)
     }
     maybeAutoMaterializeDvs(spark, dir, header)
     maybeAutoCompact(spark, dir, header)
+    version
   }
 
   /** DV AUTO-MATERIALIZE: tables created with
@@ -1046,10 +1086,7 @@ object VersionedTable {
     */
   def readManifest(spark: SparkSession, dir: String, version: Long): Manifest = {
     val m = readMeta(spark, dir, version)
-    val files =
-      if (m.mode == "full") m.inlineFiles
-      else materializeFiles(spark, dir, version)
-    Manifest(m.version, m.op, m.schemaDdl, m.statsCols, files, m.txns,
+    Manifest(m.version, m.op, m.schemaDdl, m.statsCols, filesOf(spark, dir, m), m.txns,
       m.bloomCols, m.bloomFpp, m.patches, m.mergeKeys, m.props, m.dvs)
   }
 
@@ -1187,81 +1224,37 @@ object VersionedTable {
                       dvs: Seq[String]): DataFrame =
     spark.read.schema(dvSchema).parquet(dvs.map(p => dataPath(dir, p)): _*)
 
+  /** The rows of `paths` that `dvs` leave live, with their positional
+    * key. The anti-join's build side is the DELETED-ROW set (small by
+    * construction until materialization), so Spark broadcasts it and the
+    * fold costs a hash probe per row.
+    */
+  private def liveRows(spark: SparkSession, dir: String, schema: StructType,
+                       props: Map[String, String], paths: Seq[String],
+                       dvs: Seq[String]): DataFrame = {
+    val base = baseReadWithPos(spark, dir, schema, props, paths)
+    if (dvs.isEmpty) base
+    else base.join(dvTable(spark, dir, dvs), Seq("__vt_file", "__vt_pos"),
+      "left_anti")
+  }
+
   /** The live rows of `paths` under the table's DV set: base scan minus
-    * deleted positions. The anti-join's build side is the DELETED-ROW
-    * set (small by construction until materialization), so Spark
-    * broadcasts it and the fold costs a hash probe per row.
+    * deleted positions.
     */
   private def dvFoldedRead(spark: SparkSession, dir: String,
                            schema: StructType, props: Map[String, String],
-                           paths: Seq[String], dvs: Seq[String]): DataFrame = {
-    if (paths.isEmpty) return emptyDF(spark, schema)
-    val base = baseReadWithPos(spark, dir, schema, props, paths)
-    base.join(dvTable(spark, dir, dvs), Seq("__vt_file", "__vt_pos"),
-        "left_anti")
+                           paths: Seq[String], dvs: Seq[String]): DataFrame =
+    if (paths.isEmpty) emptyDF(spark, schema)
+    else liveRows(spark, dir, schema, props, paths, dvs)
       .select(schema.fieldNames.map(col).toIndexedSeq: _*)
-  }
 
   /** `DELETE WHERE` as a deletion-vector commit: no base byte is read
     * beyond the pruned candidates, none is rewritten. Returns the new
     * version (the current one when nothing matched).
     */
   def commitDeleteDv(spark: SparkSession, dir: String, cond: Column,
-                     txn: Option[(String, Long)] = None): Long = {
-    val cur = readMeta(spark, dir, currentVersion(spark, dir).getOrElse(
-      throw new IllegalArgumentException(
-        s"VersionedTable.commitDeleteDv: $dir is not a versioned table")))
-    if (alreadyApplied(cur, txn)) return cur.version
-    val schema = StructType.fromDDL(cur.schemaDdl)
-    val ranges = org.apache.spark.sql.GraftShim.mineRanges(cond)
-    val inSets = org.apache.spark.sql.GraftShim.mineInSets(cond)
-    val candidates: Seq[FileEntry] =
-      if (ranges.isEmpty && inSets.isEmpty)
-        materializeFiles(spark, dir, cur.version)
-      else pruneEntries(spark, dir, ranges, inSets, Some(cur.version))._1
-    if (candidates.isEmpty && cur.patches.isEmpty) return cur.version
-    // MoR composition: a pending key-based patch chain has no physical
-    // positions to address — fold it first (the same CoW fold SQL
-    // OPTIMIZE runs, rewriting only chain-touched files), then record
-    // positions against the clean bases. Two commits, both in the log.
-    if (cur.patches.nonEmpty) {
-      compactPatches(spark, dir)
-      return commitDeleteDv(spark, dir, cond, txn)
-    }
-    requireDvAddressable(candidates, "commitDeleteDv")
-    val next = cur.version + 1
-    // positions of rows that match AND are still live under existing DVs
-    // (double-recording a position would be harmless but unbounded)
-    val base = baseReadWithPos(spark, dir, schema, cur.props,
-      candidates.map(f => dataPath(dir, f.path)))
-    val live =
-      if (cur.dvs.isEmpty) base
-      else base.join(dvTable(spark, dir, cur.dvs),
-        Seq("__vt_file", "__vt_pos"), "left_anti")
-    val pos = live.filter(coalesce(cond, lit(false)))
-      .select("__vt_file", "__vt_pos")
-    val nonce = java.util.UUID.randomUUID().toString.take(8)
-    val rel = s"data/c$next-$nonce"
-    val outDir = new Path(dir, rel)
-    pos.write.mode("overwrite").parquet(outDir.toString)
-    val fs = fsOf(spark, dir)
-    val written = fs.listStatus(outDir).toSeq.map(_.getPath.getName)
-      .filter(n => n.endsWith(".parquet") && !n.startsWith("."))
-      .map(n => s"$rel/$n")
-    // emptiness from the footers just written (driver metadata reads over
-    // the already-listed files) — not a Spark job re-reading the output
-    val dvRows = written.map(p => FooterStats.rowCount(
-      new Path(dir, p), spark.sparkContext.hadoopConfiguration)).sum
-    if (dvRows == 0L) {
-      fs.delete(outDir, true)
-      return cur.version
-    }
-    publishCommit(spark, dir, Some(cur), next, "delete_dv", cur.schemaDdl,
-      cur.statsCols, txnsAfter(cur, txn), cur.bloomCols, cur.bloomFpp,
-      Seq.empty, Seq.empty, adds = Seq.empty, removes = Seq.empty,
-      dvs = Some(cur.dvs ++ written))
-    next
-  }
+                     txn: Option[(String, Long)] = None): Long =
+    dvCommit(spark, dir, cond, None, txn)
 
   /** `UPDATE` as a deletion-vector commit (Delta's DV-enabled UPDATE):
     * the matched rows' positions land in a DV sidecar and their UPDATED
@@ -1276,103 +1269,100 @@ object VersionedTable {
     */
   def commitUpdateDv(spark: SparkSession, dir: String, cond: Column,
                      sets: Seq[(String, Column)],
-                     txn: Option[(String, Long)] = None): Long = {
-    val cur = readMeta(spark, dir, currentVersion(spark, dir).getOrElse(
-      throw new IllegalArgumentException(
-        s"VersionedTable.commitUpdateDv: $dir is not a versioned table")))
-    if (alreadyApplied(cur, txn)) return cur.version
-    val schema = StructType.fromDDL(cur.schemaDdl)
-    val byName = sets.toMap
-    sets.foreach { case (c, _) => require(schema.fieldNames.contains(c),
-      s"VersionedTable.commitUpdateDv: SET column $c not in table schema") }
-    val ranges = org.apache.spark.sql.GraftShim.mineRanges(cond)
-    val inSets = org.apache.spark.sql.GraftShim.mineInSets(cond)
-    val candidates: Seq[FileEntry] =
-      if (ranges.isEmpty && inSets.isEmpty)
-        materializeFiles(spark, dir, cur.version)
-      else pruneEntries(spark, dir, ranges, inSets, Some(cur.version))._1
-    if (candidates.isEmpty && cur.patches.isEmpty) return cur.version
-    // MoR composition: fold the key-based chain first (positions only
-    // exist in physical files; a chain-shadowed row's DV bit would be
-    // meaningless), then update positionally on the clean bases.
-    if (cur.patches.nonEmpty) {
-      compactPatches(spark, dir)
-      return commitUpdateDv(spark, dir, cond, sets, txn)
+                     txn: Option[(String, Long)] = None): Long =
+    dvCommit(spark, dir, cond, Some(sets), txn)
+
+  /** The positional core of [[commitDeleteDv]] (`sets` None) and
+    * [[commitUpdateDv]]: record the positions of the live candidate rows
+    * matching `cond` in a DV sidecar (a position already deleted is not
+    * recorded again), append the UPDATE's images, publish one commit.
+    */
+  private def dvCommit(spark: SparkSession, dir: String, cond: Column,
+                       sets: Option[Seq[(String, Column)]],
+                       txn: Option[(String, Long)]): Long = {
+    val label = if (sets.isEmpty) "commitDeleteDv" else "commitUpdateDv"
+    withHead(spark, dir, label, txn) { cur =>
+      val schema = StructType.fromDDL(cur.schemaDdl)
+      val image = sets.map(setImage(schema, _, label))
+      val files = candidates(spark, dir, cur, cond)
+      if (files.isEmpty && cur.patches.isEmpty) cur.version
+      else if (cur.patches.nonEmpty) {
+        // MoR composition: a pending key-based patch chain has no physical
+        // positions to address (a chain-shadowed row's DV bit would be
+        // meaningless) — fold it first (the same CoW fold SQL OPTIMIZE
+        // runs, rewriting only chain-touched files), then record positions
+        // against the clean bases. Two commits, both in the log.
+        compactPatches(spark, dir)
+        dvCommit(spark, dir, cond, sets, txn)
+      } else {
+        requireDvAddressable(files, label)
+        val paths = files.map(f => dataPath(dir, f.path))
+        val matched = liveRows(spark, dir, schema, cur.props, paths, cur.dvs)
+          .filter(coalesce(cond, lit(false)))
+        // determinism guard (checked on the RESOLVED plan, where rand() is
+        // a Nondeterministic node — the SQL front door hands us unresolved
+        // trees): a nondeterministic predicate picks an arbitrary row
+        // subset and a nondeterministic SET writes an unreproducible image
+        // — both refuse loudly, matching Delta. Note the image pass below
+        // derives its rows from the RECORDED positions (not by
+        // re-evaluating the predicate), so Catalyst-deterministic-but-per-
+        // execution-folded expressions (current_timestamp()/now()/
+        // current_date(), each frozen to a fresh literal by
+        // ComputeCurrentTime per execution) cannot desynchronize the two
+        // passes — the DV and the appended images agree by construction.
+        image.foreach(img => require(!matched.select(img: _*).queryExecution
+            .analyzed.exists(_.expressions.exists(e => e.exists(!_.deterministic))),
+          "VersionedTable.commitUpdateDv: the UPDATE condition or a SET " +
+            "expression is NONDETERMINISTIC — the positional commit records " +
+            "positions then appends images, and a random predicate/SET has " +
+            "no reproducible meaning across them. Materialize the randomness " +
+            "into a column first, or disable deletion vectors to take the " +
+            "single-evaluation copy-on-write path"))
+        val sidecar = writeSidecar(matched.select("__vt_file", "__vt_pos"), dir,
+          freshRel(cur.version + 1) + (if (sets.isEmpty) "" else "-dv"))
+        if (sidecar.rows(spark) == 0L) {
+          fsOf(spark, dir).delete(new Path(dir, sidecar.rel), true)
+          cur.version
+        } else {
+          // the image rows derive from the positions JUST RECORDED (semi-
+          // join of the immutable base read against the written sidecar on
+          // (__vt_file, __vt_pos) — row_index is a pure function of the
+          // file bytes), NOT from re-evaluating the predicate: the two
+          // passes agree by construction even when the predicate folds
+          // per-execution literals (current_timestamp() et al). Only the
+          // SET expressions evaluate here, exactly once — CoW
+          // single-evaluation semantics.
+          val adds = image.fold(Seq.empty[FileEntry]) { img =>
+            writeCommitFiles(baseReadWithPos(spark, dir, schema, cur.props, paths)
+              .join(spark.read.schema(dvSchema).parquet(new Path(dir, sidecar.rel).toString),
+                Seq("__vt_file", "__vt_pos"), "left_semi")
+              .select(img: _*), dir, cur)
+          }
+          publish(spark, dir, cur, ManifestDelta(
+            if (sets.isEmpty) "delete_dv" else "update_dv", adds = adds,
+            txn = txn, dvs = Some(cur.dvs ++ sidecar.paths)))
+        }
+      }
     }
-    requireDvAddressable(candidates, "commitUpdateDv")
-    val next = cur.version + 1
-    val base = baseReadWithPos(spark, dir, schema, cur.props,
-      candidates.map(f => dataPath(dir, f.path)))
-    val live =
-      if (cur.dvs.isEmpty) base
-      else base.join(dvTable(spark, dir, cur.dvs),
-        Seq("__vt_file", "__vt_pos"), "left_anti")
-    val matched = live.filter(coalesce(cond, lit(false)))
-    // determinism guard (checked on the RESOLVED plan, where rand() is a
-    // Nondeterministic node — the SQL front door hands us unresolved
-    // trees): a nondeterministic predicate picks an arbitrary row subset
-    // and a nondeterministic SET writes an unreproducible image — both
-    // refuse loudly, matching Delta. Note the image pass below derives
-    // its rows from the RECORDED positions (not by re-evaluating the
-    // predicate), so Catalyst-deterministic-but-per-execution-folded
-    // expressions (current_timestamp()/now()/current_date(), each frozen
-    // to a fresh literal by ComputeCurrentTime per execution) cannot
-    // desynchronize the two passes — the DV and the appended images
-    // agree by construction.
-    val updatedPlan = matched.select(schema.fields.map { f =>
+  }
+
+  /** An UPDATE's output columns: each SET column takes its value cast to
+    * the column's type (where `matched` holds, when given); every other
+    * column passes through.
+    */
+  private def setImage(schema: StructType, sets: Seq[(String, Column)],
+                       op: String, matched: Option[Column] = None): Seq[Column] = {
+    sets.foreach { case (c, _) => require(schema.fieldNames.contains(c),
+      s"VersionedTable.$op: SET column $c not in table schema") }
+    val byName = sets.toMap
+    schema.fields.toIndexedSeq.map { f =>
       byName.get(f.name) match {
-        case Some(v) => v.cast(f.dataType).as(f.name)
+        case Some(v) =>
+          val img = v.cast(f.dataType)
+          matched.fold(img)(when(_, img).otherwise(col(f.name))).as(f.name)
         case None => col(f.name)
       }
-    }.toIndexedSeq: _*)
-    require(!updatedPlan.queryExecution.analyzed.exists(
-        _.expressions.exists(e => e.exists(!_.deterministic))),
-      "VersionedTable.commitUpdateDv: the UPDATE condition or a SET " +
-        "expression is NONDETERMINISTIC — the positional commit records " +
-        "positions then appends images, and a random predicate/SET has " +
-        "no reproducible meaning across them. Materialize the randomness " +
-        "into a column first, or disable deletion vectors to take the " +
-        "single-evaluation copy-on-write path")
-    val nonce = java.util.UUID.randomUUID().toString.take(8)
-    val rel = s"data/c$next-$nonce-dv"
-    val outDir = new Path(dir, rel)
-    matched.select("__vt_file", "__vt_pos")
-      .write.mode("overwrite").parquet(outDir.toString)
-    val fs = fsOf(spark, dir)
-    val writtenDv = fs.listStatus(outDir).toSeq.map(_.getPath.getName)
-      .filter(n => n.endsWith(".parquet") && !n.startsWith("."))
-      .map(n => s"$rel/$n")
-    // emptiness from the footers just written (driver metadata reads over
-    // the already-listed files) — not a Spark job re-reading the output
-    val dvRows = writtenDv.map(p => FooterStats.rowCount(
-      new Path(dir, p), spark.sparkContext.hadoopConfiguration)).sum
-    if (dvRows == 0L) {
-      fs.delete(outDir, true)
-      return cur.version
     }
-    // the image rows derive from the positions JUST RECORDED (semi-join
-    // of the immutable base read against the written DV sidecar on
-    // (__vt_file, __vt_pos) — row_index is a pure function of the file
-    // bytes), NOT from re-evaluating the predicate: the two passes agree
-    // by construction even when the predicate folds per-execution
-    // literals (current_timestamp() et al). Only the SET expressions
-    // evaluate here, exactly once — CoW single-evaluation semantics.
-    val updated = base
-      .join(spark.read.schema(dvSchema).parquet(outDir.toString),
-        Seq("__vt_file", "__vt_pos"), "left_semi")
-      .select(schema.fields.map { f =>
-        byName.get(f.name) match {
-          case Some(v) => v.cast(f.dataType).as(f.name)
-          case None => col(f.name)
-        }
-      }.toIndexedSeq: _*)
-    val newFiles = writeCommitFiles(updated, dir, next, cur.statsCols,
-      cur.bloomCols, cur.bloomFpp, cur.props)
-    publishCommit(spark, dir, Some(cur), next, "update_dv", cur.schemaDdl,
-      cur.statsCols, txnsAfter(cur, txn), cur.bloomCols, cur.bloomFpp,
-      Seq.empty, Seq.empty, adds = newFiles, removes = Seq.empty,
-      dvs = Some(cur.dvs ++ writtenDv))
-    next
   }
 
   /** Fold every pending deletion vector into clean base files: files
@@ -1381,79 +1371,96 @@ object VersionedTable {
     * the OPTIMIZE half of the DV contract. Returns the new version (the
     * current one when no DVs are pending).
     */
-  def materializeDvs(spark: SparkSession, dir: String): Long = {
-    val cur = readMeta(spark, dir, currentVersion(spark, dir).getOrElse(
-      throw new IllegalArgumentException(
-        s"VersionedTable.materializeDvs: $dir is not a versioned table")))
-    if (cur.dvs.isEmpty) return cur.version
-    val schema = StructType.fromDDL(cur.schemaDdl)
-    // one row per dv'd FILE — driver-small by the same argument as the
-    // manifest's own file list
-    val affected = dvTable(spark, dir, cur.dvs)
-      .select("__vt_file").distinct().collect().map(_.getString(0)).toSet
-    val files = materializeFiles(spark, dir, cur.version)
-    val (rewrite, _) = files.partition(f => affected(f.path))
-    val next = cur.version + 1
-    val folded = dvFoldedRead(spark, dir, schema, cur.props,
-      rewrite.map(f => dataPath(dir, f.path)), cur.dvs)
-    val newFiles = writeCommitFiles(folded, dir, next, cur.statsCols,
-      cur.bloomCols, cur.bloomFpp, cur.props)
-    publishCommit(spark, dir, Some(cur), next, "dv_materialize",
-      cur.schemaDdl, cur.statsCols, cur.txns, cur.bloomCols, cur.bloomFpp,
-      Seq.empty, Seq.empty, adds = newFiles,
-      removes = rewrite.map(f => (f.path, f.rows)), dvs = Some(Seq.empty))
-    next
-  }
+  def materializeDvs(spark: SparkSession, dir: String): Long =
+    withHead(spark, dir, "materializeDvs") { cur =>
+      if (cur.dvs.isEmpty) cur.version
+      else {
+        // one row per dv'd FILE — driver-small by the same argument as the
+        // manifest's own file list
+        val affected = dvTable(spark, dir, cur.dvs)
+          .select("__vt_file").distinct().collect().map(_.getString(0)).toSet
+        val rewrite = filesOf(spark, dir, cur).filter(f => affected(f.path))
+        val folded = dvFoldedRead(spark, dir, StructType.fromDDL(cur.schemaDdl),
+          cur.props, rewrite.map(f => dataPath(dir, f.path)), cur.dvs)
+        publish(spark, dir, cur, ManifestDelta("dv_materialize",
+          adds = writeCommitFiles(folded, dir, cur), removes = rewrite,
+          dvs = Some(Seq.empty)))
+      }
+    }
 
   // ------------------------------------------------------------ data writes
 
-  /** Write `df` as the files of one commit attempt and return the manifest
-    * entries (paths relative to the table dir, per-file stats for
-    * `statsCols`). Stats come from the PARQUET FOOTERS the write just
-    * produced — zero extra Spark jobs, no re-read of the commit's output
-    * (at 100 TB this halves commit cost). Values convert to Catalyst
-    * internal form and render through the same `Cast(x, STRING)` the
-    * scan-side aggregation used, so the manifest encoding is identical
-    * byte-for-byte. Any file×column whose footer stats are unusable
-    * (float/double — NaN ordering differs between parquet and Spark —
-    * INT96 timestamps, dropped/absent stats) falls the whole commit back
-    * to the one-aggregation scan path; `spark.graft.vtable.footerStats=
-    * false` forces that path.
-    */
   private def fileNameOf(uri: String): String =
     // plain suffix split — input_file_name() URI-escapes unevenly across
     // filesystems, and the part-file NAME never contains a slash
     uri.substring(uri.lastIndexOf('/') + 1)
 
-  private def writeCommitFiles(df0: DataFrame, dir: String, version: Long,
-                               statsCols: Seq[String],
-                               bloomCols: Seq[String] = Seq.empty,
-                               bloomFpp: Double = 0.01,
-                               props: Map[String, String] = Map.empty): Seq[FileEntry] = {
+  /** A fresh commit-attempt directory for `version`, relative to the
+    * table dir.
+    */
+  private def freshRel(version: Long): String =
+    s"data/c$version-${java.util.UUID.randomUUID().toString.take(8)}"
+
+  /** The parquet part files one write put under `dir/rel`, by name. */
+  private final case class Sidecar(rel: String, parts: Seq[FileStatus]) {
+    def paths: Seq[String] = parts.map(st => s"$rel/${st.getPath.getName}")
+
+    /** Rows written, from the footers just written (driver metadata
+      * reads over the listed files) — not a Spark job re-reading them.
+      */
+    def rows(spark: SparkSession): Long = FooterStats.rowCounts(spark, parts).sum
+  }
+
+  /** Write `df` as parquet under `dir/rel` and list what landed. */
+  private def writeSidecar(df: DataFrame, dir: String, rel: String): Sidecar = {
+    val out = new Path(dir, rel)
+    df.write.mode("overwrite").parquet(out.toString)
+    Sidecar(rel, fsOf(df.sparkSession, dir).listStatus(out).toSeq
+      .filter { st =>
+        val n = st.getPath.getName
+        st.isFile && n.endsWith(".parquet") && !n.startsWith(".")
+      }.sortBy(_.getPath.getName))
+  }
+
+  /** Write `df` as the files of the commit after `head` and return the
+    * manifest entries (paths relative to the table dir, per-file stats for
+    * `head.statsCols`, bloom sidecars for `head.bloomCols`). Stats come
+    * from the PARQUET FOOTERS the write just produced — zero extra Spark
+    * jobs, no re-read of the commit's output (at 100 TB this halves commit
+    * cost). Values convert to Catalyst internal form and render through
+    * the same `Cast(x, STRING)` the scan-side aggregation used, so the
+    * manifest encoding is identical byte-for-byte. Any file×column whose
+    * footer stats are unusable (float/double — NaN ordering differs
+    * between parquet and Spark — INT96 timestamps, dropped/absent stats)
+    * falls the whole commit back to the one-aggregation scan path;
+    * `spark.graft.vtable.footerStats=false` forces that path.
+    */
+  private def writeCommitFiles(df0: DataFrame, dir: String,
+                               head: ManifestMeta): Seq[FileEntry] = {
     // files always carry PHYSICAL column names — stats/bloom keys follow
-    val df = toPhysical(df0, props)
+    val df = toPhysical(df0, head.props)
     val spark = df.sparkSession
-    val nonce = java.util.UUID.randomUUID().toString.take(8)
-    val rel = s"data/c$version-$nonce"
+    val statsCols = head.statsCols
+    val written = writeSidecar(df, dir, freshRel(head.version + 1))
+    val rel = written.rel
     val commitDir = new Path(dir, rel)
-    df.write.mode("overwrite").parquet(commitDir.toString)
     val footerOn = spark.conf.getOption("spark.graft.vtable.footerStats")
       .forall(_.toBoolean)
     val lifted: Option[Seq[(String, Long, Map[String, ColStat])]] =
       if (!footerOn) None
-      else FooterStats.lift(spark, commitDir, statsCols, df.schema)
+      else FooterStats.lift(spark, written.parts, statsCols, df.schema)
     val perFileData: Seq[(String, Long, Map[String, ColStat])] =
       lifted.getOrElse {
         // scan fallback: one narrow aggregation over the just-written data
-        val written = spark.read.schema(df.schema).parquet(commitDir.toString)
+        val scanned = spark.read.schema(df.schema).parquet(commitDir.toString)
         val statAggs = statsCols.flatMap { c =>
           val q = col(s"`$c`")
           Seq(min(q).cast("string").as(s"__min_$c"),
             max(q).cast("string").as(s"__max_$c"),
             sum(q.isNull.cast("long")).as(s"__nul_$c"))
         }
-        val types = statsCols.map(c => c -> written.schema(c).dataType.sql).toMap
-        written.groupBy(input_file_name().as("__file"))
+        val types = statsCols.map(c => c -> scanned.schema(c).dataType.sql).toMap
+        scanned.groupBy(input_file_name().as("__file"))
           .agg(count(lit(1)).as("__rows"), statAggs: _*)
           .collect().toSeq.map { r =>
             val stats = statsCols.map { c =>
@@ -1464,17 +1471,13 @@ object VersionedTable {
           }
       }
     val blooms =
-      if (bloomCols.isEmpty) Map.empty[String, Map[String, String]]
+      if (head.bloomCols.isEmpty) Map.empty[String, Map[String, String]]
       else writeBloomSidecars(
         spark.read.schema(df.schema).parquet(commitDir.toString),
-        dir, rel, bloomCols, bloomFpp)
-    // one directory listing stamps every entry's byte size — O(1) RPCs
-    // per commit, vs the per-file getFileStatus storm it replaces
-    val lens: Map[String, Long] = {
-      val fs = commitDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      fs.listStatus(commitDir).iterator
-        .map(s => s.getPath.getName -> s.getLen).toMap
-    }
+        dir, rel, head.bloomCols, head.bloomFpp)
+    // the write's own listing stamps every entry's byte size — no
+    // per-file getFileStatus storm
+    val lens = written.parts.map(st => st.getPath.getName -> st.getLen).toMap
     perFileData.map { case (name, rows, stats) =>
       FileEntry(s"$rel/$name", rows, stats, blooms.getOrElse(name, Map.empty),
         lens.getOrElse(name, 0L))
@@ -1594,14 +1597,11 @@ object VersionedTable {
         !props.keys.exists(_.startsWith(ColmapPrefix)),
       "VersionedTable.create: graft.colmap.*/graft.coldead are managed by " +
         "rename/drop column commits")
-    val files = writeCommitFiles(withCheckGuards(df, props, "create"),
-      dir, 1L, statsCols, bloomCols, bloomFpp, props)
-    publishCommit(spark, dir, None, 1L, "create", df.schema.toDDL, statsCols,
-      txn.map(t => Map(t)).getOrElse(Map.empty), bloomCols, bloomFpp,
-      Seq.empty, Seq.empty, adds = files, removes = Seq.empty,
-      props = Some(props +
-        (TableIdProp -> java.util.UUID.randomUUID().toString)))
-    1L
+    val head = genesis(df.schema.toDDL, statsCols, bloomCols, bloomFpp, props)
+    publish(spark, dir, head, ManifestDelta("create",
+      adds = writeCommitFiles(withCheckGuards(df, props, "create"), dir, head),
+      txn = txn,
+      props = Some(props + (TableIdProp -> java.util.UUID.randomUUID().toString))))
   }
 
   /** Zero-copy SHALLOW CLONE (the Delta `SHALLOW CLONE` idea): create a
@@ -1647,11 +1647,9 @@ object VersionedTable {
     val props = src.props - TableIdProp +
       (TableIdProp -> java.util.UUID.randomUUID().toString) +
       ("graft.cloneOf" -> s"$srcDir@v$srcV")
-    publishCommit(spark, destDir, None, 1L, "clone", src.schemaDdl,
-      src.statsCols, Map.empty, src.bloomCols, src.bloomFpp,
-      Seq.empty, Seq.empty, adds = abs, removes = Seq.empty,
-      props = Some(props))
-    1L
+    publish(spark, destDir,
+      genesis(src.schemaDdl, src.statsCols, src.bloomCols, src.bloomFpp, props),
+      ManifestDelta("clone", adds = abs))
   }
 
   /** Replace the table's ENTIRE content in one commit (SQL `INSERT
@@ -1665,26 +1663,16 @@ object VersionedTable {
   def commitOverwrite(df: DataFrame, dir: String,
                       txn: Option[(String, Long)] = None): Long = {
     val spark = df.sparkSession
-    val cur = readMeta(spark, dir, currentVersion(spark, dir).getOrElse(
-      throw new IllegalArgumentException(
-        s"VersionedTable.commitOverwrite: $dir is not a versioned table — create it first")))
-    if (alreadyApplied(cur, txn)) return cur.version
-    requireNoPatches(cur.patches, "commitOverwrite")
-    val expected = StructType.fromDDL(cur.schemaDdl)
-    require(df.schema.fields.map(f => (f.name, f.dataType)).sameElements(
-        expected.fields.map(f => (f.name, f.dataType))),
-      s"VersionedTable.commitOverwrite: schema mismatch — table has " +
-        s"${expected.toDDL}, overwrite carries ${df.schema.toDDL}")
-    val next = cur.version + 1
-    val files = writeCommitFiles(withCheckGuards(df, cur.props, "commitOverwrite"),
-      dir, next, cur.statsCols, cur.bloomCols, cur.bloomFpp, cur.props)
-    publishCommit(spark, dir, Some(cur), next, "overwrite", cur.schemaDdl,
-      cur.statsCols, txnsAfter(cur, txn), cur.bloomCols, cur.bloomFpp,
-      Seq.empty, Seq.empty, adds = files,
-      removes = materializeFiles(spark, dir, cur.version).map(f => (f.path, f.rows)),
-      // a whole-table replace retires every DV with the files it addressed
-      dvs = Some(Seq.empty))
-    next
+    withHead(spark, dir, "commitOverwrite", txn) { cur =>
+      requireNoPatches(cur.patches, "commitOverwrite")
+      requireSameSchema(df, cur, "commitOverwrite", "overwrite")
+      val files = writeCommitFiles(
+        withCheckGuards(df, cur.props, "commitOverwrite"), dir, cur)
+      publish(spark, dir, cur, ManifestDelta("overwrite", adds = files,
+        removes = filesOf(spark, dir, cur), txn = txn,
+        // a whole-table replace retires every DV with the files it addressed
+        dvs = Some(Seq.empty)))
+    }
   }
 
   /** Predicate-scoped overwrite (the Delta `replaceWhere` idea): replace
@@ -1711,47 +1699,32 @@ object VersionedTable {
   def commitReplaceWhere(df: DataFrame, dir: String, cond: Column,
                          txn: Option[(String, Long)] = None): Long = {
     val spark = df.sparkSession
-    val cur = readMeta(spark, dir, currentVersion(spark, dir).getOrElse(
-      throw new IllegalArgumentException(
-        s"VersionedTable.commitReplaceWhere: $dir is not a versioned table — create it first")))
-    if (alreadyApplied(cur, txn)) return cur.version
-    requireNoPatches(cur.patches, "commitReplaceWhere")
-    requireNoDvs(cur.dvs, "commitReplaceWhere")
-    val schema = StructType.fromDDL(cur.schemaDdl)
-    require(df.schema.fields.map(f => (f.name, f.dataType)).sameElements(
-        schema.fields.map(f => (f.name, f.dataType))),
-      s"VersionedTable.commitReplaceWhere: schema mismatch — table has " +
-        s"${schema.toDDL}, replacement carries ${df.schema.toDDL}")
-    val ranges = org.apache.spark.sql.GraftShim.mineRanges(cond)
-    val inSets = org.apache.spark.sql.GraftShim.mineInSets(cond)
-    val candidates: Seq[FileEntry] =
-      if (ranges.isEmpty && inSets.isEmpty)
-        materializeFiles(spark, dir, cur.version)
-      else pruneEntries(spark, dir, ranges, inSets, Some(cur.version))._1
-    val survivors =
-      if (candidates.isEmpty) emptyDF(spark, schema)
-      else readDataFiles(spark, schema, cur.props,
-          candidates.map(f => dataPath(dir, f.path)))
-        .filter(!coalesce(cond, lit(false)))
-    // containment guard on the NEW rows only — applied BEFORE the union so
-    // survivor rows (which legitimately fail `cond`) never see it
-    val c0 = schema.fieldNames.head
-    val dt = schema.head.dataType
-    val checkedNew = withCheckGuards(df, cur.props, "commitReplaceWhere")
-    val guardedNew = checkedNew.withColumn(c0,
-      when(!coalesce(cond, lit(false)),
-        raise_error(lit("VersionedTable.commitReplaceWhere: a replacement " +
-          "row does not satisfy the REPLACE WHERE predicate — the commit " +
-          "aborted; no version was published")).cast(dt))
-        .otherwise(col(c0)))
-    val next = cur.version + 1
-    val files = writeCommitFiles(survivors.unionByName(guardedNew), dir, next,
-      cur.statsCols, cur.bloomCols, cur.bloomFpp, cur.props)
-    publishCommit(spark, dir, Some(cur), next, "replace_where", cur.schemaDdl,
-      cur.statsCols, txnsAfter(cur, txn), cur.bloomCols, cur.bloomFpp,
-      Seq.empty, Seq.empty, adds = files,
-      removes = candidates.map(f => (f.path, f.rows)))
-    next
+    withHead(spark, dir, "commitReplaceWhere", txn) { cur =>
+      requireNoPatches(cur.patches, "commitReplaceWhere")
+      requireNoDvs(cur.dvs, "commitReplaceWhere")
+      requireSameSchema(df, cur, "commitReplaceWhere", "replacement")
+      val schema = StructType.fromDDL(cur.schemaDdl)
+      val files = candidates(spark, dir, cur, cond)
+      val survivors =
+        if (files.isEmpty) emptyDF(spark, schema)
+        else readDataFiles(spark, schema, cur.props,
+            files.map(f => dataPath(dir, f.path)))
+          .filter(!coalesce(cond, lit(false)))
+      // containment guard on the NEW rows only — applied BEFORE the union
+      // so survivor rows (which legitimately fail `cond`) never see it
+      val c0 = schema.fieldNames.head
+      val dt = schema.head.dataType
+      val checkedNew = withCheckGuards(df, cur.props, "commitReplaceWhere")
+      val guardedNew = checkedNew.withColumn(c0,
+        when(!coalesce(cond, lit(false)),
+          raise_error(lit("VersionedTable.commitReplaceWhere: a replacement " +
+            "row does not satisfy the REPLACE WHERE predicate — the commit " +
+            "aborted; no version was published")).cast(dt))
+          .otherwise(col(c0)))
+      publish(spark, dir, cur, ManifestDelta("replace_where",
+        adds = writeCommitFiles(survivors.unionByName(guardedNew), dir, cur),
+        removes = files, txn = txn))
+    }
   }
 
   /** Append-only commit: new files plus every current file, by reference —
@@ -1763,20 +1736,23 @@ object VersionedTable {
   def commitAppend(df: DataFrame, dir: String,
                    txn: Option[(String, Long)] = None): Long = {
     val spark = df.sparkSession
-    val cur = readMeta(spark, dir, currentVersion(spark, dir).getOrElse(
-      throw new IllegalArgumentException(
-        s"VersionedTable.commitAppend: $dir is not a versioned table — create it first")))
-    if (alreadyApplied(cur, txn)) return cur.version
-    requireNoPatches(cur.patches, "commitAppend")
-    val expected = StructType.fromDDL(cur.schemaDdl)
+    withHead(spark, dir, "commitAppend", txn) { cur =>
+      requireNoPatches(cur.patches, "commitAppend")
+      requireSameSchema(df, cur, "commitAppend", "append")
+      val files = writeCommitFiles(
+        withCheckGuards(df, cur.props, "commitAppend"), dir, cur)
+      publishAppendRebasing(spark, dir, cur, "append", files, txn, "commitAppend")
+    }
+  }
+
+  /** Appends and overwrites carry the table's schema exactly. */
+  private def requireSameSchema(df: DataFrame, cur: ManifestMeta, op: String,
+                                what: String): Unit = {
+    val table = StructType.fromDDL(cur.schemaDdl)
     require(df.schema.fields.map(f => (f.name, f.dataType)).sameElements(
-        expected.fields.map(f => (f.name, f.dataType))),
-      s"VersionedTable.commitAppend: schema mismatch — table has " +
-        s"${expected.toDDL}, append carries ${df.schema.toDDL}")
-    val next = cur.version + 1
-    val files = writeCommitFiles(withCheckGuards(df, cur.props, "commitAppend"),
-      dir, next, cur.statsCols, cur.bloomCols, cur.bloomFpp, cur.props)
-    publishAppendRebasing(spark, dir, cur, "append", files, txn, "commitAppend")
+        table.fields.map(f => (f.name, f.dataType))),
+      s"VersionedTable.$op: schema mismatch — table has ${table.toDDL}, " +
+        s"$what carries ${df.schema.toDDL}")
   }
 
   /** Register EXISTING parquet files into the table by reference — the
@@ -1790,22 +1766,19 @@ object VersionedTable {
     * plus a checkpoint, never an O(table) rewrite.
     */
   def commitAddFiles(spark: SparkSession, dir: String, entries: Seq[FileEntry],
-                     txn: Option[(String, Long)] = None): Long = {
-    val cur = readMeta(spark, dir, currentVersion(spark, dir).getOrElse(
-      throw new IllegalArgumentException(
-        s"VersionedTable.commitAddFiles: $dir is not a versioned table — create it first")))
-    if (alreadyApplied(cur, txn)) return cur.version
-    requireNoPatches(cur.patches, "commitAddFiles")
-    require(entries.map(_.path).distinct.size == entries.size,
-      "VersionedTable.commitAddFiles: duplicate paths in the batch")
-    // by-reference rows never pass through a write frame, so the in-frame
-    // CHECK guards can't see them — validate the registered files with
-    // one O(batch) scan before publishing
-    requireFilesPassChecks(spark, dir, cur.schemaDdl, entries,
-      checksOf(cur.props), "commitAddFiles", cur.props)
-    publishAppendRebasing(spark, dir, cur, "add_files", entries, txn,
-      "commitAddFiles")
-  }
+                     txn: Option[(String, Long)] = None): Long =
+    withHead(spark, dir, "commitAddFiles", txn) { cur =>
+      requireNoPatches(cur.patches, "commitAddFiles")
+      require(entries.map(_.path).distinct.size == entries.size,
+        "VersionedTable.commitAddFiles: duplicate paths in the batch")
+      // by-reference rows never pass through a write frame, so the in-frame
+      // CHECK guards can't see them — validate the registered files with
+      // one O(batch) scan before publishing
+      requireFilesPassChecks(spark, dir, cur.schemaDdl, entries,
+        checksOf(cur.props), "commitAddFiles", cur.props)
+      publishAppendRebasing(spark, dir, cur, "add_files", entries, txn,
+        "commitAddFiles")
+    }
 
   /** SQL `UPDATE` semantics as a versioned commit: rows matching `cond`
     * take each SET expression's value (cast to the column's declared
@@ -1821,16 +1794,8 @@ object VersionedTable {
                    sets: Seq[(String, Column)],
                    txn: Option[(String, Long)] = None): Long =
     rewriteMatching(spark, dir, cond, "update", txn) { (df, schema) =>
-      val byName = sets.toMap
-      sets.foreach { case (c, _) => require(schema.fieldNames.contains(c),
-        s"VersionedTable.commitUpdate: SET column $c not in table schema") }
-      df.select(schema.fields.map { f =>
-        byName.get(f.name) match {
-          case Some(v) => when(coalesce(cond, lit(false)),
-            v.cast(f.dataType)).otherwise(col(f.name)).as(f.name)
-          case None => col(f.name)
-        }
-      }.toIndexedSeq: _*)
+      df.select(setImage(schema, sets, "commitUpdate",
+        Some(coalesce(cond, lit(false)))): _*)
     }
 
   /** SQL `DELETE` semantics as a versioned commit: rows matching `cond`
@@ -1847,36 +1812,38 @@ object VersionedTable {
   private def rewriteMatching(spark: SparkSession, dir: String, cond: Column,
                               op: String, txn: Option[(String, Long)])
                              (transform: (DataFrame, StructType) => DataFrame): Long = {
-    val cur = readMeta(spark, dir, currentVersion(spark, dir).getOrElse(
-      throw new IllegalArgumentException(
-        s"VersionedTable.commit${op.capitalize}: $dir is not a versioned table")))
-    if (alreadyApplied(cur, txn)) return cur.version
-    requireNoPatches(cur.patches, s"commit${op.capitalize}")
-    requireNoDvs(cur.dvs, s"commit${op.capitalize}")
-    val schema = StructType.fromDDL(cur.schemaDdl)
-    val ranges = org.apache.spark.sql.GraftShim.mineRanges(cond)
+    val label = s"commit${op.capitalize}"
+    withHead(spark, dir, label, txn) { cur =>
+      requireNoPatches(cur.patches, label)
+      requireNoDvs(cur.dvs, label)
+      val schema = StructType.fromDDL(cur.schemaDdl)
+      val files = candidates(spark, dir, cur, cond)
+      if (files.isEmpty) cur.version
+      else {
+        val base = readDataFiles(spark, schema, cur.props,
+          files.map(f => dataPath(dir, f.path)))
+        val rewritten0 = transform(base, schema)
+          .select(schema.fieldNames.map(col).toIndexedSeq: _*)
+        // UPDATE introduces new values; DELETE's survivors already passed
+        val rewritten =
+          if (op == "update") withCheckGuards(rewritten0, cur.props, label)
+          else rewritten0
+        publish(spark, dir, cur, ManifestDelta(op,
+          adds = writeCommitFiles(rewritten, dir, cur), removes = files, txn = txn))
+      }
+    }
+  }
+
+  /** The files of `m` that could hold a row matching `cond`: pruned by
+    * the manifest stats of its minable conjuncts ([[extractRanges]],
+    * IN-sets); every file when none is minable — correct, just unpruned.
+    */
+  private def candidates(spark: SparkSession, dir: String, m: ManifestMeta,
+                         cond: Column): Seq[FileEntry] = {
+    val ranges = extractRanges(cond)
     val inSets = org.apache.spark.sql.GraftShim.mineInSets(cond)
-    val candidates: Seq[FileEntry] =
-      if (ranges.isEmpty && inSets.isEmpty)
-        materializeFiles(spark, dir, cur.version)
-      else pruneEntries(spark, dir, ranges, inSets, Some(cur.version))._1
-    if (candidates.isEmpty) return cur.version
-    val next = cur.version + 1
-    val base = readDataFiles(spark, schema, cur.props,
-      candidates.map(f => dataPath(dir, f.path)))
-    val rewritten0 = transform(base, schema)
-      .select(schema.fieldNames.map(col).toIndexedSeq: _*)
-    // UPDATE introduces new values; DELETE's survivors already passed
-    val rewritten =
-      if (op == "update") withCheckGuards(rewritten0, cur.props, "commitUpdate")
-      else rewritten0
-    val files = writeCommitFiles(rewritten, dir, next, cur.statsCols,
-      cur.bloomCols, cur.bloomFpp, cur.props)
-    publishCommit(spark, dir, Some(cur), next, op, cur.schemaDdl,
-      cur.statsCols, txnsAfter(cur, txn), cur.bloomCols, cur.bloomFpp,
-      Seq.empty, Seq.empty, adds = files,
-      removes = candidates.map(f => (f.path, f.rows)))
-    next
+    if (ranges.isEmpty && inSets.isEmpty) filesOf(spark, dir, m)
+    else pruneEntries(spark, dir, m, ranges, inSets)
   }
 
   /** Above this many interval-surviving files, bloom refinement is skipped:
@@ -1904,11 +1871,6 @@ object VersionedTable {
                                      props: Map[String, String],
                                      patchShape: Boolean = false): Unit = {
     if (checks.isEmpty || entries.isEmpty) return
-    val parser = spark.sessionState.sqlParser
-    val anyBad = checks.map { case (_, sql) =>
-      !coalesce(org.apache.spark.sql.GraftShim.column(
-        parser.parseExpression(sql)), lit(true))
-    }.reduce(_ || _)
     // patch files carry a __vt_del flag; tombstone payloads are dead
     // weight and exempt from constraints, same as the in-frame guards
     val extra =
@@ -1918,39 +1880,24 @@ object VersionedTable {
     val df0 = readDataFiles(spark, StructType.fromDDL(schemaDdl), props,
       entries.map(e => dataPath(dir, e.path)), extra = extra)
     val df = if (patchShape) df0.filter(!col("__vt_del")) else df0
-    val bad = df
-      .filter(anyBad).limit(1).count()
+    val bad = df.filter(anyViolation(spark, checks)).limit(1).count()
     require(bad == 0L,
       s"VersionedTable.$label: rows violate a live CHECK constraint " +
         s"(${checks.map(_._1).mkString(", ")}) — fix the data or drop the " +
         "constraint")
   }
 
-  /** Publish `adds` as an append-shaped commit on top of `first`, REBASING
-    * onto new heads on a lost version race instead of surfacing
-    * [[ConcurrentCommitException]]: the data files are already durable and
-    * an append logically conflicts with nothing that preserves its
-    * validity, so losing the manifest CAS should cost one more metadata
-    * write — never a re-run of the data job that produced the files (at
-    * 100 TB, the difference between a millisecond retry and recomputing
-    * the batch; Delta's logical conflict-resolution idea). Each rebase
-    * re-checks the preconditions against the NEW head:
-    *
-    *  - the txn already applied by someone else → return their version
-    *    (our files orphan to vacuum, exactly-once preserved);
-    *  - a patch chain appeared, or merge keys changed → rethrow (the
-    *    caller's [[withCommitRetry]] takes the full re-derive path, whose
-    *    entry guards produce the loud domain error);
-    *  - schema changed → rebase only across APPEND-ONLY widening (our
-    *    files read NULL for appended columns — the [[commitAddColumns]]
-    *    contract); anything else rethrows;
-    *  - CHECK constraints ADDED by a winner re-validate our files with one
-    *    O(batch) scan before the rebase may publish — in-frame guards ran
-    *    against the constraint set visible at write time, not this one.
-    *
-    * Stats/bloom config and table props always re-read from the new head,
-    * so a racing property change carries forward instead of reverting.
+  /** True on a row that violates any of `checks` (standard SQL CHECK
+    * semantics: a NULL predicate passes).
     */
+  private def anyViolation(spark: SparkSession, checks: Seq[(String, String)]): Column = {
+    val parser = spark.sessionState.sqlParser
+    checks.map { case (_, sql) =>
+      !coalesce(org.apache.spark.sql.GraftShim.column(
+        parser.parseExpression(sql)), lit(true))
+    }.reduce(_ || _)
+  }
+
   /** Test-only interleaving hook: runs after an append's data files are
     * durable and before each manifest publish attempt, letting a spec
     * inject a deterministic racing commit into the exact window the
@@ -1986,8 +1933,8 @@ object VersionedTable {
         case e: ConcurrentCommitException =>
           rebases += 1
           if (rebases >= 100) throw e
-          val newHead = readMeta(spark, dir,
-            currentVersion(spark, dir).getOrElse(throw e))
+          val newHead = currentVersion(spark, dir)
+            .map(readMeta(spark, dir, _)).getOrElse(throw e)
           if (alreadyApplied(newHead, txn)) return newHead.version
           if (!compatible(head, newHead)) throw e
           val addedChecks =
@@ -2000,6 +1947,31 @@ object VersionedTable {
     -1L // unreachable: the loop returns or throws
   }
 
+  /** Publish `adds` as an append-shaped commit on top of `first`, REBASING
+    * onto new heads on a lost version race instead of surfacing
+    * [[ConcurrentCommitException]]: the data files are already durable and
+    * an append logically conflicts with nothing that preserves its
+    * validity, so losing the manifest CAS should cost one more metadata
+    * write — never a re-run of the data job that produced the files (at
+    * 100 TB, the difference between a millisecond retry and recomputing
+    * the batch; Delta's logical conflict-resolution idea). Each rebase
+    * re-checks the preconditions against the NEW head:
+    *
+    *  - the txn already applied by someone else → return their version
+    *    (our files orphan to vacuum, exactly-once preserved);
+    *  - a patch chain appeared, or merge keys changed → rethrow (the
+    *    caller's [[withCommitRetry]] takes the full re-derive path, whose
+    *    entry guards produce the loud domain error);
+    *  - schema changed → rebase only across APPEND-ONLY widening (our
+    *    files read NULL for appended columns — the [[commitAddColumns]]
+    *    contract); anything else rethrows;
+    *  - CHECK constraints ADDED by a winner re-validate our files with one
+    *    O(batch) scan before the rebase may publish — in-frame guards ran
+    *    against the constraint set visible at write time, not this one.
+    *
+    * Stats/bloom config and table props always re-read from the new head,
+    * so a racing property change carries forward instead of reverting.
+    */
   private def publishAppendRebasing(spark: SparkSession, dir: String,
                                     first: ManifestMeta, op: String,
                                     adds: Seq[FileEntry],
@@ -2020,11 +1992,7 @@ object VersionedTable {
           }
         }
     } { head =>
-      val next = head.version + 1
-      publishCommit(spark, dir, Some(head), next, op, head.schemaDdl,
-        head.statsCols, txnsAfter(head, txn), head.bloomCols, head.bloomFpp,
-        Seq.empty, Seq.empty, adds = adds, removes = Seq.empty)
-      next
+      publish(spark, dir, head, ManifestDelta(op, adds = adds, txn = txn))
     }
 
   /** Stats-pruned copy-on-write MERGE: apply a CDC changelog
@@ -2041,8 +2009,8 @@ object VersionedTable {
     * type. Requires `keys.head` to be a declared stats column — that is
     * the contract that makes merge pruning possible at all (Delta: cluster
     * / stats columns should include the merge key).
-    */
-  /** `deleteMatchedOnly = true` switches the tombstone contract from CDC
+    *
+    * `deleteMatchedOnly = true` switches the tombstone contract from CDC
     * (a flagged row drops its matched key and never inserts) to SQL
     * MERGE (`WHEN MATCHED AND c THEN DELETE` — the flag only gates
     * MATCHED rows; an unmatched flagged row still INSERTs). Exactness
@@ -2099,53 +2067,49 @@ object VersionedTable {
   def commitAddColumns(spark: SparkSession, dir: String,
                        cols: Seq[(String, String)]): Long = {
     require(cols.nonEmpty, "VersionedTable.commitAddColumns: empty column list")
-    val cur = readMeta(spark, dir, currentVersion(spark, dir).getOrElse(
-      throw new IllegalArgumentException(
-        s"VersionedTable.commitAddColumns: $dir is not a versioned table")))
-    requireNoPatches(cur.patches, "commitAddColumns")
-    val schema = StructType.fromDDL(cur.schemaDdl)
-    val existing = schema.fieldNames.map(_.toLowerCase).toSet
-    val added = cols.map { case (name, typeDdl) =>
-      require(!existing.contains(name.toLowerCase),
-        s"VersionedTable.commitAddColumns: column $name already exists — " +
-          "type changes are not supported (shared files are immutable)")
-      val parsed = StructType.fromDDL(s"$name $typeDdl")
-      require(parsed.fields.length == 1,
-        s"VersionedTable.commitAddColumns: cannot parse '$name $typeDdl'")
-      parsed.fields.head.copy(nullable = true) // carried files read NULL
-    }
-    val dup = added.map(_.name.toLowerCase).groupBy(identity).filter(_._2.size > 1)
-    require(dup.isEmpty, s"commitAddColumns: duplicate new columns ${dup.keys}")
-    val next = cur.version + 1
-    // physical-identity hygiene: a new column whose name matches a
-    // RETIRED physical (a dropped column's bytes still sit in shared
-    // files) must NOT bind those bytes — it gets a fresh physical name
-    // and reads NULL from every existing file. A name matching a LIVE
-    // physical (another column's storage, post-rename) REFUSES instead:
-    // remapping would leave one bare name meaning different columns on
-    // the logical and physical sides, and predicate translation — which
-    // sees names from both sides — could no longer tell them apart
-    val physByOwner = schema.fieldNames
-      .map(n => physOf(cur.props, n).toLowerCase -> n).toMap
-    val dead = coldeadOf(cur.props).map(_.toLowerCase)
-    val remapped = added.flatMap { f =>
-      val n = f.name.toLowerCase
-      physByOwner.get(n).foreach { owner =>
-        require(owner.equalsIgnoreCase(f.name), // == would be a dup, caught above
-          s"VersionedTable.commitAddColumns: '${f.name}' is the physical " +
-            s"storage name of column '$owner' (renamed away from it) — " +
-            "choose another name")
+    withHead(spark, dir, "commitAddColumns") { cur =>
+      requireNoPatches(cur.patches, "commitAddColumns")
+      val schema = StructType.fromDDL(cur.schemaDdl)
+      val existing = schema.fieldNames.map(_.toLowerCase).toSet
+      val added = cols.map { case (name, typeDdl) =>
+        require(!existing.contains(name.toLowerCase),
+          s"VersionedTable.commitAddColumns: column $name already exists — " +
+            "type changes are not supported (shared files are immutable)")
+        val parsed = StructType.fromDDL(s"$name $typeDdl")
+        require(parsed.fields.length == 1,
+          s"VersionedTable.commitAddColumns: cannot parse '$name $typeDdl'")
+        parsed.fields.head.copy(nullable = true) // carried files read NULL
       }
-      if (dead.contains(n))
-        Some(ColmapPrefix + f.name -> s"${f.name}__p$next")
-      else None
+      val dup = added.map(_.name.toLowerCase).groupBy(identity).filter(_._2.size > 1)
+      require(dup.isEmpty, s"commitAddColumns: duplicate new columns ${dup.keys}")
+      val next = cur.version + 1
+      // physical-identity hygiene: a new column whose name matches a
+      // RETIRED physical (a dropped column's bytes still sit in shared
+      // files) must NOT bind those bytes — it gets a fresh physical name
+      // and reads NULL from every existing file. A name matching a LIVE
+      // physical (another column's storage, post-rename) REFUSES instead:
+      // remapping would leave one bare name meaning different columns on
+      // the logical and physical sides, and predicate translation — which
+      // sees names from both sides — could no longer tell them apart
+      val physByOwner = schema.fieldNames
+        .map(n => physOf(cur.props, n).toLowerCase -> n).toMap
+      val dead = coldeadOf(cur.props).map(_.toLowerCase)
+      val remapped = added.flatMap { f =>
+        val n = f.name.toLowerCase
+        physByOwner.get(n).foreach { owner =>
+          require(owner.equalsIgnoreCase(f.name), // == would be a dup, caught above
+            s"VersionedTable.commitAddColumns: '${f.name}' is the physical " +
+              s"storage name of column '$owner' (renamed away from it) — " +
+              "choose another name")
+        }
+        if (dead.contains(n))
+          Some(ColmapPrefix + f.name -> s"${f.name}__p$next")
+        else None
+      }
+      publish(spark, dir, cur, ManifestDelta("addColumns",
+        schemaDdl = Some(StructType(schema.fields ++ added).toDDL),
+        props = if (remapped.isEmpty) None else Some(cur.props ++ remapped)))
     }
-    publishCommit(spark, dir, Some(cur), next, "addColumns",
-      StructType(schema.fields ++ added).toDDL, cur.statsCols, cur.txns,
-      cur.bloomCols, cur.bloomFpp, Seq.empty, Seq.empty,
-      adds = Seq.empty, removes = Seq.empty,
-      props = if (remapped.isEmpty) None else Some(cur.props ++ remapped))
-    next
   }
 
   /** The CHECK constraints whose predicate references `colName` — the
@@ -2177,42 +2141,36 @@ object VersionedTable {
     * reserved names, and tables with an unfolded patch chain.
     */
   def commitRenameColumn(spark: SparkSession, dir: String,
-                         from: String, to: String): Long = {
-    val cur = readMeta(spark, dir, currentVersion(spark, dir).getOrElse(
-      throw new IllegalArgumentException(
-        s"VersionedTable.commitRenameColumn: $dir is not a versioned table")))
-    requireNoPatches(cur.patches, "commitRenameColumn")
-    val schema = StructType.fromDDL(cur.schemaDdl)
-    require(schema.fieldNames.contains(from),
-      s"VersionedTable.commitRenameColumn: no column '$from' — table has " +
-        schema.fieldNames.mkString(", "))
-    require(!Seq("__vt_del", "__vt_seq").contains(to.toLowerCase),
-      s"VersionedTable.commitRenameColumn: '$to' is engine-reserved")
-    require(!schema.fieldNames.exists(_.equalsIgnoreCase(to)),
-      s"VersionedTable.commitRenameColumn: column '$to' already exists")
-    val livePhys = physicalSchema(schema, cur.props)
-      .fieldNames.filterNot(_ == physOf(cur.props, from))
-    require(!livePhys.exists(_.equalsIgnoreCase(to)) &&
-        !coldeadOf(cur.props).exists(_.equalsIgnoreCase(to)),
-      s"VersionedTable.commitRenameColumn: '$to' collides with a live or " +
-        "retired PHYSICAL column name — shared files carry bytes under it")
-    val refs = checksReferencing(spark, cur.props, from)
-    require(refs.isEmpty,
-      s"VersionedTable.commitRenameColumn: CHECK constraint(s) " +
-        s"${refs.mkString(", ")} reference '$from' — drop them, rename, " +
-        "re-add against the new name")
-    val phys = physOf(cur.props, from)
-    val newProps = (cur.props - (ColmapPrefix + from)) ++
-      (if (phys == to) Map.empty else Map(ColmapPrefix + to -> phys))
-    val newDdl = StructType(schema.fields.map(f =>
-      if (f.name == from) f.copy(name = to) else f)).toDDL
-    val next = cur.version + 1
-    publishCommit(spark, dir, Some(cur), next, "rename_column", newDdl,
-      cur.statsCols, cur.txns, cur.bloomCols, cur.bloomFpp,
-      Seq.empty, Seq.empty, adds = Seq.empty, removes = Seq.empty,
-      props = Some(newProps))
-    next
-  }
+                         from: String, to: String): Long =
+    withHead(spark, dir, "commitRenameColumn") { cur =>
+      requireNoPatches(cur.patches, "commitRenameColumn")
+      val schema = StructType.fromDDL(cur.schemaDdl)
+      require(schema.fieldNames.contains(from),
+        s"VersionedTable.commitRenameColumn: no column '$from' — table has " +
+          schema.fieldNames.mkString(", "))
+      require(!Seq("__vt_del", "__vt_seq").contains(to.toLowerCase),
+        s"VersionedTable.commitRenameColumn: '$to' is engine-reserved")
+      require(!schema.fieldNames.exists(_.equalsIgnoreCase(to)),
+        s"VersionedTable.commitRenameColumn: column '$to' already exists")
+      val livePhys = physicalSchema(schema, cur.props)
+        .fieldNames.filterNot(_ == physOf(cur.props, from))
+      require(!livePhys.exists(_.equalsIgnoreCase(to)) &&
+          !coldeadOf(cur.props).exists(_.equalsIgnoreCase(to)),
+        s"VersionedTable.commitRenameColumn: '$to' collides with a live or " +
+          "retired PHYSICAL column name — shared files carry bytes under it")
+      val refs = checksReferencing(spark, cur.props, from)
+      require(refs.isEmpty,
+        s"VersionedTable.commitRenameColumn: CHECK constraint(s) " +
+          s"${refs.mkString(", ")} reference '$from' — drop them, rename, " +
+          "re-add against the new name")
+      val phys = physOf(cur.props, from)
+      val newProps = (cur.props - (ColmapPrefix + from)) ++
+        (if (phys == to) Map.empty else Map(ColmapPrefix + to -> phys))
+      val newDdl = StructType(schema.fields.map(f =>
+        if (f.name == from) f.copy(name = to) else f)).toDDL
+      publish(spark, dir, cur, ManifestDelta("rename_column",
+        schemaDdl = Some(newDdl), props = Some(newProps)))
+    }
 
   /** Metadata-only DROP COLUMN: an O(1) manifest commit — the column
     * leaves the logical schema while its bytes stay dead in the shared
@@ -2224,33 +2182,27 @@ object VersionedTable {
     * future writes stop computing them. Refused: the last column, a
     * column a CHECK constraint references, patch-chain tables.
     */
-  def commitDropColumn(spark: SparkSession, dir: String, name: String): Long = {
-    val cur = readMeta(spark, dir, currentVersion(spark, dir).getOrElse(
-      throw new IllegalArgumentException(
-        s"VersionedTable.commitDropColumn: $dir is not a versioned table")))
-    requireNoPatches(cur.patches, "commitDropColumn")
-    val schema = StructType.fromDDL(cur.schemaDdl)
-    require(schema.fieldNames.contains(name),
-      s"VersionedTable.commitDropColumn: no column '$name' — table has " +
-        schema.fieldNames.mkString(", "))
-    require(schema.fields.length >= 2,
-      "VersionedTable.commitDropColumn: cannot drop the last column")
-    val refs = checksReferencing(spark, cur.props, name)
-    require(refs.isEmpty,
-      s"VersionedTable.commitDropColumn: CHECK constraint(s) " +
-        s"${refs.mkString(", ")} reference '$name' — drop them first")
-    val phys = physOf(cur.props, name)
-    val newProps = (cur.props - (ColmapPrefix + name)) +
-      (ColdeadProp -> (coldeadOf(cur.props) + phys).toSeq.sorted.mkString(","))
-    val newDdl = StructType(schema.fields.filterNot(_.name == name)).toDDL
-    val next = cur.version + 1
-    publishCommit(spark, dir, Some(cur), next, "drop_column", newDdl,
-      cur.statsCols.filterNot(_ == phys), cur.txns,
-      cur.bloomCols.filterNot(_ == phys), cur.bloomFpp,
-      Seq.empty, Seq.empty, adds = Seq.empty, removes = Seq.empty,
-      props = Some(newProps))
-    next
-  }
+  def commitDropColumn(spark: SparkSession, dir: String, name: String): Long =
+    withHead(spark, dir, "commitDropColumn") { cur =>
+      requireNoPatches(cur.patches, "commitDropColumn")
+      val schema = StructType.fromDDL(cur.schemaDdl)
+      require(schema.fieldNames.contains(name),
+        s"VersionedTable.commitDropColumn: no column '$name' — table has " +
+          schema.fieldNames.mkString(", "))
+      require(schema.fields.length >= 2,
+        "VersionedTable.commitDropColumn: cannot drop the last column")
+      val refs = checksReferencing(spark, cur.props, name)
+      require(refs.isEmpty,
+        s"VersionedTable.commitDropColumn: CHECK constraint(s) " +
+          s"${refs.mkString(", ")} reference '$name' — drop them first")
+      val phys = physOf(cur.props, name)
+      val newProps = (cur.props - (ColmapPrefix + name)) +
+        (ColdeadProp -> (coldeadOf(cur.props) + phys).toSeq.sorted.mkString(","))
+      val newDdl = StructType(schema.fields.filterNot(_.name == name)).toDDL
+      publish(spark, dir, cur, ManifestDelta("drop_column",
+        schemaDdl = Some(newDdl), statsCols = Some(cur.statsCols.filterNot(_ == phys)),
+        bloomCols = Some(cur.bloomCols.filterNot(_ == phys)), props = Some(newProps)))
+    }
 
   private def commitMergeImpl(changes: DataFrame, dir: String, keys: Seq[String],
                               tiebreak: Seq[Column], deleteCond: Column,
@@ -2260,29 +2212,29 @@ object VersionedTable {
                               deleteMatchedOnly: Boolean = false,
                               failOnDupKeys: Boolean = false): Long = {
     val spark = changes.sparkSession
-    val cur = readMeta(spark, dir, currentVersion(spark, dir).getOrElse(
-      throw new IllegalArgumentException(
-        s"VersionedTable.commitMerge: $dir is not a versioned table — create it first")))
-    if (alreadyApplied(cur, txn)) return cur.version
-    requireNoPatches(cur.patches, "commitMerge")
-    requireNoDvs(cur.dvs, "commitMerge")
-    val key = keys.head
-    require(cur.statsCols.contains(physOf(cur.props, key)),
-      s"VersionedTable.commitMerge: merge key $key is not a stats column " +
-        s"(${cur.statsCols.mkString(", ")}) — file pruning would be impossible; " +
-        "declare it in create(statsCols)")
-    val deduped =
-      if (failOnDupKeys) Warehouse.requireUniqueKeys(changes, keys)
-      else if (dedupe) Warehouse.dedupByKey(changes, keys, tiebreak)
-      else changes
-    cowMergeCore(spark, dir, cur, deduped, keys, deleteCond, txn,
-      evolve, metaCols, op = "merge", deleteMatchedOnly = deleteMatchedOnly)
+    withHead(spark, dir, "commitMerge", txn) { cur =>
+      requireNoPatches(cur.patches, "commitMerge")
+      requireNoDvs(cur.dvs, "commitMerge")
+      val key = keys.head
+      require(cur.statsCols.contains(physOf(cur.props, key)),
+        s"VersionedTable.commitMerge: merge key $key is not a stats column " +
+          s"(${cur.statsCols.mkString(", ")}) — file pruning would be impossible; " +
+          "declare it in create(statsCols)")
+      val deduped =
+        if (failOnDupKeys) Warehouse.requireUniqueKeys(changes, keys)
+        else if (dedupe) Warehouse.dedupByKey(changes, keys, tiebreak)
+        else changes
+      cowMergeCore(spark, dir, cur, deduped, keys, deleteCond, txn,
+        evolve, metaCols, op = "merge", deleteMatchedOnly = deleteMatchedOnly)
+    }
   }
 
   /** The copy-on-write heart shared by [[commitMerge]] (CDC changelogs)
     * and [[compactPatches]] (the folded patch chain as a changelog):
     * find the touched files, merge only them, carry the rest by
-    * reference, publish one manifest. `deduped` must be one row per key.
+    * reference, publish one manifest — which empties a patch chain, as
+    * every commit but a patch or constraint commit does. `deduped` must
+    * be one row per key.
     */
   private def cowMergeCore(spark: SparkSession, dir: String, cur: ManifestMeta,
                            deduped: DataFrame, keys: Seq[String],
@@ -2297,10 +2249,9 @@ object VersionedTable {
     // delta manifest only ever names the touched paths, so the carried
     // 10⁶-file tail costs nothing on the metadata path
     val touched: Seq[FileEntry] =
-      if (!cur.statsCols.contains(physKey)) materializeFiles(spark, dir, cur.version)
+      if (!cur.statsCols.contains(physKey)) filesOf(spark, dir, cur)
       else findTouchedFiles(spark, dir, cur, deduped, key, physKey, schema)
     val touchedCount = touched.size
-    val next = cur.version + 1
     val base =
       if (touched.isEmpty)
         emptyDF(spark, schema)
@@ -2335,12 +2286,12 @@ object VersionedTable {
     // nullability drift rewrite it); evolution appends the new fields as
     // nullable — carried files lack them and must read as NULL
     val outDdl =
-      if (!evolve) cur.schemaDdl
+      if (!evolve) None
       else {
         val extra = merged.schema.fields
           .filterNot(f => schema.fieldNames.contains(f.name))
           .map(_.copy(nullable = true))
-        StructType(schema.fields ++ extra).toDDL
+        Some(StructType(schema.fields ++ extra).toDDL)
       }
     // Granularity-stable rewrite: without it the merge join's hash
     // shuffle scatters the rewritten rows over spark.sql.shuffle
@@ -2357,12 +2308,9 @@ object VersionedTable {
     // commits (nothing touched) keep the changelog's own partitioning —
     // there is no prior granularity to follow.
     val clustered = if (touchedCount > 0) merged.coalesce(touchedCount) else merged
-    val files = writeCommitFiles(clustered, dir, next, cur.statsCols,
-      cur.bloomCols, cur.bloomFpp, cur.props)
-    publishCommit(spark, dir, Some(cur), next, op, outDdl, cur.statsCols,
-      txnsAfter(cur, txn), cur.bloomCols, cur.bloomFpp, Seq.empty, Seq.empty,
-      adds = files, removes = touched.map(f => (f.path, f.rows)))
-    next
+    publish(spark, dir, cur, ManifestDelta(op,
+      adds = writeCommitFiles(clustered, dir, cur), removes = touched, txn = txn,
+      schemaDdl = outDdl))
   }
 
   /** findTouchedFiles: join the changelog's distinct keys against the
@@ -2399,14 +2347,14 @@ object VersionedTable {
       if (localKeys.isDefined) {
         lastTouchedMode = "local"
         return touchedAmongLocal(spark, dir, cur,
-          materializeFiles(spark, dir, cur.version), localKeys.get,
+          filesOf(spark, dir, cur), localKeys.get,
           physKey, keyType)
       }
     }
     lastTouchedMode = if (distributed) "distributed" else "driver"
     val candidateEntries: Seq[FileEntry] =
       if (!distributed) {
-        materializeFiles(spark, dir, cur.version)
+        filesOf(spark, dir, cur)
       } else {
         // metadata-scale pass: the same interval test, evaluated as a
         // SPARK JOB over the checkpoint relation with the changelog's
@@ -2599,85 +2547,71 @@ object VersionedTable {
                     zorder: Boolean = false,
                     where: Option[Column] = None): Long = {
     val fs = fsOf(spark, dir)
-    // table-maintenance op: O(scope) — `where` scopes the candidate set at
-    // FILE granularity through the manifest stats (whole files rewrite,
-    // every row kept, so the predicate only chooses WHICH files — the
-    // Delta `OPTIMIZE ... WHERE` shape): daily maintenance bin-packs
-    // yesterday's fragmented slice without statting or touching the
-    // accumulated tail. Unscoped remains inherently O(table).
-    val cur = readManifest(spark, dir, currentVersion(spark, dir).getOrElse(
-      throw new IllegalArgumentException(
-        s"VersionedTable.commitCompact: $dir is not a versioned table")))
-    requireNoPatches(cur.patches, "commitCompact")
-    requireNoDvs(cur.dvs,
-      "commitCompact") // SQL OPTIMIZE materializes DVs before compacting
-    val curMeta = readMeta(spark, dir, cur.version)
-    val scoped: Seq[FileEntry] = where match {
-      case None => cur.files
-      case Some(cond) =>
-        val ranges = org.apache.spark.sql.GraftShim.mineRanges(cond)
-        val ins = org.apache.spark.sql.GraftShim.mineInSets(cond)
-        // an unminable predicate degrades to the whole table — correct,
-        // just unscoped, the same contract as the DML rewrites
-        if (ranges.isEmpty && ins.isEmpty) cur.files
-        else pruneEntries(spark, dir, ranges, ins, Some(cur.version))._1
+    withHead(spark, dir, "commitCompact") { cur =>
+      requireNoPatches(cur.patches, "commitCompact")
+      requireNoDvs(cur.dvs,
+        "commitCompact") // SQL OPTIMIZE materializes DVs before compacting
+      // table-maintenance op: O(scope) — `where` scopes the candidate set
+      // at FILE granularity through the manifest stats (whole files
+      // rewrite, every row kept, so the predicate only chooses WHICH files
+      // — the Delta `OPTIMIZE ... WHERE` shape): daily maintenance
+      // bin-packs yesterday's fragmented slice without statting or
+      // touching the accumulated tail. Unscoped remains inherently
+      // O(table); an unminable predicate degrades to the whole table.
+      val scoped = where.fold(filesOf(spark, dir, cur))(candidates(spark, dir, cur, _))
+      // manifest-stamped sizes avoid a getFileStatus per file (an RPC storm
+      // on object stores); only legacy entries (bytes=0) probe the store
+      val sized = scoped.map { f =>
+        f -> (if (f.bytes > 0L) f.bytes
+              else fs.getFileStatus(new Path(dataPath(dir, f.path))).getLen)
+      }
+      val small = sized.filter(_._2 < smallBytes)
+      val toRewrite = if (clusterBy.nonEmpty) sized else small
+      if ((small.size <= 1 && clusterBy.isEmpty) || toRewrite.isEmpty) cur.version
+      else {
+        val schema = StructType.fromDDL(cur.schemaDdl)
+        val bytes = toRewrite.map(_._2).sum
+        val nOut = math.max(1, math.ceil(bytes.toDouble / targetBytes).toInt)
+        val rows = readDataFiles(spark, schema, cur.props,
+          toRewrite.map(f => dataPath(dir, f._1.path)))
+        val packed =
+          if (zorder) {
+            // OPTIMIZE ZORDER: cluster by the Morton z-value of 2-8 columns
+            // so EACH carries tight per-file intervals at once — a box
+            // predicate through [[pruneFilesMulti]]/[[readWhere]] then
+            // prunes on every dimension, where a lexicographic sort only
+            // prunes on its leading column. Rank bounds come from the
+            // MANIFEST's global [min, max] fold ([[tableStats]]) — no extra
+            // scan — which is why z-order columns must be declared stats
+            // columns. Rank width is 2^min(20, 64/n) so every dimension's
+            // bits fit the 64-bit z-value ([[LayoutOps.zvalueN]]'s contract).
+            require(clusterBy.size >= 2 && clusterBy.size <= 8,
+              s"commitCompact: zorder takes 2 to 8 clusterBy columns, got $clusterBy")
+            val ts = tableStats(spark, dir, asOf = Some(cur.version))
+            val buckets = 1 << math.min(20, 64 / clusterBy.size)
+            val ranked = clusterBy.map { c =>
+              require(cur.statsCols.contains(c),
+                s"commitCompact: zorder column $c needs manifest stats — declare it in statsCols at create")
+              require(schema(c).dataType.isInstanceOf[org.apache.spark.sql.types.NumericType],
+                s"commitCompact: zorder column $c must be numeric (rank normalization), is ${schema(c).dataType.sql}")
+              val (_, mn, mx) = ts.cols(c)
+              require(mn.isDefined && mx.isDefined,
+                s"commitCompact: zorder column $c is all-null — nothing to cluster on")
+              LayoutOps.rank32(col(c).cast("double"),
+                mn.get.toDouble, mx.get.toDouble, buckets)
+            }
+            rows.withColumn("__z", LayoutOps.zvalueN(ranked))
+              .repartitionByRange(nOut, col("__z"))
+              .sortWithinPartitions("__z")
+              .drop("__z")
+          } else if (clusterBy.nonEmpty)
+            rows.repartitionByRange(nOut, clusterBy.map(col): _*)
+              .sortWithinPartitions(clusterBy.map(col): _*)
+          else rows.coalesce(nOut)
+        publish(spark, dir, cur, ManifestDelta("compact",
+          adds = writeCommitFiles(packed, dir, cur), removes = toRewrite.map(_._1)))
+      }
     }
-    // manifest-stamped sizes avoid a getFileStatus per file (an RPC storm
-    // on object stores); only legacy entries (bytes=0) probe the store
-    val sized = scoped.map { f =>
-      f -> (if (f.bytes > 0L) f.bytes
-            else fs.getFileStatus(new Path(dataPath(dir, f.path))).getLen)
-    }
-    val (small, big) = sized.partition(_._2 < smallBytes)
-    if (small.size <= 1 && clusterBy.isEmpty) return cur.version
-    val schema = StructType.fromDDL(cur.schemaDdl)
-    val toRewrite = if (clusterBy.nonEmpty) sized else small
-    if (toRewrite.isEmpty) return cur.version
-    val bytes = toRewrite.map(_._2).sum
-    val nOut = math.max(1, math.ceil(bytes.toDouble / targetBytes).toInt)
-    val rows = readDataFiles(spark, schema, cur.props,
-      toRewrite.map(f => dataPath(dir, f._1.path)))
-    val packed =
-      if (zorder) {
-        // OPTIMIZE ZORDER: cluster by the Morton z-value of 2-8 columns
-        // so EACH carries tight per-file intervals at once — a box
-        // predicate through [[pruneFilesMulti]]/[[readWhere]] then prunes
-        // on every dimension, where a lexicographic sort only prunes on
-        // its leading column. Rank bounds come from the MANIFEST's global
-        // [min, max] fold ([[tableStats]]) — no extra scan — which is why
-        // z-order columns must be declared stats columns. Rank width is
-        // 2^min(20, 64/n) so every dimension's bits fit the 64-bit
-        // z-value ([[LayoutOps.zvalueN]]'s contract).
-        require(clusterBy.size >= 2 && clusterBy.size <= 8,
-          s"commitCompact: zorder takes 2 to 8 clusterBy columns, got $clusterBy")
-        val ts = tableStats(spark, dir, asOf = Some(cur.version))
-        val buckets = 1 << math.min(20, 64 / clusterBy.size)
-        val ranked = clusterBy.map { c =>
-          require(cur.statsCols.contains(c),
-            s"commitCompact: zorder column $c needs manifest stats — declare it in statsCols at create")
-          require(schema(c).dataType.isInstanceOf[org.apache.spark.sql.types.NumericType],
-            s"commitCompact: zorder column $c must be numeric (rank normalization), is ${schema(c).dataType.sql}")
-          val (_, mn, mx) = ts.cols(c)
-          require(mn.isDefined && mx.isDefined,
-            s"commitCompact: zorder column $c is all-null — nothing to cluster on")
-          LayoutOps.rank32(col(c).cast("double"),
-            mn.get.toDouble, mx.get.toDouble, buckets)
-        }
-        rows.withColumn("__z", LayoutOps.zvalueN(ranked))
-          .repartitionByRange(nOut, col("__z"))
-          .sortWithinPartitions("__z")
-          .drop("__z")
-      } else if (clusterBy.nonEmpty)
-        rows.repartitionByRange(nOut, clusterBy.map(col): _*)
-          .sortWithinPartitions(clusterBy.map(col): _*)
-      else rows.coalesce(nOut)
-    val next = cur.version + 1
-    val files = writeCommitFiles(packed, dir, next, cur.statsCols,
-      cur.bloomCols, cur.bloomFpp, cur.props)
-    publishCommit(spark, dir, Some(curMeta), next, "compact", cur.schemaDdl,
-      cur.statsCols, cur.txns, cur.bloomCols, cur.bloomFpp, Seq.empty, Seq.empty,
-      adds = files, removes = toRewrite.map(f => (f._1.path, f._1.rows)))
-    next
   }
 
   private def requireNoPatches(patches: Seq[Seq[FileEntry]], op: String): Unit =
@@ -2704,57 +2638,49 @@ object VersionedTable {
                   tiebreak: Seq[Column], deleteCond: Column,
                   txn: Option[(String, Long)] = None): Long = {
     val spark = changes.sparkSession
-    val cur = readMeta(spark, dir, currentVersion(spark, dir).getOrElse(
-      throw new IllegalArgumentException(
-        s"VersionedTable.commitPatch: $dir is not a versioned table — create it first")))
-    if (alreadyApplied(cur, txn)) return cur.version
-    require(cur.mergeKeys.isEmpty || cur.mergeKeys == keys,
-      s"VersionedTable.commitPatch: chain keys ${cur.mergeKeys.mkString(",")} " +
-        s"!= ${keys.mkString(",")} — one key set per chain")
-    requireNoDvs(cur.dvs, "commitPatch")
-    val schema = StructType.fromDDL(cur.schemaDdl)
-    require(!schema.fieldNames.contains("__vt_del") && !schema.fieldNames.contains("__vt_seq"),
-      "VersionedTable.commitPatch: column names __vt_del/__vt_seq are reserved")
-    schema.fields.foreach { f =>
-      require(changes.columns.contains(f.name) &&
-          changes.schema(f.name).dataType == f.dataType,
-        s"VersionedTable.commitPatch: changes must carry ${f.name}: ${f.dataType.sql}")
-    }
-    val flagged = Warehouse.dedupByKey(changes, keys, tiebreak)
-      .withColumn("__vt_del", coalesce(deleteCond, lit(false)))
-      .select(schema.fieldNames.map(col) :+ col("__vt_del"): _*)
-    val next = cur.version + 1
-    // patch files carry stats (the fold CAN be key-pruned later) but no
-    // blooms — nothing probes them
-    val files = writeCommitFiles(
-      withCheckGuards(flagged, cur.props, "commitPatch",
-        precond = !col("__vt_del")),
-      dir, next,
-      cur.statsCols.filter(
-        physicalSchema(schema, cur.props).fieldNames.contains),
-      props = cur.props)
-    // base file set untouched: an empty adds/removes delta — O(patch), not
-    // O(table), which is the whole point of merge-on-read. A lost version
-    // race REBASES like an append ([[publishAppendRebasing]]'s logic,
-    // patch-shaped): the batch's content is input-only, so stacking it on
-    // the new head — after whatever patches, merges, or compactions won —
-    // is exactly what a serialized re-run would produce, without
-    // re-running the data write. Schema or key changes rethrow for the
-    // full-retry path; constraints added by a winner re-validate the
-    // batch's LIVE rows with one O(batch) scan.
-    rebaseLoop(spark, dir, cur, files, txn, "commitPatch",
-        patchShape = true) { (head, newHead) =>
-      // patch files carry the exact schema, so only an identical-schema
-      // head is stackable; the chain's keys must stay ours
-      newHead.schemaDdl == head.schemaDdl &&
-        (newHead.mergeKeys.isEmpty || newHead.mergeKeys == keys)
-    } { head =>
-      publishCommit(spark, dir, Some(head), head.version + 1, "patch",
-        head.schemaDdl, head.statsCols, txnsAfter(head, txn),
-        head.bloomCols, head.bloomFpp,
-        head.patches ++ (if (files.nonEmpty) Seq(files) else Seq.empty),
-        keys, adds = Seq.empty, removes = Seq.empty)
-      head.version + 1
+    withHead(spark, dir, "commitPatch", txn) { cur =>
+      require(cur.mergeKeys.isEmpty || cur.mergeKeys == keys,
+        s"VersionedTable.commitPatch: chain keys ${cur.mergeKeys.mkString(",")} " +
+          s"!= ${keys.mkString(",")} — one key set per chain")
+      requireNoDvs(cur.dvs, "commitPatch")
+      val schema = StructType.fromDDL(cur.schemaDdl)
+      require(!schema.fieldNames.contains("__vt_del") && !schema.fieldNames.contains("__vt_seq"),
+        "VersionedTable.commitPatch: column names __vt_del/__vt_seq are reserved")
+      schema.fields.foreach { f =>
+        require(changes.columns.contains(f.name) &&
+            changes.schema(f.name).dataType == f.dataType,
+          s"VersionedTable.commitPatch: changes must carry ${f.name}: ${f.dataType.sql}")
+      }
+      val flagged = Warehouse.dedupByKey(changes, keys, tiebreak)
+        .withColumn("__vt_del", coalesce(deleteCond, lit(false)))
+        .select(schema.fieldNames.map(col) :+ col("__vt_del"): _*)
+      // patch files carry stats (the fold CAN be key-pruned later) but no
+      // blooms — nothing probes them
+      val files = writeCommitFiles(
+        withCheckGuards(flagged, cur.props, "commitPatch",
+          precond = !col("__vt_del")),
+        dir, cur.copy(bloomCols = Seq.empty, statsCols = cur.statsCols.filter(
+          physicalSchema(schema, cur.props).fieldNames.contains)))
+      // base file set untouched: an empty adds/removes delta — O(patch),
+      // not O(table), which is the whole point of merge-on-read. A lost
+      // version race REBASES like an append ([[publishAppendRebasing]]'s
+      // logic, patch-shaped): the batch's content is input-only, so
+      // stacking it on the new head — after whatever patches, merges, or
+      // compactions won — is exactly what a serialized re-run would
+      // produce, without re-running the data write. Schema or key changes
+      // rethrow for the full-retry path; constraints added by a winner
+      // re-validate the batch's LIVE rows with one O(batch) scan.
+      rebaseLoop(spark, dir, cur, files, txn, "commitPatch",
+          patchShape = true) { (head, newHead) =>
+        // patch files carry the exact schema, so only an identical-schema
+        // head is stackable; the chain's keys must stay ours
+        newHead.schemaDdl == head.schemaDdl &&
+          (newHead.mergeKeys.isEmpty || newHead.mergeKeys == keys)
+      } { head =>
+        publish(spark, dir, head, ManifestDelta("patch", txn = txn,
+          patches = head.patches ++ (if (files.nonEmpty) Seq(files) else Seq.empty),
+          mergeKeys = keys))
+      }
     }
   }
 
@@ -2767,18 +2693,15 @@ object VersionedTable {
     * with retention. Returns the new version (current when nothing to
     * fold).
     */
-  def compactPatches(spark: SparkSession, dir: String): Long = {
-    val cur = readMeta(spark, dir, currentVersion(spark, dir).getOrElse(
-      throw new IllegalArgumentException(
-        s"VersionedTable.compactPatches: $dir is not a versioned table")))
-    if (cur.patches.isEmpty) return cur.version
-    val schema = StructType.fromDDL(cur.schemaDdl)
-    val changelog = chainChangelog(spark, dir, cur.patches, cur.mergeKeys,
-      schema, cur.props)
-    cowMergeCore(spark, dir, cur, changelog, cur.mergeKeys,
-      col("__vt_del"), txn = None, evolve = false, metaCols = Seq.empty,
-      op = "compact")
-  }
+  def compactPatches(spark: SparkSession, dir: String): Long =
+    withHead(spark, dir, "compactPatches") { cur =>
+      if (cur.patches.isEmpty) cur.version
+      else cowMergeCore(spark, dir, cur,
+        chainChangelog(spark, dir, cur.patches, cur.mergeKeys,
+          StructType.fromDDL(cur.schemaDdl), cur.props),
+        cur.mergeKeys, col("__vt_del"), txn = None, evolve = false,
+        metaCols = Seq.empty, op = "compact")
+    }
 
   /** Tag carried by the BASE parquet relation of every [[read]]: the
     * (table dir, pinned version) [[graft.plans.VtableSkipping]] needs to
@@ -2814,26 +2737,6 @@ object VersionedTable {
     */
   val dvStateTag: org.apache.spark.sql.catalyst.trees.TreeNodeTag[Set[String]] =
     org.apache.spark.sql.catalyst.trees.TreeNodeTag[Set[String]]("graft.vtable.dvState")
-
-  private def baseRead(spark: SparkSession, dir: String, m: Manifest,
-                       schema: StructType): DataFrame =
-    if (m.files.isEmpty)
-      emptyDF(spark, schema)
-    else {
-      val df = readDataFiles(spark, schema, m.props,
-        m.files.map(f => dataPath(dir, f.path)))
-      df.queryExecution.analyzed.foreach {
-        case lr: org.apache.spark.sql.execution.datasources.LogicalRelation =>
-          lr.setTagValue(pruneTag, (dir, m.version))
-          m.props.get(TableIdProp).foreach(lr.setTagValue(tableIdTag, _))
-        case _ =>
-      }
-      df
-    }
-
-  private def patchSchemaOf(schema: StructType): StructType =
-    StructType(schema.fields :+ org.apache.spark.sql.types.StructField(
-      "__vt_del", org.apache.spark.sql.types.BooleanType))
 
   /** The patch chain collapsed to ONE changelog row per key (later batch
     * wins — each batch is already one row per key, so `__vt_seq` order is
@@ -2882,30 +2785,24 @@ object VersionedTable {
       throw new IllegalArgumentException(s"VersionedTable.read: $dir is not a versioned table"))
     val m = readManifest(spark, dir, v)
     val schema = StructType.fromDDL(m.schemaDdl)
-    if (m.dvs.nonEmpty) {
-      val df = dvFoldedRead(spark, dir, schema, m.props,
-        m.files.map(f => dataPath(dir, f.path)), m.dvs)
-      // tag the BASE scan (not the sidecar: its output is exactly the
-      // reserved dv key pair) so the optimizer rules see DV-folded reads
-      // too — zone-map pruning is sound under the fold (the anti-join
-      // only removes rows), VtableMetadataAgg re-reads the manifest and
-      // refuses on dvs, and VtableViewRewrite recognizes the fold shape
-      // and answers from a view whose cursor equals THIS version (whose
-      // state, post-r17, includes the DV retraction)
-      val dvSet = m.dvs.map(p =>
-        new Path(dataPath(dir, p)).toUri.getPath).toSet
-      df.queryExecution.analyzed.foreach {
-        case lr: org.apache.spark.sql.execution.datasources.LogicalRelation
-            if !lr.schema.fieldNames.sameElements(dvSchema.fieldNames) =>
-          lr.setTagValue(pruneTag, (dir, m.version))
-          lr.setTagValue(dvStateTag, dvSet)
-          m.props.get(TableIdProp).foreach(lr.setTagValue(tableIdTag, _))
-        case _ =>
-      }
-      df
-    } else
-      foldPatches(spark, dir, m.patches, m.mergeKeys,
-        baseRead(spark, dir, m, schema), schema, m.props)
+    val df = readLive(spark, dir, schema, m.props, m.files.map(_.path), m.dvs)
+    // tag the BASE scan (not a DV sidecar: its output is exactly the
+    // reserved dv key pair) so the optimizer rules see every read, DV-
+    // folded ones too — zone-map pruning is sound under the fold (the
+    // anti-join only removes rows), VtableMetadataAgg re-reads the
+    // manifest and refuses on dvs, and VtableViewRewrite recognizes the
+    // fold shape and answers from a view whose cursor equals THIS version
+    // (whose state, post-r17, includes the DV retraction)
+    val dvSet = m.dvs.map(p => new Path(dataPath(dir, p)).toUri.getPath).toSet
+    df.queryExecution.analyzed.foreach {
+      case lr: org.apache.spark.sql.execution.datasources.LogicalRelation
+          if dvSet.isEmpty || !lr.schema.fieldNames.sameElements(dvSchema.fieldNames) =>
+        lr.setTagValue(pruneTag, (dir, m.version))
+        if (dvSet.nonEmpty) lr.setTagValue(dvStateTag, dvSet)
+        m.props.get(TableIdProp).foreach(lr.setTagValue(tableIdTag, _))
+      case _ =>
+    }
+    foldPatches(spark, dir, m.patches, m.mergeKeys, df, schema, m.props)
   }
 
   /** Data-skipping read: `column BETWEEN lo AND hi`, with files whose
@@ -2944,17 +2841,21 @@ object VersionedTable {
     val schema = StructType.fromDDL(m.schemaDdl)
     // DV fold over the SURVIVORS is sound for the same reason the patch
     // fold is: pruning only drops files, DVs only drop rows, and the
-    // exact predicate re-applies after the fold
-    if (m.dvs.nonEmpty)
-      return dvFoldedRead(spark, dir, schema, m.props,
-        survivors.map(p => dataPath(dir, p)), m.dvs)
-    val base =
-      if (survivors.isEmpty)
-        emptyDF(spark, schema)
-      else
-        readDataFiles(spark, schema, m.props, survivors.map(p => dataPath(dir, p)))
-    foldPatches(spark, dir, m.patches, m.mergeKeys, base, schema, m.props)
+    // exact predicate re-applies after the fold (a table never carries
+    // both DVs and a patch chain)
+    foldPatches(spark, dir, m.patches, m.mergeKeys,
+      readLive(spark, dir, schema, m.props, survivors, m.dvs), schema, m.props)
   }
+
+  /** The rows of the table files `paths` (relative) that `dvs` leave
+    * live — a plain read when there are none.
+    */
+  private def readLive(spark: SparkSession, dir: String, schema: StructType,
+                       props: Map[String, String], paths: Seq[String],
+                       dvs: Seq[String]): DataFrame =
+    if (paths.isEmpty) emptyDF(spark, schema)
+    else if (dvs.isEmpty) readDataFiles(spark, schema, props, paths.map(dataPath(dir, _)))
+    else dvFoldedRead(spark, dir, schema, props, paths.map(dataPath(dir, _)), dvs)
 
   /** The file-level pruning decision behind [[readPruned]], exposed for
     * plan inspection: (surviving relative paths, manifest). A file
@@ -2999,21 +2900,19 @@ object VersionedTable {
                         ranges: Seq[(String, Option[Column], Option[Column])],
                         inSets: Seq[(String, Seq[Column])],
                         asOf: Option[Long]): (Seq[String], ManifestMeta) = {
-    val (entries, m) = pruneEntries(spark, dir, ranges, inSets, asOf)
-    (entries.map(_.path), m)
+    val m = readMeta(spark, dir, asOf.orElse(currentVersion(spark, dir)).getOrElse(
+      throw new IllegalArgumentException(s"VersionedTable.readPruned: $dir is not a versioned table")))
+    (pruneEntries(spark, dir, m, ranges, inSets).map(_.path), m)
   }
 
-  /** [[pruneCore]] keeping the surviving ENTRIES (path + rows + stats) —
-    * what DML rewrites need for their removes accounting.
+  /** [[pruneCore]] over the manifest `m`, keeping the surviving ENTRIES
+    * (path + rows + stats) — what DML rewrites need for their removes
+    * accounting.
     */
-  private def pruneEntries(spark: SparkSession, dir: String,
+  private def pruneEntries(spark: SparkSession, dir: String, m: ManifestMeta,
                            ranges: Seq[(String, Option[Column], Option[Column])],
-                           inSets: Seq[(String, Seq[Column])],
-                           asOf: Option[Long]): (Seq[FileEntry], ManifestMeta) = {
+                           inSets: Seq[(String, Seq[Column])]): Seq[FileEntry] = {
     import scala.jdk.CollectionConverters._
-    val v = asOf.orElse(currentVersion(spark, dir)).getOrElse(
-      throw new IllegalArgumentException(s"VersionedTable.readPruned: $dir is not a versioned table"))
-    val m = readMeta(spark, dir, v)
     val schema = StructType.fromDDL(m.schemaDdl)
     // predicates arrive in LOGICAL names from library callers and in
     // PHYSICAL names from the skipping rule (filters pushed below the
@@ -3031,13 +2930,23 @@ object VersionedTable {
     val activeIns = inSets
       .map { case (c, vs) => (toPhys(c), vs) }
       .filter { case (c, vs) => m.statsCols.contains(c) && vs.nonEmpty }
-    if (activeRanges.isEmpty && activeIns.isEmpty)
-      return (materializeFiles(spark, dir, v), m)
-    if (m.numFiles == 0) return (Seq.empty, m)
+    if (activeRanges.isEmpty && activeIns.isEmpty) return filesOf(spark, dir, m)
+    if (m.numFiles == 0) return Seq.empty
+    // the conjunction of every active predicate, given how a column's
+    // stats entry survives a (min, max) test in the tier's relation
+    def survives(surviving: String => ((Column, Column) => Column) => Column): Column =
+      (activeRanges.map { case (c, lo, hi) =>
+        surviving(c) { (mn, mx) =>
+          lo.map(l => mx >= l).getOrElse(lit(true)) &&
+            hi.map(h => mn <= h).getOrElse(lit(true))
+        }
+      } ++ activeIns.map { case (c, vs) =>
+        surviving(c) { (mn, mx) => vs.map(v => mn <= v && mx >= v).reduce(_ || _) }
+      }).reduce(_ && _)
     val survivorEntries: Seq[FileEntry] =
       if (m.numFiles <= distributedPruneThreshold(spark)) {
         lastPruneMode = "driver"
-        val files = materializeFiles(spark, dir, v)
+        val files = filesOf(spark, dir, m)
         // one LOCAL row per file carrying every active column's interval;
         // evaluated through Catalyst casts so the pruning comparison is
         // exactly the scan's
@@ -3064,25 +2973,13 @@ object VersionedTable {
             org.apache.spark.sql.types.StructField(s"__kind_$i",
               org.apache.spark.sql.types.StringType))
           })
-        def surviving(c: String)(rangeTest: (Column, Column) => Column): Column = {
+        val cond = survives { c => rangeTest =>
           val i = idx(c)
           val t = typeOf(c)
           (col(s"__kind_$i") === "blind") ||
             (col(s"__kind_$i") === "range" &&
               rangeTest(col(s"__min_$i").cast(t), col(s"__max_$i").cast(t)))
         }
-        val rangeConds = activeRanges.map { case (c, lo, hi) =>
-          surviving(c) { (mn, mx) =>
-            lo.map(l => mx >= l).getOrElse(lit(true)) &&
-              hi.map(h => mn <= h).getOrElse(lit(true))
-          }
-        }
-        val inConds = activeIns.map { case (c, vs) =>
-          surviving(c) { (mn, mx) =>
-            vs.map(v => mn <= v && mx >= v).reduce(_ || _)
-          }
-        }
-        val cond = (rangeConds ++ inConds).reduce(_ && _)
         val surv = spark.createDataFrame(
             new java.util.ArrayList[org.apache.spark.sql.Row](rows.asJava), statSchema)
           .filter(cond)
@@ -3094,28 +2991,16 @@ object VersionedTable {
         // relation's stats map: entry absent → blind (survives), entry
         // present with null bounds → all-null (pruned), else the interval
         // test through the column's own Catalyst type
-        def surviving(c: String)(rangeTest: (Column, Column) => Column): Column = {
+        val cond = survives { c => rangeTest =>
           val t = typeOf(c)
           val e = col("stats").getItem(c)
           e.isNull || (e.getField("min").isNotNull &&
             rangeTest(e.getField("min").cast(t), e.getField("max").cast(t)))
         }
-        val rangeConds = activeRanges.map { case (c, lo, hi) =>
-          surviving(c) { (mn, mx) =>
-            lo.map(l => mx >= l).getOrElse(lit(true)) &&
-              hi.map(h => mn <= h).getOrElse(lit(true))
-          }
-        }
-        val inConds = activeIns.map { case (c, vs) =>
-          surviving(c) { (mn, mx) =>
-            vs.map(v => mn <= v && mx >= v).reduce(_ || _)
-          }
-        }
-        val cond = (rangeConds ++ inConds).reduce(_ && _)
-        filesDF(spark, dir, v).filter(cond)
+        filesDF(spark, dir, m.version).filter(cond)
           .as[FileEntry](fileEntryEnc).collect().toSeq
       }
-    (bloomRefine(spark, dir, m, typeOf, activeIns, survivorEntries), m)
+    bloomRefine(spark, dir, m, typeOf, activeIns, survivorEntries)
   }
 
   /** Spec window into the full pruning pipeline (intervals + bloom
@@ -3180,16 +3065,11 @@ object VersionedTable {
     */
   def readWhere(spark: SparkSession, dir: String, cond: Column,
                 asOf: Option[Long] = None): DataFrame = {
-    val ranges = extractRanges(cond)
-    val inSets = org.apache.spark.sql.GraftShim.mineInSets(cond)
-    val (survivors, m) =
-      if (ranges.isEmpty && inSets.isEmpty) {
-        val v = asOf.orElse(currentVersion(spark, dir))
-          .getOrElse(throw new IllegalArgumentException(
-            s"VersionedTable.readWhere: $dir is not a versioned table"))
-        (materializeFiles(spark, dir, v).map(_.path), readMeta(spark, dir, v))
-      } else pruneCore(spark, dir, ranges, inSets, asOf)
-    prunedFoldedRead(spark, dir, m, survivors).filter(cond)
+    val m = readMeta(spark, dir, asOf.orElse(currentVersion(spark, dir)).getOrElse(
+      throw new IllegalArgumentException(
+        s"VersionedTable.readWhere: $dir is not a versioned table")))
+    prunedFoldedRead(spark, dir, m, candidates(spark, dir, m, cond).map(_.path))
+      .filter(cond)
   }
 
   /** The conjunct miner behind [[readWhere]] — delegates to
@@ -3201,20 +3081,6 @@ object VersionedTable {
       cond: Column): Seq[(String, Option[Column], Option[Column])] =
     org.apache.spark.sql.GraftShim.mineRanges(cond)
 
-  /** Change data feed — what happened to the table between two versions,
-    * one row per changed key with `change_type` ∈ insert / update /
-    * delete (post-image for insert/update, pre-image for delete). The
-    * downstream-incremental primitive (Delta's CDF): a consumer keeps a
-    * cursor version and folds only the delta instead of re-diffing
-    * snapshots.
-    *
-    * Cost is O(CHANGED FILES), not O(table): data files are immutable, so
-    * any key whose file is in BOTH manifests is untouched by construction
-    * and never read. Only files dropped by `fromV→toV` (pre-images) and
-    * files added (post-images) are scanned; a key rewritten with an equal
-    * payload (its neighbor changed, its file was rewritten) joins equal
-    * and drops as a no-op. Keys must be table-unique, as everywhere.
-    */
   /** Require `m2`'s schema to be an append-only PHYSICAL evolution of
     * `m1`'s — same physical names and types, position for position, with
     * `m2` possibly longer — and return the (fromLogical, toLogical) name
@@ -3238,6 +3104,20 @@ object VersionedTable {
     o.indices.map(i => (o(i)._2, n(i)._2))
   }
 
+  /** Change data feed — what happened to the table between two versions,
+    * one row per changed key with `change_type` ∈ insert / update /
+    * delete (post-image for insert/update, pre-image for delete). The
+    * downstream-incremental primitive (Delta's CDF): a consumer keeps a
+    * cursor version and folds only the delta instead of re-diffing
+    * snapshots.
+    *
+    * Cost is O(CHANGED FILES), not O(table): data files are immutable, so
+    * any key whose file is in BOTH manifests is untouched by construction
+    * and never read. Only files dropped by `fromV→toV` (pre-images) and
+    * files added (post-images) are scanned; a key rewritten with an equal
+    * payload (its neighbor changed, its file was rewritten) joins equal
+    * and drops as a no-op. Keys must be table-unique, as everywhere.
+    */
   def changesBetween(spark: SparkSession, dir: String, fromV: Long, toV: Long,
                      keys: Seq[String], preimages: Boolean = false): DataFrame = {
     require(fromV < toV, s"changesBetween: need fromV < toV, got $fromV >= $toV")
@@ -3331,35 +3211,9 @@ object VersionedTable {
           .select(col("__r.ct").as("change_type") +: keys.map(col) ++:
             payload.map(c => col(s"__r.img.$c").as(c)): _*)
     }
-    def readSet(ps: Seq[String]): DataFrame =
-      if (ps.isEmpty) emptyDF(spark, schema)
-      else readDataFiles(spark, schema, m2.props, ps.map(p => dataPath(dir, p)))
-    // base-file delta across the window: when every manifest in it is
-    // delta-mode the diff folds from the manifests themselves — O(window
-    // changes), never touching the O(table) file lists. A full/restore
-    // manifest in the window falls back to the materialized set diff
-    // (full only exists below the inline bound, so that diff is small;
-    // restore windows are rare and explicit).
-    val win = ((fromV + 1) to toV).map(readMeta(spark, dir, _))
-    val (added, removed): (Seq[String], Seq[String]) =
-      if (win.forall(_.mode == "delta")) {
-        val addedAcc = scala.collection.mutable.LinkedHashSet.empty[String]
-        val removedAcc = scala.collection.mutable.LinkedHashSet.empty[String]
-        win.foreach { d =>
-          d.removes.foreach { p => if (!addedAcc.remove(p)) removedAcc += p }
-          // a re-registered path CANCELS its earlier remove (files are
-          // content-immutable: present at both window ends = no change);
-          // counting it as an add would emit phantom inserts
-          d.adds.foreach { f =>
-            if (!removedAcc.remove(f.path)) addedAcc += f.path
-          }
-        }
-        (addedAcc.toSeq.sorted, removedAcc.toSeq.sorted)
-      } else {
-        val p1 = materializeFiles(spark, dir, fromV).map(_.path).toSet
-        val p2 = materializeFiles(spark, dir, toV).map(_.path).toSet
-        ((p2 -- p1).toSeq.sorted, (p1 -- p2).toSeq.sorted)
-      }
+    def readSet(ps: Seq[String], dvs: Seq[String] = Nil): DataFrame =
+      readLive(spark, dir, schema, m2.props, ps, dvs)
+    val (added, removed) = windowFiles(spark, dir, fromV, toV)
     if (m1.patches == m2.patches) {
       // identical chains: any difference lives in the base file sets, and
       // equal NON-EMPTY chains imply equal bases (base-mutating commits
@@ -3367,46 +3221,10 @@ object VersionedTable {
       if (m1.dvs.isEmpty && m2.dvs.isEmpty)
         classify(readSet(removed), readSet(added))
       else {
-        // DV composition. DV files are append-only until a materialize/
-        // restore swaps them, and a position is recorded at most once
-        // (only LIVE rows record), so the position-set diff needs only
-        // the dv FILES unique to each end — carried files cancel.
-        val preOnly = m1.dvs.filterNot(m2.dvs.toSet)
-        val postOnly = m2.dvs.filterNot(m1.dvs.toSet)
-        def dvRows(ps: Seq[String]): DataFrame =
-          if (ps.isEmpty) emptyDF(spark, dvSchema)
-          else dvTable(spark, dir, ps)
-        val newlyDead =
-          if (preOnly.isEmpty) dvRows(postOnly)
-          else dvRows(postOnly).except(dvRows(preOnly))
-        val revived =
-          if (postOnly.isEmpty) dvRows(preOnly)
-          else dvRows(preOnly).except(dvRows(postOnly))
-        // liveness flips matter only for files present at BOTH ends:
-        // added/removed files already contribute their full live sets
-        val addedSet = added.toSet; val removedSet = removed.toSet
-        val diffFiles = newlyDead.unionByName(revived)
-          .select("__vt_file").distinct()
-          .collect().map(_.getString(0))
-          .filterNot(p => addedSet(p) || removedSet(p)).toSeq
-        def folded(ps: Seq[String], dvs: Seq[String]): DataFrame =
-          if (ps.isEmpty) emptyDF(spark, schema)
-          else if (dvs.isEmpty) readSet(ps)
-          else dvFoldedRead(spark, dir, schema, m2.props,
-            ps.map(p => dataPath(dir, p)), dvs)
-        val sharedPos =
-          if (diffFiles.isEmpty) None
-          else Some(baseReadWithPos(spark, dir, schema, m2.props,
-            diffFiles.map(p => dataPath(dir, p))))
-        def atPositions(dv: DataFrame): DataFrame = sharedPos match {
-          case None => emptyDF(spark, schema)
-          case Some(b) => b.join(dv, Seq("__vt_file", "__vt_pos"),
-              "left_semi")
-            .select(schema.fieldNames.map(col).toIndexedSeq: _*)
-        }
-        classify(
-          folded(removed, m1.dvs).unionByName(atPositions(newlyDead)),
-          folded(added, m2.dvs).unionByName(atPositions(revived)))
+        val (newlyDead, revived) =
+          dvFlips(spark, dir, schema, m1, m2, added ++ removed)
+        classify(readSet(removed, m1.dvs).unionByName(newlyDead),
+          readSet(added, m2.dvs).unionByName(revived))
       }
     } else if (added.isEmpty && removed.isEmpty && m2.patches.startsWith(m1.patches)) {
       // patch-only window: the delta is confined to keys the NEW patch
@@ -3473,75 +3291,90 @@ object VersionedTable {
     physicalPrefixMap(m1, m2, "signedRowsBetween")
     require(!schema.fieldNames.contains("__sign"),
       "signedRowsBetween: column name __sign is reserved by the encoding")
-    val win = ((fromV + 1) to toV).map(readMeta(spark, dir, _))
-    val (added, removed): (Seq[String], Seq[String]) =
-      if (win.forall(_.mode == "delta")) {
-        val addedAcc = scala.collection.mutable.LinkedHashSet.empty[String]
-        val removedAcc = scala.collection.mutable.LinkedHashSet.empty[String]
-        win.foreach { d =>
-          d.removes.foreach { p => if (!addedAcc.remove(p)) removedAcc += p }
-          d.adds.foreach { f =>
-            if (!removedAcc.remove(f.path)) addedAcc += f.path
-          }
-        }
-        (addedAcc.toSeq.sorted, removedAcc.toSeq.sorted)
-      } else {
-        val p1 = materializeFiles(spark, dir, fromV).map(_.path).toSet
-        val p2 = materializeFiles(spark, dir, toV).map(_.path).toSet
-        ((p2 -- p1).toSeq.sorted, (p1 -- p2).toSeq.sorted)
-      }
+    val (added, removed) = windowFiles(spark, dir, fromV, toV)
     // each side folds under ITS endpoint's DV set: a removed file's
     // retraction is its live-at-from rows, an added file's insertion its
     // live-at-to rows — reading either raw would retract/insert rows the
     // view never held / must not hold
-    def readSet(ps: Seq[String], dvs: Seq[String], sign: Int): DataFrame = {
-      val base =
-        if (ps.isEmpty) emptyDF(spark, schema)
-        else if (dvs.isEmpty)
-          readDataFiles(spark, schema, m2.props, ps.map(p => dataPath(dir, p)))
-        else dvFoldedRead(spark, dir, schema, m2.props,
-          ps.map(p => dataPath(dir, p)), dvs)
-      base.withColumn("__sign", lit(sign.toLong))
-    }
-    if (m1.dvs.isEmpty && m2.dvs.isEmpty)
-      Some(readSet(added, Nil, 1).unionByName(readSet(removed, Nil, -1)))
+    def signed(df: DataFrame, sign: Int): DataFrame =
+      df.withColumn("__sign", lit(sign.toLong))
+    val both = signed(readLive(spark, dir, schema, m2.props, added, m2.dvs), 1)
+      .unionByName(signed(readLive(spark, dir, schema, m2.props, removed, m1.dvs), -1))
+    if (m1.dvs.isEmpty && m2.dvs.isEmpty) Some(both)
     else {
-      // DV position diff over the sidecar files unique to each end (same
-      // derivation as [[changesBetween]]'s DV branch — sidecars are
-      // append-only until materialize/restore, so carried files cancel)
-      val preOnly = m1.dvs.filterNot(m2.dvs.toSet)
-      val postOnly = m2.dvs.filterNot(m1.dvs.toSet)
-      def dvRows(ps: Seq[String]): DataFrame =
-        if (ps.isEmpty) emptyDF(spark, dvSchema)
-        else dvTable(spark, dir, ps)
-      val newlyDead =
-        if (preOnly.isEmpty) dvRows(postOnly)
-        else dvRows(postOnly).except(dvRows(preOnly))
-      val revived =
-        if (postOnly.isEmpty) dvRows(preOnly)
-        else dvRows(preOnly).except(dvRows(postOnly))
-      // liveness flips matter only for files present at BOTH ends:
-      // added/removed files already contribute their folded live sets.
-      // The collect is O(distinct dv-addressed files) — driver-small.
-      val addedSet = added.toSet; val removedSet = removed.toSet
-      val diffFiles = newlyDead.unionByName(revived)
-        .select("__vt_file").distinct()
-        .collect().map(_.getString(0))
-        .filterNot(p => addedSet(p) || removedSet(p)).toSeq
-      val sharedPos =
-        if (diffFiles.isEmpty) None
-        else Some(baseReadWithPos(spark, dir, schema, m2.props,
-          diffFiles.map(p => dataPath(dir, p))))
-      def atPositions(dv: DataFrame, sign: Int): DataFrame = (sharedPos match {
-        case None => emptyDF(spark, schema)
-        case Some(b) => b.join(dv, Seq("__vt_file", "__vt_pos"), "left_semi")
-          .select(schema.fieldNames.map(col).toIndexedSeq: _*)
-      }).withColumn("__sign", lit(sign.toLong))
-      Some(readSet(added, m2.dvs, 1)
-        .unionByName(readSet(removed, m1.dvs, -1))
-        .unionByName(atPositions(newlyDead, -1))
-        .unionByName(atPositions(revived, 1)))
+      val (newlyDead, revived) =
+        dvFlips(spark, dir, schema, m1, m2, added ++ removed)
+      Some(both.unionByName(signed(newlyDead, -1)).unionByName(signed(revived, 1)))
     }
+  }
+
+  /** The base files added and removed across the window `fromV → toV`,
+    * each sorted. When every manifest in the window is delta-mode the diff
+    * folds from the manifests themselves — O(window changes), never
+    * touching the O(table) file lists. A full/restore manifest in the
+    * window falls back to the materialized set diff (full only exists
+    * below the inline bound, so that diff is small; restore windows are
+    * rare and explicit).
+    */
+  private def windowFiles(spark: SparkSession, dir: String, fromV: Long,
+                          toV: Long): (Seq[String], Seq[String]) = {
+    val win = ((fromV + 1) to toV).map(readMeta(spark, dir, _))
+    if (win.forall(_.mode == "delta")) {
+      val addedAcc = scala.collection.mutable.LinkedHashSet.empty[String]
+      val removedAcc = scala.collection.mutable.LinkedHashSet.empty[String]
+      win.foreach { d =>
+        d.removes.foreach { p => if (!addedAcc.remove(p)) removedAcc += p }
+        // a re-registered path CANCELS its earlier remove (files are
+        // content-immutable: present at both window ends = no change);
+        // counting it as an add would emit phantom inserts
+        d.adds.foreach { f =>
+          if (!removedAcc.remove(f.path)) addedAcc += f.path
+        }
+      }
+      (addedAcc.toSeq.sorted, removedAcc.toSeq.sorted)
+    } else {
+      val p1 = materializeFiles(spark, dir, fromV).map(_.path).toSet
+      val p2 = materializeFiles(spark, dir, toV).map(_.path).toSet
+      ((p2 -- p1).toSeq.sorted, (p1 -- p2).toSeq.sorted)
+    }
+  }
+
+  /** The rows whose liveness a DV window `m1 → m2` flipped in files
+    * present at both ends (files in `changed` already contribute their
+    * folded live sets): (newly dead, revived), read under `m2`. DV files
+    * are append-only until a materialize/restore swaps them, and a
+    * position is recorded at most once (only LIVE rows record), so the
+    * position-set diff needs only the dv FILES unique to each end —
+    * carried files cancel. The collect is O(distinct dv-addressed files).
+    */
+  private def dvFlips(spark: SparkSession, dir: String, schema: StructType,
+                      m1: ManifestMeta, m2: ManifestMeta,
+                      changed: Seq[String]): (DataFrame, DataFrame) = {
+    val preOnly = m1.dvs.filterNot(m2.dvs.toSet)
+    val postOnly = m2.dvs.filterNot(m1.dvs.toSet)
+    def dvRows(ps: Seq[String]): DataFrame =
+      if (ps.isEmpty) emptyDF(spark, dvSchema)
+      else dvTable(spark, dir, ps)
+    val newlyDead =
+      if (preOnly.isEmpty) dvRows(postOnly)
+      else dvRows(postOnly).except(dvRows(preOnly))
+    val revived =
+      if (postOnly.isEmpty) dvRows(preOnly)
+      else dvRows(preOnly).except(dvRows(postOnly))
+    val diffFiles = newlyDead.unionByName(revived)
+      .select("__vt_file").distinct()
+      .collect().map(_.getString(0))
+      .filterNot(changed.toSet).toSeq
+    val sharedPos =
+      if (diffFiles.isEmpty) None
+      else Some(baseReadWithPos(spark, dir, schema, m2.props,
+        diffFiles.map(p => dataPath(dir, p))))
+    def atPositions(dv: DataFrame): DataFrame = sharedPos match {
+      case None => emptyDF(spark, schema)
+      case Some(b) => b.join(dv, Seq("__vt_file", "__vt_pos"), "left_semi")
+        .select(schema.fieldNames.map(col).toIndexedSeq: _*)
+    }
+    (atPositions(newlyDead), atPositions(revived))
   }
 
   /** Zero-scan table statistics straight from the manifest — the stats
@@ -3650,69 +3483,57 @@ object VersionedTable {
     * batches the table has already seen (their effects are being
     * deliberately discarded — that is what restore means).
     */
-  def restore(spark: SparkSession, dir: String, toVersion: Long): Long = {
-    val curV = currentVersion(spark, dir).getOrElse(
-      throw new IllegalArgumentException(
-        s"VersionedTable.restore: $dir is not a versioned table"))
-    if (toVersion == curV) return curV
-    val cur = readMeta(spark, dir, curV)
-    val target = readMeta(spark, dir, toVersion) // loud if vacuumed
-    // constraints carry forward, so the RESTORED data must satisfy them:
-    // rows predating a constraint were never validated (addCheckConstraint
-    // only scanned the then-current state), and publishing a restore that
-    // resurrects violating rows would break the add-time invariant
-    val checks = checksOf(cur.props)
-    if (checks.nonEmpty) {
-      val parser = spark.sessionState.sqlParser
-      val anyBad = checks.map { case (_, sql) =>
-        !coalesce(org.apache.spark.sql.GraftShim.column(
-          parser.parseExpression(sql)), lit(true))
-      }.reduce(_ || _)
-      val bad = read(spark, dir, Some(toVersion)).filter(anyBad).limit(1).count()
-      require(bad == 0L,
-        s"VersionedTable.restore: version $toVersion holds rows that violate " +
-          s"a live CHECK constraint (${checks.map(_._1).mkString(", ")}) — " +
-          "drop the constraint first or restore to a validated version")
+  def restore(spark: SparkSession, dir: String, toVersion: Long): Long =
+    withHead(spark, dir, "restore") { cur =>
+      if (toVersion == cur.version) cur.version
+      else {
+        val target = readMeta(spark, dir, toVersion) // loud if vacuumed
+        // constraints carry forward, so the RESTORED data must satisfy
+        // them: rows predating a constraint were never validated
+        // (addCheckConstraint only scanned the then-current state), and
+        // publishing a restore that resurrects violating rows would break
+        // the add-time invariant
+        val checks = checksOf(cur.props)
+        if (checks.nonEmpty) {
+          val bad = read(spark, dir, Some(toVersion))
+            .filter(anyViolation(spark, checks)).limit(1).count()
+          require(bad == 0L,
+            s"VersionedTable.restore: version $toVersion holds rows that violate " +
+              s"a live CHECK constraint (${checks.map(_._1).mkString(", ")}) — " +
+              "drop the constraint first or restore to a validated version")
+        }
+        // data rolls back; table-level identity/props do NOT (same table) —
+        // EXCEPT the column-mapping state, which is schema-bound: the
+        // header carries the TARGET's schemaDdl, so its colmap/coldead must
+        // be the target's too, or a restored-then-readded column could bind
+        // another column's physical bytes
+        val mergedProps = cur.props.filterNot { case (k, _) =>
+          k.startsWith(ColmapPrefix) || k == ColdeadProp
+        } ++ target.props.filter { case (k, _) =>
+          k.startsWith(ColmapPrefix) || k == ColdeadProp
+        }
+        // stamped from the CURRENT head, not the copied target: ts = NOW
+        // (TIMESTAMP AS OF between the two must resolve the pre-restore
+        // state), and the target's old adjusted time and stamped-prefix
+        // marker would break the strictly-increasing sequence
+        val header = stamped(cur, target.copy(version = cur.version + 1,
+          op = "restore", txns = cur.txns, props = mergedProps,
+          inlineFiles = Seq.empty, adds = Seq.empty, removes = Seq.empty))
+        // not a publish: the file set IS the target's, so no checkpoint is
+        // due and the auto-compaction/materialize hooks stay out of it
+        val fs = fsOf(spark, dir)
+        if (target.numFiles <= inlineMaxFiles(spark))
+          // small table: self-contained, exactly the pre-checkpoint behavior
+          writeManifestJson(fs, dir, header.copy(mode = "full",
+            inlineFiles = filesOf(spark, dir, target)))
+        else
+          // large table: an O(1) POINTER commit — the file set IS version
+          // `toVersion`'s; replay jumps there, nothing is copied or listed
+          writeManifestJson(fs, dir, header.copy(mode = "restore",
+            restoreOf = toVersion))
+        header.version
+      }
     }
-    // data rolls back; table-level identity/props do NOT (same table) —
-    // EXCEPT the column-mapping state, which is schema-bound: the header
-    // carries the TARGET's schemaDdl, so its colmap/coldead must be the
-    // target's too, or a restored-then-readded column could bind another
-    // column's physical bytes
-    val mergedProps = cur.props.filterNot { case (k, _) =>
-      k.startsWith(ColmapPrefix) || k == ColdeadProp
-    } ++ target.props.filter { case (k, _) =>
-      k.startsWith(ColmapPrefix) || k == ColdeadProp
-    }
-    // ts = NOW: the restore happened at restore time, not at the restored
-    // version's old wall-clock instant — TIMESTAMP AS OF between the two
-    // must resolve the pre-restore state. adjTs chains from the CURRENT
-    // head (not the copied target, whose old adjusted time would break
-    // the strictly-increasing sequence).
-    val restoreNow = System.currentTimeMillis()
-    val header = target.copy(version = curV + 1, op = "restore",
-      txns = cur.txns, props = mergedProps, inlineFiles = Seq.empty,
-      adds = Seq.empty, removes = Seq.empty,
-      ts = restoreNow,
-      adjTs = math.max(
-        if (cur.adjTs > 0L) cur.adjTs + 1L else restoreNow, restoreNow),
-      // chains from the CURRENT head like adjTs — NOT from the copied
-      // target, whose marker describes a different prefix
-      firstStampedV =
-        if (cur.adjTs > 0L && cur.firstStampedV > 0L) cur.firstStampedV
-        else curV + 1)
-    val fs = fsOf(spark, dir)
-    if (target.numFiles <= inlineMaxFiles(spark))
-      // small table: self-contained, exactly the pre-checkpoint behavior
-      writeManifestJson(fs, dir, header.copy(mode = "full",
-        inlineFiles = materializeFiles(spark, dir, toVersion)))
-    else
-      // large table: an O(1) POINTER commit — the file set IS version
-      // `toVersion`'s; replay jumps there, nothing is copied or listed
-      writeManifestJson(fs, dir, header.copy(mode = "restore",
-        restoreOf = toVersion))
-    curV + 1
-  }
 
   /** Bounded optimistic-concurrency retry for any commit call: a writer
     * that loses the manifest race ([[writeManifest]] probes-then-renames;
@@ -3739,11 +3560,9 @@ object VersionedTable {
         "in a row — contention this hot needs a single-writer queue", last)
   }
 
-  /** Version history, newest first: (version, op, files, rows) — pure
-    * header reads; the file lists are never materialized.
-    */
   /** The version ledger, newest first: (version, op, files, rows,
-    * raw commit-time epoch-millis — 0 for pre-timestamp manifests).
+    * raw commit-time epoch-millis — 0 for pre-timestamp manifests) — pure
+    * header reads; the file lists are never materialized.
     */
   def history(spark: SparkSession, dir: String): Seq[(Long, String, Int, Long, Long)] =
     versions(spark, dir).reverse.map { v =>
@@ -3871,24 +3690,6 @@ object VersionedTable {
 
   // ------------------------------------------------------------ vacuum
 
-  /** Retention: keep the newest `keepVersions` manifests, drop older ones,
-    * then delete every file under `data/` no surviving manifest references
-    * — including data dirs orphaned by crashed or race-losing commits.
-    * Returns the number of deleted data files. Deletion order (manifests
-    * first, then files) makes a crash mid-vacuum harmless: re-running
-    * converges, and no surviving manifest ever names a deleted file.
-    */
-  /** Time-based retention (Delta `VACUUM ... RETAIN n HOURS` semantics):
-    * keep every version whose ADJUSTED commit time ([[commitTimestamps]])
-    * falls within the last `hours`, always including the current version,
-    * and reclaim the rest. This is the operational form of retention —
-    * the SLA is "time travel back h hours", and commit COUNTS vary with
-    * write cadence while wall-clock retention doesn't. The adjusted
-    * sequence is strictly increasing, so the kept set is always a suffix
-    * of the version range and the count form of [[vacuum]] applies
-    * directly. Legacy pre-timestamp manifests adjust to tiny synthetic
-    * values and age out first — documented, not guessed.
-    */
   // ------------------------------------------------- stream-cursor pins
 
   private def cursorsDir(dir: String) = new Path(dir, "_cursors")
@@ -3986,6 +3787,17 @@ object VersionedTable {
     mine.nonEmpty
   }
 
+  /** Time-based retention (Delta `VACUUM ... RETAIN n HOURS` semantics):
+    * keep every version whose ADJUSTED commit time ([[commitTimestamps]])
+    * falls within the last `hours`, always including the current version,
+    * and reclaim the rest. This is the operational form of retention —
+    * the SLA is "time travel back h hours", and commit COUNTS vary with
+    * write cadence while wall-clock retention doesn't. The adjusted
+    * sequence is strictly increasing, so the kept set is always a suffix
+    * of the version range and the count form of [[vacuum]] applies
+    * directly. Legacy pre-timestamp manifests adjust to tiny synthetic
+    * values and age out first — documented, not guessed.
+    */
   def vacuumRetainHours(spark: SparkSession, dir: String, hours: Double,
                         force: Boolean = false): Int = {
     require(hours >= 0, "VersionedTable.vacuumRetainHours: negative retention")
@@ -3997,6 +3809,13 @@ object VersionedTable {
       force = force)
   }
 
+  /** Retention: keep the newest `keepVersions` manifests, drop older ones,
+    * then delete every file under `data/` no surviving manifest references
+    * — including data dirs orphaned by crashed or race-losing commits.
+    * Returns the number of deleted data files. Deletion order (manifests
+    * first, then files) makes a crash mid-vacuum harmless: re-running
+    * converges, and no surviving manifest ever names a deleted file.
+    */
   def vacuum(spark: SparkSession, dir: String, keepVersions: Int,
              force: Boolean = false): Int = {
     require(keepVersions >= 1, "VersionedTable.vacuum: must keep at least 1 version")

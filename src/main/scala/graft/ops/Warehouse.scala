@@ -177,10 +177,11 @@ object Warehouse {
     recoverRetired(fs, warehouseDir)
     val existed = fs.exists(dir)
     val before = if (existed) fs.listStatus(dir).map(_.getPath.getName).toSet else Set.empty[String]
-    val toInsert =
-      if (dataFiles(fs, dir).nonEmpty)
-        upsertNewRows(deduped, spark.read.parquet(warehouseDir), keys)
-      else deduped
+    val toInsert = dataFiles(fs, dir).headOption match {
+      case Some(file) =>
+        upsertNewRows(deduped, readParquetAs(spark, warehouseDir, file), keys)
+      case None => deduped
+    }
     toInsert.write.mode("append").parquet(warehouseDir)
     val added = fs.listStatus(dir).filterNot(st => before(st.getPath.getName)).toSeq
     val written = added.filter(st => st.isFile && isDataFile(st.getPath.getName))
@@ -214,6 +215,24 @@ object Warehouse {
     if (fs.exists(dir)) walk(dir) else Seq.empty
   }
 
+  /** Whether `dir` holds parquet data files — the one "the warehouse
+    * exists" rule: a pre-created directory with none reads like an absent
+    * one (Spark cannot infer a schema from it).
+    */
+  private[ops] def hasDataFiles(fs: org.apache.hadoop.fs.FileSystem,
+                                dir: org.apache.hadoop.fs.Path): Boolean =
+    dataFiles(fs, dir).nonEmpty
+
+  /** `dir` read under the Spark row schema stored in the footer of `file`,
+    * one of its data files — a driver-side footer read in place of the
+    * parquet schema-inference job. Files without that footer key (not
+    * written by Spark) are read with inference.
+    */
+  private def readParquetAs(spark: SparkSession, dir: String,
+                            file: org.apache.hadoop.fs.FileStatus): DataFrame =
+    FooterStats.sparkSchema(file.getPath, spark.sessionState.newHadoopConf())
+      .fold(spark.read.parquet(dir))(spark.read.schema(_).parquet(dir))
+
   /** Rows in the parquet data files under `dir`, summed from their footers:
     * the row count of a directory a write just produced, with no Spark job.
     */
@@ -240,7 +259,7 @@ object Warehouse {
     recoverRetired(fs, warehouseDir)
     val target = new org.apache.hadoop.fs.Path(warehouseDir)
     val merged =
-      if (fs.exists(target))
+      if (hasDataFiles(fs, target))
         spark.read.parquet(warehouseDir).join(deduped.select(keys.map(col): _*),
           keys, "left_anti").unionByName(deduped)
       else deduped
@@ -709,8 +728,7 @@ object Warehouse {
     val fs = new org.apache.hadoop.fs.Path(warehouseDir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     recoverRetired(fs, warehouseDir)
-    val target = new org.apache.hadoop.fs.Path(warehouseDir)
-    val exists = fs.exists(target)
+    val exists = hasDataFiles(fs, new org.apache.hadoop.fs.Path(warehouseDir))
     // empty changelog against an existing warehouse: honor the documented
     // no-op — without this check the full-outer join passes every row
     // through and the swap rewrites the whole table for zero changes.

@@ -547,6 +547,18 @@ class DedupSpec extends SparkSuite {
     }
   }
 
+  test("incrementalDedupRound: a pre-created signature dir with no data files is a first round") {
+    val dir = java.nio.file.Files.createTempDirectory("sigempty").toString + "/sigs"
+    new java.io.File(dir).mkdirs()
+    new java.io.File(dir, "_SUCCESS").createNewFile()
+    val pairs = DedupOps.incrementalDedupRound(docs, dir, "doc_id", "text",
+      n = 3, k = 64, bands = 8, threshold = 0.7)
+    assert(pairs.collect().toSet == DedupOps.minhashLshPairsFromSignatures(
+      DedupOps.minhashSignatures(docs, "doc_id", "text", 3, 64), 64, 8, 0.7)
+      .collect().toSet)
+    assert(spark.read.parquet(dir).count() == docs.count())
+  }
+
   test("incrementalDedupRound: signature-table lifecycle, replay appends nothing") {
     val dir = java.nio.file.Files.createTempDirectory("siglife").toString + "/sigs"
     val half = docs.count() / 2

@@ -6,10 +6,11 @@ import scala.jdk.CollectionConverters._
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Keeps one session builder, one install path and a fixed set of
-  * settings: a second `SparkSession.builder` under `src/main`, a
-  * per-query `GraftFunctions.register` call in `SparkEntry`, or a
-  * settings key outside the allowlist fails here.
+/** Keeps one session builder, one install path, one commit skeleton and
+  * a fixed set of settings: a second `SparkSession.builder` under
+  * `src/main`, a per-query `GraftFunctions.register` call in `SparkEntry`,
+  * a [[graft.ops.VersionedTable]] commit that reads its own head or writes
+  * its own manifest, or a settings key outside the allowlist fails here.
   */
 class SessionDriftSpec extends AnyFunSuite {
 
@@ -51,6 +52,24 @@ class SessionDriftSpec extends AnyFunSuite {
     "spark.graft.vtable.cursorStaleHours", "spark.graft.mv.rewrite",
     // Bench
     "SPARK_GRAFT_QUERIES", "SPARK_GRAFT_PER_QUERY_GC")
+
+  test("VersionedTable commits share one skeleton: withHead, ManifestDelta, publish") {
+    val src = Files.readString(root.resolve("graft/ops/VersionedTable.scala"))
+      .split("\n").toSeq
+    // the def a line sits in: the nearest `def` at or above it
+    val defLine = """^\s*(?:private(?:\[\w+\])?\s+)?def\s+(\w+)""".r.unanchored
+    val enclosing = src.scanLeft("") {
+      case (_, defLine(name)) => name
+      case (d, _) => d
+    }.tail
+    def callers(call: String): Seq[String] = src.indices
+      .filter(i => src(i).contains(call) && !src(i).contains(s"def $call"))
+      .map(enclosing)
+    assert(!src.exists(_.contains("publishCommit")))
+    assert(callers("currentVersion(spark, dir).getOrElse(") == Seq("withHead"))
+    assert(callers("mineRanges(").size == 1)
+    assert(callers("writeManifestJson(").toSet == Set("publish", "restore"))
+  }
 
   test("src/main reads exactly the allowlisted settings keys") {
     // a key built by interpolation leaves its prefix here, which fails too

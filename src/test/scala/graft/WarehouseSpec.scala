@@ -92,14 +92,35 @@ class WarehouseSpec extends SparkSuite {
   private def listing(dir: String): Set[String] =
     Option(new java.io.File(dir).list()).map(_.toSet).getOrElse(Set.empty)
 
+  /** A target directory that exists but holds no parquet data file. */
+  private def preCreated(prefix: String): String = {
+    val dir = Files.createTempDirectory(prefix).toString + "/t"
+    new java.io.File(dir).mkdirs()
+    new java.io.File(dir, "_SUCCESS").createNewFile()
+    dir
+  }
+
   test("upsertIntoParquet: a pre-created target with no parquet data files takes the batch") {
-    val wh = Files.createTempDirectory("precreated").toString + "/t"
-    new java.io.File(wh).mkdirs()
-    new java.io.File(wh, "_SUCCESS").createNewFile()
+    val wh = preCreated("precreated")
     val batch = Seq((1, "b"), (1, "a"), (2, "c")).toDF("k", "v")
     assert(Warehouse.upsertIntoParquet(batch, wh, Seq("k"), Seq($"v")) == 2)
     assert(spark.read.parquet(wh).as[(Int, String)].collect().toMap == Map(1 -> "a", 2 -> "c"))
     assert(Warehouse.upsertIntoParquet(batch, wh, Seq("k"), Seq($"v")) == 0)
+  }
+
+  test("mergeReplaceParquet: a pre-created target with no parquet data files takes the batch") {
+    val wh = preCreated("mrprecreated")
+    val batch = Seq((1, "b"), (1, "a"), (2, "c")).toDF("k", "v")
+    assert(Warehouse.mergeReplaceParquet(batch, wh, Seq("k"), Seq($"v")) == 2)
+    assert(spark.read.parquet(wh).as[(Int, String)].collect().toMap == Map(1 -> "a", 2 -> "c"))
+  }
+
+  test("applyChangesParquet: a pre-created target with no parquet data files is created from the inserts") {
+    val wh = preCreated("acprecreated")
+    val changes = Seq((1, "a", false), (2, "b", false), (3, "x", true)).toDF("k", "v", "del")
+    assert(Warehouse.applyChangesParquet(changes, wh, Seq("k"), Seq($"v"), $"del",
+      payloadCols = Seq("v")) == 2)
+    assert(spark.read.parquet(wh).as[(Int, String)].collect().toMap == Map(1 -> "a", 2 -> "b"))
   }
 
   test("upsertIntoParquet: an empty batch writes nothing, whatever the target") {
@@ -135,7 +156,7 @@ class WarehouseSpec extends SparkSuite {
     assert(spark.read.parquet(wh).count() == 150)
   }
 
-  test("upsertIntoParquet: a load into an existing warehouse runs <= 4 jobs") {
+  test("upsertIntoParquet: a load into an existing warehouse runs <= 3 jobs") {
     val root = Files.createTempDirectory("loadjobs").toString
     val wh = root + "/t"
     Warehouse.upsertIntoParquet((0 until 500).map(i => (i, s"a$i")).toDF("k", "v"),
@@ -147,7 +168,7 @@ class WarehouseSpec extends SparkSuite {
       n = Warehouse.upsertIntoParquet(incoming, wh, Seq("k"), Seq($"v"))
     }
     assert(n == 250)
-    assert(jobs <= 4, s"load ran $jobs jobs, want <= 4 (schema, dedup map, key broadcast, write)")
+    assert(jobs <= 3, s"load ran $jobs jobs, want <= 3 (dedup map, key broadcast, write)")
     assert(spark.read.parquet(wh).count() == 750)
   }
 
