@@ -24,9 +24,11 @@ import graft.ops.{GraftCatalog, VersionedTable => VT}
   * COLUMNS/RENAME COLUMN/DROP COLUMN`, `DELETE FROM graft.t WHERE …`,
   * `TRUNCATE`, and `VERSION/TIMESTAMP AS OF` time travel — no
   * `graft_vtable('…')` TVF spelling, no front-parsed statement heads.
-  * The front-parser ([[graft.sql.GraftDml]]) remains only for verbs
-  * Spark's grammar cannot route through a catalog (OPTIMIZE, VACUUM,
-  * RESTORE, MERGE/UPDATE pending row-level-operation support).
+  * `MERGE INTO graft.t` and `UPDATE graft.t` resolve the same way and
+  * [[graft.plans.VtableCatalogDml]] routes them to the versioned
+  * commits. The front-parser ([[graft.sql.GraftDml]]) remains only for
+  * verbs Spark's grammar cannot route through a catalog (OPTIMIZE,
+  * VACUUM, RESTORE).
   *
   * The catalog is the same name→dir map the TVF surface uses
   * ([[GraftCatalog]] — one JSON file, cross-process locked), so the two

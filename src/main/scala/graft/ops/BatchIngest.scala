@@ -83,12 +83,11 @@ object BatchIngest {
       java.nio.file.StandardCopyOption.ATOMIC_MOVE)
   }
 
-  /** Current warehouse high-water mark over `keyCol` (−1 when absent). */
+  /** Current warehouse high-water mark over `keyCol` (−1 when the
+    * warehouse holds no data files). */
   def currentHwm(spark: SparkSession, warehouseDir: String, keyCol: String): Long = {
-    val exists = new org.apache.hadoop.fs.Path(warehouseDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      .exists(new org.apache.hadoop.fs.Path(warehouseDir))
-    if (!exists) -1L
+    val dir = new org.apache.hadoop.fs.Path(warehouseDir)
+    if (!Warehouse.hasDataFiles(dir.getFileSystem(spark.sparkContext.hadoopConfiguration), dir)) -1L
     else spark.read.parquet(warehouseDir)
       .agg(coalesce(max(col(keyCol)), lit(-1L))).head().getLong(0)
   }

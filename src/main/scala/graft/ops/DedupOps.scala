@@ -211,17 +211,6 @@ object DedupOps {
     pairs
   }
 
-  /** SimHash near-dup pairs via Manku-et-al. block COMBINATIONS: split the
-    * 64-bit hash into `nBlocks > maxDistance` slices and key on every
-    * (nBlocks − maxDistance)-subset's concatenated values. A pair within
-    * `maxDistance` differing bits touches at most `maxDistance` slices, so
-    * at least one subset matches on BOTH sides in full — recall guaranteed
-    * — while each key carries (nBlocks−d)·(64/nBlocks) bits instead of
-    * the single-slice scheme's 64/(d+1): e.g. d=8, B=11 keys on ~17 bits
-    * vs 7, shrinking bucket collision quadratics by ~2^10 at the price of
-    * a C(B, d) per-row explode. Use [[simhashPairs]] when corpora are
-    * small or d ≤ 3; this variant when buckets, not rows, dominate.
-    */
   /** Corpus-size cap for [[simhashPairsAuto]]'s single-slice tier: the
     * single-slice scheme's blocking key carries only 64/(d+1) bits, so
     * bucket populations — and the candidate quadratic n²/2^(64/(d+1)) —
@@ -250,6 +239,17 @@ object DedupOps {
       simhashPairsCombinatorial(df, idCol, textCol, maxDistance,
         nBlocks = math.min(64, maxDistance + 3))
 
+  /** SimHash near-dup pairs via Manku-et-al. block COMBINATIONS: split the
+    * 64-bit hash into `nBlocks > maxDistance` slices and key on every
+    * (nBlocks − maxDistance)-subset's concatenated values. A pair within
+    * `maxDistance` differing bits touches at most `maxDistance` slices, so
+    * at least one subset matches on BOTH sides in full — recall guaranteed
+    * — while each key carries (nBlocks−d)·(64/nBlocks) bits instead of
+    * the single-slice scheme's 64/(d+1): e.g. d=8, B=11 keys on ~17 bits
+    * vs 7, shrinking bucket collision quadratics by ~2^10 at the price of
+    * a C(B, d) per-row explode. Use [[simhashPairs]] when corpora are
+    * small or d ≤ 3; this variant when buckets, not rows, dominate.
+    */
   def simhashPairsCombinatorial(df: DataFrame, idCol: String, textCol: String,
                                 maxDistance: Int, nBlocks: Int): DataFrame = {
     require(maxDistance >= 0 && nBlocks > maxDistance && nBlocks <= 64,

@@ -1,6 +1,7 @@
 package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
@@ -1834,16 +1835,50 @@ object VersionedTable {
     }
   }
 
-  /** The files of `m` that could hold a row matching `cond`: pruned by
-    * the manifest stats of its minable conjuncts ([[extractRanges]],
-    * IN-sets); every file when none is minable — correct, just unpruned.
+  /** The files of `m` that could hold a row matching `cond`: `cond`
+    * [[resolved]] against the table's schema, then pruned through
+    * [[filesMatching]]; every file when nothing in it is minable —
+    * correct, just unpruned.
     */
   private def candidates(spark: SparkSession, dir: String, m: ManifestMeta,
-                         cond: Column): Seq[FileEntry] = {
-    val ranges = extractRanges(cond)
-    val inSets = org.apache.spark.sql.GraftShim.mineInSets(cond)
-    if (ranges.isEmpty && inSets.isEmpty) filesOf(spark, dir, m)
-    else pruneEntries(spark, dir, m, ranges, inSets)
+                         cond: Column): Seq[FileEntry] =
+    resolved(spark, StructType.fromDDL(m.schemaDdl), cond)
+      .flatMap(filesMatching(spark, dir, _, m))
+      .getOrElse(filesOf(spark, dir, m))
+
+  /** `cond` resolved against `schema` and normalized to the shape the
+    * optimizer hands [[graft.plans.VtableSkipping]]: replaceable forms
+    * and `With` [[inlined]], constants folded, and casts in comparisons
+    * moved off the column onto the literal. None when `cond` does not
+    * resolve or fold here; the caller then prunes nothing and its own
+    * filter reports the error.
+    */
+  private def resolved(spark: SparkSession, schema: StructType,
+                       cond: Column): Option[Expression] = {
+    import org.apache.spark.sql.catalyst.plans.logical.Filter
+    try emptyDF(spark, schema).filter(cond).queryExecution.analyzed match {
+      case f: Filter =>
+        org.apache.spark.sql.catalyst.optimizer.UnwrapCastInBinaryComparison(
+            f.copy(condition = inlined(f.condition))) match {
+          case Filter(c, _) => Some(c)
+          case _ => None
+        }
+      case _ => None
+    } catch { case scala.util.control.NonFatal(_) => None }
+  }
+
+  /** `e` with `BETWEEN` and the other replaceable forms replaced, `With`
+    * inlined (by-name references cannot re-resolve its common-expression
+    * refs) and constants folded (file pruning reads literals).
+    */
+  private[graft] def inlined(e: Expression): Expression = {
+    import org.apache.spark.sql.catalyst.expressions.{CommonExpressionRef, Literal, RuntimeReplaceable, With}
+    e.transformUp { case r: RuntimeReplaceable => r.replacement }
+      .transformUp { case With(child, defs) =>
+        val byId = defs.map(d => d.id -> d.child).toMap
+        child.transformUp { case r: CommonExpressionRef if byId.contains(r.id) => byId(r.id) }
+      }
+      .transformUp { case c if c.foldable && !c.isInstanceOf[Literal] => Literal.create(c.eval(), c.dataType) }
   }
 
   /** Above this many interval-surviving files, bloom refinement is skipped:
@@ -2905,6 +2940,66 @@ object VersionedTable {
     (pruneEntries(spark, dir, m, ranges, inSets).map(_.path), m)
   }
 
+  /** The one file-pruning decision of both routes: the files of `m` that
+    * could hold a row matching the resolved predicate `cond`, or None
+    * when [[mine]] finds nothing in it (`m` is then never read). Serves
+    * [[candidates]] (the DataFrame and DML route, after [[resolved]]) and
+    * [[graft.plans.VtableSkipping]] (the SQL route, whose optimized
+    * condition already has that shape).
+    */
+  private[graft] def filesMatching(spark: SparkSession, dir: String, cond: Expression,
+                                   m: => ManifestMeta): Option[Seq[FileEntry]] = {
+    val (ranges, inSets) = mine(cond)
+    if (ranges.isEmpty && inSets.isEmpty) None
+    else Some(pruneEntries(spark, dir, m, ranges, inSets))
+  }
+
+  /** The top-level AND conjuncts of `e`. */
+  private[graft] def conjuncts(e: Expression): Seq[Expression] = e match {
+    case org.apache.spark.sql.catalyst.expressions.And(l, r) => conjuncts(l) ++ conjuncts(r)
+    case other => Seq(other)
+  }
+
+  /** The one predicate miner: the top-level AND conjuncts of a resolved
+    * predicate that manifest stats can refute. `attr <op> literal`, with
+    * the literal on either side, gives an interval `(name, lo, hi)` (`None`
+    * = unbounded; strict bounds widen to closed); `attr IN (literals)`
+    * and its `InSet` form give `(name, values)`. Anything else mines
+    * nothing: an OR is never split, a cast or function on the column side
+    * is opaque, and `EqualNullSafe` never mines (`a <=> NULL` selects the
+    * null rows interval pruning drops). Every mined predicate is implied
+    * by its conjunct and callers re-apply the exact predicate, so
+    * correctness never rests on the miner.
+    */
+  private def mine(cond: Expression)
+      : (Seq[(String, Option[Column], Option[Column])], Seq[(String, Seq[Column])]) = {
+    import org.apache.spark.sql.catalyst.expressions.{AttributeReference, EqualTo, GreaterThan, GreaterThanOrEqual, In, InSet, LessThan, LessThanOrEqual, Literal}
+    val c: Literal => Column = org.apache.spark.sql.GraftShim.column(_)
+    val ranges = conjuncts(cond).flatMap {
+      case GreaterThanOrEqual(a: AttributeReference, l: Literal) => Some((a.name, Some(c(l)), None))
+      case GreaterThan(a: AttributeReference, l: Literal)        => Some((a.name, Some(c(l)), None))
+      case LessThanOrEqual(a: AttributeReference, l: Literal)    => Some((a.name, None, Some(c(l))))
+      case LessThan(a: AttributeReference, l: Literal)           => Some((a.name, None, Some(c(l))))
+      case EqualTo(a: AttributeReference, l: Literal)            => Some((a.name, Some(c(l)), Some(c(l))))
+      // literal on the LEFT flips the direction
+      case GreaterThanOrEqual(l: Literal, a: AttributeReference) => Some((a.name, None, Some(c(l))))
+      case GreaterThan(l: Literal, a: AttributeReference)        => Some((a.name, None, Some(c(l))))
+      case LessThanOrEqual(l: Literal, a: AttributeReference)    => Some((a.name, Some(c(l)), None))
+      case LessThan(l: Literal, a: AttributeReference)           => Some((a.name, Some(c(l)), None))
+      case EqualTo(l: Literal, a: AttributeReference)            => Some((a.name, Some(c(l)), Some(c(l))))
+      case _ => None
+    }
+    val inSets = conjuncts(cond).flatMap {
+      case In(a: AttributeReference, vs) if vs.nonEmpty && vs.forall(_.isInstanceOf[Literal]) =>
+        Some((a.name, vs.map(v => c(v.asInstanceOf[Literal]))))
+      // InSet holds internal values, hence `Literal(v, type)`
+      case InSet(a: AttributeReference, hset) if hset.nonEmpty =>
+        Some((a.name, hset.toSeq.map(v => c(Literal(v, a.dataType)))))
+      case _ => None
+    }
+    (ranges, inSets)
+  }
+
   /** [[pruneCore]] over the manifest `m`, keeping the surviving ENTRIES
     * (path + rows + stats) — what DML rewrites need for their removes
     * accounting.
@@ -3051,17 +3146,15 @@ object VersionedTable {
   }
 
   /** Predicate-driven data skipping: take an ARBITRARY boolean filter
-    * Column, mine its top-level conjuncts for `col <op> literal`
-    * comparisons on stats columns, prune files by the implied intervals,
-    * and apply the FULL predicate to the survivors. The UX of an
-    * integrated scan — `readWhere(dir, $"k" > 5 && $"cat" === "x" &&
-    * someUdf($"s"))` skips files on `k` and `cat` while the UDF conjunct
-    * simply prunes nothing — with correctness independent of extraction:
-    * every extracted range is implied by the conjunct it came from, and
-    * the exact filter always re-applies. Disjunctions (OR) at the top are
-    * never split, so they never prune — conservative by construction.
-    * Strict `<`/`>` widen to closed interval tests (a file whose max
-    * equals the bound may still be opened; rows die in the filter).
+    * Column, prune files by the intervals and IN-sets the one miner
+    * ([[mine]], through [[candidates]] — the same decision the SQL
+    * route's [[graft.plans.VtableSkipping]] makes) finds in it, and apply
+    * the FULL predicate to the survivors. The UX of an integrated scan —
+    * `readWhere(dir, $"k" > 5 && $"cat" === "x" && someUdf($"s"))` skips
+    * files on `k` and `cat` while the UDF conjunct simply prunes nothing —
+    * with correctness independent of extraction: every mined interval is
+    * implied by the conjunct it came from, and the exact filter always
+    * re-applies.
     */
   def readWhere(spark: SparkSession, dir: String, cond: Column,
                 asOf: Option[Long] = None): DataFrame = {
@@ -3072,14 +3165,14 @@ object VersionedTable {
       .filter(cond)
   }
 
-  /** The conjunct miner behind [[readWhere]] — delegates to
-    * [[org.apache.spark.sql.GraftShim.mineRanges]] (Spark 4 predicates are
-    * ColumnNode trees whose `private[sql]` API only the shim package sees).
-    * Package-visible so specs can pin exactly what prunes.
+  /** Spec window into [[mine]]: the `(ranges, inSets)` that `cond` mines
+    * once [[resolved]] against the current schema of `dir`.
     */
-  private[graft] def extractRanges(
-      cond: Column): Seq[(String, Option[Column], Option[Column])] =
-    org.apache.spark.sql.GraftShim.mineRanges(cond)
+  private[graft] def extractRanges(spark: SparkSession, dir: String, cond: Column)
+      : (Seq[(String, Option[Column], Option[Column])], Seq[(String, Seq[Column])]) = {
+    val m = readMeta(spark, dir, currentVersion(spark, dir).get)
+    resolved(spark, StructType.fromDDL(m.schemaDdl), cond).map(mine).getOrElse((Nil, Nil))
+  }
 
   /** Require `m2`'s schema to be an append-only PHYSICAL evolution of
     * `m1`'s — same physical names and types, position for position, with

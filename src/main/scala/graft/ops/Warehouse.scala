@@ -873,8 +873,9 @@ object Warehouse {
     // BEFORE classification, or the rerun would misread it as a CREATE
     // and the swap below would delete the last copy of its rows
     touched.foreach(vals => recoverRetired(fs, s"$warehouseDir/${relPath(vals)}"))
+    // a leaf without data files (absent or pre-created) is a CREATE
     val (existingT, createdT) = touched.partition(vals =>
-      fs.exists(new org.apache.hadoop.fs.Path(s"$warehouseDir/${relPath(vals)}")))
+      hasDataFiles(fs, new org.apache.hadoop.fs.Path(s"$warehouseDir/${relPath(vals)}")))
 
     import org.apache.spark.sql.types.{StringType, StructField, StructType}
     val partFields = partCols.map(StructField(_, StringType, nullable = true))
@@ -887,7 +888,7 @@ object Warehouse {
       else {
         // walk one partCols-deep chain of `c=…` dirs to a leaf's footer
         def leafOf(dir: org.apache.hadoop.fs.Path, level: Int): Option[org.apache.hadoop.fs.Path] =
-          if (level == partCols.length) Some(dir)
+          if (level == partCols.length) Some(dir).filter(hasDataFiles(fs, _))
           else if (!fs.exists(dir)) None
           else fs.listStatus(dir)
             .filter(st => st.isDirectory &&

@@ -2,7 +2,7 @@ package graft.plans
 
 import org.apache.spark.sql.{GraftShim, Row, SparkSession}
 import org.apache.spark.sql.catalyst.analysis.{EliminateSubqueryAliases, UnresolvedAttribute}
-import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeReference, Cast, CommonExpressionRef, EqualTo, Expression, Literal, RuntimeReplaceable, With}
+import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeReference, Cast, EqualTo, Expression}
 import org.apache.spark.sql.catalyst.plans.QueryPlan
 import org.apache.spark.sql.catalyst.plans.logical._
 import org.apache.spark.sql.catalyst.rules.Rule
@@ -83,9 +83,10 @@ object VtableCatalogDml extends Rule[LogicalPlan] {
 
   /** Resolved attribute refs → by-name unresolved refs, so the commit can
     * re-resolve them against ITS OWN read of the table (the same contract
-    * as the SQL-string front door, which the range miner understands).
+    * as the SQL-string front door); `With` is inlined first, since its
+    * common-expression refs cannot re-resolve by name.
     */
-  private def unbind(e: Expression, what: String): Expression = inlined(e).transform {
+  private def unbind(e: Expression, what: String): Expression = VersionedTable.inlined(e).transform {
     case a: AttributeReference => UnresolvedAttribute.quoted(a.name)
     case s: org.apache.spark.sql.catalyst.expressions.SubqueryExpression =>
       throw new UnsupportedOperationException(
@@ -93,28 +94,11 @@ object VtableCatalogDml extends Rule[LogicalPlan] {
           "materialize the subquery into the condition first")
   }
 
-  /** The expression as the optimizer route sees it: `BETWEEN` and other
-    * replaceable forms replaced, `With` inlined (by-name refs cannot
-    * re-resolve it) and constants folded (file pruning reads literals). */
-  private def inlined(e: Expression): Expression =
-    e.transformUp { case r: RuntimeReplaceable => r.replacement }
-      .transformUp { case With(child, defs) =>
-        val byId = defs.map(d => d.id -> d.child).toMap
-        child.transformUp { case r: CommonExpressionRef if byId.contains(r.id) => byId(r.id) }
-      }
-      .transformUp { case c if c.foldable && !c.isInstanceOf[Literal] => Literal.create(c.eval(), c.dataType) }
-
-  private def splitConj(e: Expression): Seq[Expression] = e match {
-    case org.apache.spark.sql.catalyst.expressions.And(l, r) =>
-      splitConj(l) ++ splitConj(r)
-    case x => Seq(x)
-  }
-
   private def rewriteMerge(m: MergeIntoTable, t: GraftTable): LogicalPlan = {
     requireWritable(t, "MERGE INTO")
     val tOut = EliminateSubqueryAliases(m.targetTable).outputSet
     val sOut = m.sourceTable.outputSet
-    val keys = splitConj(m.mergeCondition).map {
+    val keys = VersionedTable.conjuncts(m.mergeCondition).map {
       case EqualTo(a: AttributeReference, b: AttributeReference)
           if tOut.contains(a) && sOut.contains(b) =>
         if (!a.name.equalsIgnoreCase(b.name))

@@ -1,8 +1,6 @@
 package graft.plans
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.GraftShim
-import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, Count, Max, Min}
@@ -24,13 +22,15 @@ import graft.ops.VersionedTable
   * out with its (dir, pinned version). This rule fires on
   * `Filter(cond, taggedRelation)` — the shape the main optimizer batches
   * normalize to (predicates pushed through projects, adjacent filters
-  * combined) — mines the condition's top-level AND conjuncts for
-  * `attr <op> literal` ranges and `attr IN (literals)` sets (the same
-  * conservative contract as [[graft.ops.VersionedTable.readWhere]]: ORs
-  * never split, casts/UDFs mine nothing, strict bounds widen to closed),
-  * asks the manifest which files could hold a qualifying row (zone-map
-  * intervals + bloom sidecar refinement), and swaps the relation's
-  * [[InMemoryFileIndex]] for one listing only the survivors.
+  * combined) — hands the condition to
+  * [[graft.ops.VersionedTable.filesMatching]], the one pruning decision
+  * [[graft.ops.VersionedTable.readWhere]] and the DML commits also take
+  * (one miner: `attr <op> literal` ranges and `attr IN (literals)` sets;
+  * ORs never split, casts/UDFs on the column mine nothing, strict bounds
+  * widen to closed), which asks the manifest which files could hold a
+  * qualifying row (zone-map intervals + bloom sidecar refinement), and
+  * swaps the relation's [[InMemoryFileIndex]] for one listing only the
+  * survivors.
   *
   * Correctness is independent of extraction, twice over: every mined
   * predicate is implied by the conjunct it came from, and the Filter
@@ -104,87 +104,40 @@ object VtableSkipping extends Rule[LogicalPlan] {
   private def pruneRelation(cond: Expression,
                             lr: LogicalRelation): Option[LogicalPlan] = {
     val (dir, version) = lr.getTagValue(VersionedTable.pruneTag).get
+    val fsRel = lr.relation.asInstanceOf[HadoopFsRelation]
+    val spark = fsRel.sparkSession
     // synchronized: DataFrames share relation nodes, and concurrent
     // optimizations of two queries over the same base would otherwise
     // interleave this get-then-set (the tags map is a plain HashMap)
-    def memoNoOp(): Unit = lr.synchronized {
+    def memoNoOp(): Option[LogicalPlan] = lr.synchronized {
       lr.setTagValue(prunedTag,
         lr.getTagValue(prunedTag).getOrElse(Set.empty) + cond.semanticHash())
+      None
     }
-    val (ranges, inSets) = mine(cond)
-    if (ranges.isEmpty && inSets.isEmpty) {
+    VersionedTable.filesMatching(spark, dir, cond,
+        VersionedTable.readMeta(spark, dir, version)) match {
       // nothing minable: the decision cannot change for THIS predicate,
       // so memo it — the fixed-point batch (and any re-execution of the
       // same DataFrame) must not re-walk the conjuncts every pass
-      memoNoOp()
-      None
-    } else {
-      val fsRel = lr.relation.asInstanceOf[HadoopFsRelation]
-      val spark = fsRel.sparkSession
-      val survivors =
-        VersionedTable.pruneForSpec(spark, dir, ranges, inSets, Some(version))
-      val total = fsRel.location.inputFiles.length
-      if (survivors.size >= total) {
-        // no-op prune: memo THIS predicate's decision, or every
-        // re-execution repeats the manifest read + bloom refinement (up
-        // to 256 file opens) to re-derive a known nothing
+      case None => memoNoOp()
+      // no-op prune: memo THIS predicate's decision, or every
+      // re-execution repeats the manifest read + bloom refinement (up
+      // to 256 file opens) to re-derive a known nothing
+      case Some(survivors) if survivors.size >= fsRel.location.inputFiles.length =>
         memoNoOp()
-        None
-      } else if (survivors.isEmpty)
-        // no file can hold a qualifying row — the relation collapses to
-        // an empty local relation with the SAME output attributes
+      // no file can hold a qualifying row — the relation collapses to
+      // an empty local relation with the SAME output attributes
+      case Some(survivors) if survivors.isEmpty =>
         Some(LocalRelation(lr.output, Seq.empty, isStreaming = false))
-      else {
-        val paths = survivors.map(p => new Path(VersionedTable.dataPath(dir, p)))
+      case Some(survivors) =>
+        val paths = survivors.map(f => new Path(VersionedTable.dataPath(dir, f.path)))
         val index = new InMemoryFileIndex(spark, paths, fsRel.options,
           Some(fsRel.dataSchema), FileStatusCache.getOrCreate(spark),
           None, None)
         val pruned = lr.copy(relation = fsRel.copy(location = index)(spark))
         pruned.setTagValue(rewrittenTag, true)
         Some(pruned)
-      }
     }
-  }
-
-  /** Conjunct miner over RESOLVED Catalyst predicates — the optimizer-side
-    * sibling of [[org.apache.spark.sql.GraftShim.mineRanges]] (which walks
-    * unresolved ColumnNode trees). By this point constant folding has run,
-    * so literal sides are [[Literal]]s; `In` may have become [[InSet]]
-    * (whose values are internal, hence `Literal(v, dt)` not
-    * `Literal.apply`). Only bare `AttributeReference <op> Literal` shapes
-    * mine — a Cast on the attribute side mines nothing (conservative), and
-    * `EqualNullSafe` is deliberately excluded: `a <=> NULL` SELECTS null
-    * rows, which interval pruning would wrongly drop.
-    */
-  private[graft] def mine(cond: Expression)
-      : (Seq[(String, Option[Column], Option[Column])], Seq[(String, Seq[Column])]) = {
-    def conjuncts(e: Expression): Seq[Expression] = e match {
-      case And(l, r) => conjuncts(l) ++ conjuncts(r)
-      case other => Seq(other)
-    }
-    def c(l: Literal): Column = GraftShim.column(l)
-    val ranges = conjuncts(cond).flatMap {
-      case GreaterThanOrEqual(a: AttributeReference, l: Literal) => Some((a.name, Some(c(l)), None))
-      case GreaterThan(a: AttributeReference, l: Literal)        => Some((a.name, Some(c(l)), None))
-      case LessThanOrEqual(a: AttributeReference, l: Literal)    => Some((a.name, None, Some(c(l))))
-      case LessThan(a: AttributeReference, l: Literal)           => Some((a.name, None, Some(c(l))))
-      case EqualTo(a: AttributeReference, l: Literal)            => Some((a.name, Some(c(l)), Some(c(l))))
-      // literal on the LEFT flips the direction
-      case GreaterThanOrEqual(l: Literal, a: AttributeReference) => Some((a.name, None, Some(c(l))))
-      case GreaterThan(l: Literal, a: AttributeReference)        => Some((a.name, None, Some(c(l))))
-      case LessThanOrEqual(l: Literal, a: AttributeReference)    => Some((a.name, Some(c(l)), None))
-      case LessThan(l: Literal, a: AttributeReference)           => Some((a.name, Some(c(l)), None))
-      case EqualTo(l: Literal, a: AttributeReference)            => Some((a.name, Some(c(l)), Some(c(l))))
-      case _ => None
-    }
-    val ins = conjuncts(cond).flatMap {
-      case In(a: AttributeReference, vs) if vs.nonEmpty && vs.forall(_.isInstanceOf[Literal]) =>
-        Some((a.name, vs.map(v => c(v.asInstanceOf[Literal]))))
-      case InSet(a: AttributeReference, hset) if hset.nonEmpty =>
-        Some((a.name, hset.toSeq.map(v => GraftShim.column(Literal(v, a.dataType)))))
-      case _ => None
-    }
-    (ranges, ins)
   }
 }
 

@@ -168,4 +168,14 @@ class BatchIngestSpec extends SparkSuite {
     // second run: nothing new, still idempotent
     assert(BatchIngest.ingest(spark, pagesDir, whDir, ckpt, "k", Seq(col("payload"))) == 0L)
   }
+
+  test("fresh run into a pre-created warehouse dir with no data files ingests everything") {
+    val (pagesDir, whDir, ckpt) = freshDirs("precreated")
+    mkPages(pagesDir)
+    new java.io.File(whDir).mkdirs()
+    new java.io.File(whDir, "_SUCCESS").createNewFile()
+    assert(BatchIngest.currentHwm(spark, whDir, "k") == -1L)
+    assert(BatchIngest.ingest(spark, pagesDir, whDir, ckpt, "k", Seq(col("payload"))) == 100L)
+    assert(spark.read.parquet(whDir).count() == 100L)
+  }
 }

@@ -6,11 +6,13 @@ import scala.jdk.CollectionConverters._
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Keeps one session builder, one install path, one commit skeleton and
-  * a fixed set of settings: a second `SparkSession.builder` under
-  * `src/main`, a per-query `GraftFunctions.register` call in `SparkEntry`,
-  * a [[graft.ops.VersionedTable]] commit that reads its own head or writes
-  * its own manifest, or a settings key outside the allowlist fails here.
+/** Keeps one session builder, one install path, one commit skeleton, one
+  * predicate miner and a fixed set of settings: a second
+  * `SparkSession.builder` under `src/main`, a per-query
+  * `GraftFunctions.register` call in `SparkEntry`, a
+  * [[graft.ops.VersionedTable]] commit that reads its own head or writes
+  * its own manifest, a second predicate walk, or a settings key outside
+  * the allowlist fails here.
   */
 class SessionDriftSpec extends AnyFunSuite {
 
@@ -53,22 +55,45 @@ class SessionDriftSpec extends AnyFunSuite {
     // Bench
     "SPARK_GRAFT_QUERIES", "SPARK_GRAFT_PER_QUERY_GC")
 
-  test("VersionedTable commits share one skeleton: withHead, ManifestDelta, publish") {
-    val src = Files.readString(root.resolve("graft/ops/VersionedTable.scala"))
-      .split("\n").toSeq
-    // the def a line sits in: the nearest `def` at or above it
+  /** For each line, the def it sits in: the nearest `def` at or above it. */
+  private def enclosingDefs(lines: Seq[String]): Seq[String] = {
     val defLine = """^\s*(?:private(?:\[\w+\])?\s+)?def\s+(\w+)""".r.unanchored
-    val enclosing = src.scanLeft("") {
+    lines.scanLeft("") {
       case (_, defLine(name)) => name
       case (d, _) => d
     }.tail
+  }
+
+  test("VersionedTable commits share one skeleton: withHead, ManifestDelta, publish") {
+    val src = Files.readString(root.resolve("graft/ops/VersionedTable.scala"))
+      .split("\n").toSeq
+    val enclosing = enclosingDefs(src)
     def callers(call: String): Seq[String] = src.indices
       .filter(i => src(i).contains(call) && !src(i).contains(s"def $call"))
       .map(enclosing)
     assert(!src.exists(_.contains("publishCommit")))
     assert(callers("currentVersion(spark, dir).getOrElse(") == Seq("withHead"))
-    assert(callers("mineRanges(").size == 1)
+    assert(callers("filesMatching(") == Seq("candidates"))
     assert(callers("writeManifestJson(").toSet == Set("publish", "restore"))
+  }
+
+  test("one predicate miner: no ColumnNode walk, Catalyst comparisons only in VersionedTable.mine") {
+    // the data-source Filter API reuses the names; files importing it are
+    // not Catalyst matches
+    val sourceFilters = """import org\.apache\.spark\.sql\.sources\.(_|\{[^}]*GreaterThanOrEqual)""".r
+    val comparison = """\b(GreaterThanOrEqual|InSet)\(""".r
+    val found = sources.flatMap { p =>
+      val text = Files.readString(p)
+      assert(!text.contains("internal.UnresolvedFunction"), s"$p walks ColumnNode trees")
+      if (sourceFilters.findFirstIn(text).isDefined) Nil
+      else {
+        val lines = text.split("\n").toSeq
+        val enclosing = enclosingDefs(lines)
+        lines.indices.filter(i => comparison.findFirstIn(lines(i)).isDefined)
+          .map(i => s"${root.relativize(p)}:${enclosing(i)}")
+      }
+    }.toSet
+    assert(found == Set("graft/ops/VersionedTable.scala:mine"), found)
   }
 
   test("src/main reads exactly the allowlisted settings keys") {

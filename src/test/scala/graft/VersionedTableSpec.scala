@@ -477,7 +477,7 @@ class VersionedTableSpec extends SparkSuite {
     val want = base.filter(cond).as[(Long, String, Double)].collect().toSet
     assert(got == want && got.nonEmpty)
     // the miner found exactly the three comparison conjuncts
-    val ranges = VT.extractRanges(cond)
+    val (ranges, _) = VT.extractRanges(spark, dir, cond)
     assert(ranges.map(_._1) == Seq("k", "k", "cat"), s"got ${ranges.map(_._1)}")
     assert(ranges(0)._2.isDefined && ranges(0)._3.isEmpty)  // k >= 100: lo only
     assert(ranges(1)._2.isEmpty && ranges(1)._3.isDefined)  // k < 220: hi only
@@ -487,18 +487,28 @@ class VersionedTableSpec extends SparkSuite {
       Seq(("k", lit(100L), lit(220L))))
     assert(m.files.size == 8 && survivors.size < 8)
     // flipped operand order and a literal-on-left strict compare
-    val flipped = VT.extractRanges(lit(500L) > $"k")
+    val (flipped, _) = VT.extractRanges(spark, dir, lit(500L) > $"k")
     assert(flipped == flipped.filter { case (n, lo, hi) =>
       n == "k" && lo.isEmpty && hi.isDefined })
+    // the literal side is folded before mining: a cast literal and a
+    // literal sum prune like a bare literal
+    for (c <- Seq($"k" >= lit(650).cast("bigint"), $"k" >= lit(640) + 5)) {
+      assert(VT.extractRanges(spark, dir, c)._1.map(_._1) == Seq("k"), s"$c")
+      assert(VT.readWhere(spark, dir, c).inputFiles.length < 8, s"$c pruned nothing")
+      assert(VT.readWhere(spark, dir, c).count() == base.filter(c).count())
+    }
+    // null-safe equality and arithmetic on the column never mine
+    assert(VT.extractRanges(spark, dir, $"k" <=> 5L) == ((Nil, Nil)))
+    assert(VT.extractRanges(spark, dir, $"k" + 1 > 5L) == ((Nil, Nil)))
     // an OR is never split — nothing extracted, nothing pruned, still exact
     val orCond = $"k" < 10L || $"cat" === "7"
-    assert(VT.extractRanges(orCond).isEmpty)
+    assert(VT.extractRanges(spark, dir, orCond)._1.isEmpty)
     assert(VT.readWhere(spark, dir, orCond).count() ==
       base.filter(orCond).count())
     // IN-list pruning (the DPP shape): two far-apart point lookups open
     // only their two files; result exact
     val inCond = $"k".isin(5L, 700L) && length($"cat") === 1
-    val mined = org.apache.spark.sql.GraftShim.mineInSets(inCond)
+    val (_, mined) = VT.extractRanges(spark, dir, inCond)
     assert(mined.map(_._1) == Seq("k") && mined.head._2.size == 2)
     val gotIn = VT.readWhere(spark, dir, inCond).as[(Long, String, Double)]
       .collect().map(_._1).toSet

@@ -653,6 +653,21 @@ class WarehouseSpec extends SparkSuite {
     }
   }
 
+  test("applyChangesPartitionedBy: a pre-created leaf with no data files is created from the inserts") {
+    val dir = Files.createTempDirectory("cdcpre").toString + "/wh"
+    Seq((1, "p1", "a")).toDF("k", "p", "s").write.partitionBy("p").parquet(dir)
+    new java.io.File(s"$dir/p=p2").mkdirs()
+    val changes = Seq((2, "p2", "b", false), (3, "p2", "c", true)).toDF("k", "p", "s", "del")
+    val counts = Warehouse.applyChangesPartitionedBy(changes, dir, Seq("p"),
+      Seq("k"), Seq($"s"), $"del")
+    assert(counts == Map(Seq("p2") -> 1L), s"got $counts")
+    // the created leaf takes the table payload, not the CDC flag
+    assert(spark.read.parquet(s"$dir/p=p2").columns.toSet == Set("k", "s"))
+    val state = spark.read.parquet(dir).select("k", "p", "s")
+      .as[(Int, String, String)].collect().toSet
+    assert(state == Set((1, "p1", "a"), (2, "p2", "b")), s"got $state")
+  }
+
   test("applyChangesPartitioned: fully-deleted partition becomes empty but readable") {
     val dir = Files.createTempDirectory("cdcd").toString + "/wh"
     Seq((1, "p1", "a"), (2, "p1", "b"), (3, "p2", "c"))
