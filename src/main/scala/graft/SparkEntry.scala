@@ -2261,22 +2261,19 @@ private[graft] object Queries {
       |FROM orders JOIN customer ON o_custkey = c_custkey
       |GROUP BY c_mktsegment ORDER BY c_mktsegment""".stripMargin
 
-  /** Merge-on-read CDC ([[graft.ops.Warehouse.appendPatch]] /
-    * [[graft.ops.Warehouse.readMergeOnRead]]): two patch batches land as
-    * O(batch) sidecar writes — the base parquet is never rewritten (spec
-    * asserts byte-stability) — and the scan-time fold shadows per key by
-    * batch order, honoring tombstones. The oracle computes the same
-    * sequential two-patch end state with cascaded FULL JOIN + CASE,
-    * later patch first.
+  /** Two-batch CDC apply to a plain parquet warehouse
+    * ([[graft.ops.Warehouse.applyChangesParquet]]): batch `p1` then `p2`
+    * merge into the directory in order, each behind the crash-safe staged
+    * swap — later batches shadow earlier ones per key and tombstones drop
+    * keys — and the query reads the directory back with no library on
+    * the read path. The oracle computes the same sequential two-batch end
+    * state with cascaded FULL JOIN + CASE, later batch first; the
+    * versioned table's merge-on-read (`q_vtable_mor`) must reach it too.
     */
   def mergeMor(s: SparkSession, d: String): DataFrame = {
     val dir = fixtureDir(d, "mor")
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
-    // reset base AND chain — the query must be a pure function of the
+    // the overwrite resets the base: the query is a pure function of the
     // fixture tables, not of how many times it has run
-    val whP = new org.apache.hadoop.fs.Path(dir)
-    fs.delete(new org.apache.hadoop.fs.Path(whP.getParent, "_" + whP.getName + ".patches"), true)
     ord(s, d).filter(col("o_orderkey") % 3 =!= 0)
       .select(col("o_orderkey"), col("o_orderstatus"),
         col("o_totalprice").cast("double").as("o_totalprice"))
@@ -2289,10 +2286,9 @@ private[graft] object Queries {
       .select(col("o_orderkey"), col("o_orderstatus"),
         (col("o_totalprice") * lit(1.2)).as("o_totalprice"),
         (col("o_orderstatus") === "O").as("del"))
-    val W2 = graft.ops.Warehouse
-    W2.appendPatch(p1, dir, Seq("o_orderkey"), Seq(col("o_orderstatus")), col("del"))
-    W2.appendPatch(p2, dir, Seq("o_orderkey"), Seq(col("o_orderstatus")), col("del"))
-    W2.readMergeOnRead(s, dir, Seq("o_orderkey"), Seq(col("o_orderstatus")))
+    Seq(p1, p2).foreach(W.applyChangesParquet(_, dir, Seq("o_orderkey"),
+      Seq(col("o_orderstatus")), col("del")))
+    s.read.parquet(dir)
       .select("o_orderkey", "o_orderstatus", "o_totalprice")
       .orderBy("o_orderkey")
   }
@@ -3839,9 +3835,9 @@ private[graft] object Queries {
     * .commitPatch]]): two CDC batches land as O(batch) patch commits —
     * no base file is read or rewritten (spec asserts byte-stability) —
     * and the read-time fold shadows per key by patch order, honoring
-    * tombstones, exactly like the staged-swap MoR (`q_merge_mor`) but
-    * with every patch state time-travelable. Same cascaded FULL JOIN
-    * oracle as `q_merge_mor` — the two MoR layers must agree.
+    * tombstones, with every patch state time-travelable. Same cascaded
+    * FULL JOIN oracle as `q_merge_mor`: the fold must reach the state the
+    * two batches' sequential copy-on-write apply writes there.
     */
   def vtableMor(s: SparkSession, d: String): DataFrame = {
     val VT = graft.ops.VersionedTable

@@ -415,13 +415,8 @@ class GraftTable(tableName: String, val dir: String, val asOf: Option[Long])
     filters.forall(GraftTable.filterToColumn(_).isDefined)
 
   override def deleteWhere(filters: Array[Filter]): Unit = {
-    VT.withCommitRetry() {
-      // DV-enabled tables delete positionally (byte-stable base files)
-      if (VT.dvsEnabled(spark, dir))
-        VT.commitDeleteDv(spark, dir, GraftTable.filtersToCondition(filters))
-      else
-        VT.commitDelete(spark, dir, GraftTable.filtersToCondition(filters))
-    }
+    graft.plans.GraftCatalogDeleteCommand.delete(spark, dir,
+      GraftTable.filtersToCondition(filters))
     ()
   }
 

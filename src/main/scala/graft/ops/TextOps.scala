@@ -27,23 +27,11 @@ object TextOps {
 
   def tokenCount(c: Column): Column = stats(c).getItem(0)
 
-  /** BPE-ish subword-count proxy: words plus intra-word punctuation/digit
-    * boundaries, approximating tokenizer inflation without a vocab file.
-    */
-  def tokenCountBpeIsh(c: Column): Column =
-    size(filter(split(c, "[\\s]+|(?=[\\p{Punct}])|(?<=[\\p{Punct}])"), t => t =!= ""))
-
-  /** Quality-signal bundle (length / punctuation / stopword / uniqueness
-    * ratios). Ratios are exact int/int double divisions — deterministic.
+  /** The English stopwords [[stats]] counts. The quality-signal ratios
+    * below are exact int/int double divisions — deterministic.
     */
   val StopwordsEn: Seq[String] =
     Seq("the", "a", "an", "of", "and", "to", "in", "is", "it", "that", "for", "on", "with", "as")
-
-  def punctCount(c: Column): Column =
-    size(filter(split(c, ""), ch => ch.rlike("[\\p{Punct}]")))
-
-  def digitCount(c: Column): Column =
-    size(filter(split(c, ""), ch => ch.rlike("[0-9]")))
 
   def stopwordCount(c: Column): Column = stats(c).getItem(1)
 
@@ -54,18 +42,6 @@ object TextOps {
   def meanTokenLength(c: Column): Column =
     stats(c).getItem(3).cast("double") /
       greatest(stats(c).getItem(0), lit(1)).cast("double")
-
-  /** Composite quality score in [0,1]-ish: rewards stopword presence and
-    * token diversity, penalizes very short docs — the usual pre-training
-    * heuristic shape (cf. C4/Gopher rules, public).
-    */
-  def qualityScore(c: Column): Column = {
-    val nTok = greatest(tokenCount(c), lit(1)).cast("double")
-    val stopRatio = stopwordCount(c).cast("double") / nTok
-    val lenScore = least(nTok / lit(100.0), lit(1.0))
-    val uniq = uniqueTokenRatio(c)
-    (stopRatio + lenScore + uniq) / lit(3.0)
-  }
 
   /** Language-ID by stopword-hit counting with a fixed priority order on
     * ties (en > es > fr > de > zh) — the classic n-gram/function-word
@@ -78,13 +54,10 @@ object TextOps {
     "de" -> Seq("der", "die", "und", "das", "von", "den", "im", "ein", "zu", "mit"),
     "zh" -> Seq("的", "了", "是", "在", "我", "有", "他", "这", "中", "大"))
 
-  def langHits(c: Column, words: Seq[String]): Column =
-    size(filter(tokens(lower(c)), t => t.isin(words: _*)))
-
   /** Native one-pass vote ([[graft.functions.VectorExpressions.LangIdExpr]]):
-    * tokenize the lowercased text once, count hits against every language's
-    * set, first-in-priority-order winner — same result as the
-    * `when`-chain over per-language [[langHits]] it replaces.
+    * tokenize the lowercased text on whitespace once, count per language
+    * the tokens in its set, and pick the most hits, ties to the earlier
+    * language in [[LangStopwords]].
     */
   def langId(c: Column): Column =
     graft.functions.VectorExpressions.langIdNative(c, LangStopwords)

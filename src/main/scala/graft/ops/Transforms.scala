@@ -125,10 +125,6 @@ object Transforms {
       to_date(timestamp_millis(when(inRange, millis))))
   }
 
-  // ---------------------------------------------------------------- E6
-  /** Format a date `YYYY-MM-DD` (transform.py:117). */
-  def formatDate(c: Column): Column = date_format(c, "yyyy-MM-dd")
-
   // ---------------------------------------------------------------- E7
   /** Lenient double cast (transform.py:121-122). */
   def lenientDouble(c: Column): Column = c.cast("string").try_cast("double")

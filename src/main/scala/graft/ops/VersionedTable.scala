@@ -45,10 +45,10 @@ import com.fasterxml.jackson.databind.node.{ArrayNode, ObjectNode}
   *    [[readPruned]] uses the same stats to skip files at scan time (the
   *    zone-map / data-skipping read path).
   *  - '''Optimistic concurrency.''' Two writers racing to version N+1 both
-  *    write their data dirs, but manifest publication probes-then-renames
-  *    (the same single-writer discipline as [[Warehouse.appendPatch]]);
-  *    the loser fails LOUDLY and its orphaned data dir is reclaimed by the
-  *    next [[vacuum]] — never silently clobbered, never half-visible.
+  *    write their data dirs, but manifest publication is create-if-absent
+  *    ([[CommitStore]]); the loser fails LOUDLY and its orphaned data dir
+  *    is reclaimed by the next [[vacuum]] — never silently clobbered,
+  *    never half-visible.
   *
   * All comparisons behind stats pruning run through Catalyst casts in BOTH
   * directions (values are serialized with `CAST(x AS STRING)` and
@@ -523,7 +523,7 @@ object VersionedTable {
     //  - HDFS-style stores default to probe-then-rename: their rename
     //    refuses an existing destination atomically (and some rename
     //    INTO an existing dest rather than returning false, so the
-    //    probe is load-bearing, same as Warehouse.appendPatch);
+    //    probe is load-bearing);
     //  - S3-class stores plug the conditional-put backend
     //    (`spark.graft.commit.store=condput`): the precondition rides
     //    the PUT itself, no tmp object and no claim protocol.
@@ -1434,15 +1434,17 @@ object VersionedTable {
     * footer stats are unusable (float/double — NaN ordering differs
     * between parquet and Spark — INT96 timestamps, dropped/absent stats)
     * falls the whole commit back to the one-aggregation scan path;
-    * `spark.graft.vtable.footerStats=false` forces that path.
+    * `spark.graft.vtable.footerStats=false` forces that path. `into` names
+    * the commit dir to write, a fresh one by default.
     */
   private def writeCommitFiles(df0: DataFrame, dir: String,
-                               head: ManifestMeta): Seq[FileEntry] = {
+                               head: ManifestMeta,
+                               into: Option[String] = None): Seq[FileEntry] = {
     // files always carry PHYSICAL column names — stats/bloom keys follow
     val df = toPhysical(df0, head.props)
     val spark = df.sparkSession
     val statsCols = head.statsCols
-    val written = writeSidecar(df, dir, freshRel(head.version + 1))
+    val written = writeSidecar(df, dir, into.getOrElse(freshRel(head.version + 1)))
     val rel = written.rel
     val commitDir = new Path(dir, rel)
     val footerOn = spark.conf.getOption("spark.graft.vtable.footerStats")
@@ -2662,9 +2664,9 @@ object VersionedTable {
     * tombstones drop keys) to exactly the state sequential [[commitMerge]]
     * calls would have produced; [[compactPatches]] materializes the fold
     * back into base files and empties the chain. Read cost grows with the
-    * chain — compaction cadence bounds it; that trade IS merge-on-read
-    * (same contract as [[Warehouse.appendPatch]], here with versioned
-    * time travel over every patch state).
+    * chain — compaction cadence bounds it; that trade IS merge-on-read,
+    * with versioned time travel over every patch state. The engine's one
+    * merge-on-read: [[Warehouse]] writes only plain parquet directories.
     *
     * The chain pins the table: base-mutating commits refuse until
     * compaction. `keys` must match the chain's keys once one exists.
@@ -2691,31 +2693,37 @@ object VersionedTable {
         .select(schema.fieldNames.map(col) :+ col("__vt_del"): _*)
       // patch files carry stats (the fold CAN be key-pruned later) but no
       // blooms — nothing probes them
+      val rel = freshRel(cur.version + 1)
       val files = writeCommitFiles(
         withCheckGuards(flagged, cur.props, "commitPatch",
           precond = !col("__vt_del")),
         dir, cur.copy(bloomCols = Seq.empty, statsCols = cur.statsCols.filter(
-          physicalSchema(schema, cur.props).fieldNames.contains)))
-      // base file set untouched: an empty adds/removes delta — O(patch),
-      // not O(table), which is the whole point of merge-on-read. A lost
-      // version race REBASES like an append ([[publishAppendRebasing]]'s
-      // logic, patch-shaped): the batch's content is input-only, so
-      // stacking it on the new head — after whatever patches, merges, or
-      // compactions won — is exactly what a serialized re-run would
-      // produce, without re-running the data write. Schema or key changes
-      // rethrow for the full-retry path; constraints added by a winner
-      // re-validate the batch's LIVE rows with one O(batch) scan.
-      rebaseLoop(spark, dir, cur, files, txn, "commitPatch",
-          patchShape = true) { (head, newHead) =>
-        // patch files carry the exact schema, so only an identical-schema
-        // head is stackable; the chain's keys must stay ours
-        newHead.schemaDdl == head.schemaDdl &&
-          (newHead.mergeKeys.isEmpty || newHead.mergeKeys == keys)
-      } { head =>
-        publish(spark, dir, head, ManifestDelta("patch", txn = txn,
-          patches = head.patches ++ (if (files.nonEmpty) Seq(files) else Seq.empty),
-          mergeKeys = keys))
-      }
+          physicalSchema(schema, cur.props).fieldNames.contains)), Some(rel))
+      // a 0-row changelog changes nothing: publish no version, and drop
+      // the write's 0-row part files rather than leave them to vacuum
+      if (files.isEmpty) {
+        fsOf(spark, dir).delete(new Path(dir, rel), true)
+        cur.version
+      } else
+        // base file set untouched: an empty adds/removes delta — O(patch),
+        // not O(table), which is the whole point of merge-on-read. A lost
+        // version race REBASES like an append ([[publishAppendRebasing]]'s
+        // logic, patch-shaped): the batch's content is input-only, so
+        // stacking it on the new head — after whatever patches, merges, or
+        // compactions won — is exactly what a serialized re-run would
+        // produce, without re-running the data write. Schema or key
+        // changes rethrow for the full-retry path; constraints added by a
+        // winner re-validate the batch's LIVE rows with one O(batch) scan.
+        rebaseLoop(spark, dir, cur, files, txn, "commitPatch",
+            patchShape = true) { (head, newHead) =>
+          // patch files carry the exact schema, so only an identical-schema
+          // head is stackable; the chain's keys must stay ours
+          newHead.schemaDdl == head.schemaDdl &&
+            (newHead.mergeKeys.isEmpty || newHead.mergeKeys == keys)
+        } { head =>
+          publish(spark, dir, head, ManifestDelta("patch", txn = txn,
+            patches = head.patches :+ files, mergeKeys = keys))
+        }
     }
   }
 

@@ -307,21 +307,6 @@ object ViewOps {
           coalesce(sum(when(col(m).isNotNull, col("__sign"))), lit(0L))
             .as(s"nn_$m"))): _*)
 
-  /** Fold a signed delta into a view state: one full-outer join on the
-    * group key, sums add, and a group whose live count reaches zero drops
-    * out (its retractions consumed it). Never scans the source.
-    */
-  def applyAggDelta(state: DataFrame, delta: DataFrame, groupCols: Seq[String],
-                    measures: Seq[String]): DataFrame = {
-    val sc = stateCols(measures)
-    val s = state.select(groupCols.map(col) ++ sc.map(c => col(c).as(s"__s_$c")): _*)
-    val d = delta.select(groupCols.map(col) ++ sc.map(c => col(c).as(s"__d_$c")): _*)
-    s.join(d, groupCols, "full_outer")
-      .select(groupCols.map(col) ++ sc.map(c =>
-        (coalesce(col(s"__s_$c"), lit(0L)) + coalesce(col(s"__d_$c"), lit(0L))).as(c)): _*)
-      .filter(col("n") > 0)
-  }
-
   /** Presentation projection: group key, live count `n`, and per measure
     * `sum_<m>` — NULL when the group has no non-null contribution, which
     * is exactly `SUM`'s SQL semantics, so the presented view is
@@ -340,8 +325,9 @@ object ViewOps {
     *  - First call: bootstraps the view with [[fullState]] over the
     *    source's CURRENT version and pins that version in the ledger.
     *  - Later calls: reads the change feed from the pinned version to the
-    *    current one (pre-image encoded), folds it with [[aggDelta]] +
-    *    [[applyAggDelta]] restricted to TOUCHED groups, and commits the
+    *    current one (pre-image encoded), reduces it to a signed per-group
+    *    delta ([[aggSigned]], or [[aggDelta]] over the keyed feed), adds
+    *    it to the TOUCHED groups' state, and commits the
     *    touched groups' new rows (tombstones for emptied groups) through
     *    [[VersionedTable.commitMerge]] with `txn = (appId, srcVersion)`.
     *  - Replay after a crash: the merge's batch id is already in the

@@ -10,16 +10,16 @@ import org.apache.spark.sql.functions._
   *
   * Storage layering — this object vs [[VersionedTable]]: everything here
   * mutates a plain parquet directory IN PLACE behind a crash-safe staged
-  * swap (or, for [[appendPatch]], a merge-on-read sidecar chain) — one
-  * visible state, minimal metadata, readable by any parquet tool with no
-  * library on the read path. [[VersionedTable]] is the step up when a
-  * deployment needs what single-state storage cannot give: time travel,
-  * an immutable-file commit log (readers never race a swap), stats/bloom
-  * file pruning, a change data feed, and ledger-based exactly-once — at
-  * the price of manifest metadata and a vacuum lifecycle. The merge
-  * SEMANTICS ([[applyChanges]]/[[applyChangesEvolve]]) are shared: the
-  * versioned table calls them per touched file set, so the two layers
-  * cannot drift.
+  * swap — one visible state, minimal metadata, readable by any parquet
+  * tool with no library on the read path. [[VersionedTable]] is the step
+  * up when a deployment needs what single-state storage cannot give: time
+  * travel, an immutable-file commit log (readers never race a swap),
+  * stats/bloom file pruning, a change data feed, merge-on-read patch
+  * commits ([[VersionedTable.commitPatch]]), and ledger-based
+  * exactly-once — at the price of manifest metadata and a vacuum
+  * lifecycle. The merge SEMANTICS ([[applyChanges]]/[[applyChangesEvolve]])
+  * are shared: the versioned table calls them per touched file set, so
+  * the two layers cannot drift.
   */
 object Warehouse {
 
@@ -1000,131 +1000,6 @@ object Warehouse {
     }
     fs.delete(hidden, true)
     touched.map(vals => vals -> stagedCounts.getOrElse(vals, 0L)).toMap
-  }
-
-  // ------------------------------------------------------- merge-on-read
-  /** MERGE-ON-READ patch sidecar — the deletion-vector/delta-file idea
-    * from the table formats (Iceberg MoR, Delta DVs), for the case
-    * copy-on-write handles worst: a 1-row change to a big table. The
-    * copy-on-write paths above ([[applyChangesParquet]],
-    * [[applyChangesPartitionedBy]]) rewrite every touched file per batch;
-    * here [[appendPatch]] just WRITES THE CHANGELOG (cost O(batch),
-    * base untouched), [[readMergeOnRead]] folds the patch chain into the
-    * base at scan time, and [[compactMergeOnRead]] periodically
-    * materializes the fold back into a plain base dir.
-    *
-    * Layout: `_<dir>.patches/b<seq>/` sibling dirs, one per batch,
-    * `_`-hidden from whole-table readers. Each patch stores the deduped
-    * batch with its tombstone flag pre-evaluated into `__mor_del`, so
-    * the read path needs no delete predicate. Batches are
-    * write-to-tmp + rename, so a crashed append never leaves a torn
-    * batch visible.
-    *
-    * Read cost grows with the patch chain (one dedup exchange over all
-    * patch rows + one join against the base) — compaction cadence bounds
-    * it; that trade IS merge-on-read. Keys must be table-unique, same
-    * contract as every merge above. Partitioned bases: the fold works
-    * unchanged (the base scan is just bigger); compaction refuses a
-    * partitioned layout — materialize through
-    * [[applyChangesPartitionedBy]] instead, which rewrites only touched
-    * leaves.
-    */
-  private def patchRoot(warehouseDir: String): org.apache.hadoop.fs.Path = {
-    val wh = new org.apache.hadoop.fs.Path(warehouseDir)
-    new org.apache.hadoop.fs.Path(wh.getParent, "_" + wh.getName + ".patches")
-  }
-
-  private def listPatches(fs: org.apache.hadoop.fs.FileSystem,
-                          root: org.apache.hadoop.fs.Path): Seq[(Long, String)] =
-    if (!fs.exists(root)) Seq.empty
-    else fs.listStatus(root)
-      .filter(st => st.isDirectory && st.getPath.getName.startsWith("b"))
-      .map(st => st.getPath.getName.drop(1).toLong -> st.getPath.toString)
-      .sortBy(_._1).toSeq
-
-  /** Append one CDC batch to the patch chain: dedup to one row per key,
-    * evaluate the tombstone flag, write as the next `b<seq>` dir. The
-    * base is neither read nor written — this is the O(batch) path a
-    * 1-row change takes. Returns the batch's sequence number.
-    */
-  def appendPatch(changes: DataFrame, warehouseDir: String, keys: Seq[String],
-                  tiebreak: Seq[Column], deleteCond: Column): Long = {
-    val spark = changes.sparkSession
-    require(!changes.columns.contains("__mor_del"),
-      "appendPatch: column name __mor_del is reserved by the patch encoding")
-    val fs = new org.apache.hadoop.fs.Path(warehouseDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val root = patchRoot(warehouseDir)
-    val next = listPatches(fs, root).lastOption.map(_._1 + 1).getOrElse(0L)
-    val flagged = dedupByKey(changes, keys, tiebreak)
-      .withColumn("__mor_del", coalesce(deleteCond, lit(false)))
-    val tmp = new org.apache.hadoop.fs.Path(root, s".b$next.tmp")
-    flagged.write.mode("overwrite").parquet(tmp.toString)
-    // single-writer protocol (same as every merge above): a concurrent
-    // append that lost the b<seq> race must fail LOUDLY, not leave its
-    // batch as an unread dot-dir — some filesystems rename INTO an
-    // existing dest dir rather than returning false, so probe first
-    val dest = new org.apache.hadoop.fs.Path(root, s"b$next")
-    require(!fs.exists(dest) && fs.rename(tmp, dest),
-      s"appendPatch: batch b$next already exists — concurrent appendPatch " +
-        "writers are not supported (serialize CDC appends per table)")
-    next
-  }
-
-  /** The merged view: base + patch chain folded at scan time. Later
-    * batches shadow earlier ones per key (batch seq is the outer
-    * tiebreak), tombstones drop keys — exactly the state sequential
-    * [[applyChangesParquet]] calls would have produced, without any base
-    * rewrite. With an empty chain this IS the base scan.
-    */
-  def readMergeOnRead(spark: SparkSession, warehouseDir: String,
-                      keys: Seq[String], tiebreak: Seq[Column]): DataFrame = {
-    val fs = new org.apache.hadoop.fs.Path(warehouseDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    recoverRetired(fs, warehouseDir)
-    val base = spark.read.parquet(warehouseDir)
-    val patches = listPatches(fs, patchRoot(warehouseDir))
-    if (patches.isEmpty) base
-    else {
-      // bounded union: the chain length is a compaction-cadence knob, not
-      // data volume
-      val all = patches.map { case (n, dir) =>
-        spark.read.parquet(dir).withColumn("__mor_b", lit(n))
-      }.reduce(_ unionByName _)
-      val folded = dedupByKey(all, keys, col("__mor_b").desc +: tiebreak)
-        .drop("__mor_b")
-      applyChanges(base, folded, keys, col("__mor_del"))
-    }
-  }
-
-  /** Materialize the fold back into the base dir (crash-safe staged swap)
-    * and drop exactly the patch batches that were folded — concurrent
-    * appends landing after the listing survive to the next compaction.
-    * A crash between swap and patch delete re-applies those patches to
-    * the already-merged base on the next read, which converges (the
-    * per-key latest row is already in the base). Returns
-    * (patchesFolded, postCompactRowCount).
-    */
-  def compactMergeOnRead(spark: SparkSession, warehouseDir: String,
-                         keys: Seq[String], tiebreak: Seq[Column]): (Int, Long) = {
-    val fs = new org.apache.hadoop.fs.Path(warehouseDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    recoverRetired(fs, warehouseDir)
-    require(!fs.listStatus(new org.apache.hadoop.fs.Path(warehouseDir))
-        .exists(st => st.isDirectory && st.getPath.getName.contains("=")),
-      "compactMergeOnRead: partitioned base — materialize through " +
-        "applyChangesPartitionedBy (rewrites only touched leaves) instead")
-    val snapshot = listPatches(fs, patchRoot(warehouseDir))
-    if (snapshot.isEmpty) return (0, spark.read.parquet(warehouseDir).count())
-    val view = readMergeOnRead(spark, warehouseDir, keys, tiebreak)
-    val n = stagedSwap(fs, warehouseDir) { stagingPath =>
-      view.write.mode("overwrite").parquet(stagingPath)
-      footerRows(spark, fs, stagingPath)
-    }
-    snapshot.foreach { case (_, dir) =>
-      fs.delete(new org.apache.hadoop.fs.Path(dir), true)
-    }
-    (snapshot.length, n)
   }
 
   // ---------------------------------------------------------------- SCD-2

@@ -51,7 +51,7 @@ object VtableCatalogDml extends Rule[LogicalPlan] {
     case d: DeleteFromTable if d.resolved && target(d.table).isDefined =>
       val t = target(d.table).get
       requireWritable(t, "DELETE FROM")
-      GraftCatalogDeleteCommand(t.dir,
+      GraftCatalogDeleteCommand(pathRef(t),
         GraftShim.column(unbind(d.condition, "DELETE WHERE")))
     case _ => plan
   }
@@ -68,6 +68,13 @@ object VtableCatalogDml extends Rule[LogicalPlan] {
         Some(s.relation.table.asInstanceOf[GraftTable])
       case _ => None
     }
+
+  /** `t`'s directory as a command `ref`: [[graft.ops.GraftCatalog
+    * .resolveDir]] reads a ref without a path separator as a table name,
+    * so a relative directory is spelled `./<dir>`.
+    */
+  private def pathRef(t: GraftTable): String =
+    if (t.dir.exists(c => c == '/' || c == '\\')) t.dir else s"./${t.dir}"
 
   private def requireWritable(t: GraftTable, verb: String): Unit =
     require(t.asOf.isEmpty,
@@ -198,7 +205,7 @@ object VtableCatalogDml extends Rule[LogicalPlan] {
             "supported — top-level columns only")
       }
     }
-    GraftCatalogUpdateCommand(t.dir, sets,
+    GraftCatalogUpdateCommand(pathRef(t), sets,
       u.condition.map(c => GraftShim.column(unbind(c, "UPDATE WHERE"))))
   }
 }
@@ -229,15 +236,22 @@ case class GraftCatalogMergeCommand(dir: String, source: LogicalPlan,
   }
 }
 
-/** `UPDATE graft.<t> SET … [WHERE …]` — file-pruned copy-on-write
-  * rewrite through [[VersionedTable.commitUpdate]].
+/** `UPDATE … SET … [WHERE …]` on a versioned table, from either SQL
+  * spelling: `UPDATE graft.<t>` (Spark's grammar, this rule) and `UPDATE
+  * graft_vtable('<ref>')` ([[graft.sql.GraftDml]]). `ref` resolves at run
+  * time through [[graft.ops.GraftCatalog.resolveDir]], which returns a
+  * path unchanged. DV-enabled tables update positionally
+  * ([[VersionedTable.commitUpdateDv]]: byte-stable base files, O(matched)
+  * written); others take the file-pruned copy-on-write rewrite
+  * ([[VersionedTable.commitUpdate]]).
   */
-case class GraftCatalogUpdateCommand(dir: String,
+case class GraftCatalogUpdateCommand(ref: String,
                                      sets: Seq[(String, org.apache.spark.sql.Column)],
                                      cond: Option[org.apache.spark.sql.Column])
   extends LeafRunnableCommand {
   override val output: Seq[Attribute] = graft.sql.GraftDml.versionOutput
   override def run(spark: SparkSession): Seq[Row] = {
+    val dir = graft.ops.GraftCatalog.resolveDir(spark, ref)
     val c = cond.getOrElse(lit(true))
     Seq(Row(VersionedTable.withCommitRetry() {
       if (VersionedTable.dvsEnabled(spark, dir))
@@ -247,19 +261,34 @@ case class GraftCatalogUpdateCommand(dir: String,
   }
 }
 
-/** `DELETE FROM graft.<t> WHERE <any predicate>` — unlike the
-  * `SupportsDelete` path (pushable filters only), arbitrary predicates
-  * land here; DV-enabled tables delete positionally.
+/** `DELETE FROM … [WHERE …]` on a versioned table: `DELETE FROM
+  * graft.<t>` with any predicate (this rule), `DELETE FROM
+  * graft_vtable('<ref>')` ([[graft.sql.GraftDml]]), and the pushable
+  * filters of `SupportsDelete` ([[graft.catalog.GraftTable.deleteWhere]],
+  * `TRUNCATE`) all run [[GraftCatalogDeleteCommand.delete]].
   */
-case class GraftCatalogDeleteCommand(dir: String,
+case class GraftCatalogDeleteCommand(ref: String,
                                      cond: org.apache.spark.sql.Column)
   extends LeafRunnableCommand {
   override val output: Seq[Attribute] = graft.sql.GraftDml.versionOutput
-  override def run(spark: SparkSession): Seq[Row] = {
-    Seq(Row(VersionedTable.withCommitRetry() {
+  override def run(spark: SparkSession): Seq[Row] =
+    Seq(Row(GraftCatalogDeleteCommand.delete(spark,
+      graft.ops.GraftCatalog.resolveDir(spark, ref), cond)))
+}
+
+object GraftCatalogDeleteCommand {
+  /** Delete the rows of the table at `dir` matching `cond`; returns the
+    * new version. DV-enabled tables (TBLPROPERTIES
+    * graft.dvs.enabled=true, the Delta enableDeletionVectors knob) delete
+    * positionally ([[VersionedTable.commitDeleteDv]]: O(matched rows),
+    * byte-stable base files); others take the file-pruned copy-on-write
+    * rewrite ([[VersionedTable.commitDelete]]).
+    */
+  def delete(spark: SparkSession, dir: String,
+             cond: org.apache.spark.sql.Column): Long =
+    VersionedTable.withCommitRetry() {
       if (VersionedTable.dvsEnabled(spark, dir))
         VersionedTable.commitDeleteDv(spark, dir, cond)
       else VersionedTable.commitDelete(spark, dir, cond)
-    }))
-  }
+    }
 }

@@ -12,8 +12,11 @@ import graft.ops.{GraftCatalog, VersionedTable}
 
 /** SQL DML over versioned tables — `MERGE INTO` / `UPDATE` / `DELETE`
   * statements targeting `graft_vtable('<name-or-dir>')`, parsed here and
-  * routed through the library commits ([[VersionedTable.commitMerge]] /
-  * [[VersionedTable.commitUpdate]] / [[VersionedTable.commitDelete]]).
+  * routed through the library commits: MERGE through
+  * [[VersionedTable.commitMerge]]; UPDATE and DELETE build the catalog
+  * route's commands ([[graft.plans.GraftCatalogUpdateCommand]] /
+  * [[graft.plans.GraftCatalogDeleteCommand]]), which choose deletion
+  * vectors or copy-on-write per table.
   * The reference's upsert is SQL (reference/scripts/load.py:114-147:
   * `INSERT ... ON CONFLICT DO NOTHING` over a staging table); the
   * engine's answer is reachable from SQL too.
@@ -255,7 +258,8 @@ object GraftDml {
       (m.group(1), m.group(2).trim)
     }
     if (sets.isEmpty) fail("UPDATE: empty SET list")
-    GraftUpdateCommand(target, sets, where)
+    graft.plans.GraftCatalogUpdateCommand(target,
+      sets.map { case (c, e) => c -> expr(e) }, where.map(expr))
   }
 
   private def parseCreate(name: String, ifNotExists: Boolean,
@@ -427,7 +431,7 @@ object GraftDml {
           .getOrElse(fail(s"DELETE: unexpected trailing text '$t'"))
         Some(m.group(1))
       }
-    GraftDeleteCommand(target, where)
+    graft.plans.GraftCatalogDeleteCommand(target, where.map(expr).getOrElse(lit(true)))
   }
 
   private[graft] def versionOutput: Seq[AttributeReference] =
@@ -453,28 +457,6 @@ case class GraftMergeCommand(target: String, sourceSql: String,
     // call is the standard optimistic-concurrency answer
     Seq(Row(VersionedTable.withCommitRetry() {
       VersionedTable.commitMerge(src, dir, keys, Seq.empty, delCond)
-    }))
-  }
-}
-
-/** `UPDATE graft_vtable(...) SET ... [WHERE ...]` — file-pruned rewrite. */
-case class GraftUpdateCommand(target: String, sets: Seq[(String, String)],
-                              whereSql: Option[String])
-  extends LeafRunnableCommand {
-  override val output: Seq[org.apache.spark.sql.catalyst.expressions.Attribute] =
-    GraftDml.versionOutput
-  override def run(spark: SparkSession): Seq[Row] = {
-    val dir = GraftCatalog.resolveDir(spark, target)
-    val cond = GraftDml.parseCond(spark, whereSql)
-    val setCols = sets.map { case (c, e) =>
-      c -> GraftShim.column(spark.sessionState.sqlParser.parseExpression(e))
-    }
-    Seq(Row(VersionedTable.withCommitRetry() {
-      // DV-enabled tables update positionally: byte-stable base files,
-      // O(matched) written (same routing as DELETE)
-      if (VersionedTable.dvsEnabled(spark, dir))
-        VersionedTable.commitUpdateDv(spark, dir, cond, setCols)
-      else VersionedTable.commitUpdate(spark, dir, cond, setCols)
     }))
   }
 }
@@ -587,26 +569,6 @@ case class GraftDropTableCommand(name: String, ifExists: Boolean,
         }
         Seq(Row(v))
     }
-  }
-}
-
-/** `DELETE FROM graft_vtable(...) [WHERE ...]` — file-pruned rewrite. */
-case class GraftDeleteCommand(target: String, whereSql: Option[String])
-  extends LeafRunnableCommand {
-  override val output: Seq[org.apache.spark.sql.catalyst.expressions.Attribute] =
-    GraftDml.versionOutput
-  override def run(spark: SparkSession): Seq[Row] = {
-    val dir = GraftCatalog.resolveDir(spark, target)
-    Seq(Row(VersionedTable.withCommitRetry() {
-      // DV-enabled tables (TBLPROPERTIES graft.dvs.enabled=true, the
-      // Delta enableDeletionVectors knob) delete positionally — O(matched
-      // rows), byte-stable bases; others keep the copy-on-write rewrite
-      if (VersionedTable.dvsEnabled(spark, dir))
-        VersionedTable.commitDeleteDv(spark, dir,
-          GraftDml.parseCond(spark, whereSql))
-      else
-        VersionedTable.commitDelete(spark, dir, GraftDml.parseCond(spark, whereSql))
-    }))
   }
 }
 

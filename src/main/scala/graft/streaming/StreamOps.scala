@@ -26,14 +26,6 @@ object StreamOps {
       .select(col("window.start").as("win_start"), col("event_type"),
         col("n"), col("sum_value"))
 
-  /** Sliding-window aggregation (width, slide). */
-  def slidingAgg(events: DataFrame, width: String, slide: String): DataFrame =
-    events
-      .withWatermark("ts", "1 hour")
-      .groupBy(window(col("ts"), width, slide), col("event_type"))
-      .agg(count(lit(1)).as("n"))
-      .select(col("window.start").as("win_start"), col("event_type"), col("n"))
-
   /** Session windows per user (gap-based). */
   def sessionAgg(events: DataFrame, gap: String): DataFrame =
     events

@@ -71,7 +71,7 @@ class ContractSpec extends SparkSuite {
       // sink queries ARE the write path
       "q_sink_jsonl", "q_sink_jdbc", "q_merge_jdbc", "q_write_partitioned",
       "q_merge_cdc_part",  // snapshot fixture write + single-job merge swap
-      "q_merge_mor",       // base fixture write + O(batch) patch appends
+      "q_merge_mor",       // base fixture write + two staged-swap CDC applies
       "q_time_travel",     // versioned-table create + two CoW merge commits
       "q_stats_prune",     // versioned-table create + manifest file pruning
       "q_change_feed",     // versioned-table fixture + manifest file diff

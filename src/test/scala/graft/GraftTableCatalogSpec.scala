@@ -346,6 +346,28 @@ class GraftTableCatalogSpec extends SparkSuite {
     }
   }
 
+  test("UPDATE and DELETE on graft.t act on its dir when the dir has no path separator") {
+    withCatalog { root =>
+      // a relative dir is also readable as a table name: a second table
+      // registered under that name must stay untouched
+      val rel = s"vtrel${System.nanoTime}"
+      val other = s"$root/other"
+      try {
+        mkTable(rel); mkTable(other)
+        GraftCatalog.register(spark, "cat_rel", rel)
+        GraftCatalog.register(spark, rel, other)
+        spark.sql("UPDATE graft.cat_rel SET s = 'u' WHERE k = 2").collect()
+        spark.sql("DELETE FROM graft.cat_rel WHERE k % 50 = 1").collect()
+        val out = VT.read(spark, rel).as[(Long, String)].collect().toMap
+        assert(out.size == 98 && out(2L) == "u" && !out.contains(51L))
+        assert(VT.versions(spark, other) == Seq(1L))
+      } finally {
+        val p = new org.apache.hadoop.fs.Path(rel)
+        p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
+      }
+    }
+  }
+
   test("unsupported MERGE shapes refuse loudly, naming the contract") {
     withCatalog { root =>
       val dir = s"$root/t"; mkTable(dir)

@@ -7,12 +7,14 @@ import scala.jdk.CollectionConverters._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Keeps one session builder, one install path, one commit skeleton, one
-  * predicate miner and a fixed set of settings: a second
+  * predicate miner, one merge-on-read, one DV-or-copy-on-write decision
+  * per DML verb and a fixed set of settings: a second
   * `SparkSession.builder` under `src/main`, a per-query
   * `GraftFunctions.register` call in `SparkEntry`, a
   * [[graft.ops.VersionedTable]] commit that reads its own head or writes
-  * its own manifest, a second predicate walk, or a settings key outside
-  * the allowlist fails here.
+  * its own manifest, a second predicate walk, an unversioned patch chain,
+  * a second `dvsEnabled` branch, or a settings key outside the allowlist
+  * fails here.
   */
 class SessionDriftSpec extends AnyFunSuite {
 
@@ -57,7 +59,7 @@ class SessionDriftSpec extends AnyFunSuite {
 
   /** For each line, the def it sits in: the nearest `def` at or above it. */
   private def enclosingDefs(lines: Seq[String]): Seq[String] = {
-    val defLine = """^\s*(?:private(?:\[\w+\])?\s+)?def\s+(\w+)""".r.unanchored
+    val defLine = """^\s*(?:override\s+)?(?:private(?:\[\w+\])?\s+)?def\s+(\w+)""".r.unanchored
     lines.scanLeft("") {
       case (_, defLine(name)) => name
       case (d, _) => d
@@ -94,6 +96,32 @@ class SessionDriftSpec extends AnyFunSuite {
       }
     }.toSet
     assert(found == Set("graft/ops/VersionedTable.scala:mine"), found)
+  }
+
+  test("one merge-on-read: no unversioned patch chain under src/main") {
+    // the versioned table's patch commits are the one merge-on-read; a
+    // `.patches` sibling dir would be a second, unversioned chain that a
+    // plain parquet reader of its base reads stale
+    val sibling = "\"[^\"\n]*\\.patches\"".r
+    val found = sources.filter { p =>
+      val text = Files.readString(p)
+      sibling.findFirstIn(text).isDefined ||
+        Seq("appendPatch", "readMergeOnRead").exists(text.contains)
+    }.map(p => root.relativize(p).toString)
+    assert(found.isEmpty, found)
+  }
+
+  test("deletion vectors vs copy-on-write is decided once per verb") {
+    val found = sources.flatMap { p =>
+      val lines = Files.readString(p).split("\n").toSeq
+      val enclosing = enclosingDefs(lines)
+      lines.indices
+        .filter(i => lines(i).contains("dvsEnabled(") && !lines(i).contains("def dvsEnabled"))
+        .map(i => s"${root.relativize(p)}:${enclosing(i)}")
+    }
+    // GraftCatalogUpdateCommand.run and GraftCatalogDeleteCommand.delete
+    assert(found.sorted == Seq("graft/plans/VtableCatalogDml.scala:delete",
+      "graft/plans/VtableCatalogDml.scala:run"), found)
   }
 
   test("src/main reads exactly the allowlisted settings keys") {

@@ -1,7 +1,11 @@
 package graft
 
 import java.nio.file.Files
+
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.functions._
+import org.scalacheck.{Gen, Prop, Test => SCTest}
 import graft.ops.{VersionedTable => VT, Warehouse}
 
 class VersionedTableSpec extends SparkSuite {
@@ -590,6 +594,66 @@ class VersionedTableSpec extends SparkSuite {
     assert(VT.commitPatch(Seq((5L, "GHOST", false)).toDF("k", "s", "del"),
       dir, Seq("k"), Seq($"s"), $"del", txn = Some("app" -> 0L)) == 4L)
     assert(VT.read(spark, dir).as[(Long, String)].collect().toMap.apply(5L) == "T")
+  }
+
+  test("merge-on-read equals sequential copy-on-write on random patch chains") {
+    // model: apply each patch batch one at a time to a Map; the fold must
+    // match BEFORE compaction, AFTER compaction, and after the last batch
+    // is committed again on the compacted table (a replayed batch converges)
+    val genBatch = Gen.listOf(Gen.zip(
+      Gen.choose(0, 20), Gen.alphaStr.map(_.take(3)), Gen.oneOf(true, false)))
+      .map(_.groupBy(_._1).map(_._2.head).toList) // one row per key per batch
+    val prop = Prop.forAll(Gen.mapOf(Gen.zip(Gen.choose(0, 20), Gen.alphaStr.map(_.take(3)))),
+      Gen.listOfN(3, genBatch)) { (base, batches) =>
+      val dir = tmp()
+      VT.create(base.toSeq.toDF("k", "s"), dir, Seq("k"))
+      val patch = (b: List[(Int, String, Boolean)]) =>
+        VT.commitPatch(b.toDF("k", "s", "del"), dir, Seq("k"), Seq($"s"), $"del")
+      batches.foreach(patch)
+      val model = batches.foldLeft(base) { (m, b) =>
+        b.foldLeft(m) { case (acc, (k, v, del)) =>
+          if (del) acc - k else acc.updated(k, v)
+        }
+      }
+      def state() = VT.read(spark, dir).as[(Int, String)].collect().toMap
+      val chain = VT.readManifest(spark, dir, VT.currentVersion(spark, dir).get).patches
+      val okChain = chain.size == batches.count(_.nonEmpty)
+      val okBefore = state() == model
+      val vC = VT.compactPatches(spark, dir)
+      val okAfter = state() == model && VT.readManifest(spark, dir, vC).patches.isEmpty
+      patch(batches.last)
+      okChain && okBefore && okAfter && state() == model
+    }
+    val result = SCTest.check(SCTest.Parameters.default.withMinSuccessfulTests(10), prop)
+    assert(result.passed, result.status.toString)
+  }
+
+  test("a 0-row patch publishes no version and leaves data/ as it was") {
+    val dir = tmp()
+    VT.create(Seq((1L, "a"), (2L, "b")).toDF("k", "s"), dir, Seq("k"))
+    def dataFiles(): Seq[String] = {
+      val root = java.nio.file.Paths.get(dir, "data")
+      val walk = Files.walk(root)
+      try walk.iterator().asScala.filter(Files.isRegularFile(_))
+        .map(root.relativize(_).toString).toSeq.sorted
+      finally walk.close()
+    }
+    val empty = Seq.empty[(Long, String, Boolean)].toDF("k", "s", "del")
+    def patchEmpty() = VT.commitPatch(empty, dir, Seq("k"), Seq($"s"), $"del")
+    val files1 = dataFiles()
+    assert(patchEmpty() == 1L)
+    assert(VT.versions(spark, dir) == Seq(1L))
+    assert(dataFiles() == files1)
+    // on a pending chain: the chain stays as it was
+    assert(VT.commitPatch(Seq((1L, "A", false)).toDF("k", "s", "del"),
+      dir, Seq("k"), Seq($"s"), $"del") == 2L)
+    val files2 = dataFiles()
+    assert(patchEmpty() == 2L)
+    assert(VT.versions(spark, dir) == Seq(1L, 2L))
+    assert(dataFiles() == files2)
+    assert(VT.readManifest(spark, dir, 2L).patches.size == 1)
+    assert(VT.read(spark, dir).as[(Long, String)].collect().toMap ==
+      Map(1L -> "A", 2L -> "b"))
   }
 
   test("compactPatches folds through the pruned CoW core; pruned reads stay exact under a chain") {

@@ -725,74 +725,6 @@ class WarehouseSpec extends SparkSuite {
       (3, "p3", "c", Some(3.5))), s"got $state")
   }
 
-  test("merge-on-read: appendPatch is O(batch) — base files untouched; fold is exact") {
-    val dir = Files.createTempDirectory("mor").toString + "/wh"
-    Seq((1, "a", 1.0), (2, "b", 2.0), (3, "c", 3.0)).toDF("k", "s", "v")
-      .write.parquet(dir)
-    def baseFiles() = new java.io.File(dir).listFiles()
-      .filter(_.getName.endsWith(".parquet")).map(f => f.getName -> f.lastModified()).toMap
-    val before = baseFiles()
-    // the 1-row change copy-on-write handles worst: ONLY the patch is written
-    val b0 = Warehouse.appendPatch(Seq((2, "B", 2.5, false)).toDF("k", "s", "v", "del"),
-      dir, Seq("k"), Seq($"s"), $"del")
-    assert(b0 == 0L)
-    assert(baseFiles() == before, "appendPatch must not rewrite the base")
-    val b1 = Warehouse.appendPatch(
-      Seq((1, "a", 0.0, true), (4, "d", 4.0, false), (2, "B2", 2.7, false))
-        .toDF("k", "s", "v", "del"),
-      dir, Seq("k"), Seq($"s"), $"del")
-    assert(b1 == 1L)
-    assert(baseFiles() == before)
-    // fold: later batch shadows earlier (k=2 → B2), tombstone drops k=1,
-    // k=4 inserts, k=3 passes through
-    val view = Warehouse.readMergeOnRead(spark, dir, Seq("k"), Seq($"s"))
-      .as[(Int, String, Double)].collect().toSet
-    assert(view == Set((2, "B2", 2.7), (3, "c", 3.0), (4, "d", 4.0)), s"got $view")
-    // compact: base now equals the fold, chain is gone, re-read identical
-    val (folded, n) = Warehouse.compactMergeOnRead(spark, dir, Seq("k"), Seq($"s"))
-    assert(folded == 2 && n == 3)
-    assert(spark.read.parquet(dir).as[(Int, String, Double)].collect().toSet == view)
-    assert(Warehouse.readMergeOnRead(spark, dir, Seq("k"), Seq($"s"))
-      .as[(Int, String, Double)].collect().toSet == view)
-    // leftover-patch crash window: re-adding an ALREADY-COMPACTED patch
-    // and re-folding converges to the same state
-    Warehouse.appendPatch(Seq((1, "a", 0.0, true), (4, "d", 4.0, false), (2, "B2", 2.7, false))
-      .toDF("k", "s", "v", "del"), dir, Seq("k"), Seq($"s"), $"del")
-    assert(Warehouse.readMergeOnRead(spark, dir, Seq("k"), Seq($"s"))
-      .as[(Int, String, Double)].collect().toSet == view, "replayed patch must converge")
-  }
-
-  test("merge-on-read equals sequential copy-on-write on random patch chains") {
-    // model: apply each patch batch one at a time to a Map; the fold must
-    // match BEFORE compaction, AFTER compaction, and for any chain length
-    val genBatch = Gen.listOf(Gen.zip(
-      Gen.choose(0, 20), Gen.alphaStr.map(_.take(3)), Gen.oneOf(true, false)))
-      .map(_.groupBy(_._1).map(_._2.head).toList) // one row per key per batch
-    val prop = Prop.forAll(Gen.mapOf(Gen.zip(Gen.choose(0, 20), Gen.alphaStr.map(_.take(3)))),
-      Gen.listOfN(3, genBatch)) { (base, batches) =>
-      val dir = Files.createTempDirectory("morp").toString + "/wh"
-      val baseDf = (base.toSeq :+ ((-999, "x"))).toDF("k", "s").filter($"k" =!= -999)
-      baseDf.write.parquet(dir)
-      batches.foreach { b =>
-        val df = (b :+ ((-999, "x", false))).toDF("k", "s", "del").filter($"k" =!= -999)
-        Warehouse.appendPatch(df, dir, Seq("k"), Seq($"s"), $"del")
-      }
-      val model = batches.foldLeft(base) { (m, b) =>
-        b.foldLeft(m) { case (acc, (k, v, del)) =>
-          if (del) acc - k else acc.updated(k, v)
-        }
-      }
-      val folded = Warehouse.readMergeOnRead(spark, dir, Seq("k"), Seq($"s"))
-        .as[(Int, String)].collect().toMap
-      val okBefore = folded == model
-      Warehouse.compactMergeOnRead(spark, dir, Seq("k"), Seq($"s"))
-      val okAfter = spark.read.parquet(dir).as[(Int, String)].collect().toMap == model
-      okBefore && okAfter
-    }
-    val result = SCTest.check(SCTest.Parameters.default.withMinSuccessfulTests(10), prop)
-    assert(result.passed, result.status.toString)
-  }
-
   test("crash between swap renames: retired-only state recovers, no rows lost") {
     // simulate the swap's one non-atomic window — target renamed to
     // _<dir>.old, new data never landed — for both the partitioned and
