@@ -3365,7 +3365,8 @@ private[graft] object Queries {
     * Iceberg positional-delete idea): on a DV-enabled table
     * (`graft.dvs.enabled`), `DELETE WHERE` writes an O(matched-rows)
     * `(file, row_index)` sidecar — NO base file is rewritten (byte-pinned
-    * in `DeletionVectorSpec`) — reads fold the vectors by anti-join, and
+    * in `DeletionVectorSpec`) — reads filter the base scan by the
+    * vectors' positions (`graft_dv_live`), and
     * `OPTIMIZE` materializes them back into clean base files. The query
     * asserts the delete really was a DV commit and that materialization
     * empties the vector set without changing the answer; the oracle
@@ -3484,7 +3485,7 @@ private[graft] object Queries {
     * record against the clean bases (two commits, both in the log); and
     * (2) a positional DELETE lands on a SHALLOW CLONE — the DV sidecar
     * is clone-owned and addresses the shared path-absolute source files
-    * (`dvFileKey`), so the source stays byte-identical while the clone
+    * (`DvSet.fileKey`), so the source stays byte-identical while the clone
     * diverges O(matched rows). Delta analog: DVs compose with cloned
     * tables the same way. The grouped read of the CLONE is the oracled
     * answer; require-pins assert the mechanics (fold+DV = 2 commits,

@@ -1139,16 +1139,19 @@ object VersionedTable {
 
   /** POSITIONAL deletion vectors (the Delta DV / Iceberg positional-
     * delete idea): a `DELETE WHERE` on a DV-enabled table writes a tiny
-    * sidecar of `(relative file path, row index)` pairs instead of
-    * rewriting any base file — O(matched rows), byte-stable bases — and
-    * every read anti-joins the base scan against the manifest's DV set
+    * sidecar of `(file key, row index)` pairs instead of rewriting any
+    * base file — O(matched rows), byte-stable bases. Sidecars are read
+    * and written on the driver ([[DvSet]]), and every read filters the
+    * base scan by the version's positions with one native expression,
+    * `graft_dv_live(_metadata.file_path, _metadata.row_index)`
     * (`_metadata.row_index` is the positional key, stable because base
-    * files are immutable). `materializeDvs` (run automatically by SQL
-    * `OPTIMIZE`) folds the vectors back into clean base files.
+    * files are immutable); no Spark job reads a sidecar. `materializeDvs`
+    * (run automatically by SQL `OPTIMIZE`) folds the vectors back into
+    * clean base files.
     *
     * DVs address positions in table-owned files AND local shallow-clone
-    * shared files (keyed path-absolute, see [[dvFileKey]] — the sidecar
-    * is always table-owned; only the addressed file is shared). A
+    * shared files (keyed path-absolute, see [[DvSet.fileKey]] — the
+    * sidecar is always table-owned; only the addressed file is shared). A
     * pending key-based patch chain composes by FOLDING FIRST: positions
     * only exist in physical files, so the DV commit runs compactPatches
     * (the same CoW fold SQL OPTIMIZE uses) and then records positions
@@ -1162,38 +1165,8 @@ object VersionedTable {
       s"VersionedTable.$op: the table carries deletion vectors — run " +
         "materializeDvs (or SQL OPTIMIZE) to fold them into base files first")
 
-  private val dvSchema = StructType(Seq(
-    org.apache.spark.sql.types.StructField("__vt_file",
-      org.apache.spark.sql.types.StringType, nullable = false),
-    org.apache.spark.sql.types.StructField("__vt_pos",
-      org.apache.spark.sql.types.LongType, nullable = false)))
-
-  /** The DV addressing key of each row's file, built to match
-    * [[FileEntry.path]] byte-for-byte: a table-OWNED file keys by its
-    * commit-relative path (`data/<commit>/<part>`); a shallow-clone
-    * SHARED file keys by the same path-absolute reference the clone's
-    * manifest stores — so positional deletes compose with clones (the
-    * DV sidecar is clone-owned; only the ADDRESSED file is shared, and
-    * base files are immutable, so positions stay stable). The two key
-    * shapes cannot collide (`data/…` vs `/…`). The scan reports a
-    * scheme-qualified URI (`file:///…`), so scheme+authority strip
-    * before the ownership test; scheme-qualified manifest REFS (remote
-    * clones) are refused at the commit sites — their stored form could
-    * not match this stripped key.
-    */
-  private def dvFileKey(dir: String): Column = {
-    val dirPath = (
-      if (dir.contains(":/")) new Path(dir).toUri.getPath
-      else new java.io.File(dir).getAbsolutePath).stripSuffix("/")
-    val pathOnly = regexp_replace(col("_metadata.file_path"),
-      "^[a-zA-Z][a-zA-Z0-9+.\\-]*:(//[^/]*)?", "")
-    when(pathOnly.startsWith(s"$dirPath/data/"),
-      regexp_extract(pathOnly, "(data/[^/]+/[^/]+)$", 1))
-      .otherwise(pathOnly)
-  }
-
   /** Refuse DV commits whose pruned candidates include scheme-qualified
-    * shared refs: [[dvFileKey]] keys by scheme-stripped path, so a
+    * shared refs: [[DvSet.fileKey]] keys by scheme-stripped path, so a
     * `scheme://…` manifest ref could never match its own rows' key and
     * the positions would silently record nothing.
     */
@@ -1204,50 +1177,21 @@ object VersionedTable {
         "and path-absolute (local clone) files; OPTIMIZE first to take " +
         "ownership"))
 
-  /** Base read of `paths` with each row's positional key attached.
-    * Metadata columns resolve only against the raw scan, hence a
-    * dedicated builder rather than a bolt-on to [[readDataFiles]].
+  /** The rows of the absolute `paths` that `keep` selects by position
+    * ([[DvSet.live]] or its negation, applied on the raw scan, where
+    * `_metadata` resolves), under their logical names — with `withPos`,
+    * plus each row's raw file path and row index ([[DvSet.positionCols]]).
     */
-  private def baseReadWithPos(spark: SparkSession, dir: String,
-                              schema: StructType,
-                              props: Map[String, String],
-                              paths: Seq[String]): DataFrame = {
-    val phys = physicalSchema(schema, props)
-    val df0 = spark.read.schema(phys).parquet(paths: _*)
+  private def positionalScan(spark: SparkSession, schema: StructType,
+                             props: Map[String, String], paths: Seq[String],
+                             keep: Column, withPos: Boolean = false): DataFrame = {
     val cm = colmapOf(props)
-    val payload = schema.fields.map(f =>
+    val payload = schema.fields.toIndexedSeq.map(f =>
       col(s"`${cm.getOrElse(f.name, f.name)}`").as(f.name))
-    df0.select((payload :+ dvFileKey(dir).as("__vt_file") :+
-      col("_metadata.row_index").as("__vt_pos")).toIndexedSeq: _*)
+    spark.read.schema(physicalSchema(schema, props)).parquet(paths: _*)
+      .filter(keep)
+      .select((if (withPos) payload ++ DvSet.positionCols else payload): _*)
   }
-
-  private def dvTable(spark: SparkSession, dir: String,
-                      dvs: Seq[String]): DataFrame =
-    spark.read.schema(dvSchema).parquet(dvs.map(p => dataPath(dir, p)): _*)
-
-  /** The rows of `paths` that `dvs` leave live, with their positional
-    * key. The anti-join's build side is the DELETED-ROW set (small by
-    * construction until materialization), so Spark broadcasts it and the
-    * fold costs a hash probe per row.
-    */
-  private def liveRows(spark: SparkSession, dir: String, schema: StructType,
-                       props: Map[String, String], paths: Seq[String],
-                       dvs: Seq[String]): DataFrame = {
-    val base = baseReadWithPos(spark, dir, schema, props, paths)
-    if (dvs.isEmpty) base
-    else base.join(dvTable(spark, dir, dvs), Seq("__vt_file", "__vt_pos"),
-      "left_anti")
-  }
-
-  /** The live rows of `paths` under the table's DV set: base scan minus
-    * deleted positions.
-    */
-  private def dvFoldedRead(spark: SparkSession, dir: String,
-                           schema: StructType, props: Map[String, String],
-                           paths: Seq[String], dvs: Seq[String]): DataFrame =
-    if (paths.isEmpty) emptyDF(spark, schema)
-    else liveRows(spark, dir, schema, props, paths, dvs)
-      .select(schema.fieldNames.map(col).toIndexedSeq: _*)
 
   /** `DELETE WHERE` as a deletion-vector commit: no base byte is read
     * beyond the pruned candidates, none is rewritten. Returns the new
@@ -1274,9 +1218,12 @@ object VersionedTable {
     dvCommit(spark, dir, cond, Some(sets), txn)
 
   /** The positional core of [[commitDeleteDv]] (`sets` None) and
-    * [[commitUpdateDv]]: record the positions of the live candidate rows
-    * matching `cond` in a DV sidecar (a position already deleted is not
-    * recorded again), append the UPDATE's images, publish one commit.
+    * [[commitUpdateDv]]: one job collects the positions of the live
+    * candidate rows matching `cond` (a position already deleted is not
+    * recorded again), the driver writes them as one sidecar, and an
+    * UPDATE's images come from a second scan filtered to exactly those
+    * positions; one commit publishes both. Two jobs for an UPDATE, one
+    * for a DELETE.
     */
   private def dvCommit(spark: SparkSession, dir: String, cond: Column,
                        sets: Option[Seq[(String, Column)]],
@@ -1297,8 +1244,9 @@ object VersionedTable {
         dvCommit(spark, dir, cond, sets, txn)
       } else {
         requireDvAddressable(files, label)
-        val paths = files.map(f => dataPath(dir, f.path))
-        val matched = liveRows(spark, dir, schema, cur.props, paths, cur.dvs)
+        val matched = positionalScan(spark, schema, cur.props,
+            files.map(f => dataPath(dir, f.path)), DvSet.read(spark, dir, cur.dvs).live,
+            withPos = true)
           .filter(coalesce(cond, lit(false)))
         // determinism guard (checked on the RESOLVED plan, where rand() is
         // a Nondeterministic node — the SQL front door hands us unresolved
@@ -1319,29 +1267,25 @@ object VersionedTable {
             "no reproducible meaning across them. Materialize the randomness " +
             "into a column first, or disable deletion vectors to take the " +
             "single-evaluation copy-on-write path"))
-        val sidecar = writeSidecar(matched.select("__vt_file", "__vt_pos"), dir,
-          freshRel(cur.version + 1) + (if (sets.isEmpty) "" else "-dv"))
-        if (sidecar.rows(spark) == 0L) {
-          fsOf(spark, dir).delete(new Path(dir, sidecar.rel), true)
-          cur.version
-        } else {
-          // the image rows derive from the positions JUST RECORDED (semi-
-          // join of the immutable base read against the written sidecar on
-          // (__vt_file, __vt_pos) — row_index is a pure function of the
-          // file bytes), NOT from re-evaluating the predicate: the two
-          // passes agree by construction even when the predicate folds
-          // per-execution literals (current_timestamp() et al). Only the
-          // SET expressions evaluate here, exactly once — CoW
-          // single-evaluation semantics.
+        val hits = DvSet.collectPositions(matched)
+        if (hits.isEmpty) cur.version
+        else {
+          val (sidecar, recorded) = DvSet.write(spark, dir,
+            freshRel(cur.version + 1) + (if (sets.isEmpty) "" else "-dv"), hits)
+          // the images come from the positions JUST RECORDED (row_index is
+          // a pure function of the immutable file bytes), NOT from
+          // re-evaluating the predicate: the two passes agree by
+          // construction even when the predicate folds per-execution
+          // literals (current_timestamp() et al). Only the SET expressions
+          // evaluate here, exactly once — CoW single-evaluation semantics.
           val adds = image.fold(Seq.empty[FileEntry]) { img =>
-            writeCommitFiles(baseReadWithPos(spark, dir, schema, cur.props, paths)
-              .join(spark.read.schema(dvSchema).parquet(new Path(dir, sidecar.rel).toString),
-                Seq("__vt_file", "__vt_pos"), "left_semi")
+            writeCommitFiles(positionalScan(spark, schema, cur.props,
+                recorded.files.toSeq.sorted.map(dataPath(dir, _)), !recorded.live)
               .select(img: _*), dir, cur)
           }
           publish(spark, dir, cur, ManifestDelta(
             if (sets.isEmpty) "delete_dv" else "update_dv", adds = adds,
-            txn = txn, dvs = Some(cur.dvs ++ sidecar.paths)))
+            txn = txn, dvs = Some(cur.dvs :+ sidecar)))
         }
       }
     }
@@ -1367,22 +1311,20 @@ object VersionedTable {
   }
 
   /** Fold every pending deletion vector into clean base files: files
-    * holding at least one deleted position rewrite (without their dead
-    * rows), untouched files carry by reference, and the DV set empties —
-    * the OPTIMIZE half of the DV contract. Returns the new version (the
-    * current one when no DVs are pending).
+    * holding at least one deleted position (the keys of the driver-read
+    * position set) rewrite without their dead rows, untouched files carry
+    * by reference, and the DV set empties — the OPTIMIZE half of the DV
+    * contract, one write job. Returns the new version (the current one
+    * when no DVs are pending).
     */
   def materializeDvs(spark: SparkSession, dir: String): Long =
     withHead(spark, dir, "materializeDvs") { cur =>
       if (cur.dvs.isEmpty) cur.version
       else {
-        // one row per dv'd FILE — driver-small by the same argument as the
-        // manifest's own file list
-        val affected = dvTable(spark, dir, cur.dvs)
-          .select("__vt_file").distinct().collect().map(_.getString(0)).toSet
-        val rewrite = filesOf(spark, dir, cur).filter(f => affected(f.path))
-        val folded = dvFoldedRead(spark, dir, StructType.fromDDL(cur.schemaDdl),
-          cur.props, rewrite.map(f => dataPath(dir, f.path)), cur.dvs)
+        val dv = DvSet.read(spark, dir, cur.dvs)
+        val rewrite = filesOf(spark, dir, cur).filter(f => dv.files(f.path))
+        val folded = readLive(spark, dir, StructType.fromDDL(cur.schemaDdl),
+          cur.props, rewrite.map(_.path), dv)
         publish(spark, dir, cur, ManifestDelta("dv_materialize",
           adds = writeCommitFiles(folded, dir, cur), removes = rewrite,
           dvs = Some(Seq.empty)))
@@ -1403,14 +1345,7 @@ object VersionedTable {
     s"data/c$version-${java.util.UUID.randomUUID().toString.take(8)}"
 
   /** The parquet part files one write put under `dir/rel`, by name. */
-  private final case class Sidecar(rel: String, parts: Seq[FileStatus]) {
-    def paths: Seq[String] = parts.map(st => s"$rel/${st.getPath.getName}")
-
-    /** Rows written, from the footers just written (driver metadata
-      * reads over the listed files) — not a Spark job re-reading them.
-      */
-    def rows(spark: SparkSession): Long = FooterStats.rowCounts(spark, parts).sum
-  }
+  private final case class Sidecar(rel: String, parts: Seq[FileStatus])
 
   /** Write `df` as parquet under `dir/rel` and list what landed. */
   private def writeSidecar(df: DataFrame, dir: String, rel: String): Sidecar = {
@@ -1869,6 +1804,21 @@ object VersionedTable {
     } catch { case scala.util.control.NonFatal(_) => None }
   }
 
+  /** `cond` over rows of `schema`, resolved by analysis alone (as in
+    * [[resolved]]) and evaluated by Catalyst's interpreted predicate:
+    * no optimizer, planner or job per call.
+    */
+  private def localPredicate(spark: SparkSession, schema: StructType,
+                             cond: Column): org.apache.spark.sql.catalyst.InternalRow => Boolean = {
+    import org.apache.spark.sql.catalyst.expressions.{AttributeReference, BoundReference, Predicate}
+    val analyzed = emptyDF(spark, schema).filter(cond).queryExecution.analyzed
+    val bound = analyzed.asInstanceOf[org.apache.spark.sql.catalyst.plans.logical.Filter]
+      .condition.transform {
+      case a: AttributeReference => BoundReference(schema.fieldIndex(a.name), a.dataType, a.nullable)
+    }
+    Predicate.createInterpreted(bound).eval
+  }
+
   /** `e` with `BETWEEN` and the other replaceable forms replaced, `With`
     * inlined (by-name references cannot re-resolve its common-expression
     * refs) and constants folded (file pruning reads literals).
@@ -2261,7 +2211,7 @@ object VersionedTable {
         if (failOnDupKeys) Warehouse.requireUniqueKeys(changes, keys)
         else if (dedupe) Warehouse.dedupByKey(changes, keys, tiebreak)
         else changes
-      cowMergeCore(spark, dir, cur, deduped, keys, deleteCond, txn,
+      cowMergeCore(spark, dir, cur, changes, deduped, keys, deleteCond, txn,
         evolve, metaCols, op = "merge", deleteMatchedOnly = deleteMatchedOnly)
     }
   }
@@ -2271,10 +2221,12 @@ object VersionedTable {
     * find the touched files, merge only them, carry the rest by
     * reference, publish one manifest — which empties a patch chain, as
     * every commit but a patch or constraint commit does. `deduped` must
-    * be one row per key.
+    * be one row per key; `changes` is the changelog it was deduplicated
+    * from, whose key set is the same, so the touched-file probe reads its
+    * keys (a local changelog probes on the driver, with no job).
     */
   private def cowMergeCore(spark: SparkSession, dir: String, cur: ManifestMeta,
-                           deduped: DataFrame, keys: Seq[String],
+                           changes: DataFrame, deduped: DataFrame, keys: Seq[String],
                            deleteCond: Column, txn: Option[(String, Long)],
                            evolve: Boolean, metaCols: Seq[String],
                            op: String,
@@ -2287,7 +2239,7 @@ object VersionedTable {
     // 10⁶-file tail costs nothing on the metadata path
     val touched: Seq[FileEntry] =
       if (!cur.statsCols.contains(physKey)) filesOf(spark, dir, cur)
-      else findTouchedFiles(spark, dir, cur, deduped, key, physKey, schema)
+      else findTouchedFiles(spark, dir, cur, changes, deduped, key, physKey, schema)
     val touchedCount = touched.size
     val base =
       if (touched.isEmpty)
@@ -2363,7 +2315,7 @@ object VersionedTable {
     * happen (bloom contract).
     */
   private def findTouchedFiles(spark: SparkSession, dir: String, cur: ManifestMeta,
-                               deduped: DataFrame, key: String,
+                               changes: DataFrame, deduped: DataFrame, key: String,
                                physKey: String,
                                schema: StructType): Seq[FileEntry] = {
     val keyType = schema(key).dataType
@@ -2373,14 +2325,15 @@ object VersionedTable {
     // other tables misroute this one's exact-touched test
     val distributed = cur.numFiles > distributedPruneThreshold(spark)
     // ZERO-JOB fast path: a changelog that optimizes to a LocalRelation
-    // (the IVM fold collects its O(touched groups) delta when bounded)
+    // (the IVM fold collects its O(touched groups) delta when bounded; a
+    // merge's local changelog before its dedup, which keeps the key set)
     // carries its key values ON THE DRIVER — the interval test and bloom
     // probes evaluate through the same Catalyst Cast/ordering/XxHash64,
     // so the verdict is byte-identical to the Spark pass with no job
     // scheduled at all. The file list must be driver-scale (same bound
     // as the driver tier) — a 10⁶-file table keeps the distributed pass.
     if (!distributed) {
-      val localKeys = localKeyValues(deduped, key, keyType)
+      val localKeys = localKeyValues(changes, key, keyType)
       if (localKeys.isDefined) {
         lastTouchedMode = "local"
         return touchedAmongLocal(spark, dir, cur,
@@ -2427,10 +2380,10 @@ object VersionedTable {
     * .plans.logical.LocalRelation]] — i.e. the rows already live on the
     * driver. None for any distributed plan.
     */
-  private def localKeyValues(deduped: DataFrame, key: String,
+  private def localKeyValues(changes: DataFrame, key: String,
                              keyType: org.apache.spark.sql.types.DataType)
       : Option[Array[Any]] =
-    deduped.queryExecution.optimizedPlan match {
+    changes.queryExecution.optimizedPlan match {
       case lr: org.apache.spark.sql.catalyst.plans.logical.LocalRelation =>
         val idx = lr.output.indexWhere(_.name == key)
         if (idx < 0) None
@@ -2440,7 +2393,7 @@ object VersionedTable {
           // tz-aware conversion (string->timestamp etc.) with no
           // timeZoneId is unresolved and throws at eval — the
           // distributed pass would have used the session zone
-          val zone = Some(deduped.sparkSession.sessionState.conf
+          val zone = Some(changes.sparkSession.sessionState.conf
             .sessionLocalTimeZone)
           val cast = org.apache.spark.sql.catalyst.expressions.Cast(
             org.apache.spark.sql.catalyst.expressions.Literal.default(srcType),
@@ -2739,11 +2692,12 @@ object VersionedTable {
   def compactPatches(spark: SparkSession, dir: String): Long =
     withHead(spark, dir, "compactPatches") { cur =>
       if (cur.patches.isEmpty) cur.version
-      else cowMergeCore(spark, dir, cur,
-        chainChangelog(spark, dir, cur.patches, cur.mergeKeys,
-          StructType.fromDDL(cur.schemaDdl), cur.props),
-        cur.mergeKeys, col("__vt_del"), txn = None, evolve = false,
-        metaCols = Seq.empty, op = "compact")
+      else {
+        val chain = chainChangelog(spark, dir, cur.patches, cur.mergeKeys,
+          StructType.fromDDL(cur.schemaDdl), cur.props)
+        cowMergeCore(spark, dir, cur, chain, chain, cur.mergeKeys, col("__vt_del"),
+          txn = None, evolve = false, metaCols = Seq.empty, op = "compact")
+      }
     }
 
   /** Tag carried by the BASE parquet relation of every [[read]]: the
@@ -2774,8 +2728,9 @@ object VersionedTable {
   /** Set on a DV-folded read's BASE scan: the manifest's sidecar file set
     * (as scheme-stripped absolute paths) at the tagged version. Lets
     * [[graft.plans.VtableViewRewrite]] verify — from MEMORY, no manifest
-    * re-read per optimizer fixpoint — that the anti-join it strips is the
-    * table's OWN dv fold over exactly that sidecar set, and that a bare
+    * re-read per optimizer fixpoint — that the `graft_dv_live` filter it
+    * strips is the table's OWN dv fold over exactly that sidecar set (the
+    * expression carries its set's sidecar names), and that a bare
     * tagged scan really has no pending DVs (absent = none).
     */
   val dvStateTag: org.apache.spark.sql.catalyst.trees.TreeNodeTag[Set[String]] =
@@ -2828,20 +2783,18 @@ object VersionedTable {
       throw new IllegalArgumentException(s"VersionedTable.read: $dir is not a versioned table"))
     val m = readManifest(spark, dir, v)
     val schema = StructType.fromDDL(m.schemaDdl)
-    val df = readLive(spark, dir, schema, m.props, m.files.map(_.path), m.dvs)
-    // tag the BASE scan (not a DV sidecar: its output is exactly the
-    // reserved dv key pair) so the optimizer rules see every read, DV-
-    // folded ones too — zone-map pruning is sound under the fold (the
-    // anti-join only removes rows), VtableMetadataAgg re-reads the
-    // manifest and refuses on dvs, and VtableViewRewrite recognizes the
-    // fold shape and answers from a view whose cursor equals THIS version
-    // (whose state, post-r17, includes the DV retraction)
-    val dvSet = m.dvs.map(p => new Path(dataPath(dir, p)).toUri.getPath).toSet
+    val dv = DvSet.read(spark, dir, m.dvs)
+    val df = readLive(spark, dir, schema, m.props, m.files.map(_.path), dv)
+    // tag the base scan so the optimizer rules see every read, DV-folded
+    // ones too — zone-map pruning is sound under the fold (the DV filter
+    // only removes rows), VtableMetadataAgg re-reads the manifest and
+    // refuses on dvs, and VtableViewRewrite recognizes the fold and
+    // answers from a view whose cursor equals THIS version (whose state,
+    // post-r17, includes the DV retraction)
     df.queryExecution.analyzed.foreach {
-      case lr: org.apache.spark.sql.execution.datasources.LogicalRelation
-          if dvSet.isEmpty || !lr.schema.fieldNames.sameElements(dvSchema.fieldNames) =>
+      case lr: org.apache.spark.sql.execution.datasources.LogicalRelation =>
         lr.setTagValue(pruneTag, (dir, m.version))
-        if (dvSet.nonEmpty) lr.setTagValue(dvStateTag, dvSet)
+        if (dv.sidecars.nonEmpty) lr.setTagValue(dvStateTag, dv.sidecars)
         m.props.get(TableIdProp).foreach(lr.setTagValue(tableIdTag, _))
       case _ =>
     }
@@ -2887,18 +2840,21 @@ object VersionedTable {
     // exact predicate re-applies after the fold (a table never carries
     // both DVs and a patch chain)
     foldPatches(spark, dir, m.patches, m.mergeKeys,
-      readLive(spark, dir, schema, m.props, survivors, m.dvs), schema, m.props)
+      readLive(spark, dir, schema, m.props, survivors, DvSet.read(spark, dir, m.dvs)),
+      schema, m.props)
   }
 
-  /** The rows of the table files `paths` (relative) that `dvs` leave
-    * live — a plain read when there are none.
+  /** The rows of the table files `paths` (relative) that `dv` leaves
+    * live: the base scan filtered by `graft_dv_live`, one binary search
+    * in the row's file's positions per row — a plain read when `dv` is
+    * empty. The one DV fold of every read, materialize and change feed.
     */
   private def readLive(spark: SparkSession, dir: String, schema: StructType,
                        props: Map[String, String], paths: Seq[String],
-                       dvs: Seq[String]): DataFrame =
+                       dv: DvSet): DataFrame =
     if (paths.isEmpty) emptyDF(spark, schema)
-    else if (dvs.isEmpty) readDataFiles(spark, schema, props, paths.map(dataPath(dir, _)))
-    else dvFoldedRead(spark, dir, schema, props, paths.map(dataPath(dir, _)), dvs)
+    else if (dv.isEmpty) readDataFiles(spark, schema, props, paths.map(dataPath(dir, _)))
+    else positionalScan(spark, schema, props, paths.map(dataPath(dir, _)), dv.live)
 
   /** The file-level pruning decision behind [[readPruned]], exposed for
     * plan inspection: (surviving relative paths, manifest). A file
@@ -3015,7 +2971,6 @@ object VersionedTable {
   private def pruneEntries(spark: SparkSession, dir: String, m: ManifestMeta,
                            ranges: Seq[(String, Option[Column], Option[Column])],
                            inSets: Seq[(String, Seq[Column])]): Seq[FileEntry] = {
-    import scala.jdk.CollectionConverters._
     val schema = StructType.fromDDL(m.schemaDdl)
     // predicates arrive in LOGICAL names from library callers and in
     // PHYSICAL names from the skipping rule (filters pushed below the
@@ -3050,44 +3005,33 @@ object VersionedTable {
       if (m.numFiles <= distributedPruneThreshold(spark)) {
         lastPruneMode = "driver"
         val files = filesOf(spark, dir, m)
-        // one LOCAL row per file carrying every active column's interval;
-        // evaluated through Catalyst casts so the pruning comparison is
-        // exactly the scan's
+        // one LOCAL row per file carrying every active column's interval,
+        // tested by the survive-conditions resolved once and evaluated by
+        // Catalyst's interpreted predicate: the comparison is exactly the
+        // scan's casts, with no query planned or run
         val cols = (activeRanges.map(_._1) ++ activeIns.map(_._1)).distinct
         val idx = cols.zipWithIndex.toMap
-        val rows = files.map { f =>
-          org.apache.spark.sql.Row.fromSeq(
-            f.path +: cols.flatMap { c =>
-              f.stats.get(c) match {
-                case Some(ColStat(_, Some(mn), Some(mx), _)) => Seq(mn, mx, "range")
-                case Some(ColStat(_, None, None, _)) => Seq(null, null, "allnull")
-                case _ => Seq(null, null, "blind")
-              }
-            })
-        }
-        val statSchema = StructType(
-          org.apache.spark.sql.types.StructField("__path",
-            org.apache.spark.sql.types.StringType) +:
-          cols.indices.flatMap { i => Seq(
-            org.apache.spark.sql.types.StructField(s"__min_$i",
-              org.apache.spark.sql.types.StringType),
-            org.apache.spark.sql.types.StructField(s"__max_$i",
-              org.apache.spark.sql.types.StringType),
-            org.apache.spark.sql.types.StructField(s"__kind_$i",
-              org.apache.spark.sql.types.StringType))
-          })
-        val cond = survives { c => rangeTest =>
+        val statSchema = StructType(cols.indices.flatMap(i =>
+          Seq(s"__min_$i", s"__max_$i", s"__kind_$i").map(n =>
+            org.apache.spark.sql.types.StructField(n, org.apache.spark.sql.types.StringType))))
+        val survivor = localPredicate(spark, statSchema, survives { c => rangeTest =>
           val i = idx(c)
           val t = typeOf(c)
           (col(s"__kind_$i") === "blind") ||
             (col(s"__kind_$i") === "range" &&
               rangeTest(col(s"__min_$i").cast(t), col(s"__max_$i").cast(t)))
+        })
+        val utf8 = (v: String) => org.apache.spark.unsafe.types.UTF8String.fromString(v)
+        files.filter { f =>
+          survivor(new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
+            cols.toArray.flatMap { c =>
+              f.stats.get(c) match {
+                case Some(ColStat(_, Some(mn), Some(mx), _)) => Array[Any](utf8(mn), utf8(mx), utf8("range"))
+                case Some(ColStat(_, None, None, _)) => Array[Any](null, null, utf8("allnull"))
+                case _ => Array[Any](null, null, utf8("blind"))
+              }
+            }))
         }
-        val surv = spark.createDataFrame(
-            new java.util.ArrayList[org.apache.spark.sql.Row](rows.asJava), statSchema)
-          .filter(cond)
-          .select("__path").collect().map(_.getString(0)).toSet
-        files.filter(f => surv(f.path))
       } else {
         lastPruneMode = "distributed"
         // the same survive-conditions, expressed over the checkpoint
@@ -3312,8 +3256,8 @@ object VersionedTable {
           .select(col("__r.ct").as("change_type") +: keys.map(col) ++:
             payload.map(c => col(s"__r.img.$c").as(c)): _*)
     }
-    def readSet(ps: Seq[String], dvs: Seq[String] = Nil): DataFrame =
-      readLive(spark, dir, schema, m2.props, ps, dvs)
+    def readSet(ps: Seq[String], dv: DvSet = DvSet.empty): DataFrame =
+      readLive(spark, dir, schema, m2.props, ps, dv)
     val (added, removed) = windowFiles(spark, dir, fromV, toV)
     if (m1.patches == m2.patches) {
       // identical chains: any difference lives in the base file sets, and
@@ -3322,10 +3266,11 @@ object VersionedTable {
       if (m1.dvs.isEmpty && m2.dvs.isEmpty)
         classify(readSet(removed), readSet(added))
       else {
+        val (d1, d2) = (DvSet.read(spark, dir, m1.dvs), DvSet.read(spark, dir, m2.dvs))
         val (newlyDead, revived) =
-          dvFlips(spark, dir, schema, m1, m2, added ++ removed)
-        classify(readSet(removed, m1.dvs).unionByName(newlyDead),
-          readSet(added, m2.dvs).unionByName(revived))
+          dvFlips(spark, dir, schema, m2.props, d1, d2, added ++ removed)
+        classify(readSet(removed, d1).unionByName(newlyDead),
+          readSet(added, d2).unionByName(revived))
       }
     } else if (added.isEmpty && removed.isEmpty && m2.patches.startsWith(m1.patches)) {
       // patch-only window: the delta is confined to keys the NEW patch
@@ -3399,12 +3344,13 @@ object VersionedTable {
     // view never held / must not hold
     def signed(df: DataFrame, sign: Int): DataFrame =
       df.withColumn("__sign", lit(sign.toLong))
-    val both = signed(readLive(spark, dir, schema, m2.props, added, m2.dvs), 1)
-      .unionByName(signed(readLive(spark, dir, schema, m2.props, removed, m1.dvs), -1))
+    val (d1, d2) = (DvSet.read(spark, dir, m1.dvs), DvSet.read(spark, dir, m2.dvs))
+    val both = signed(readLive(spark, dir, schema, m2.props, added, d2), 1)
+      .unionByName(signed(readLive(spark, dir, schema, m2.props, removed, d1), -1))
     if (m1.dvs.isEmpty && m2.dvs.isEmpty) Some(both)
     else {
       val (newlyDead, revived) =
-        dvFlips(spark, dir, schema, m1, m2, added ++ removed)
+        dvFlips(spark, dir, schema, m2.props, d1, d2, added ++ removed)
       Some(both.unionByName(signed(newlyDead, -1)).unionByName(signed(revived, 1)))
     }
   }
@@ -3440,42 +3386,23 @@ object VersionedTable {
     }
   }
 
-  /** The rows whose liveness a DV window `m1 → m2` flipped in files
-    * present at both ends (files in `changed` already contribute their
-    * folded live sets): (newly dead, revived), read under `m2`. DV files
-    * are append-only until a materialize/restore swaps them, and a
-    * position is recorded at most once (only LIVE rows record), so the
-    * position-set diff needs only the dv FILES unique to each end —
-    * carried files cancel. The collect is O(distinct dv-addressed files).
+  /** The rows whose liveness a DV window flipped in files present at
+    * both ends (files in `changed` already contribute their folded live
+    * sets): (newly dead, revived), read under `props`. `d1` and `d2` are
+    * the endpoints' position sets, read on the driver, so a flip is a set
+    * difference there — dead at the end and not at the start, or the
+    * reverse — and each side is one scan of the files it names, filtered
+    * to its positions. No job runs until the caller's action.
     */
   private def dvFlips(spark: SparkSession, dir: String, schema: StructType,
-                      m1: ManifestMeta, m2: ManifestMeta,
+                      props: Map[String, String], d1: DvSet, d2: DvSet,
                       changed: Seq[String]): (DataFrame, DataFrame) = {
-    val preOnly = m1.dvs.filterNot(m2.dvs.toSet)
-    val postOnly = m2.dvs.filterNot(m1.dvs.toSet)
-    def dvRows(ps: Seq[String]): DataFrame =
-      if (ps.isEmpty) emptyDF(spark, dvSchema)
-      else dvTable(spark, dir, ps)
-    val newlyDead =
-      if (preOnly.isEmpty) dvRows(postOnly)
-      else dvRows(postOnly).except(dvRows(preOnly))
-    val revived =
-      if (postOnly.isEmpty) dvRows(preOnly)
-      else dvRows(preOnly).except(dvRows(postOnly))
-    val diffFiles = newlyDead.unionByName(revived)
-      .select("__vt_file").distinct()
-      .collect().map(_.getString(0))
-      .filterNot(changed.toSet).toSeq
-    val sharedPos =
-      if (diffFiles.isEmpty) None
-      else Some(baseReadWithPos(spark, dir, schema, m2.props,
-        diffFiles.map(p => dataPath(dir, p))))
-    def atPositions(dv: DataFrame): DataFrame = sharedPos match {
-      case None => emptyDF(spark, schema)
-      case Some(b) => b.join(dv, Seq("__vt_file", "__vt_pos"), "left_semi")
-        .select(schema.fieldNames.map(col).toIndexedSeq: _*)
+    def atPositions(flipped: DvSet): DataFrame = {
+      val files = (flipped.files -- changed).toSeq.sorted
+      if (files.isEmpty) emptyDF(spark, schema)
+      else positionalScan(spark, schema, props, files.map(dataPath(dir, _)), !flipped.live)
     }
-    (atPositions(newlyDead), atPositions(revived))
+    (atPositions(d2 -- d1), atPositions(d1 -- d2))
   }
 
   /** Zero-scan table statistics straight from the manifest — the stats

@@ -9,7 +9,7 @@ import org.apache.spark.sql.catalyst.trees.TreeNodeTag
 import org.apache.spark.sql.execution.datasources.LogicalRelation
 import org.apache.spark.sql.types.{DoubleType, LongType}
 
-import graft.ops.{VersionedTable, ViewOps}
+import graft.ops.{DvLive, VersionedTable, ViewOps}
 
 /** Automatic MATERIALIZED-VIEW query rewrite: a grouped `COUNT` / `SUM` /
   * `AVG` aggregate over a versioned table is answered from its maintained
@@ -24,7 +24,7 @@ import graft.ops.{VersionedTable, ViewOps}
   * fact scan would read everything. The view is kept current per commit
   * by IVM ([[graft.ops.ViewOps]]), so the rewrite is read-time free.
   *
-  * Sound by three gates, each conservative:
+  * Sound by four gates, each conservative:
   *
   *  1. FRESHNESS IS EXACT, version against version. Every versioned read
   *     pins its version in [[VersionedTable.pruneTag]]; the rewrite fires
@@ -44,7 +44,14 @@ import graft.ops.{VersionedTable, ViewOps}
   *     aggregates are not derivable from the state and refuse the
   *     rewrite. Ungrouped counts coalesce to 0 over an empty state
   *     (SQL's one-row answer).
-  *  3. PREDICATES ONLY OVER GROUP COLUMNS. A `WHERE` between the
+  *  3. DELETION VECTORS ARE THE TAGGED VERSION'S. A read at a DV version
+  *     filters its base scan with one `graft_dv_live` ([[DvLive]])
+  *     expression that carries its sidecar set; the rewrite strips that
+  *     filter only when the set equals the scan's
+  *     [[VersionedTable.dvStateTag]] (a bare scan must have none), so the
+  *     view, whose state at that version includes the DV retraction,
+  *     answers for exactly the rows the scan would return.
+  *  4. PREDICATES ONLY OVER GROUP COLUMNS. A `WHERE` between the
   *     aggregate and the scan rewrites only when every referenced column
   *     is a view group column — such a filter commutes with grouping
   *     (all rows of a group share its value), so filtering view rows is
@@ -71,85 +78,45 @@ object VtableViewRewrite extends Rule[LogicalPlan] {
         rewrite(agg).getOrElse(agg)
     }
 
-  private val dvKeyNames = Set("__vt_file", "__vt_pos")
-
-  /** A bare scan of DV sidecar files — (possibly attribute-projected)
-    * relation whose output is exactly the reserved dv key pair. Returns
-    * its input files (scheme-stripped) for the manifest identity check.
-    */
-  private def dvSidecarFiles(p: LogicalPlan): Option[Set[String]] = p match {
-    case lr: LogicalRelation if lr.output.map(_.name).toSet == dvKeyNames =>
-      lr.relation match {
-        case h: org.apache.spark.sql.execution.datasources.HadoopFsRelation =>
-          Some(h.location.inputFiles.map(f =>
-            new org.apache.hadoop.fs.Path(f).toUri.getPath).toSet)
-        case _ => None
-      }
-    case Project(pl, c) if pl.forall(_.isInstanceOf[AttributeReference]) =>
-      dvSidecarFiles(c)
-    // the optimizer's inferred null-filter on the join keys: dropping
-    // null-keyed sidecar rows never changes anti-join semantics (null
-    // keys match nothing), and the identity check is on the FILE set.
-    // ONLY IsNotNull conjuncts qualify — any other predicate over the
-    // keys (e.g. __vt_pos > 100) selects a sidecar SUBSET, which is a
-    // different dv state than the tagged one and must refuse.
-    case Filter(f, c) if conjuncts(f).forall {
-        case IsNotNull(a: AttributeReference) => dvKeyNames(a.name)
-        case _ => false
-      } => dvSidecarFiles(c)
-    case _ => None
-  }
-
   private def conjuncts(e: Expression): Seq[Expression] = e match {
     case And(l, r) => conjuncts(l) ++ conjuncts(r)
     case o => Seq(o)
   }
 
-  /** The canonical DV-fold condition and nothing else: a conjunction of
-    * EXACTLY two EqualTo predicates, each equating two same-named
-    * attributes — one per reserved dv key, exactly one side from the
-    * sidecar plan. A same-keyed but non-canonical predicate (inequality,
-    * extra conjunct, one key only, cross-named equality) computes a
-    * DIFFERENT anti-join than the tagged dv state folds, and recognizing
-    * it would rewrite a query to an answer it doesn't equal.
+  /** The table's own deletion-vector fold: a [[DvLive]] whose set was
+    * read from sidecars (not a difference of two sets). Returns the set's
+    * sidecar files for the identity check against the tagged version's
+    * dv state.
     */
-  private def isCanonicalDvJoin(cond: Expression, right: LogicalPlan): Boolean = {
-    val cs = conjuncts(cond)
-    val bound = cs.collect {
-      case EqualTo(a: AttributeReference, b: AttributeReference)
-          if a.name == b.name && dvKeyNames(a.name) &&
-            (right.outputSet.contains(a) ^ right.outputSet.contains(b)) =>
-        a.name
-    }
-    cs.size == 2 && bound.size == 2 && bound.toSet == dvKeyNames
+  private def dvFold(e: Expression): Option[Set[String]] = e match {
+    case d: DvLive if d.dv.minus.isEmpty => Some(d.dv.sidecars)
+    case _ => None
   }
 
-  /** Pass-through Projects, at most one Filter, and at most one
-    * deletion-vector fold (the table's own base⟕sidecar anti-join on the
-    * reserved position keys) between the aggregate and the tagged base
-    * relation; anything else is not a shape the view can answer. `dv`
-    * carries the sidecar scan's file set so the caller can verify it IS
-    * the tagged version's dv state — an arbitrary user anti-join must
-    * refuse.
+  /** Pass-through Projects, at most one user Filter, and at most one
+    * deletion-vector fold between the aggregate and the tagged base
+    * relation; anything else is not a shape the view can answer. The fold
+    * is a [[DvLive]] conjunct of a Filter (the optimizer merges a user
+    * filter pushed onto the scan into the same node); `dv` carries its
+    * sidecar set so the caller can verify it IS the tagged version's dv
+    * state.
     */
   private def strip(p: LogicalPlan, cond: Option[Expression],
                     dv: Option[Set[String]])
       : Option[(Option[Expression], LogicalRelation, Option[Set[String]])] =
     p match {
       case lr: LogicalRelation => Some((cond, lr, dv))
-      case Project(pl, c) if pl.forall {
-          case _: AttributeReference => true
-          // under the dv fold, the base side carries the two computed
-          // join keys as aliases — transparent to the aggregate, which
-          // references only real columns
-          case a: Alias => dv.isDefined && dvKeyNames(a.name)
-          case _ => false
-        } => strip(c, cond, dv)
-      case Filter(f, c) if cond.isEmpty => strip(c, Some(f), dv)
-      case org.apache.spark.sql.catalyst.plans.logical.Join(l, r,
-          org.apache.spark.sql.catalyst.plans.LeftAnti, jc, _)
-          if dv.isEmpty && jc.exists(isCanonicalDvJoin(_, r)) =>
-        dvSidecarFiles(r).flatMap(files => strip(l, cond, Some(files)))
+      case Project(pl, c) if pl.forall(_.isInstanceOf[AttributeReference]) =>
+        strip(c, cond, dv)
+      case Filter(f, c) =>
+        val (folds, rest) = conjuncts(f).partition(_.isInstanceOf[DvLive])
+        val user = rest.reduceOption(And)
+        (folds.map(dvFold), user) match {
+          case (Seq(), Some(u)) if cond.isEmpty => strip(c, Some(u), dv)
+          case (Seq(Some(files)), u) if dv.isEmpty && (u.isEmpty || cond.isEmpty) =>
+            strip(c, u.orElse(cond), Some(files))
+          case _ => None
+        }
       case _ => None
     }
 
@@ -158,7 +125,7 @@ object VtableViewRewrite extends Rule[LogicalPlan] {
       (cond, lr, dvFiles) <- strip(agg.child, None, None)
       (srcDir, srcV) <- lr.getTagValue(VersionedTable.pruneTag)
       // dv-state identity, from the tag (no I/O): a dv-fold scan must
-      // anti-join EXACTLY the tagged version's sidecar set; a bare
+      // filter by EXACTLY the tagged version's sidecar set; a bare
       // tagged scan must have none pending. The view's state at a fresh
       // cursor includes the DV retraction (signedRowsBetween composes
       // DVs), so answering from it is exact.

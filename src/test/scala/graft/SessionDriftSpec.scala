@@ -13,8 +13,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * `GraftFunctions.register` call in `SparkEntry`, a
   * [[graft.ops.VersionedTable]] commit that reads its own head or writes
   * its own manifest, a second predicate walk, an unversioned patch chain,
-  * a second `dvsEnabled` branch, or a settings key outside the allowlist
-  * fails here.
+  * a second `dvsEnabled` branch, a deletion-vector join, Spark read of a
+  * DV sidecar or second DV file key, or a settings key outside the
+  * allowlist fails here.
   */
 class SessionDriftSpec extends AnyFunSuite {
 
@@ -122,6 +123,38 @@ class SessionDriftSpec extends AnyFunSuite {
     // GraftCatalogUpdateCommand.run and GraftCatalogDeleteCommand.delete
     assert(found.sorted == Seq("graft/plans/VtableCatalogDml.scala:delete",
       "graft/plans/VtableCatalogDml.scala:run"), found)
+  }
+
+  test("deletion vectors: one position filter, sidecars read on the driver, one file key") {
+    // code lines only: scaladoc may name the scan's metadata columns
+    def code(p: Path): String = Files.readString(p).split("\n")
+      .filterNot { l => val t = l.trim; t.startsWith("*") || t.startsWith("/*") || t.startsWith("//") }
+      .mkString("\n")
+    val dvFile = "graft/ops/DeletionVectors.scala"
+    def near(text: String, at: String, width: Int, what: String*): Boolean =
+      at.r.findAllMatchIn(text).exists { m =>
+        val window = text.substring(m.start, math.min(text.length, m.start + width))
+        what.exists(window.contains)
+      }
+    val found = sources.flatMap { p =>
+      val rel = root.relativize(p).toString
+      val text = code(p)
+      Seq(
+        // a join keyed on the position columns (the anti-join fold)
+        near(text, """\.join\(""", 200, "__vt_file", "__vt_pos") -> "joins on DV positions",
+        // a Spark read of DV sidecars
+        (text.contains("dvTable") ||
+          near(text, """\.read\.(schema|parquet|format)""", 200, "dvs", "sidecar", "dvSchema")) ->
+          "reads DV sidecars with Spark",
+        // a second DV file key
+        (rel != dvFile && Seq("__vt_file", "__vt_pos", "_metadata.file_path").exists(text.contains)) ->
+          "names the DV position columns outside the DV module",
+        near(text, """regexp_(extract|replace)\(""", 100, "data/") -> "keys DV files by regex",
+        ("""def fileKey\b""".r.findAllIn(text).size > (if (rel == dvFile) 1 else 0)) ->
+          "defines a second DV file key"
+      ).collect { case (true, why) => s"$rel: $why" }
+    }
+    assert(found.isEmpty, found)
   }
 
   test("src/main reads exactly the allowlisted settings keys") {

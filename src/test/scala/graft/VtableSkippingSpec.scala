@@ -110,7 +110,7 @@ class VtableSkippingSpec extends SparkSuite {
   test("filter over a DV-folded read prunes the BASE scan; answer stays exact") {
     // r17: the DV fold's base relation is now tagged (so the MV rewrite
     // can recognize the fold) — which also lets zone-map skipping fire on
-    // it. Pruning under the fold is sound: the sidecar anti-join only
+    // it. Pruning under the fold is sound: the DV position filter only
     // removes rows, so skipping files that cannot satisfy the predicate
     // is the same set algebra as on a bare scan.
     val dir = tmp(); mkTable(dir)
@@ -120,9 +120,8 @@ class VtableSkippingSpec extends SparkSuite {
     assert(got == (10L to 30L).filter(_ != 20L)
       .map(k => (k, (k % 7).toString)).toSet,
       "DV fold + pruning must keep the exact answer")
-    // the fold is a join, so AQE hides the physical scans pre-execution;
-    // the skipping rule rewrites the LOGICAL relation, so probe there.
-    // 4 base files + 1 sidecar: the base relation must have shrunk
+    // the skipping rule rewrites the LOGICAL relation, so probe there:
+    // of the 4 base files, the relation must have shrunk
     val logical = df.queryExecution.optimizedPlan.collect {
       case lr: org.apache.spark.sql.execution.datasources.LogicalRelation
           if lr.relation.isInstanceOf[
