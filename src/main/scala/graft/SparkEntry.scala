@@ -3477,19 +3477,18 @@ private[graft] object Queries {
       |FROM customer
       |ORDER BY c_custkey""".stripMargin
 
-  /** DV COMPOSITION across the two previously-refusing states
-    * ([[graft.ops.VersionedTable.commitUpdateDv]] /
+  /** DV COMPOSITION ([[graft.ops.VersionedTable.commitUpdateDv]] /
     * [[graft.ops.VersionedTable.commitDeleteDv]]): (1) a positional
-    * UPDATE lands on a MERGE-ON-READ table — the key-based patch chain
-    * folds first (the same CoW fold SQL OPTIMIZE runs), then positions
-    * record against the clean bases (two commits, both in the log); and
+    * UPDATE lands on a MERGE-ON-READ table — the patch already recorded
+    * its matched rows as deletion-vector positions, so the update adds
+    * its own positions to the same set in one commit; and
     * (2) a positional DELETE lands on a SHALLOW CLONE — the DV sidecar
     * is clone-owned and addresses the shared path-absolute source files
     * (`DvSet.fileKey`), so the source stays byte-identical while the clone
     * diverges O(matched rows). Delta analog: DVs compose with cloned
     * tables the same way. The grouped read of the CLONE is the oracled
-    * answer; require-pins assert the mechanics (fold+DV = 2 commits,
-    * no patches + pending DVs after, source row count untouched).
+    * answer; require-pins assert the mechanics (the patch and the update
+    * are one commit each, both as DVs; source row count untouched).
     */
   def dvCompose(s: SparkSession, d: String): DataFrame = {
     val VT = graft.ops.VersionedTable
@@ -3511,27 +3510,25 @@ private[graft] object Queries {
     val maxK = cust(s, d).agg(max(col("c_custkey"))).head()
       .get(0).asInstanceOf[Number].longValue
     val (lo, hi) = (maxK / 3, maxK / 2)
-    // MoR patch: band upsert (+500 cents) with nationkey%7 tombstones
+    // patch: band upsert (+500 cents) with nationkey%7 tombstones
     VT.commitPatch(cust(s, d)
       .filter(col("c_custkey").between(lo, hi))
       .select(col("c_custkey"), col("c_nationkey"),
         (cents(col("c_acctbal")).cast("long") + 500).as("cents"),
         (col("c_nationkey") % 7 === 0).as("del")),
       dir, Seq("c_custkey"), Seq.empty, col("del"))                 // v2
-    require(VT.readManifest(s, dir, 2L).patches.nonEmpty,
-      "q_dv_compose: the band upsert must land as a MoR patch commit")
-    // positional UPDATE on the MoR state: chain folds (v3), DV commit (v4)
+    val mp = VT.readManifest(s, dir, 2L)
+    require(mp.op == "patch" && mp.dvs.size == 1,
+      "q_dv_compose: the band upsert must land as a patch's deletion vector")
+    // positional UPDATE on the patched state: one more DV commit (v3)
     val v = VT.commitUpdateDv(s, dir, col("c_custkey") % 11 === 0,
       Seq("cents" -> (col("cents") + 7)))
-    require(v == 4L,
-      s"q_dv_compose: fold + DV update must be exactly 2 commits, got $v")
-    val m = VT.readManifest(s, dir, v)
-    require(m.patches.isEmpty && m.dvs.nonEmpty,
-      "q_dv_compose: the fold must clear the chain and the update must " +
-        "land as a deletion vector")
+    require(v == 3L, s"q_dv_compose: the DV update must be version 3, got $v")
+    require(VT.readManifest(s, dir, v).dvs.size == 2,
+      "q_dv_compose: the update must add its deletion vector to the patch's")
     val srcRows = VT.read(s, dir).count()
     // positional DELETE on a shallow CLONE of the folded state
-    VT.materializeDvs(s, dir)                                       // v5
+    VT.materializeDvs(s, dir)                                       // v4
     VT.shallowClone(s, dir, cloneDir)
     VT.commitDeleteDv(s, cloneDir, col("c_nationkey") % 5 === 0)
     require(VT.read(s, dir).count() == srcRows,
@@ -3833,9 +3830,10 @@ private[graft] object Queries {
       |ORDER BY o_orderkey""".stripMargin
 
   /** Merge-on-read on the VERSIONED table ([[graft.ops.VersionedTable
-    * .commitPatch]]): two CDC batches land as O(batch) patch commits —
-    * no base file is read or rewritten (spec asserts byte-stability) —
-    * and the read-time fold shadows per key by patch order, honoring
+    * .commitPatch]]): two CDC batches land as patch commits — each
+    * records its matched rows' positions as a deletion vector and appends
+    * its live rows, so no existing file is rewritten (spec asserts
+    * byte-stability) — and the read filters the positions, honoring
     * tombstones, with every patch state time-travelable. Same cascaded
     * FULL JOIN oracle as `q_merge_mor`: the fold must reach the state the
     * two batches' sequential copy-on-write apply writes there.

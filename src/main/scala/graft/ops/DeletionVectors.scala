@@ -6,7 +6,6 @@ import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.parquet.example.data.simple.SimpleGroupFactory
 import org.apache.parquet.example.data.simple.convert.GroupRecordConverter
-import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.example.ExampleParquetWriter
 import org.apache.parquet.hadoop.metadata.CompressionCodecName
 import org.apache.parquet.hadoop.util.{HadoopInputFile, HadoopOutputFile}
@@ -160,7 +159,7 @@ object DvSet {
     }
 
   private def readSidecar(path: Path, conf: Configuration)(f: (String, Long) => Unit): Unit = {
-    val reader = ParquetFileReader.open(HadoopInputFile.fromPath(path, conf))
+    val reader = FooterStats.open(HadoopInputFile.fromPath(path, conf), conf)
     try {
       val schema = reader.getFooter.getFileMetaData.getSchema
       val (fi, pi) = (schema.getFieldIndex(FileCol), schema.getFieldIndex(PosCol))

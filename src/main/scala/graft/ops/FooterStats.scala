@@ -1,9 +1,12 @@
 package graft.ops
 
+import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.parquet.HadoopReadOptions
 import org.apache.parquet.column.statistics.Statistics
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.parquet.io.InputFile
 import org.apache.parquet.io.api.Binary
 import org.apache.parquet.schema.LogicalTypeAnnotation
 import org.apache.spark.sql.SparkSession
@@ -42,12 +45,24 @@ object FooterStats {
 
   private val maxFooterFiles = 512
 
+  /** Open `file` for a driver-side read with options built from `conf`,
+    * the caller's loaded configuration. The one-argument
+    * `ParquetFileReader.open` builds its options over a fresh Hadoop
+    * `Configuration`, which re-scans the classpath for its default
+    * resources on every call.
+    */
+  private[ops] def open(file: InputFile, conf: Configuration): ParquetFileReader =
+    ParquetFileReader.open(file, HadoopReadOptions.builder(conf).build())
+
   /** Row count of one parquet file from its FOOTER — a driver-side
     * metadata read (no Spark job), used by the DV auto-materialize
     * policy to size sidecars without scanning them.
     */
-  def rowCount(path: Path, conf: org.apache.hadoop.conf.Configuration): Long = {
-    val reader = ParquetFileReader.open(HadoopInputFile.fromPath(path, conf))
+  def rowCount(path: Path, conf: Configuration): Long =
+    rowCountOf(HadoopInputFile.fromPath(path, conf), conf)
+
+  private def rowCountOf(file: InputFile, conf: Configuration): Long = {
+    val reader = open(file, conf)
     val footer = try reader.getFooter finally reader.close()
     import scala.jdk.CollectionConverters._
     footer.getBlocks.asScala.map(_.getRowCount).sum
@@ -57,8 +72,8 @@ object FooterStats {
     * footer metadata; None when the key is absent or does not parse
     * (a file another writer produced).
     */
-  def sparkSchema(path: Path, conf: org.apache.hadoop.conf.Configuration): Option[StructType] = {
-    val reader = ParquetFileReader.open(HadoopInputFile.fromPath(path, conf))
+  def sparkSchema(file: FileStatus, conf: Configuration): Option[StructType] = {
+    val reader = open(HadoopInputFile.fromStatus(file, conf), conf)
     val meta = try reader.getFooter.getFileMetaData.getKeyValueMetaData
                finally reader.close()
     Option(meta.get("org.apache.spark.sql.parquet.row.metadata")).flatMap(json =>
@@ -119,7 +134,7 @@ object FooterStats {
   /** Row count of each given parquet file, from its footer. */
   def rowCounts(spark: SparkSession, files: Seq[FileStatus]): Seq[Long] = {
     val conf = spark.sessionState.newHadoopConf()
-    parMap(files)(st => rowCount(st.getPath, conf))
+    parMap(files)(st => rowCountOf(HadoopInputFile.fromStatus(st, conf), conf))
   }
 
   // footer opens are independent ~ms-scale IO waits: a serial loop puts
@@ -140,10 +155,10 @@ object FooterStats {
       } finally pool.shutdown()
     }
 
-  private def liftOne(st: FileStatus, conf: org.apache.hadoop.conf.Configuration,
+  private def liftOne(st: FileStatus, conf: Configuration,
                       statsCols: Seq[String], schema: StructType): Option[Footer] = {
     import scala.jdk.CollectionConverters._
-    val reader = ParquetFileReader.open(HadoopInputFile.fromPath(st.getPath, conf))
+    val reader = open(HadoopInputFile.fromStatus(st, conf), conf)
     val footer = try reader.getFooter finally reader.close()
     val blocks = footer.getBlocks.asScala.toSeq
     val rows = blocks.map(_.getRowCount).sum

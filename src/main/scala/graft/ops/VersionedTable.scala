@@ -115,23 +115,17 @@ object VersionedTable {
     * own id and skips, which is what makes [[commitMerge]] an exactly-once
     * `foreachBatch` sink.
     *
-    * `patches` is the merge-on-read chain (Iceberg v2 delete-file /
-    * Delta DV idea at row-update granularity): ordered patch file sets,
-    * each one deduped CDC batch (payload + `__vt_del` tombstone flag)
-    * that SHADOWS earlier patches and the base per key at read time.
-    * While the chain is non-empty, only [[commitPatch]]/reads/
-    * [[compactPatches]] may run — base-mutating commits refuse, so the
-    * fold order (base, then patches in sequence) is always the commit
-    * order. `mergeKeys` pins the key columns the chain folds on, making
-    * patched tables self-describing to readers.
+    * `dvs` names the version's deletion-vector sidecars: the row positions
+    * of `files` that are deleted ([[DvSet]]). A version's rows are its
+    * files' rows minus those positions; every row-level change
+    * ([[commitPatch]], [[commitDeleteDv]], [[commitUpdateDv]]) is recorded
+    * that way or as a copy-on-write file rewrite.
     */
   final case class Manifest(version: Long, op: String, schemaDdl: String,
                             statsCols: Seq[String], files: Seq[FileEntry],
                             txns: Map[String, Long] = Map.empty,
                             bloomCols: Seq[String] = Seq.empty,
                             bloomFpp: Double = 0.01,
-                            patches: Seq[Seq[FileEntry]] = Seq.empty,
-                            mergeKeys: Seq[String] = Seq.empty,
                             props: Map[String, String] = Map.empty,
                             dvs: Seq[String] = Seq.empty)
 
@@ -154,13 +148,10 @@ object VersionedTable {
     *
     * `numFiles`/`totalRows` are maintained incrementally in the header so
     * mode decisions, history and stats never materialize the list.
-    * `patches` stay inline in every mode: the chain is bounded by
-    * compaction cadence, never O(table).
     */
   private[graft] final case class ManifestMeta(
       version: Long, op: String, schemaDdl: String, statsCols: Seq[String],
       txns: Map[String, Long], bloomCols: Seq[String], bloomFpp: Double,
-      patches: Seq[Seq[FileEntry]], mergeKeys: Seq[String],
       numFiles: Long, totalRows: Long, mode: String,
       inlineFiles: Seq[FileEntry] = Seq.empty,
       adds: Seq[FileEntry] = Seq.empty, removes: Seq[String] = Seq.empty,
@@ -263,8 +254,7 @@ object VersionedTable {
   }
 
   /** Rename `df`'s columns logical→physical for a data write. Columns
-    * outside the mapping (including engine-internal ones like `__vt_del`)
-    * pass through.
+    * outside the mapping pass through.
     */
   private def toPhysical(df: DataFrame, props: Map[String, String]): DataFrame = {
     val cm = colmapOf(props)
@@ -274,24 +264,18 @@ object VersionedTable {
   }
 
   /** Read data files under their PHYSICAL schema and project back to the
-    * LOGICAL names — the one chokepoint every base/patch/CDF/DML read
-    * goes through. `extra` appends engine-internal fields (e.g. a patch
-    * file's `__vt_del`) that carry no mapping. The projection is a pure
-    * alias Project: Catalyst pushes filters through it, so the skipping
+    * LOGICAL names — the one chokepoint every base/CDF/DML read goes
+    * through. The projection is a pure alias Project: Catalyst pushes filters through it, so the skipping
     * rule still sees Filter-over-relation with physical attribute names,
     * matching the manifest's stats keys.
     */
   private def readDataFiles(spark: SparkSession, schema: StructType,
-                            props: Map[String, String], paths: Seq[String],
-                            extra: Seq[org.apache.spark.sql.types.StructField] =
-                              Seq.empty): DataFrame = {
-    val phys = StructType(physicalSchema(schema, props).fields ++ extra)
-    val df = spark.read.schema(phys).parquet(paths: _*)
+                            props: Map[String, String], paths: Seq[String]): DataFrame = {
+    val df = spark.read.schema(physicalSchema(schema, props)).parquet(paths: _*)
     val cm = colmapOf(props)
     if (cm.isEmpty || !schema.fieldNames.exists(cm.contains)) df
-    else df.select((schema.fields.map(f =>
-      col(s"`${cm.getOrElse(f.name, f.name)}`").as(f.name)) ++
-      extra.map(f => col(s"`${f.name}`"))).toIndexedSeq: _*)
+    else df.select(schema.fields.map(f =>
+      col(s"`${cm.getOrElse(f.name, f.name)}`").as(f.name)).toIndexedSeq: _*)
   }
 
   /** In-frame CHECK enforcement: the first column is wrapped so a
@@ -352,10 +336,8 @@ object VersionedTable {
         // analysis-only: unknown columns refuse NOW, not at the next commit
         read(spark, dir).filter(coalesce(e, lit(true))).queryExecution.analyzed
       }
-      // a metadata commit: a pending patch chain stays as it is
       publish(spark, dir, cur, ManifestDelta("addConstraint",
-        props = Some(cur.props + (CheckPropPrefix + name -> exprSql)),
-        patches = cur.patches, mergeKeys = cur.mergeKeys))
+        props = Some(cur.props + (CheckPropPrefix + name -> exprSql))))
     }
   }
 
@@ -365,8 +347,7 @@ object VersionedTable {
       require(cur.props.contains(CheckPropPrefix + name),
         s"VersionedTable.dropCheckConstraint: no constraint named '$name'")
       publish(spark, dir, cur, ManifestDelta("dropConstraint",
-        props = Some(cur.props - (CheckPropPrefix + name)),
-        patches = cur.patches, mergeKeys = cur.mergeKeys))
+        props = Some(cur.props - (CheckPropPrefix + name))))
     }
 
   // ------------------------------------------------ metadata-scale knobs
@@ -495,12 +476,6 @@ object VersionedTable {
         root.put("restoreOf", m.restoreOf)
       case other =>
         throw new IllegalArgumentException(s"writeManifestJson: unknown mode $other")
-    }
-    if (m.patches.nonEmpty) {
-      val pa = root.putArray("patches")
-      m.patches.foreach(batch => writeFileArray(pa.addArray(), batch))
-      val mk = root.putArray("mergeKeys")
-      m.mergeKeys.foreach(mk.add)
     }
     if (m.dvs.nonEmpty) {
       val dv = root.putArray("dvs")
@@ -733,10 +708,15 @@ object VersionedTable {
     val bloomCols = Option(root.get("bloomCols"))
       .map(_.elements().asScala.map(_.asText()).toSeq).getOrElse(Seq.empty)
     val bloomFpp = Option(root.get("bloomFpp")).map(_.asDouble()).getOrElse(0.01)
-    val patches = Option(root.get("patches"))
-      .map(_.elements().asScala.map(readFileArray).toSeq).getOrElse(Seq.empty)
-    val mergeKeys = Option(root.get("mergeKeys"))
-      .map(_.elements().asScala.map(_.asText()).toSeq).getOrElse(Seq.empty)
+    // an older build's key-folded patch chain: its rows live outside the
+    // file list, so reading the base alone would silently drop them
+    if (Option(root.get("patches")).exists(_.size > 0))
+      throw new IllegalStateException(
+        s"VersionedTable: manifest v$version at $dir carries a merge-on-read " +
+          "patch chain written by an older build; this build records patches " +
+          "as deletion vectors and cannot read the chain. Fold it with the " +
+          "older build's compactPatches, or restore to a version before it, " +
+          "then vacuum the chain's versions away.")
     val dvs = Option(root.get("dvs"))
       .map(_.elements().asScala.map(_.asText()).toSeq).getOrElse(Seq.empty)
     val mode = Option(root.get("mode")).map(_.asText()).getOrElse("full")
@@ -758,7 +738,7 @@ object VersionedTable {
     }.getOrElse(Map.empty[String, String])
     ManifestMeta(root.get("version").asLong(), root.get("op").asText(),
       root.get("schemaDdl").asText(), statsCols, txns, bloomCols, bloomFpp,
-      patches, mergeKeys, numFiles, totalRows, mode, inlineFiles, adds,
+      numFiles, totalRows, mode, inlineFiles, adds,
       removes, restoreOf, props,
       ts = Option(root.get("ts")).map(_.asLong()).getOrElse(0L),
       adjTs = Option(root.get("adjTs")).map(_.asLong()).getOrElse(0L),
@@ -900,9 +880,7 @@ object VersionedTable {
 
   /** What one commit changes relative to the head it was derived from.
     * An `Option` field is `None` to carry the head's value and `Some` to
-    * set it. The patch chain (`patches`, `mergeKeys`) is set by every
-    * commit: empty unless the commit names it — the patch commit grows
-    * it, the constraint commits keep it, every other commit leaves none.
+    * set it.
     */
   private final case class ManifestDelta(
       op: String,
@@ -913,9 +891,7 @@ object VersionedTable {
       statsCols: Option[Seq[String]] = None,
       bloomCols: Option[Seq[String]] = None,
       props: Option[Map[String, String]] = None,
-      dvs: Option[Seq[String]] = None,
-      patches: Seq[Seq[FileEntry]] = Seq.empty,
-      mergeKeys: Seq[String] = Seq.empty)
+      dvs: Option[Seq[String]] = None)
 
   /** Run `commit` on the table's current manifest. Refuses a directory
     * that is not a versioned table; a `txn` the head already contains
@@ -938,7 +914,7 @@ object VersionedTable {
                       bloomCols: Seq[String], bloomFpp: Double,
                       props: Map[String, String]): ManifestMeta =
     ManifestMeta(0L, "", schemaDdl, statsCols, Map.empty, bloomCols, bloomFpp,
-      Seq.empty, Seq.empty, numFiles = 0L, totalRows = 0L, mode = "full",
+      numFiles = 0L, totalRows = 0L, mode = "full",
       props = props)
 
   /** `m` stamped as the commit after `prev`. `ts` is the wall clock;
@@ -967,11 +943,11 @@ object VersionedTable {
     */
   private def publish(spark: SparkSession, dir: String, prev: ManifestMeta,
                       d: ManifestDelta): Long = {
+    raceBeforePublish()
     val version = prev.version + 1
     val header = stamped(prev, ManifestMeta(version, d.op,
       d.schemaDdl.getOrElse(prev.schemaDdl), d.statsCols.getOrElse(prev.statsCols),
       txnsAfter(prev, d.txn), d.bloomCols.getOrElse(prev.bloomCols), prev.bloomFpp,
-      d.patches, d.mergeKeys,
       numFiles = prev.numFiles - d.removes.size + d.adds.size,
       totalRows = prev.totalRows - d.removes.map(_.rows).sum + d.adds.map(_.rows).sum,
       mode = "delta", props = d.props.getOrElse(prev.props),
@@ -1040,11 +1016,11 @@ object VersionedTable {
     * manifest HEADER — zero IO on the skip path) pays the compact pass,
     * which itself sizes candidates from the manifest byte stamps. The
     * compact is a LAYOUT commit: `dataChange=false` to the streaming
-    * table source, invisible to the change feed, refused under patch
-    * chains/DVs (those surfaces own their own materialization) — so the
-    * trigger skips those states. Best-effort by design: a lost commit
-    * race or any failure is swallowed (the NEXT trigger retries);
-    * correctness never depends on it.
+    * table source, invisible to the change feed, refused under DVs
+    * ([[materializeDvs]] owns their fold) — so the trigger skips that
+    * state. Best-effort by design: a lost commit race or any failure is
+    * swallowed (the NEXT trigger retries); correctness never depends on
+    * it.
     */
   val AutoCompactProp = "graft.autoCompact.enabled"
 
@@ -1052,7 +1028,7 @@ object VersionedTable {
                                m: ManifestMeta): Unit = {
     if (!m.props.get(AutoCompactProp).exists(_.toBoolean)) return
     if (Set("compact", "dv_materialize", "create").contains(m.op)) return
-    if (m.patches.nonEmpty || m.dvs.nonEmpty) return
+    if (m.dvs.nonEmpty) return
     val every = m.props.get("graft.autoCompact.every").map(_.toInt).getOrElse(16)
     val minFiles = m.props.get("graft.autoCompact.minFiles").map(_.toInt).getOrElse(32)
     if (m.version % math.max(1, every) != 0 || m.numFiles < minFiles) return
@@ -1088,7 +1064,7 @@ object VersionedTable {
   def readManifest(spark: SparkSession, dir: String, version: Long): Manifest = {
     val m = readMeta(spark, dir, version)
     Manifest(m.version, m.op, m.schemaDdl, m.statsCols, filesOf(spark, dir, m), m.txns,
-      m.bloomCols, m.bloomFpp, m.patches, m.mergeKeys, m.props, m.dvs)
+      m.bloomCols, m.bloomFpp, m.props, m.dvs)
   }
 
   /** The rows ADDED by commit `version`, read under that version's
@@ -1151,14 +1127,9 @@ object VersionedTable {
     *
     * DVs address positions in table-owned files AND local shallow-clone
     * shared files (keyed path-absolute, see [[DvSet.fileKey]] — the
-    * sidecar is always table-owned; only the addressed file is shared). A
-    * pending key-based patch chain composes by FOLDING FIRST: positions
-    * only exist in physical files, so the DV commit runs compactPatches
-    * (the same CoW fold SQL OPTIMIZE uses) and then records positions
-    * against the clean bases — two commits, both in the log.
+    * sidecar is always table-owned; only the addressed file is shared).
     * Row-rewriting commits refuse while DVs are pending — materialize
-    * first. Unlike patches, an APPEND is always safe: new files carry
-    * no positions.
+    * first. An APPEND is always safe: new files carry no positions.
     */
   private[graft] def requireNoDvs(dvs: Seq[String], op: String): Unit =
     require(dvs.isEmpty,
@@ -1233,16 +1204,8 @@ object VersionedTable {
       val schema = StructType.fromDDL(cur.schemaDdl)
       val image = sets.map(setImage(schema, _, label))
       val files = candidates(spark, dir, cur, cond)
-      if (files.isEmpty && cur.patches.isEmpty) cur.version
-      else if (cur.patches.nonEmpty) {
-        // MoR composition: a pending key-based patch chain has no physical
-        // positions to address (a chain-shadowed row's DV bit would be
-        // meaningless) — fold it first (the same CoW fold SQL OPTIMIZE
-        // runs, rewriting only chain-touched files), then record positions
-        // against the clean bases. Two commits, both in the log.
-        compactPatches(spark, dir)
-        dvCommit(spark, dir, cond, sets, txn)
-      } else {
+      if (files.isEmpty) cur.version
+      else {
         requireDvAddressable(files, label)
         val matched = positionalScan(spark, schema, cur.props,
             files.map(f => dataPath(dir, f.path)), DvSet.read(spark, dir, cur.dvs).live,
@@ -1310,12 +1273,13 @@ object VersionedTable {
     }
   }
 
-  /** Fold every pending deletion vector into clean base files: files
-    * holding at least one deleted position (the keys of the driver-read
-    * position set) rewrite without their dead rows, untouched files carry
-    * by reference, and the DV set empties — the OPTIMIZE half of the DV
-    * contract, one write job. Returns the new version (the current one
-    * when no DVs are pending).
+  /** Fold every pending deletion vector, a DV commit's or a patch's
+    * ([[commitPatch]]), into clean base files: files holding at least one
+    * deleted position (the keys of the driver-read position set) rewrite
+    * without their dead rows, untouched files carry by reference, and the
+    * DV set empties — the OPTIMIZE half of the DV contract, one write job,
+    * and what bounds a patched table's position sets. Returns the new
+    * version (the current one when no DVs are pending).
     */
   def materializeDvs(spark: SparkSession, dir: String): Long =
     withHead(spark, dir, "materializeDvs") { cur =>
@@ -1558,9 +1522,6 @@ object VersionedTable {
     * references (the clone's reads then fail loudly with missing files).
     * Clones are the dev/test/experimentation primitive — point one at
     * production, mutate freely, drop it — not an archival copy.
-    * Cloning a table with an unfolded patch chain is refused
-    * (run [[compactPatches]] first): patch files are chain-relative
-    * state, not content.
     */
   def shallowClone(spark: SparkSession, srcDir0: String, destDir: String,
                    asOf: Option[Long] = None): Long = {
@@ -1577,7 +1538,6 @@ object VersionedTable {
       throw new IllegalArgumentException(
         s"VersionedTable.shallowClone: $srcDir is not a versioned table"))
     val src = readManifest(spark, srcDir, srcV)
-    requireNoPatches(src.patches, "shallowClone")
     requireNoDvs(src.dvs, "shallowClone")
     val abs = src.files.map(f => f.copy(
       path = dataPath(srcDir, f.path),
@@ -1602,7 +1562,6 @@ object VersionedTable {
                       txn: Option[(String, Long)] = None): Long = {
     val spark = df.sparkSession
     withHead(spark, dir, "commitOverwrite", txn) { cur =>
-      requireNoPatches(cur.patches, "commitOverwrite")
       requireSameSchema(df, cur, "commitOverwrite", "overwrite")
       val files = writeCommitFiles(
         withCheckGuards(df, cur.props, "commitOverwrite"), dir, cur)
@@ -1638,7 +1597,6 @@ object VersionedTable {
                          txn: Option[(String, Long)] = None): Long = {
     val spark = df.sparkSession
     withHead(spark, dir, "commitReplaceWhere", txn) { cur =>
-      requireNoPatches(cur.patches, "commitReplaceWhere")
       requireNoDvs(cur.dvs, "commitReplaceWhere")
       requireSameSchema(df, cur, "commitReplaceWhere", "replacement")
       val schema = StructType.fromDDL(cur.schemaDdl)
@@ -1675,7 +1633,6 @@ object VersionedTable {
                    txn: Option[(String, Long)] = None): Long = {
     val spark = df.sparkSession
     withHead(spark, dir, "commitAppend", txn) { cur =>
-      requireNoPatches(cur.patches, "commitAppend")
       requireSameSchema(df, cur, "commitAppend", "append")
       val files = writeCommitFiles(
         withCheckGuards(df, cur.props, "commitAppend"), dir, cur)
@@ -1706,7 +1663,6 @@ object VersionedTable {
   def commitAddFiles(spark: SparkSession, dir: String, entries: Seq[FileEntry],
                      txn: Option[(String, Long)] = None): Long =
     withHead(spark, dir, "commitAddFiles", txn) { cur =>
-      requireNoPatches(cur.patches, "commitAddFiles")
       require(entries.map(_.path).distinct.size == entries.size,
         "VersionedTable.commitAddFiles: duplicate paths in the batch")
       // by-reference rows never pass through a write frame, so the in-frame
@@ -1752,7 +1708,6 @@ object VersionedTable {
                              (transform: (DataFrame, StructType) => DataFrame): Long = {
     val label = s"commit${op.capitalize}"
     withHead(spark, dir, label, txn) { cur =>
-      requireNoPatches(cur.patches, label)
       requireNoDvs(cur.dvs, label)
       val schema = StructType.fromDDL(cur.schemaDdl)
       val files = candidates(spark, dir, cur, cond)
@@ -1855,19 +1810,11 @@ object VersionedTable {
                                      schemaDdl: String, entries: Seq[FileEntry],
                                      checks: Seq[(String, String)],
                                      label: String,
-                                     props: Map[String, String],
-                                     patchShape: Boolean = false): Unit = {
+                                     props: Map[String, String]): Unit = {
     if (checks.isEmpty || entries.isEmpty) return
-    // patch files carry a __vt_del flag; tombstone payloads are dead
-    // weight and exempt from constraints, same as the in-frame guards
-    val extra =
-      if (!patchShape) Seq.empty
-      else Seq(org.apache.spark.sql.types.StructField(
-        "__vt_del", org.apache.spark.sql.types.BooleanType))
-    val df0 = readDataFiles(spark, StructType.fromDDL(schemaDdl), props,
-      entries.map(e => dataPath(dir, e.path)), extra = extra)
-    val df = if (patchShape) df0.filter(!col("__vt_del")) else df0
-    val bad = df.filter(anyViolation(spark, checks)).limit(1).count()
+    val bad = readDataFiles(spark, StructType.fromDDL(schemaDdl), props,
+        entries.map(e => dataPath(dir, e.path)))
+      .filter(anyViolation(spark, checks)).limit(1).count()
     require(bad == 0L,
       s"VersionedTable.$label: rows violate a live CHECK constraint " +
         s"(${checks.map(_._1).mkString(", ")}) — fix the data or drop the " +
@@ -1885,54 +1832,13 @@ object VersionedTable {
     }.reduce(_ || _)
   }
 
-  /** Test-only interleaving hook: runs after an append's data files are
-    * durable and before each manifest publish attempt, letting a spec
-    * inject a deterministic racing commit into the exact window the
-    * rebase exists for. No-op in production.
+  /** Test-only interleaving hook: runs after a commit's data files are
+    * durable and before each manifest publish attempt ([[publish]]),
+    * letting a spec inject a deterministic racing commit into the window
+    * an append's rebase and a patch's retry exist for. No-op in
+    * production.
     */
   @volatile private[graft] var raceBeforePublish: () => Unit = () => ()
-
-  /** The shared CAS-rebase driver: run `publish(head)`, and on a lost
-    * version race advance `head` to the new current manifest after
-    * re-checking the preconditions every rebase shares — the txn already
-    * applied by someone else returns the winner's version (our files
-    * orphan to vacuum, exactly-once kept); an incompatible head (per
-    * `compatible`, the op-specific schema/chain policy) rethrows so the
-    * caller's [[withCommitRetry]] takes the full re-derive path; CHECK
-    * constraints ADDED by a winner re-validate the already-written files
-    * with one O(batch) scan under the new head's schema (a constraint may
-    * reference an appended column, which the files read as NULL;
-    * `patchShape` exempts tombstone payloads, matching the in-frame
-    * guards).
-    */
-  private def rebaseLoop(spark: SparkSession, dir: String,
-                         first: ManifestMeta, files: Seq[FileEntry],
-                         txn: Option[(String, Long)], label: String,
-                         patchShape: Boolean)
-                        (compatible: (ManifestMeta, ManifestMeta) => Boolean)
-                        (publish: ManifestMeta => Long): Long = {
-    var head = first
-    var rebases = 0
-    while (true) {
-      raceBeforePublish()
-      try return publish(head)
-      catch {
-        case e: ConcurrentCommitException =>
-          rebases += 1
-          if (rebases >= 100) throw e
-          val newHead = currentVersion(spark, dir)
-            .map(readMeta(spark, dir, _)).getOrElse(throw e)
-          if (alreadyApplied(newHead, txn)) return newHead.version
-          if (!compatible(head, newHead)) throw e
-          val addedChecks =
-            checksOf(newHead.props).filterNot(checksOf(head.props).toSet)
-          requireFilesPassChecks(spark, dir, newHead.schemaDdl, files,
-            addedChecks, label, newHead.props, patchShape)
-          head = newHead
-      }
-    }
-    -1L // unreachable: the loop returns or throws
-  }
 
   /** Publish `adds` as an append-shaped commit on top of `first`, REBASING
     * onto new heads on a lost version race instead of surfacing
@@ -1946,15 +1852,14 @@ object VersionedTable {
     *
     *  - the txn already applied by someone else → return their version
     *    (our files orphan to vacuum, exactly-once preserved);
-    *  - a patch chain appeared, or merge keys changed → rethrow (the
-    *    caller's [[withCommitRetry]] takes the full re-derive path, whose
-    *    entry guards produce the loud domain error);
     *  - schema changed → rebase only across APPEND-ONLY widening (our
     *    files read NULL for appended columns — the [[commitAddColumns]]
-    *    contract); anything else rethrows;
+    *    contract); anything else rethrows, and the caller's
+    *    [[withCommitRetry]] takes the full re-derive path;
     *  - CHECK constraints ADDED by a winner re-validate our files with one
-    *    O(batch) scan before the rebase may publish — in-frame guards ran
-    *    against the constraint set visible at write time, not this one.
+    *    O(batch) scan under the new head's schema before the rebase may
+    *    publish — in-frame guards ran against the constraint set visible
+    *    at write time, not this one.
     *
     * Stats/bloom config and table props always re-read from the new head,
     * so a racing property change carries forward instead of reverting.
@@ -1963,24 +1868,29 @@ object VersionedTable {
                                     first: ManifestMeta, op: String,
                                     adds: Seq[FileEntry],
                                     txn: Option[(String, Long)],
-                                    label: String): Long =
-    rebaseLoop(spark, dir, first, adds, txn, label, patchShape = false) {
-      (head, newHead) =>
-        // appends rebase across anything but a patch chain, a merge-key
-        // change, or a non-append-only schema change (our files read
-        // NULL for appended columns — the commitAddColumns contract)
-        newHead.patches.isEmpty && newHead.mergeKeys == head.mergeKeys && {
-          newHead.schemaDdl == head.schemaDdl || {
-            val o = StructType.fromDDL(head.schemaDdl)
-              .fields.map(f => (f.name, f.dataType))
-            val n = StructType.fromDDL(newHead.schemaDdl)
-              .fields.map(f => (f.name, f.dataType))
-            n.length >= o.length && n.take(o.length).sameElements(o)
-          }
-        }
-    } { head =>
-      publish(spark, dir, head, ManifestDelta(op, adds = adds, txn = txn))
+                                    label: String): Long = {
+    def fields(ddl: String) = StructType.fromDDL(ddl).fields.map(f => (f.name, f.dataType))
+    var head = first
+    var rebases = 0
+    while (true) {
+      try return publish(spark, dir, head, ManifestDelta(op, adds = adds, txn = txn))
+      catch {
+        case e: ConcurrentCommitException =>
+          rebases += 1
+          if (rebases >= 100) throw e
+          val newHead = currentVersion(spark, dir)
+            .map(readMeta(spark, dir, _)).getOrElse(throw e)
+          if (alreadyApplied(newHead, txn)) return newHead.version
+          val (o, n) = (fields(head.schemaDdl), fields(newHead.schemaDdl))
+          if (!(n.length >= o.length && n.take(o.length).sameElements(o))) throw e
+          requireFilesPassChecks(spark, dir, newHead.schemaDdl, adds,
+            checksOf(newHead.props).filterNot(checksOf(head.props).toSet),
+            label, newHead.props)
+          head = newHead
+      }
     }
+    -1L // unreachable: the loop returns or throws
+  }
 
   /** Stats-pruned copy-on-write MERGE: apply a CDC changelog
     * ([[Warehouse.applyChanges]] semantics — tombstones delete, matched
@@ -2055,7 +1965,6 @@ object VersionedTable {
                        cols: Seq[(String, String)]): Long = {
     require(cols.nonEmpty, "VersionedTable.commitAddColumns: empty column list")
     withHead(spark, dir, "commitAddColumns") { cur =>
-      requireNoPatches(cur.patches, "commitAddColumns")
       val schema = StructType.fromDDL(cur.schemaDdl)
       val existing = schema.fieldNames.map(_.toLowerCase).toSet
       val added = cols.map { case (name, typeDdl) =>
@@ -2124,19 +2033,15 @@ object VersionedTable {
     * time travel keeps each version's own names. Refused: renames onto
     * an existing logical name, onto any LIVE or RETIRED physical name
     * (predicate translation would turn ambiguous), of a column a CHECK
-    * constraint references (drop and re-add the constraint), engine-
-    * reserved names, and tables with an unfolded patch chain.
+    * constraint references (drop and re-add the constraint).
     */
   def commitRenameColumn(spark: SparkSession, dir: String,
                          from: String, to: String): Long =
     withHead(spark, dir, "commitRenameColumn") { cur =>
-      requireNoPatches(cur.patches, "commitRenameColumn")
       val schema = StructType.fromDDL(cur.schemaDdl)
       require(schema.fieldNames.contains(from),
         s"VersionedTable.commitRenameColumn: no column '$from' — table has " +
           schema.fieldNames.mkString(", "))
-      require(!Seq("__vt_del", "__vt_seq").contains(to.toLowerCase),
-        s"VersionedTable.commitRenameColumn: '$to' is engine-reserved")
       require(!schema.fieldNames.exists(_.equalsIgnoreCase(to)),
         s"VersionedTable.commitRenameColumn: column '$to' already exists")
       val livePhys = physicalSchema(schema, cur.props)
@@ -2167,11 +2072,10 @@ object VersionedTable {
     * FRESH physical identity instead of silently resurrecting the dead
     * bytes. Stats/bloom declarations for the column are dropped so
     * future writes stop computing them. Refused: the last column, a
-    * column a CHECK constraint references, patch-chain tables.
+    * column a CHECK constraint references.
     */
   def commitDropColumn(spark: SparkSession, dir: String, name: String): Long =
     withHead(spark, dir, "commitDropColumn") { cur =>
-      requireNoPatches(cur.patches, "commitDropColumn")
       val schema = StructType.fromDDL(cur.schemaDdl)
       require(schema.fieldNames.contains(name),
         s"VersionedTable.commitDropColumn: no column '$name' — table has " +
@@ -2200,7 +2104,6 @@ object VersionedTable {
                               failOnDupKeys: Boolean = false): Long = {
     val spark = changes.sparkSession
     withHead(spark, dir, "commitMerge", txn) { cur =>
-      requireNoPatches(cur.patches, "commitMerge")
       requireNoDvs(cur.dvs, "commitMerge")
       val key = keys.head
       require(cur.statsCols.contains(physOf(cur.props, key)),
@@ -2212,15 +2115,13 @@ object VersionedTable {
         else if (dedupe) Warehouse.dedupByKey(changes, keys, tiebreak)
         else changes
       cowMergeCore(spark, dir, cur, changes, deduped, keys, deleteCond, txn,
-        evolve, metaCols, op = "merge", deleteMatchedOnly = deleteMatchedOnly)
+        evolve, metaCols, deleteMatchedOnly = deleteMatchedOnly)
     }
   }
 
-  /** The copy-on-write heart shared by [[commitMerge]] (CDC changelogs)
-    * and [[compactPatches]] (the folded patch chain as a changelog):
-    * find the touched files, merge only them, carry the rest by
-    * reference, publish one manifest — which empties a patch chain, as
-    * every commit but a patch or constraint commit does. `deduped` must
+  /** The copy-on-write heart of [[commitMerge]]: find the touched files,
+    * merge only them, carry the rest by reference, publish one manifest.
+    * `deduped` must
     * be one row per key; `changes` is the changelog it was deduplicated
     * from, whose key set is the same, so the touched-file probe reads its
     * keys (a local changelog probes on the driver, with no job).
@@ -2229,7 +2130,6 @@ object VersionedTable {
                            changes: DataFrame, deduped: DataFrame, keys: Seq[String],
                            deleteCond: Column, txn: Option[(String, Long)],
                            evolve: Boolean, metaCols: Seq[String],
-                           op: String,
                            deleteMatchedOnly: Boolean = false): Long = {
     val schema = StructType.fromDDL(cur.schemaDdl)
     val key = keys.head
@@ -2264,13 +2164,13 @@ object VersionedTable {
       val clash = outCols.filterNot(schema.fieldNames.contains)
         .filter(n => taken.exists(_.equalsIgnoreCase(n)))
       require(clash.isEmpty,
-        s"VersionedTable.commit${op.capitalize}: evolved column(s) " +
+        s"VersionedTable.commitMerge: evolved column(s) " +
           s"${clash.mkString(", ")} collide with retired or mapped PHYSICAL " +
           "names — add them explicitly with commitAddColumns (which assigns " +
           "a fresh physical identity) before merging")
     }
     val merged = withCheckGuards(
-      applied.select(outCols.map(col): _*), cur.props, s"commit${op.capitalize}")
+      applied.select(outCols.map(col): _*), cur.props, "commitMerge")
     // DDL stays byte-identical on a plain merge (toDDL would let
     // nullability drift rewrite it); evolution appends the new fields as
     // nullable — carried files lack them and must read as NULL
@@ -2297,7 +2197,7 @@ object VersionedTable {
     // commits (nothing touched) keep the changelog's own partitioning —
     // there is no prior granularity to follow.
     val clustered = if (touchedCount > 0) merged.coalesce(touchedCount) else merged
-    publish(spark, dir, cur, ManifestDelta(op,
+    publish(spark, dir, cur, ManifestDelta("merge",
       adds = writeCommitFiles(clustered, dir, cur), removes = touched, txn = txn,
       schemaDdl = outDdl))
   }
@@ -2538,7 +2438,6 @@ object VersionedTable {
                     where: Option[Column] = None): Long = {
     val fs = fsOf(spark, dir)
     withHead(spark, dir, "commitCompact") { cur =>
-      requireNoPatches(cur.patches, "commitCompact")
       requireNoDvs(cur.dvs,
         "commitCompact") // SQL OPTIMIZE materializes DVs before compacting
       // table-maintenance op: O(scope) — `where` scopes the candidate set
@@ -2604,113 +2503,74 @@ object VersionedTable {
     }
   }
 
-  private def requireNoPatches(patches: Seq[Seq[FileEntry]], op: String): Unit =
-    require(patches.isEmpty,
-      s"VersionedTable.$op: table has a pending merge-on-read patch chain " +
-        s"(${patches.size} batches) — run compactPatches first. While " +
-        "the chain is non-empty only commitPatch/reads/compactPatches may " +
-        "run, so the fold order always equals the commit order")
-
-  /** Merge-on-read commit: append one CDC batch as PATCH files — the base
-    * is neither read nor written, so a 1-row change is O(batch), not
-    * O(touched file). Reads fold the chain (later batches shadow per key,
-    * tombstones drop keys) to exactly the state sequential [[commitMerge]]
-    * calls would have produced; [[compactPatches]] materializes the fold
-    * back into base files and empties the chain. Read cost grows with the
-    * chain — compaction cadence bounds it; that trade IS merge-on-read,
-    * with versioned time travel over every patch state. The engine's one
-    * merge-on-read: [[Warehouse]] writes only plain parquet directories.
+  /** Merge-on-read commit of one CDC batch, recorded as a deletion
+    * vector: the batch is deduplicated by key ([[Warehouse.dedupByKey]]),
+    * the positions of the live rows whose keys it names are deleted, and
+    * its non-tombstone rows append as new files — one commit, every
+    * existing file byte-stable. Reads apply the positions with the same
+    * native filter as every DV read, so a patched table pays no key join
+    * per read (Iceberg's position deletes, where a key-folded chain would
+    * be its equality deletes). Each version reads the state sequential
+    * [[commitMerge]] calls would produce; [[materializeDvs]] (SQL
+    * `OPTIMIZE`) folds the positions back into clean files.
     *
-    * The chain pins the table: base-mutating commits refuse until
-    * compaction. `keys` must match the chain's keys once one exists.
+    * The touched files come from [[findTouchedFiles]] (no job for a local
+    * changelog), and one job collects the live positions of their rows
+    * whose keys the batch names. Without manifest stats on `keys.head`
+    * every live file is a candidate: correct, at the cost of one scan of
+    * the key column. A batch that matches no row and appends none
+    * publishes no version and leaves no data dir. The positions depend on
+    * the head, so a lost commit race throws [[ConcurrentCommitException]]
+    * like the other DV commits: run the call under [[withCommitRetry]],
+    * which re-derives them against the new head.
     */
   def commitPatch(changes: DataFrame, dir: String, keys: Seq[String],
                   tiebreak: Seq[Column], deleteCond: Column,
                   txn: Option[(String, Long)] = None): Long = {
     val spark = changes.sparkSession
     withHead(spark, dir, "commitPatch", txn) { cur =>
-      require(cur.mergeKeys.isEmpty || cur.mergeKeys == keys,
-        s"VersionedTable.commitPatch: chain keys ${cur.mergeKeys.mkString(",")} " +
-          s"!= ${keys.mkString(",")} — one key set per chain")
-      requireNoDvs(cur.dvs, "commitPatch")
       val schema = StructType.fromDDL(cur.schemaDdl)
-      require(!schema.fieldNames.contains("__vt_del") && !schema.fieldNames.contains("__vt_seq"),
-        "VersionedTable.commitPatch: column names __vt_del/__vt_seq are reserved")
       schema.fields.foreach { f =>
         require(changes.columns.contains(f.name) &&
             changes.schema(f.name).dataType == f.dataType,
           s"VersionedTable.commitPatch: changes must carry ${f.name}: ${f.dataType.sql}")
       }
-      val flagged = Warehouse.dedupByKey(changes, keys, tiebreak)
-        .withColumn("__vt_del", coalesce(deleteCond, lit(false)))
-        .select(schema.fieldNames.map(col) :+ col("__vt_del"): _*)
-      // patch files carry stats (the fold CAN be key-pruned later) but no
-      // blooms — nothing probes them
+      val key = keys.head
+      val physKey = physOf(cur.props, key) // stats keys are physical
+      // the probe and the positions read the changelog's keys: the same
+      // set its deduplication keeps
+      val touched =
+        if (!cur.statsCols.contains(physKey)) filesOf(spark, dir, cur)
+        else findTouchedFiles(spark, dir, cur, changes, changes, key, physKey, schema)
+      requireDvAddressable(touched, "commitPatch")
+      val hits =
+        if (touched.isEmpty) Seq.empty
+        else DvSet.collectPositions(positionalScan(spark, schema, cur.props,
+            touched.map(f => dataPath(dir, f.path)),
+            DvSet.read(spark, dir, cur.dvs).live, withPos = true)
+          .join(changes.select(keys.map(col): _*), keys, "left_semi"))
+      val live = Warehouse.dedupByKey(changes, keys, tiebreak)
+        .filter(!coalesce(deleteCond, lit(false)))
+        .select(schema.fieldNames.map(col).toIndexedSeq: _*)
       val rel = freshRel(cur.version + 1)
-      val files = writeCommitFiles(
-        withCheckGuards(flagged, cur.props, "commitPatch",
-          precond = !col("__vt_del")),
-        dir, cur.copy(bloomCols = Seq.empty, statsCols = cur.statsCols.filter(
-          physicalSchema(schema, cur.props).fieldNames.contains)), Some(rel))
-      // a 0-row changelog changes nothing: publish no version, and drop
-      // the write's 0-row part files rather than leave them to vacuum
-      if (files.isEmpty) {
-        fsOf(spark, dir).delete(new Path(dir, rel), true)
-        cur.version
-      } else
-        // base file set untouched: an empty adds/removes delta — O(patch),
-        // not O(table), which is the whole point of merge-on-read. A lost
-        // version race REBASES like an append ([[publishAppendRebasing]]'s
-        // logic, patch-shaped): the batch's content is input-only, so
-        // stacking it on the new head — after whatever patches, merges, or
-        // compactions won — is exactly what a serialized re-run would
-        // produce, without re-running the data write. Schema or key
-        // changes rethrow for the full-retry path; constraints added by a
-        // winner re-validate the batch's LIVE rows with one O(batch) scan.
-        rebaseLoop(spark, dir, cur, files, txn, "commitPatch",
-            patchShape = true) { (head, newHead) =>
-          // patch files carry the exact schema, so only an identical-schema
-          // head is stackable; the chain's keys must stay ours
-          newHead.schemaDdl == head.schemaDdl &&
-            (newHead.mergeKeys.isEmpty || newHead.mergeKeys == keys)
-        } { head =>
-          publish(spark, dir, head, ManifestDelta("patch", txn = txn,
-            patches = head.patches :+ files, mergeKeys = keys))
-        }
+      val adds = writeCommitFiles(withCheckGuards(live, cur.props, "commitPatch"),
+        dir, cur, Some(rel))
+      // a tombstone-only or empty batch wrote 0-row part files: drop them
+      if (adds.isEmpty) fsOf(spark, dir).delete(new Path(dir, rel), true)
+      if (hits.isEmpty && adds.isEmpty) cur.version
+      else publish(spark, dir, cur, ManifestDelta("patch", adds = adds, txn = txn,
+        dvs = if (hits.isEmpty) None
+              else Some(cur.dvs :+ DvSet.write(spark, dir, s"$rel-dv", hits)._1)))
     }
   }
-
-  /** Materialize the patch-chain fold back into base files and EMPTY the
-    * chain (op = "compact") — through the SAME copy-on-write core as
-    * [[commitMerge]], so only files containing patched keys rewrite;
-    * untouched base files carry over byte-stable even through compaction.
-    * History is preserved — every patch state still time travels until
-    * vacuumed; the folded patch files become unreferenced and reclaim
-    * with retention. Returns the new version (current when nothing to
-    * fold).
-    */
-  def compactPatches(spark: SparkSession, dir: String): Long =
-    withHead(spark, dir, "compactPatches") { cur =>
-      if (cur.patches.isEmpty) cur.version
-      else {
-        val chain = chainChangelog(spark, dir, cur.patches, cur.mergeKeys,
-          StructType.fromDDL(cur.schemaDdl), cur.props)
-        cowMergeCore(spark, dir, cur, chain, chain, cur.mergeKeys, col("__vt_del"),
-          txn = None, evolve = false, metaCols = Seq.empty, op = "compact")
-      }
-    }
 
   /** Tag carried by the BASE parquet relation of every [[read]]: the
     * (table dir, pinned version) [[graft.plans.VtableSkipping]] needs to
     * re-prune the file list from a `Filter` INSIDE the Catalyst optimizer
     * — SQL/DataFrame users get manifest data skipping without calling
-    * [[readWhere]]. Only the base relation is tagged (patch sidecar reads
-    * are NOT — their files are not the manifest's base set, so pruning
-    * them with base stats would be wrong); pruning a tagged base under a
-    * patch fold is sound for the same reason [[readWhere]] under a chain
-    * is: a Filter Catalyst placed directly on the base only drops rows
-    * the fold would drop, and skipping files none of whose rows survive
-    * that Filter is the same set algebra at file granularity.
+    * [[readWhere]]. Pruning a tagged scan under a DV fold is sound: the
+    * fold only removes rows, so skipping files none of whose rows survive
+    * the Filter drops nothing the read would keep.
     */
   val pruneTag: org.apache.spark.sql.catalyst.trees.TreeNodeTag[(String, Long)] =
     org.apache.spark.sql.catalyst.trees.TreeNodeTag[(String, Long)]("graft.vtable.prune")
@@ -2735,42 +2595,6 @@ object VersionedTable {
     */
   val dvStateTag: org.apache.spark.sql.catalyst.trees.TreeNodeTag[Set[String]] =
     org.apache.spark.sql.catalyst.trees.TreeNodeTag[Set[String]]("graft.vtable.dvState")
-
-  /** The patch chain collapsed to ONE changelog row per key (later batch
-    * wins — each batch is already one row per key, so `__vt_seq` order is
-    * a total order within a key): the relation both the read fold and
-    * [[compactPatches]] consume.
-    */
-  private def chainChangelog(spark: SparkSession, dir: String,
-                             patches: Seq[Seq[FileEntry]],
-                             mergeKeys: Seq[String],
-                             schema: StructType,
-                             props: Map[String, String]): DataFrame = {
-    val delField = org.apache.spark.sql.types.StructField(
-      "__vt_del", org.apache.spark.sql.types.BooleanType)
-    val all = patches.zipWithIndex.map { case (batch, i) =>
-      readDataFiles(spark, schema, props,
-          batch.map(f => dataPath(dir, f.path)), extra = Seq(delField))
-        .withColumn("__vt_seq", lit(i))
-    }.reduce(_ unionByName _)
-    Warehouse.dedupByKey(all, mergeKeys, Seq(col("__vt_seq").desc))
-      .drop("__vt_seq")
-  }
-
-  /** Fold the manifest's patch chain over `base`: one dedup exchange over
-    * all patch rows + one [[Warehouse.applyChanges]] merge. No-op when
-    * the chain is empty.
-    */
-  private def foldPatches(spark: SparkSession, dir: String,
-                          patches: Seq[Seq[FileEntry]], mergeKeys: Seq[String],
-                          base: DataFrame, schema: StructType,
-                          props: Map[String, String]): DataFrame = {
-    if (patches.isEmpty) return base
-    Warehouse.applyChanges(base,
-        chainChangelog(spark, dir, patches, mergeKeys, schema, props),
-        mergeKeys, col("__vt_del"))
-      .select(schema.fieldNames.map(col): _*)
-  }
 
   // ------------------------------------------------------------ reads
 
@@ -2798,7 +2622,7 @@ object VersionedTable {
         m.props.get(TableIdProp).foreach(lr.setTagValue(tableIdTag, _))
       case _ =>
     }
-    foldPatches(spark, dir, m.patches, m.mergeKeys, df, schema, m.props)
+    df
   }
 
   /** Data-skipping read: `column BETWEEN lo AND hi`, with files whose
@@ -2823,26 +2647,17 @@ object VersionedTable {
     val filter = preds.map { case (c, lo, hi) =>
       col(s"`$c`") >= lo && col(s"`$c`") <= hi
     }.reduce(_ && _)
-    prunedFoldedRead(spark, dir, m, survivors).filter(filter)
+    prunedLiveRead(spark, dir, m, survivors).filter(filter)
   }
 
-  /** Survivor read + patch fold, shared by every pruned entry point.
-    * Pruning the BASE under a patch chain is sound because the fold takes
-    * a patched key's row ENTIRELY from the chain — a pruned base file
-    * only loses rows that are either shadowed (chain wins) or genuinely
-    * outside the predicate; the exact filter applies AFTER the fold.
+  /** Survivor read under the version's DVs, shared by every pruned entry
+    * point: pruning only drops files, DVs only drop rows, and the exact
+    * predicate re-applies after the fold.
     */
-  private def prunedFoldedRead(spark: SparkSession, dir: String, m: ManifestMeta,
-                               survivors: Seq[String]): DataFrame = {
-    val schema = StructType.fromDDL(m.schemaDdl)
-    // DV fold over the SURVIVORS is sound for the same reason the patch
-    // fold is: pruning only drops files, DVs only drop rows, and the
-    // exact predicate re-applies after the fold (a table never carries
-    // both DVs and a patch chain)
-    foldPatches(spark, dir, m.patches, m.mergeKeys,
-      readLive(spark, dir, schema, m.props, survivors, DvSet.read(spark, dir, m.dvs)),
-      schema, m.props)
-  }
+  private def prunedLiveRead(spark: SparkSession, dir: String, m: ManifestMeta,
+                             survivors: Seq[String]): DataFrame =
+    readLive(spark, dir, StructType.fromDDL(m.schemaDdl), m.props, survivors,
+      DvSet.read(spark, dir, m.dvs))
 
   /** The rows of the table files `paths` (relative) that `dv` leaves
     * live: the base scan filtered by `graft_dv_live`, one binary search
@@ -3113,7 +2928,7 @@ object VersionedTable {
     val m = readMeta(spark, dir, asOf.orElse(currentVersion(spark, dir)).getOrElse(
       throw new IllegalArgumentException(
         s"VersionedTable.readWhere: $dir is not a versioned table")))
-    prunedFoldedRead(spark, dir, m, candidates(spark, dir, m, cond).map(_.path))
+    prunedLiveRead(spark, dir, m, candidates(spark, dir, m, cond).map(_.path))
       .filter(cond)
   }
 
@@ -3176,35 +2991,18 @@ object VersionedTable {
     // (dead@to only → delete pre-image; dead@from only → restore-revived
     // post-image). See the DV branch below.
     val schema = StructType.fromDDL(m2.schemaDdl)
-    // an evolved window still diffs: appends read NULL for the new
-    // columns through toV's wider schema (precisely their pre-image), and
-    // RENAMES are invisible physically — the align below maps fromV's
-    // logical names onto toV's by shared physical identity. Drops and
+    // an evolved window still diffs: both sides read through toV's schema
+    // and mapping, so appended columns read NULL (precisely their
+    // pre-image) and RENAMES line up by physical identity. Drops and
     // retypes refuse inside physicalPrefixMap.
-    val toName = physicalPrefixMap(m1, m2, "changesBetween").toMap
+    physicalPrefixMap(m1, m2, "changesBetween")
     require(!schema.fieldNames.contains("change_type"),
       "changesBetween: column name change_type is reserved by the feed encoding")
     require(schema.fieldNames.length > keys.length,
       "changesBetween: table has no non-key columns")
     keys.foreach(k => require(schema.fieldNames.contains(k),
       s"changesBetween: key $k not in table schema"))
-    require((m1.patches.isEmpty && m2.patches.isEmpty) ||
-        (m2.mergeKeys.isEmpty || m2.mergeKeys == keys) &&
-        (m1.mergeKeys.isEmpty || m1.mergeKeys == keys),
-      s"changesBetween: keys ${keys.mkString(",")} must equal the patch " +
-        "chain's merge keys — the fold defines row identity")
     val payload = schema.fieldNames.filterNot(keys.contains).toSeq
-    // v1 read through v2's WIDER schema: shared columns map by PHYSICAL
-    // identity (so renamed columns line up under their toV names), evolved
-    // columns fill NULL — exactly their pre-image value
-    val fromName = toName.map(_.swap)
-    def align(df: DataFrame): DataFrame =
-      df.select(schema.fields.map { f =>
-        fromName.get(f.name) match {
-          case Some(fn) if df.columns.contains(fn) => col(s"`$fn`").as(f.name)
-          case _ => lit(null).cast(f.dataType).as(f.name)
-        }
-      }.toIndexedSeq: _*)
     def classify(pre0: DataFrame, post0: DataFrame): DataFrame = {
       // Diff by UNION + one hash aggregate, not a full-outer join: both
       // shapes move the same bytes through one shuffle on the key, but
@@ -3259,38 +3057,14 @@ object VersionedTable {
     def readSet(ps: Seq[String], dv: DvSet = DvSet.empty): DataFrame =
       readLive(spark, dir, schema, m2.props, ps, dv)
     val (added, removed) = windowFiles(spark, dir, fromV, toV)
-    if (m1.patches == m2.patches) {
-      // identical chains: any difference lives in the base file sets, and
-      // equal NON-EMPTY chains imply equal bases (base-mutating commits
-      // refuse under a chain) — the file-level content diff is exact
-      if (m1.dvs.isEmpty && m2.dvs.isEmpty)
-        classify(readSet(removed), readSet(added))
-      else {
-        val (d1, d2) = (DvSet.read(spark, dir, m1.dvs), DvSet.read(spark, dir, m2.dvs))
-        val (newlyDead, revived) =
-          dvFlips(spark, dir, schema, m2.props, d1, d2, added ++ removed)
-        classify(readSet(removed, d1).unionByName(newlyDead),
-          readSet(added, d2).unionByName(revived))
-      }
-    } else if (added.isEmpty && removed.isEmpty && m2.patches.startsWith(m1.patches)) {
-      // patch-only window: the delta is confined to keys the NEW patch
-      // batches name — pre/post images come from the FOLDED states (the
-      // truth under merge-on-read), restricted to those keys, so the diff
-      // reads O(new patches + key-pruned folds), not the table
-      val newFiles = m2.patches.drop(m1.patches.size).flatten
-      val changedKeys = readDataFiles(spark, schema, m2.props,
-          newFiles.map(f => dataPath(dir, f.path)),
-          extra = Seq(org.apache.spark.sql.types.StructField(
-            "__vt_del", org.apache.spark.sql.types.BooleanType)))
-        .select(keys.map(col): _*).distinct()
-      classify(
-        align(read(spark, dir, Some(fromV))).join(changedKeys, keys, "left_semi"),
-        read(spark, dir, Some(toV)).join(changedKeys, keys, "left_semi"))
-    } else {
-      // the window reshaped the chain non-monotonically (compactPatches
-      // folded it away): fall back to the brute snapshot diff — correct
-      // for every window, just not file-pruned
-      classify(align(read(spark, dir, Some(fromV))), read(spark, dir, Some(toV)))
+    if (m1.dvs.isEmpty && m2.dvs.isEmpty)
+      classify(readSet(removed), readSet(added))
+    else {
+      val (d1, d2) = (DvSet.read(spark, dir, m1.dvs), DvSet.read(spark, dir, m2.dvs))
+      val (newlyDead, revived) =
+        dvFlips(spark, dir, schema, m2.props, d1, d2, added ++ removed)
+      classify(readSet(removed, d1).unionByName(newlyDead),
+        readSet(added, d2).unionByName(revived))
     }
   }
 
@@ -3308,11 +3082,9 @@ object VersionedTable {
     * this is the difference between a refresh bounded by changed-file
     * scan speed and one bounded by a changed-row shuffle.
     *
-    * Returns None when the window's change is not expressible as a base
-    * file delta (a patch chain grew or was reshaped in the window) — the
-    * caller falls back to the keyed feed. Schema evolution inside the
-    * window is handled as in [[changesBetween]]: old files read through
-    * the newest schema, appended columns filling NULL.
+    * Schema evolution inside the window is handled as in
+    * [[changesBetween]]: old files read through the newest schema,
+    * appended columns filling NULL.
     *
     * Deletion vectors COMPOSE into the encoding rather than disable it
     * (a DV DELETE/UPDATE changes no file paths, so a bare file diff
@@ -3326,11 +3098,10 @@ object VersionedTable {
     * (carried DV files cancel; positions record at most once).
     */
   def signedRowsBetween(spark: SparkSession, dir: String,
-                        fromV: Long, toV: Long): Option[DataFrame] = {
+                        fromV: Long, toV: Long): DataFrame = {
     require(fromV < toV, s"signedRowsBetween: need fromV < toV, got $fromV >= $toV")
     val m1 = readMeta(spark, dir, fromV)
     val m2 = readMeta(spark, dir, toV)
-    if (m1.patches != m2.patches) return None
     val schema = StructType.fromDDL(m2.schemaDdl)
     // renames pass (physical identity unchanged; both sides read through
     // toV's schema+mapping), drops/retypes refuse
@@ -3347,11 +3118,11 @@ object VersionedTable {
     val (d1, d2) = (DvSet.read(spark, dir, m1.dvs), DvSet.read(spark, dir, m2.dvs))
     val both = signed(readLive(spark, dir, schema, m2.props, added, d2), 1)
       .unionByName(signed(readLive(spark, dir, schema, m2.props, removed, d1), -1))
-    if (m1.dvs.isEmpty && m2.dvs.isEmpty) Some(both)
+    if (m1.dvs.isEmpty && m2.dvs.isEmpty) both
     else {
       val (newlyDead, revived) =
         dvFlips(spark, dir, schema, m2.props, d1, d2, added ++ removed)
-      Some(both.unionByName(signed(newlyDead, -1)).unionByName(signed(revived, 1)))
+      both.unionByName(signed(newlyDead, -1)).unionByName(signed(revived, 1))
     }
   }
 
@@ -3409,11 +3180,11 @@ object VersionedTable {
     * store a cost-based planner consults before touching data: total rows
     * plus, per stats column, (nulls, global min, global max) folded from
     * the per-file entries through Catalyst casts. NO Spark job runs and
-    * no file opens; the numbers are exact for the BASE (a pending patch
-    * chain adds unfolded deltas, so `rows` is then an upper bound on live
-    * base rows — patched tables report `exact = false`). Feed `rows` to
-    * [[ValidateOps.adviseJoin]]'s build side for broadcast decisions that
-    * cost one manifest read instead of a count job.
+    * no file opens; the numbers are exact for the files (pending deletion
+    * vectors drop rows the header still counts, so `rows` is then an
+    * upper bound on live rows — such tables report `exact = false`).
+    * Feed `rows` to [[ValidateOps.adviseJoin]]'s build side for broadcast
+    * decisions that cost one manifest read instead of a count job.
     */
   final case class TableStats(rows: Long, exact: Boolean,
                               cols: Map[String, (Long, Option[String], Option[String])])
@@ -3489,14 +3260,14 @@ object VersionedTable {
     // stats keys are PHYSICAL; present them under the logical names the
     // caller knows (a renamed column's stats follow it)
     val logicalOf = colmapOf(m.props).map(_.swap)
-    TableStats(m.totalRows, exact = m.patches.isEmpty,
+    TableStats(m.totalRows, exact = m.dvs.isEmpty,
       m.statsCols.map(c => logicalOf.getOrElse(c, c) -> {
         val f = folds(c); (f.nulls, f.min, f.max)
       }).toMap)
   }
 
   /** RESTORE: roll the table back to `toVersion` as a NEW commit whose
-    * file set (and schema, stats config, patch chain) is that version's —
+    * file set (and schema, stats config, deletion vectors) is that version's —
     * Delta `RESTORE TABLE ... TO VERSION AS OF`. Nothing is copied or
     * rewritten: the old manifest's files are still on disk (a manifest
     * that [[readManifest]] can load was not vacuumed, and vacuum never
@@ -3917,15 +3688,14 @@ object VersionedTable {
     val distributedRefs =
       keepMetas.exists(_._2.numFiles > distributedPruneThreshold(spark))
     lazy val referenced: Set[String] = keepMetas.flatMap { case (v, mf) =>
-      val all = materializeFiles(spark, dir, v) ++ mf.patches.flatten
+      val all = materializeFiles(spark, dir, v)
       all.map(_.path) ++ all.flatMap(_.blooms.values) ++ mf.dvs
     }.toSet
     lazy val referencedDf: DataFrame = {
       import spark.implicits._
       keepMetas.map { case (v, mf) =>
-        // patch chains + dv sidecar lists are O(chain) — driver-small
-        val extras = (mf.patches.flatten.map(_.path) ++
-          mf.patches.flatten.flatMap(_.blooms.values) ++ mf.dvs).toDF("p")
+        // dv sidecar lists are driver-small
+        val extras = mf.dvs.toDF("p")
         filesDF(spark, dir, v)
           // coalesce: a checkpoint written before the blooms column
           // existed schema-fills NULL, and array_union(x, NULL) is NULL —

@@ -324,9 +324,9 @@ object ViewOps {
     *
     *  - First call: bootstraps the view with [[fullState]] over the
     *    source's CURRENT version and pins that version in the ledger.
-    *  - Later calls: reads the change feed from the pinned version to the
-    *    current one (pre-image encoded), reduces it to a signed per-group
-    *    delta ([[aggSigned]], or [[aggDelta]] over the keyed feed), adds
+    *  - Later calls: reads the signed file-level feed from the pinned
+    *    version to the current one ([[VersionedTable.signedRowsBetween]]),
+    *    reduces it to a signed per-group delta ([[aggSigned]]), adds
     *    it to the TOUCHED groups' state, and commits the
     *    touched groups' new rows (tombstones for emptied groups) through
     *    [[VersionedTable.commitMerge]] with `txn = (appId, srcVersion)`.
@@ -335,14 +335,15 @@ object ViewOps {
     *
     * `measures` must be integral-typed (LONG sums): exact, associative,
     * and replay-stable — float sums would drift between the incremental
-    * and from-scratch paths. Cast money to cents upstream.
+    * and from-scratch paths. Cast money to cents upstream. `srcKeys` names
+    * the source's key columns; the signed feed needs no row identity, so
+    * the refresh itself does not read them.
     */
   def refreshAggView(spark: SparkSession, srcDir: String, viewDir: String,
                      srcKeys: Seq[String], groupCols: Seq[String],
                      measures: Seq[String],
                      appId: String = "graft-ivm"): Long = {
-    val v = refreshAggViewImpl(spark, srcDir, viewDir, srcKeys, groupCols,
-      measures, appId)
+    val v = refreshAggViewImpl(spark, srcDir, viewDir, groupCols, measures, appId)
     // a refreshed view is an automatic-rewrite candidate from here on —
     // the rule's ledger check decides freshness per query, so registering
     // eagerly (even when this call no-opped) is always sound. The
@@ -355,7 +356,7 @@ object ViewOps {
   }
 
   private def refreshAggViewImpl(spark: SparkSession, srcDir: String,
-                                 viewDir: String, srcKeys: Seq[String],
+                                 viewDir: String,
                                  groupCols: Seq[String], measures: Seq[String],
                                  appId: String): Long = {
     val VT = VersionedTable
@@ -438,22 +439,13 @@ object ViewOps {
         // Fast path: SUM/COUNT distribute over signs, so the refresh folds
         // the window's file-level ±1 rows directly — no per-key CDF
         // pairing, no key shuffle (see [[VersionedTable
-        // .signedRowsBetween]]). Deletion-vector windows COMPOSE into the
-        // signed encoding (r17 — newly-dead positions retract at −1,
-        // revived at +1; a bare file diff would fold an EMPTY delta and
-        // silently advance the cursor past the deletes). Patch-chain
-        // windows (None) fall back to the keyed feed, which handles
-        // merge-on-read exactly.
-        val delta = VT.signedRowsBetween(spark, srcDir, lastSrcV, srcV) match {
-          case Some(signed) =>
-            requireIntegralMeasures(signed.schema, measures, "refreshAggView")
-            aggSigned(signed, groupCols, measures)
-          case None =>
-            val cdf = VT.changesBetween(spark, srcDir, lastSrcV, srcV,
-              srcKeys, preimages = true)
-            requireIntegralMeasures(cdf.schema, measures, "refreshAggView")
-            aggDelta(cdf, groupCols, measures)
-        }
+        // .signedRowsBetween]]). Deletion-vector windows, patches
+        // included, COMPOSE into the signed encoding (newly-dead positions
+        // retract at −1, revived at +1; a bare file diff would fold an
+        // EMPTY delta and silently advance the cursor past the deletes).
+        val signed = VT.signedRowsBetween(spark, srcDir, lastSrcV, srcV)
+        requireIntegralMeasures(signed.schema, measures, "refreshAggView")
+        val delta = aggSigned(signed, groupCols, measures)
         foldDeltaIntoView(spark, viewDir, delta, groupCols, measures,
           txn = appId -> srcV, ctx = "refreshAggView")
         VT.currentVersion(spark, viewDir).get

@@ -15,7 +15,7 @@ import org.apache.spark.sql.functions._
   * up when a deployment needs what single-state storage cannot give: time
   * travel, an immutable-file commit log (readers never race a swap),
   * stats/bloom file pruning, a change data feed, merge-on-read patch
-  * commits ([[VersionedTable.commitPatch]]), and ledger-based
+  * commits as deletion vectors ([[VersionedTable.commitPatch]]), and ledger-based
   * exactly-once — at the price of manifest metadata and a vacuum
   * lifecycle. The merge SEMANTICS ([[applyChanges]]/[[applyChangesEvolve]])
   * are shared: the versioned table calls them per touched file set, so
@@ -230,7 +230,7 @@ object Warehouse {
     */
   private def readParquetAs(spark: SparkSession, dir: String,
                             file: org.apache.hadoop.fs.FileStatus): DataFrame =
-    FooterStats.sparkSchema(file.getPath, spark.sessionState.newHadoopConf())
+    FooterStats.sparkSchema(file, spark.sessionState.newHadoopConf())
       .fold(spark.read.parquet(dir))(spark.read.schema(_).parquet(dir))
 
   /** Rows in the parquet data files under `dir`, summed from their footers:

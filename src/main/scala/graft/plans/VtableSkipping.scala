@@ -37,7 +37,7 @@ import graft.ops.VersionedTable
   * node itself is LEFT IN PLACE — pruning only decides which files are
   * worth opening, exactly parquet row-group pruning one level up. The
   * relation's output attributes are reused verbatim, so no expression id
-  * in the surrounding plan changes. Pruning a tagged base under a patch
+  * in the surrounding plan changes. Pruning a tagged base under a DV
   * fold is sound because Catalyst only places a Filter directly on the
   * base where filtering is sound, and skipping a file none of whose rows
   * survive that filter is the same algebra at file granularity.
@@ -151,8 +151,8 @@ object VtableSkipping extends Rule[LogicalPlan] {
   * Strictly conservative: fires only when EVERY output aggregate is
   * answerable — grouping empty, no Filter below (a Filter invalidates
   * manifest totals; [[VtableSkipping]] handles that shape instead), no
-  * DISTINCT / FILTER clause, no pending patch chain (base rows are then
-  * an upper bound, not a count), and every referenced column has stats in
+  * DISTINCT / FILTER clause, no pending deletion vectors (base rows are
+  * then an upper bound, not a count), and every referenced column has stats in
   * EVERY file. One unanswerable aggregate leaves the whole plan alone.
   * Bound folds run through Catalyst `Cast`/`LessThan` on the column's own
   * type, so the answer is the engine's own comparison — never a string's.
@@ -187,7 +187,6 @@ object VtableMetadataAgg extends Rule[LogicalPlan] {
   private def answer(agg: Aggregate, dir: String, version: Long): Option[LogicalPlan] = {
     val spark = org.apache.spark.sql.SparkSession.active
     val m = VersionedTable.readMeta(spark, dir, version)
-    if (m.patches.nonEmpty) return None
     // deletion vectors make header totals BASE-row counts, not live-row
     // counts — the metadata answer would overcount
     if (m.dvs.nonEmpty) return None

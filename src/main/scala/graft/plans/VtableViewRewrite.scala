@@ -235,8 +235,7 @@ object VtableViewRewrite extends Rule[LogicalPlan] {
     // freshness: the view must have folded EXACTLY the scanned version...
     val vv = VersionedTable.currentVersion(spark, mv.viewDir).getOrElse(return None)
     val meta = VersionedTable.readMeta(spark, mv.viewDir, vv)
-    if (!meta.txns.get(mv.appId).contains(srcV) || meta.patches.nonEmpty)
-      return None
+    if (!meta.txns.get(mv.appId).contains(srcV)) return None
     // ...OF THE SAME TABLE: version numbers restart across drop/recreate
     // at one path, so the cursor alone would let a stale view answer for
     // a different table. The view pins the source's identity UUID at

@@ -28,8 +28,10 @@ import graft.ops.{GraftCatalog, VersionedTable => VT}
   *  - `merge`: [[VT.commitMerge]] — each batch is a CDC changelog (keys
   *    update, `deleteCond` rows tombstone, new keys insert), stats-pruned
   *    copy-on-write.
-  *  - `patch`: [[VT.commitPatch]] — merge-on-read: O(batch) patch appends,
-  *    `compactPatches` on a cadence bounds the fold.
+  *  - `patch`: [[VT.commitPatch]] — merge-on-read: the matched rows'
+  *    positions land in a deletion vector and the batch appends, so no
+  *    existing file is rewritten; OPTIMIZE (`materializeDvs`) on a
+  *    cadence folds the positions back into clean files.
   *
   * The TARGET TABLE's identity UUID is pinned under the query's
   * checkpoint at first batch (same discipline as

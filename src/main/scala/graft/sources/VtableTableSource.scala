@@ -214,22 +214,18 @@ class VtableTableSource(spark: SparkSession, parameters: Map[String, String],
       else {
         // batch 0 reads the table AS OF the LOGGED offset, so that offset
         // must name a version whose snapshot is a pure scan — a pending
-        // DV set or patch chain at `end` could NEVER replay (manifests
+        // DV set at `end` could NEVER replay (manifests
         // are immutable; the checkpoint would wedge permanently). Refuse
         // at PLANNING time when even the floor is unclean — nothing is
         // logged, so a restart after OPTIMIZE succeeds; otherwise cap the
         // ride-alongs at the last clean version (later commits arrive as
         // ordinary slices under the append-path rules).
-        def clean(v: Long): Boolean = {
-          val m = VT.readMeta(spark, dir, v)
-          m.dvs.isEmpty && m.patches.isEmpty
-        }
+        def clean(v: Long): Boolean = VT.readMeta(spark, dir, v).dvs.isEmpty
         if (!clean(snapshotV.get))
           throw new IllegalStateException(
-            s"graft-vtable source: $dir carries deletion vectors or an " +
-              "unfolded patch chain at the stream's snapshot version — " +
-              "run OPTIMIZE (materializeDvs/compactPatches) first, then " +
-              "start the stream")
+            s"graft-vtable source: $dir carries deletion vectors at the " +
+              "stream's snapshot version — run OPTIMIZE (materializeDvs) " +
+              "first, then start the stream")
         var v = snapshotV.get
         while (v < byteCapped && clean(v + 1)) v += 1
         v
@@ -279,17 +275,13 @@ class VtableTableSource(spark: SparkSession, parameters: Map[String, String],
     }
   }
 
-  /** The snapshot: the table AS OF `v` — a pure parquet scan. A patch
-    * chain at the snapshot version would make it a fold (join) inside a
-    * streaming plan; refuse and point at compaction.
+  /** The snapshot: the table AS OF `v` — a pure parquet scan. Deletion
+    * vectors at the snapshot version (a DV commit's or a patch's) would
+    * put their fold inside a streaming plan; refuse and point at
+    * materialization.
     */
   private def snapshotSlice(v: Long): DataFrame = {
     val m = VT.readMeta(spark, dir, v)
-    require(m.patches.isEmpty,
-      s"graft-vtable source: $dir has an unfolded patch chain at the " +
-        "snapshot version — run compactPatches (or OPTIMIZE) first")
-    // a DV fold is an anti-JOIN — inside a streaming plan it would
-    // become a stream-stream join; materialize first, like patches
     require(m.dvs.isEmpty,
       s"graft-vtable source: $dir has pending deletion vectors at the " +
         "snapshot version — run materializeDvs (or OPTIMIZE) first")

@@ -169,6 +169,12 @@ object StreamOps {
     * same table needs a fresh `appId` too, or the ledger would silently
     * swallow the new stream's first batches (same rule as the flat
     * variant's marker: reset checkpoint and identity together).
+    *
+    * `asPatches = true` commits each micro-batch with
+    * [[graft.ops.VersionedTable.commitPatch]]: the matched rows' positions
+    * land in a deletion vector and the batch's rows append, so no existing
+    * file is rewritten; OPTIMIZE (`materializeDvs`) on a cadence folds the
+    * positions back into clean files.
     */
   def streamingCdcApplyVersioned(spark: SparkSession, srcDir: String,
                                  schemaDdl: String, checkpointDir: String,
@@ -185,13 +191,13 @@ object StreamOps {
       .option("checkpointLocation", checkpointDir)
       .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // asPatches = merge-on-read micro-batches: each trigger is an
-        // O(batch) patch append (no base file rewrites — the steady-state
-        // CDC shape); compactPatches on a cadence bounds the fold cost.
-        // Same txn-ledger exactly-once either way.
+        // same txn-ledger exactly-once either way; a patch's positions
+        // depend on the head, so a lost race re-derives them
         if (asPatches)
-          graft.ops.VersionedTable.commitPatch(batch, tableDir, keys, tiebreak,
-            deleteCond, txn = Some(appId -> batchId))
+          graft.ops.VersionedTable.withCommitRetry() {
+            graft.ops.VersionedTable.commitPatch(batch, tableDir, keys, tiebreak,
+              deleteCond, txn = Some(appId -> batchId))
+          }
         else
           graft.ops.VersionedTable.commitMerge(batch, tableDir, keys, tiebreak,
             deleteCond, txn = Some(appId -> batchId))

@@ -86,7 +86,7 @@ class ColumnMappingSpec extends SparkSuite {
     assert(VT.readWhere(spark, dir, $"amount" > 80L).count() == 1L)
   }
 
-  test("RENAME COLUMN refusals: conflicts, constraints, patch chains") {
+  test("RENAME COLUMN refusals: conflicts, constraints; a patched table renames") {
     val dir = tmp(); mk(dir)
     intercept[IllegalArgumentException](
       VT.commitRenameColumn(spark, dir, "nope", "x"))
@@ -110,13 +110,15 @@ class ColumnMappingSpec extends SparkSuite {
     val ex2 = intercept[IllegalArgumentException](
       VT.commitRenameColumn(spark, dir, "s", "v"))
     assert(ex2.getMessage.toLowerCase.contains("physical"), ex2.getMessage)
-    // patch chains refuse (fold state is name-sensitive)
+    // a patch's deletion vector addresses positions, not names: the
+    // patched state renames and reads under the new name
     val dir3 = tmp()
     VT.create(Seq((1L, 1L)).toDF("k", "x"), dir3, Seq("k"))
-    VT.commitPatch(Seq((2L, 2L, false)).toDF("k", "x", "del"),
+    VT.commitPatch(Seq((1L, 2L, false)).toDF("k", "x", "del"),
       dir3, Seq("k"), Seq.empty, $"del")
-    intercept[IllegalArgumentException](
-      VT.commitRenameColumn(spark, dir3, "x", "y"))
+    VT.commitRenameColumn(spark, dir3, "x", "y")
+    assert(VT.read(spark, dir3).select("k", "y").as[(Long, Long)].collect().toSeq ==
+      Seq((1L, 2L)))
   }
 
   test("RENAME COLUMN composes with patch chains created after it") {
@@ -124,12 +126,12 @@ class ColumnMappingSpec extends SparkSuite {
     VT.create(Seq((1L, 10L), (2L, 20L)).toDF("k", "x").coalesce(1),
       dir, Seq("k"))
     VT.commitRenameColumn(spark, dir, "x", "score")
-    // merge-on-read patches write/fold through the mapping
+    // patches probe, write and read through the mapping
     VT.commitPatch(Seq((2L, 21L, false), (3L, 30L, false)).toDF("k", "score", "del"),
       dir, Seq("k"), Seq.empty, $"del")
     assert(VT.read(spark, dir).as[(Long, Long)].collect().toSet ==
       Set((1L, 10L), (2L, 21L), (3L, 30L)))
-    VT.compactPatches(spark, dir)
+    VT.materializeDvs(spark, dir)
     assert(VT.read(spark, dir).as[(Long, Long)].collect().toSet ==
       Set((1L, 10L), (2L, 21L), (3L, 30L)))
   }

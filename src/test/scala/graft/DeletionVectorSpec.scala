@@ -254,7 +254,7 @@ class DeletionVectorSpec extends SparkSuite {
     }
   }
 
-  test("DV UPDATE/DELETE compose with a patch chain: the chain folds first, then positions record") {
+  test("DV UPDATE/DELETE compose with patches: one commit each, positions in one set") {
     val root = Files.createTempDirectory("dvmor").toString
     val dir = s"$root/t"
     VT.create(spark.range(100)
@@ -262,32 +262,30 @@ class DeletionVectorSpec extends SparkSuite {
       .repartitionByRange(4, $"k").sortWithinPartitions("k"),
       dir, statsCols = Seq("k"),
       props = Map(VT.DvsEnabledProp -> "true"))
-    // two MoR patch commits: k=5 updated, k=7 tombstoned, k=200 inserted
+    // two patch commits: k=5 updated, k=7 tombstoned, k=200 inserted
     VT.commitPatch(Seq((5L, "p5", false), (7L, "x", true))
       .toDF("k", "s", "del"), dir, Seq("k"), Seq.empty, $"del")    // v2
     VT.commitPatch(Seq((200L, "p200", false))
       .toDF("k", "s", "del"), dir, Seq("k"), Seq.empty, $"del")    // v3
-    assert(VT.readManifest(spark, dir, 3L).patches.nonEmpty)
-    // positional UPDATE on the MoR state: the chain folds (one CoW
-    // commit), then the DV commit records positions on the clean bases
+    assert(VT.readManifest(spark, dir, 3L).dvs.size == 1)
+    // positional UPDATE on the patched state: one DV commit, which
+    // addresses the patch's appended row of k=5 like any other row
     val v = VT.commitUpdateDv(spark, dir, $"k" >= 4L && $"k" < 6L,
       Seq("s" -> concat($"s", lit("!"))))
-    assert(v == 5L, s"fold + DV commit = 2 versions, got $v")
-    val m = VT.readManifest(spark, dir, v)
-    assert(m.patches.isEmpty && m.dvs.nonEmpty)
+    assert(v == 4L, s"the DV update is one commit, got $v")
+    assert(VT.readManifest(spark, dir, v).dvs.size == 2)
     val out = VT.read(spark, dir).as[(Long, String)].collect().toMap
-    // the folded chain's update is visible THROUGH the positional update
+    // the patch's update is visible THROUGH the positional update
     assert(out(5L) == "p5!" && out(4L) == "4!" && out(200L) == "p200")
     assert(!out.contains(7L) && out.size == 100)
-    // DELETE-on-MoR takes the same fold-first route (patch-on-DV still
-    // refuses — only the DV-on-patch direction composes — so clear the
-    // pending DVs before building the next chain)
-    VT.materializeDvs(spark, dir)
-    VT.commitPatch(Seq((300L, "p300", false))
-      .toDF("k", "s", "del"), dir, Seq("k"), Seq.empty, $"del")
-    val v2 = VT.commitDeleteDv(spark, dir, $"k" === 300L)
+    // patch-on-DV composes too: the patch re-writes the updated row
+    VT.commitPatch(Seq((5L, "p5b", false), (300L, "p300", false))
+      .toDF("k", "s", "del"), dir, Seq("k"), Seq.empty, $"del")    // v5
+    val v2 = VT.commitDeleteDv(spark, dir, $"k" === 300L)           // v6
     val out2 = VT.read(spark, dir).as[(Long, String)].collect().toMap
-    assert(!out2.contains(300L) && out2.size == 100 && v2 > v + 1)
+    assert(!out2.contains(300L) && out2(5L) == "p5b" && out2.size == 100 && v2 == 6L)
+    VT.materializeDvs(spark, dir)
+    assert(VT.read(spark, dir).as[(Long, String)].collect().toMap == out2)
   }
 
   test("auto-materialize policy folds DVs past the dead-ratio threshold, answer unchanged") {
@@ -380,9 +378,6 @@ class DeletionVectorSpec extends SparkSuite {
     assert(msg(intercept[IllegalArgumentException](VT.commitMerge(
       Seq((5L, "x", false)).toDF("k", "s", "del"), dir, Seq("k"), Seq.empty,
       $"del"))).contains("deletion vectors"))
-    assert(msg(intercept[IllegalArgumentException](VT.commitPatch(
-      Seq((5L, "x", false)).toDF("k", "s", "del"), dir, Seq("k"), Seq.empty,
-      $"del"))).contains("deletion vectors"))
     assert(msg(intercept[IllegalArgumentException](VT.shallowClone(spark, dir,
       dir + "_clone"))).contains("deletion vectors"))
     // the change feed COMPOSES across the DV commit (no refusal): the
@@ -390,8 +385,11 @@ class DeletionVectorSpec extends SparkSuite {
     assert(VT.changesBetween(spark, dir, 1L, 2L, Seq("k"))
       .select("change_type", "k").as[(String, Long)].collect().toSeq ==
       Seq(("delete", 3L)))
-    // APPEND stays allowed: new files carry no positions
+    // APPEND stays allowed: new files carry no positions; so does a
+    // patch, which records its matched rows as positions too
     VT.commitAppend(Seq((200L, "z")).toDF("k", "s"), dir)
+    VT.commitPatch(Seq((6L, "x", false)).toDF("k", "s", "del"), dir, Seq("k"),
+      Seq.empty, $"del")
     assert(VT.read(spark, dir).count() == 100L)
     // materialize unblocks everything (99 live + appended row = 100)
     VT.materializeDvs(spark, dir)
@@ -405,27 +403,27 @@ class DeletionVectorSpec extends SparkSuite {
     // hole: a bare file diff here returned Some(empty) and the consumer
     // folded nothing while its cursor advanced past the deletes.
     val v2 = VT.commitDeleteDv(spark, dir, $"k" >= 10L && $"k" < 15L)
-    val got12 = VT.signedRowsBetween(spark, dir, 1L, v2).get
+    val got12 = VT.signedRowsBetween(spark, dir, 1L, v2)
       .select($"k", $"__sign").as[(Long, Long)].collect().toSet
     assert(got12 == (10L until 15L).map(k => (k, -1L)).toSet,
       s"DV delete window must retract exactly the dead rows: $got12")
     // DV update: the dv kills the old position, the appended image file
     // carries the new row — the window nets pre-image −1 / post-image +1
     val v3 = VT.commitUpdateDv(spark, dir, $"k" === 20L, Seq("s" -> lit("X")))
-    val got23 = VT.signedRowsBetween(spark, dir, v2, v3).get
+    val got23 = VT.signedRowsBetween(spark, dir, v2, v3)
       .select($"k", $"s", $"__sign").as[(Long, String, Long)].collect().toSet
     assert(got23 == Set((20L, (20L % 7).toString, -1L), (20L, "X", 1L)),
       s"DV update window must swap the images: $got23")
     // restore to pre-DV state: positions dead at from and live at to on
     // UNCHANGED file paths must come back as +1 (the revived branch)
     val v4 = VT.restore(spark, dir, 1L)
-    val got24 = VT.signedRowsBetween(spark, dir, v2, v4).get
+    val got24 = VT.signedRowsBetween(spark, dir, v2, v4)
       .select($"k", $"__sign").as[(Long, Long)].collect().toSet
     assert(got24 == (10L until 15L).map(k => (k, 1L)).toSet,
       s"restore across a DV state must revive the dead positions: $got24")
     // whole-history sanity: the signed fold from v1 to HEAD nets to the
     // snapshot diff (here: zero — v4 restored v1's content exactly)
-    val net = VT.signedRowsBetween(spark, dir, 1L, v4).get
+    val net = VT.signedRowsBetween(spark, dir, 1L, v4)
       .agg(sum($"__sign")).head()
     assert(net.isNullAt(0) || net.getLong(0) == 0L)
   }

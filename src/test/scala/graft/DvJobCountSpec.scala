@@ -14,7 +14,10 @@ import graft.ops.{VersionedTable => VT}
   * are read on the driver, so a read at a DV version is one scan job, a
   * DV update two (positions, images), a materialize one write and a DV
   * change feed the diff's two; a merge whose changelog is local finds its
-  * touched files with no job. No query of any of them scans a sidecar.
+  * touched files with no job, and so does a patch: its positions take the
+  * semi-join's broadcast of the batch keys and one collect, its appended
+  * rows the dedup's shuffle and one write. No query of any of them scans
+  * a sidecar.
   */
 class DvJobCountSpec extends SparkSuite {
   import spark.implicits._
@@ -79,10 +82,13 @@ class DvJobCountSpec extends SparkSuite {
       .toDF("k", "s", "del")
     measure("commitMerge of a local changelog")(
       VT.commitMerge(changes, dir, Seq("k"), Seq($"s"), $"del"))                        // v5
+    measure("commitPatch of a local changelog")(
+      VT.commitPatch(Seq((6L, "p", false), (71L, "x", true), (600L, "n", false))
+        .toDF("k", "s", "del"), dir, Seq("k"), Seq($"s"), $"del"))                       // v6
 
     assert(VT.read(spark, dir).count() == 200L - 10L - 1L + 1L)
     val dvFiles = sidecars(dir)
-    assert(dvFiles.size == 2)
+    assert(dvFiles.size == 3)
     assert((scanned & dvFiles).isEmpty,
       s"queries scanned DV sidecars: ${(scanned & dvFiles).mkString(", ")}")
     assert(counts.toMap == Map(
@@ -91,6 +97,7 @@ class DvJobCountSpec extends SparkSuite {
       "commitUpdateDv" -> 2,
       "changesBetween over a DV window" -> 2,
       "materializeDvs" -> 1,
-      "commitMerge of a local changelog" -> 3), s"jobs per operation: $counts")
+      "commitMerge of a local changelog" -> 3,
+      "commitPatch of a local changelog" -> 4), s"jobs per operation: $counts")
   }
 }

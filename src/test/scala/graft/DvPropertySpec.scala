@@ -8,12 +8,14 @@ import graft.ops.{FooterStats, VersionedTable => VT}
 
 /** Random sequences of the deletion-vector operations
   * ([[VT.commitDeleteDv]], [[VT.commitUpdateDv]], [[VT.materializeDvs]],
-  * [[VT.restore]], [[VT.commitAppend]]) against a sequential model. The
-  * table mixes the file kinds a DV key must tell apart: one file shared
-  * from a shallow-clone source (keyed by its absolute path) and two
-  * table-owned files in different commit dirs with the SAME part-file name.
-  * At every version, `read(asOf)`, `changesBetween` and `signedRowsBetween`
-  * must equal what the model derives from its snapshots.
+  * [[VT.restore]], [[VT.commitAppend]], and in the merge cases
+  * [[VT.commitPatch]]) against a sequential model. The table mixes the
+  * file kinds a DV key must tell apart: one file shared from a
+  * shallow-clone source (keyed by its absolute path) and two table-owned
+  * files in different commit dirs with the SAME part-file name. At every
+  * version, `read(asOf)`, `changesBetween` (with and without pre-images)
+  * and `signedRowsBetween` must equal what the model derives from its
+  * snapshots.
   */
 class DvPropertySpec extends SparkSuite {
   import spark.implicits._
@@ -67,11 +69,22 @@ class DvPropertySpec extends SparkSuite {
       }
     }
 
+  private def feedWithPreimages(a: State, b: State): Set[(String, Long, String)] =
+    feed(a, b).flatMap {
+      case ("update", k, y) => Set(("update_preimage", k, a(k)), ("update_postimage", k, y))
+      case other => Set(other)
+    }
+
   private def signed(a: State, b: State): Map[(Long, String), Long] =
     (b.toSet -- a.toSet).map(_ -> 1L).toMap ++ (a.toSet -- b.toSet).map(_ -> -1L).toMap
 
-  /** One random run: `ops` operations from `seed`, then every check. */
-  private def run(seed: Long, ops: Int): Unit = {
+  /** One random run: `ops` operations from `seed`, then every check.
+    * With `patches`, two in seven operations are [[VT.commitPatch]]
+    * batches of 1 to 4 rows: upserts and tombstones of live keys, of keys
+    * an earlier patch wrote and of absent keys, with keys repeated within
+    * the batch (the last row of a key wins).
+    */
+  private def run(seed: Long, ops: Int, patches: Boolean = false): Unit = {
     val rnd = new scala.util.Random(seed)
     val (dir, s2) = build(Files.createTempDirectory(s"dvprop$seed").toString)
     // version -> (model state, DVs pending)
@@ -79,6 +92,7 @@ class DvPropertySpec extends SparkSuite {
       1L -> ((0L until 20L).map(k => k -> s"r$k").toMap, false), 2L -> ((s2, false)))
     var cur = 2L
     var nextKey = 1000L
+    var nextPatchKey = 2000L
     val log = scala.collection.mutable.ArrayBuffer.empty[String]
     (1 to ops).foreach { _ =>
       val (state, pending) = model(cur)
@@ -87,7 +101,7 @@ class DvPropertySpec extends SparkSuite {
       val hi = lo + rnd.nextInt(6)
       val range = $"k" >= lo && $"k" <= hi
       val hit = state.filter { case (k, _) => k >= lo && k <= hi }
-      val (label, v, expected) = rnd.nextInt(5) match {
+      val (label, v, expected) = rnd.nextInt(if (patches) 7 else 5) match {
         case 0 =>
           (s"deleteDv[$lo,$hi]", VT.commitDeleteDv(spark, dir, range),
             if (hit.isEmpty) None else Some((state -- hit.keys, true)))
@@ -103,6 +117,29 @@ class DvPropertySpec extends SparkSuite {
           val to = 1L + rnd.nextInt(cur.toInt)
           (s"restore($to)", VT.restore(spark, dir, to),
             if (to == cur) None else Some(model(to)))
+        case 5 | 6 =>
+          val patched = keys.filter(_ >= 2000L)
+          val batch = (0 until 1 + rnd.nextInt(4)).foldLeft(Seq.empty[(Long, String, Boolean, Int)]) {
+            (acc, i) =>
+              val k = rnd.nextInt(4) match {
+                case 0 if patched.nonEmpty => patched(rnd.nextInt(patched.size))
+                case 1 => nextPatchKey += 1; nextPatchKey
+                case 2 if acc.nonEmpty => acc(rnd.nextInt(acc.size))._1
+                case _ => if (keys.isEmpty) { nextPatchKey += 1; nextPatchKey }
+                          else keys(rnd.nextInt(keys.size))
+              }
+              acc :+ ((k, s"p${log.size}.$i", rnd.nextInt(3) == 0, i))
+          }
+          // one row per key, the batch's last (highest seq) winning
+          val last = batch.groupBy(_._1).map { case (k, rs) => k -> rs.maxBy(_._4) }
+          val hits = last.keySet.exists(state.contains)
+          val next = last.foldLeft(state) { case (m, (k, (_, s, del, _))) =>
+            if (del) m - k else m.updated(k, s)
+          }
+          (s"patch(${batch.map { case (k, s, d, _) => s"$k${if (d) "-" else "=" + s}" }.mkString(",")})",
+            VT.commitPatch(batch.toDF("k", "s", "del", "seq"), dir, Seq("k"),
+              Seq($"seq".desc), $"del"),
+            if (!hits && last.values.forall(_._3)) None else Some((next, pending || hits)))
         case _ =>
           val n = 1 + rnd.nextInt(3)
           val ks = (nextKey until nextKey + n).toSeq
@@ -135,7 +172,12 @@ class DvPropertySpec extends SparkSuite {
         .select("change_type", "k", "s").as[(String, Long, String)].collect()
       assert(got.length == got.toSet.size && got.toSet == feed(sa, sb),
         s"changesBetween($a, $b): got ${got.toSeq.sorted}, want ${feed(sa, sb).toSeq.sorted}; $trail")
-      val net = VT.signedRowsBetween(spark, dir, a, b).get
+      val pre = VT.changesBetween(spark, dir, a, b, Seq("k"), preimages = true)
+        .select("change_type", "k", "s").as[(String, Long, String)].collect()
+      assert(pre.length == pre.toSet.size && pre.toSet == feedWithPreimages(sa, sb),
+        s"changesBetween($a, $b, preimages): got ${pre.toSeq.sorted}, " +
+          s"want ${feedWithPreimages(sa, sb).toSeq.sorted}; $trail")
+      val net = VT.signedRowsBetween(spark, dir, a, b)
         .groupBy("k", "s").agg(sum("__sign").as("n")).filter($"n" =!= 0L)
         .as[(Long, String, Long)].collect().map { case (k, s, n) => (k, s) -> n }.toMap
       assert(net == signed(sa, sb),
@@ -148,9 +190,21 @@ class DvPropertySpec extends SparkSuite {
   }
 
   test("random DV sequences match the model under delta manifests") {
+    underDeltaManifests(Seq(4103L, 4104L).foreach(run(_, 12)))
+  }
+
+  test("random DV-merge sequences with patch commits match the model") {
+    Seq(4201L, 4202L).foreach(run(_, 14, patches = true))
+  }
+
+  test("random DV-merge sequences with patch commits match the model under delta manifests") {
+    underDeltaManifests(Seq(4203L, 4204L).foreach(run(_, 14, patches = true)))
+  }
+
+  private def underDeltaManifests(f: => Unit): Unit = {
     spark.conf.set("spark.graft.vtable.inlineMaxFiles", "2")
     spark.conf.set("spark.graft.vtable.checkpointInterval", "2")
-    try Seq(4103L, 4104L).foreach(run(_, 12))
+    try f
     finally {
       spark.conf.unset("spark.graft.vtable.inlineMaxFiles")
       spark.conf.unset("spark.graft.vtable.checkpointInterval")

@@ -101,6 +101,22 @@ class FooterStatsSpec extends SparkSuite {
     assert(footer == scan)
   }
 
+  test("footer reads cover every row group of a multi-row-group file") {
+    val dir = tmp()
+    spark.conf.set("parquet.block.size", "4096")
+    try VT.create(spark.range(0, 20000, 1, 1).select($"id".as("k")), dir, Seq("k"))
+    finally spark.conf.unset("parquet.block.size")
+    val f = VT.readManifest(spark, dir, 1L).files.head
+    val path = new org.apache.hadoop.fs.Path(s"$dir/${f.path}")
+    val conf = spark.sessionState.newHadoopConf()
+    val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(path, conf))
+    val groups = try reader.getRowGroups.size finally reader.close()
+    assert(groups > 1, s"expected several row groups, got $groups")
+    assert(f.rows == 20000L && graft.ops.FooterStats.rowCount(path, conf) == 20000L)
+    assert(f.stats("k") == VT.ColStat("BIGINT", Some("0"), Some("19999"), 0L))
+  }
+
   test("pruning decisions are identical whichever path wrote the stats") {
     val base = spark.range(0, 1000)
       .select($"id".as("k"), concat(lit("v"), $"id").as("s"))

@@ -71,7 +71,7 @@ class ManifestGoldenSpec extends SparkSuite {
         .coalesce(1)
     VT.commitPatch(patch(Seq(1L, 2L), "p"), dir, Seq("k"), Seq.empty, $"del")
     VT.commitPatch(patch(Seq(2L, 102L), "q"), dir, Seq("k"), Seq.empty, $"del")
-    VT.compactPatches(spark, dir)
+    VT.materializeDvs(spark, dir)
     VT.commitRenameColumn(spark, dir, "v", "label")
     VT.commitDropColumn(spark, dir, "x")
     VT.dropCheckConstraint(spark, dir, "kpos")

@@ -112,6 +112,35 @@ class SessionDriftSpec extends AnyFunSuite {
     assert(found.isEmpty, found)
   }
 
+  test("one merge-on-read in VersionedTable: no key-folded patch chain, no default-conf footer opens") {
+    // code only, without comments and string literals: a refusal message
+    // may name the older build's remedy
+    val token = "\"\"\"[\\s\\S]*?\"\"\"|\"(?:\\\\.|[^\"\\\\\n])*\"|/\\*[\\s\\S]*?\\*/|//[^\n]*".r
+    val chain = """\b(patches|mergeKeys|foldPatches|chainChangelog|compactPatches|requireNoPatches|patchShape)\b""".r
+    val open = """ParquetFileReader\s*\.\s*open\s*\(""".r
+    // true when the call whose argument list starts at `from` has one argument
+    def oneArg(text: String, from: Int): Boolean = {
+      var (i, depth, commas) = (from, 1, 0)
+      while (depth > 0 && i < text.length) {
+        text(i) match {
+          case '(' => depth += 1
+          case ')' => depth -= 1
+          case ',' if depth == 1 => commas += 1
+          case _ =>
+        }
+        i += 1
+      }
+      commas == 0
+    }
+    val found = sources.flatMap { p =>
+      val text = token.replaceAllIn(Files.readString(p), "")
+      val rel = root.relativize(p).toString
+      chain.findAllIn(text).toSeq.distinct.map(t => s"$rel: $t") ++
+        open.findAllMatchIn(text).filter(m => oneArg(text, m.end)).map(_ => s"$rel: one-argument ParquetFileReader.open")
+    }
+    assert(found.isEmpty, found)
+  }
+
   test("deletion vectors vs copy-on-write is decided once per verb") {
     val found = sources.flatMap { p =>
       val lines = Files.readString(p).split("\n").toSeq

@@ -673,10 +673,11 @@ class SqlDmlSpec extends SparkSuite {
       .as[Long].head() == 4L, "clone pinned source version 1")
     GraftSql.sql(spark, "DROP TABLE graft_vtable('clone_src')").collect()
     GraftSql.sql(spark, "DROP TABLE graft_vtable('clone_t')").collect()
-    // a patch-chain source refuses with the remediation
+    // a patched source (its deletion vector pending) refuses with the
+    // remediation
     val morDir = tmp()
     VT.create(Seq((1L, 1L)).toDF("k", "x"), morDir, Seq("k"))
-    VT.commitPatch(Seq((2L, 2L)).toDF("k", "x"), morDir, Seq("k"),
+    VT.commitPatch(Seq((1L, 2L)).toDF("k", "x"), morDir, Seq("k"),
       Seq.empty, lit(false))
     val ex = intercept[IllegalArgumentException](
       VT.shallowClone(spark, morDir, tmp()))

@@ -541,7 +541,7 @@ class VersionedTableSpec extends SparkSuite {
       ValidateOps.KeyStats(rows = 10_000_000L, distinct = 1_000_000L, topCount = 20L))
     assert(verdict == ValidateOps.Broadcast,
       s"a 200-row manifest build side must broadcast, got $verdict")
-    // a pending patch chain demotes exactness
+    // a patch's pending deletion vector demotes exactness
     VT.commitPatch(Seq((1L, 1.0, false)).toDF("k", "v", "del"),
       dir, Seq("k"), Seq($"v"), $"del")
     assert(!VT.tableStats(spark, dir).exact)
@@ -559,10 +559,12 @@ class VersionedTableSpec extends SparkSuite {
     val p2 = Seq((3L, "UPD2", false), (100L, "gone", true)).toDF("k", "s", "del")
     VT.commitPatch(p1, dir, Seq("k"), Seq($"s"), $"del")
     VT.commitPatch(p2, dir, Seq("k"), Seq($"s"), $"del")
-    // base files NEVER touched by patch commits
+    // base files NEVER touched by patch commits: each recorded its matched
+    // rows as one deletion vector
     val sig3 = fileSig(dir, 3L)
     assert(sig1.forall { case (p, s) => sig3.get(p).contains(s) })
-    assert(VT.readManifest(spark, dir, 3L).patches.size == 2)
+    val m3 = VT.readManifest(spark, dir, 3L)
+    assert(m3.op == "patch" && m3.dvs.size == 2)
     // fold equals the sequential CoW-merge model
     val model = {
       val m1 = Warehouse.applyChanges(base, Warehouse.dedupByKey(p1, Seq("k"), Seq($"s")),
@@ -576,17 +578,10 @@ class VersionedTableSpec extends SparkSuite {
     assert(VT.read(spark, dir, Some(1L)).count() == 40)
     val v2 = VT.read(spark, dir, Some(2L)).as[(Long, String)].collect().toMap
     assert(v2(3L) == "UPD" && v2(100L) == "NEW" && !v2.contains(7L))
-    // base-mutating commits refuse under a pending chain
+    // row-rewriting commits refuse under the pending deletion vectors
     intercept[IllegalArgumentException](
       VT.commitMerge(p1, dir, Seq("k"), Seq($"s"), $"del"))
-    intercept[IllegalArgumentException](
-      VT.commitAppend(Seq((500L, "a")).toDF("k", "s"), dir))
     intercept[IllegalArgumentException](VT.commitCompact(spark, dir))
-    // mismatched chain keys refuse
-    intercept[IllegalArgumentException](
-      VT.commitPatch(p1.withColumnRenamed("k", "s2")
-        .withColumnRenamed("s", "k").withColumnRenamed("s2", "s"),
-        dir, Seq("s"), Seq($"k"), $"del"))
     // txn ledger works on patches too: replay of a recorded batch skips
     val v4 = VT.commitPatch(Seq((5L, "T", false)).toDF("k", "s", "del"),
       dir, Seq("k"), Seq($"s"), $"del", txn = Some("app" -> 0L))
@@ -597,9 +592,9 @@ class VersionedTableSpec extends SparkSuite {
   }
 
   test("merge-on-read equals sequential copy-on-write on random patch chains") {
-    // model: apply each patch batch one at a time to a Map; the fold must
-    // match BEFORE compaction, AFTER compaction, and after the last batch
-    // is committed again on the compacted table (a replayed batch converges)
+    // model: apply each patch batch one at a time to a Map; the table must
+    // match BEFORE materialization, AFTER it, and after the last batch is
+    // committed again on the materialized table (a replayed batch converges)
     val genBatch = Gen.listOf(Gen.zip(
       Gen.choose(0, 20), Gen.alphaStr.map(_.take(3)), Gen.oneOf(true, false)))
       .map(_.groupBy(_._1).map(_._2.head).toList) // one row per key per batch
@@ -616,11 +611,14 @@ class VersionedTableSpec extends SparkSuite {
         }
       }
       def state() = VT.read(spark, dir).as[(Int, String)].collect().toMap
-      val chain = VT.readManifest(spark, dir, VT.currentVersion(spark, dir).get).patches
-      val okChain = chain.size == batches.count(_.nonEmpty)
+      // a batch publishes a version iff it hits a live key or appends a row
+      val changing = batches.scanLeft(base) { (m, b) =>
+        b.foldLeft(m) { case (acc, (k, v, del)) => if (del) acc - k else acc.updated(k, v) }
+      }.zip(batches).count { case (m, b) => b.exists { case (k, _, del) => !del || m.contains(k) } }
+      val okChain = VT.currentVersion(spark, dir).get == 1L + changing
       val okBefore = state() == model
-      val vC = VT.compactPatches(spark, dir)
-      val okAfter = state() == model && VT.readManifest(spark, dir, vC).patches.isEmpty
+      val vC = VT.materializeDvs(spark, dir)
+      val okAfter = state() == model && VT.readManifest(spark, dir, vC).dvs.isEmpty
       patch(batches.last)
       okChain && okBefore && okAfter && state() == model
     }
@@ -640,23 +638,26 @@ class VersionedTableSpec extends SparkSuite {
     }
     val empty = Seq.empty[(Long, String, Boolean)].toDF("k", "s", "del")
     def patchEmpty() = VT.commitPatch(empty, dir, Seq("k"), Seq($"s"), $"del")
+    // a tombstone for an absent key neither matches nor appends
+    def patchAbsent() = VT.commitPatch(Seq((9L, "x", true)).toDF("k", "s", "del"),
+      dir, Seq("k"), Seq($"s"), $"del")
     val files1 = dataFiles()
-    assert(patchEmpty() == 1L)
+    assert(patchEmpty() == 1L && patchAbsent() == 1L)
     assert(VT.versions(spark, dir) == Seq(1L))
     assert(dataFiles() == files1)
-    // on a pending chain: the chain stays as it was
+    // after a patch: its deletion vector stays as it was
     assert(VT.commitPatch(Seq((1L, "A", false)).toDF("k", "s", "del"),
       dir, Seq("k"), Seq($"s"), $"del") == 2L)
     val files2 = dataFiles()
-    assert(patchEmpty() == 2L)
+    assert(patchEmpty() == 2L && patchAbsent() == 2L)
     assert(VT.versions(spark, dir) == Seq(1L, 2L))
     assert(dataFiles() == files2)
-    assert(VT.readManifest(spark, dir, 2L).patches.size == 1)
+    assert(VT.readManifest(spark, dir, 2L).dvs.size == 1)
     assert(VT.read(spark, dir).as[(Long, String)].collect().toMap ==
       Map(1L -> "A", 2L -> "b"))
   }
 
-  test("compactPatches folds through the pruned CoW core; pruned reads stay exact under a chain") {
+  test("materializeDvs folds a patch, rewriting only its touched file; pruned reads stay exact under a patch") {
     val dir = tmp()
     val base = spark.range(100).select($"id".as("k"), ($"id" * 2).cast("double").as("v"))
       .repartitionByRange(4, $"k").sortWithinPartitions($"k")
@@ -666,8 +667,8 @@ class VersionedTableSpec extends SparkSuite {
     // INTO a range that file would otherwise be pruned for
     VT.commitPatch(Seq((10L, 9999.0, false)).toDF("k", "v", "del"),
       dir, Seq("k"), Seq($"v"), $"del")
-    // pruned read on v: file of k=10 has on-disk v=20 (pruned for
-    // [9000, 10000]) but the FOLD must still surface the patched row
+    // pruned read on v: file of k=10 has on-disk v=20 (its row is dead),
+    // and the patched row lives in the patch's appended file
     val got = VT.readWhere(spark, dir, $"v" >= 9000.0 && $"v" <= 10000.0)
       .as[(Long, Double)].collect().toSeq
     assert(got == Seq((10L, 9999.0)), s"patched row lost by pruning: $got")
@@ -675,18 +676,18 @@ class VersionedTableSpec extends SparkSuite {
     val r = VT.readPruned(spark, dir, "k", lit(5L), lit(15L))
       .as[(Long, Double)].collect().toMap
     assert(r(10L) == 9999.0 && r(11L) == 22.0 && r.size == 11)
-    // compaction folds through the CoW core: only the patched key's file
-    // rewrites, the other three carry over byte-stable; chain empties
-    val vC = VT.compactPatches(spark, dir)
+    // materialization rewrites only the file holding the patched key's
+    // dead row; the other three carry over byte-stable; the DVs empty
+    val vC = VT.materializeDvs(spark, dir)
     val mC = VT.readManifest(spark, dir, vC)
-    assert(mC.patches.isEmpty && mC.op == "compact")
+    assert(mC.dvs.isEmpty && mC.op == "dv_materialize")
     val sigC = fileSig(dir, vC)
     val carried = sigC.keySet intersect sig1.keySet
     assert(carried.size == 3, s"expected 3 carried base files, got ${carried.size}")
     carried.foreach(p => assert(sigC(p) == sig1(p)))
     assert(VT.read(spark, dir).filter($"k" === 10L).as[(Long, Double)].head()._2 == 9999.0)
     // nothing-to-fold path
-    assert(VT.compactPatches(spark, dir) == vC)
+    assert(VT.materializeDvs(spark, dir) == vC)
     // base-mutating commits work again
     VT.commitAppend(Seq((500L, 1.0)).toDF("k", "v"), dir)
     assert(VT.read(spark, dir).count() == 101)
@@ -700,7 +701,7 @@ class VersionedTableSpec extends SparkSuite {
       dir, Seq("k"), Seq($"s"), $"del")
     VT.commitPatch(Seq((1L, "x", true)).toDF("k", "s", "del"),
       dir, Seq("k"), Seq($"s"), $"del")
-    // patch-only window: exact insert/update/delete classification
+    // patch window: exact insert/update/delete classification
     val feed = VT.changesBetween(spark, dir, 1L, 3L, Seq("k"))
       .as[(String, Long, String)].collect().toSet
     assert(feed == Set(("update", 2L, "b2"), ("insert", 4L, "d"), ("delete", 1L, "a")))
@@ -708,17 +709,16 @@ class VersionedTableSpec extends SparkSuite {
     val feed12 = VT.changesBetween(spark, dir, 1L, 2L, Seq("k"))
       .as[(String, Long, String)].collect().toSet
     assert(feed12 == Set(("update", 2L, "b2"), ("insert", 4L, "d")))
-    // across a compaction the chain is not a prefix — brute fallback must
-    // still produce the identical logical diff (and no phantom rows from
-    // the rewrite)
-    VT.compactPatches(spark, dir)
+    // across the materialization: the identical logical diff, and no
+    // phantom rows from the rewrite
+    VT.materializeDvs(spark, dir)
     val feedAcross = VT.changesBetween(spark, dir, 1L, 4L, Seq("k"))
       .as[(String, Long, String)].collect().toSet
     assert(feedAcross == feed, s"compaction changed the logical diff: $feedAcross")
-    // and a window that is ONLY the compaction reports no changes
+    // and a window that is ONLY the materialization reports no changes
     assert(VT.changesBetween(spark, dir, 3L, 4L, Seq("k")).count() == 0)
-    // brute fallback across patches → compaction → EVOLUTION: the v1 side
-    // reads through the wider schema, evolved column NULL as pre-image
+    // across patches → materialization → EVOLUTION: the v1 side reads
+    // through the wider schema, evolved column NULL as pre-image
     VT.commitMergeEvolve(Seq((2L, "b3", 5.5, false)).toDF("k", "s", "extra", "del"),
       dir, Seq("k"), Seq($"s"), $"del", metaCols = Seq("del"))
     val wide = VT.changesBetween(spark, dir, 1L, 5L, Seq("k"))
@@ -727,13 +727,6 @@ class VersionedTableSpec extends SparkSuite {
       ("update", 2L, "b3", Some(5.5)),
       ("insert", 4L, "d", None),
       ("delete", 1L, "a", None)), s"got $wide")
-    // mismatched chain keys refuse while a chain is live
-    val dir2 = tmp()
-    VT.create(Seq((1L, "a")).toDF("k", "s").repartition(1), dir2, Seq("k"))
-    VT.commitPatch(Seq((1L, "b", false)).toDF("k", "s", "del"),
-      dir2, Seq("k"), Seq($"s"), $"del")
-    intercept[IllegalArgumentException](
-      VT.changesBetween(spark, dir2, 1L, 2L, Seq("s")))
   }
 
   test("restore rolls back as a new commit: data, inverse CDF, ledger monotone, vacuum-safe") {
@@ -958,15 +951,49 @@ class VersionedTableSpec extends SparkSuite {
       Set((1L, 5L), (2L, 20L), (9L, 9L)))
   }
 
+  test("a manifest holding an older build's patch chain is refused, naming the version and the remedy") {
+    val dir = tmp()
+    VT.create(Seq((1L, "a")).toDF("k", "s").coalesce(1), dir, Seq("k"))
+    // written by a build that kept merge-on-read patches as a key-folded
+    // chain beside the file list: reading the files alone would lose k=2
+    val legacy =
+      """{
+        |  "version" : 2,
+        |  "op" : "patch",
+        |  "ts" : 1700000000000,
+        |  "schemaDdl" : "k BIGINT,s STRING",
+        |  "statsCols" : [ "k" ],
+        |  "numFiles" : 0,
+        |  "totalRows" : 0,
+        |  "files" : [ ],
+        |  "patches" : [ [ {
+        |    "path" : "data/c2-0000abcd/part-00000.parquet",
+        |    "rows" : 1,
+        |    "stats" : { }
+        |  } ] ],
+        |  "mergeKeys" : [ "k" ]
+        |}""".stripMargin
+    Files.write(java.nio.file.Paths.get(dir, "_vlog", "v000000000002.json"),
+      legacy.getBytes("UTF-8"))
+    def refused(f: => Any): String = intercept[IllegalStateException](f).getMessage
+    Seq(refused(VT.read(spark, dir)), refused(VT.history(spark, dir)),
+        refused(VT.commitAppend(Seq((3L, "c")).toDF("k", "s"), dir))).foreach { msg =>
+      assert(msg.contains("manifest v2") && msg.contains("compactPatches") &&
+        msg.contains("restore to a version before it"), msg)
+    }
+    // the versions before the chain still read
+    assert(VT.read(spark, dir, Some(1L)).as[(Long, String)].collect().toSeq == Seq((1L, "a")))
+  }
+
   test("a CHECK constraint added under a patch chain preserves the chain and gates patches") {
     val dir = tmp()
     VT.create(Seq((1L, 10L), (2L, 20L)).toDF("k", "v").coalesce(1), dir, Seq("k"))
     VT.commitPatch(Seq((1L, 11L, false)).toDF("k", "v", "del"),
-      dir, Seq("k"), Seq.empty, $"del")                               // v2: chain
-    // validation folds the chain; the metadata commit must carry it
+      dir, Seq("k"), Seq.empty, $"del")                               // v2: patch
+    // validation reads the live rows; the metadata commit must carry the DV
     VT.addCheckConstraint(spark, dir, "v_pos", "v > 0")               // v3
     val m = VT.readManifest(spark, dir, 3L)
-    assert(m.patches.nonEmpty, "the constraint commit must preserve the patch chain")
+    assert(m.dvs.nonEmpty, "the constraint commit must keep the patch's deletion vector")
     assert(VT.read(spark, dir).as[(Long, Long)].collect().toSet ==
       Set((1L, 11L), (2L, 20L)))
     // live patch rows enforce; tombstone payloads are exempt
@@ -978,7 +1005,7 @@ class VersionedTableSpec extends SparkSuite {
     VT.commitPatch(Seq((2L, -999L, true)).toDF("k", "v", "del"),
       dir, Seq("k"), Seq.empty, $"del")                               // v4: tombstone ok
     assert(VT.read(spark, dir).as[(Long, Long)].collect().toSet == Set((1L, 11L)))
-    // a constraint the folded chain violates refuses
+    // a constraint the patched rows violate refuses
     val ex2 = intercept[IllegalArgumentException](
       VT.addCheckConstraint(spark, dir, "big", "v > 100"))
     assert(ex2.getMessage.contains("existing rows violate"))

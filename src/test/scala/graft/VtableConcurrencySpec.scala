@@ -491,24 +491,24 @@ class VtableConcurrencySpec extends SparkSuite {
       dir, Seq("k"), Seq.empty, $"del")                                // v2: patch
     VT.commitPatch(Seq((3L, "x", true), (5L, "e", false)).toDF("k", "s", "del"),
       dir, Seq("k"), Seq.empty, $"del")                                // v3: patch
-    VT.compactPatches(spark, dir)                                      // v4: fold
+    VT.materializeDvs(spark, dir)                                      // v4: fold
     VT.commitPatch(Seq((1L, "A2", false)).toDF("k", "s", "del"),
       dir, Seq("k"), Seq.empty, $"del")                                // v5: patch
     val v3Expect = Set(1L -> "a", 2L -> "B", 4L -> "d", 5L -> "e")
     val v5Expect = Set(1L -> "A2", 2L -> "B", 4L -> "d", 5L -> "e")
     assert(VT.read(spark, dir, Some(3L)).as[(Long, String)].collect().toSet == v3Expect)
-    // keep v3..v5: the OLDEST KEPT version is a mid-chain patch state —
-    // every chain file it references must survive the reclamation of v1/v2
+    // keep v3..v5: the OLDEST KEPT version is a patched state — every
+    // file and DV sidecar it references must survive the reclamation of v1/v2
     val deleted = VT.vacuum(spark, dir, keepVersions = 3)
     assert(VT.read(spark, dir, Some(3L)).as[(Long, String)].collect().toSet == v3Expect,
       "oldest kept patch-state must read byte-correct after vacuum")
     assert(VT.read(spark, dir, Some(4L)).as[(Long, String)].collect().toSet == v3Expect)
     assert(VT.read(spark, dir).as[(Long, String)].collect().toSet == v5Expect)
     intercept[IllegalArgumentException](VT.read(spark, dir, Some(2L)))
-    // now drop below the chain: keeping only the compacted + later states
-    // reclaims the folded patch files
+    // now drop below the fold: keeping only the materialized + later
+    // states reclaims the folded files and sidecars
     val deleted2 = VT.vacuum(spark, dir, keepVersions = 2)
-    assert(deleted + deleted2 > 0, "vacuum should reclaim the folded patch files")
+    assert(deleted + deleted2 > 0, "vacuum should reclaim the folded files")
     assert(VT.read(spark, dir, Some(4L)).as[(Long, String)].collect().toSet == v3Expect)
     assert(VT.read(spark, dir).as[(Long, String)].collect().toSet == v5Expect)
   }
@@ -585,7 +585,7 @@ class VtableConcurrencySpec extends SparkSuite {
       s"rebase must carry the winner's props forward, got ${props.keySet}")
   }
 
-  test("append rebase: spans an append-only schema widening, refuses a patch chain") {
+  test("append rebase: spans an append-only schema widening and a concurrent patch") {
     val dir = tmp()
     VT.create(Seq((1L, "a")).toDF("k", "s").coalesce(1), dir, Seq("k"))
     raceOnce(VT.commitAddColumns(spark, dir, Seq("extra" -> "BIGINT"))) {
@@ -595,62 +595,52 @@ class VtableConcurrencySpec extends SparkSuite {
     assert(VT.read(spark, dir).columns.toSeq == Seq("k", "s", "extra"))
     assert(VT.read(spark, dir).where($"k" === 2L)
       .select("extra").collect().head.isNullAt(0))
-    // a patch chain appearing mid-race is NOT rebasable: the conflict
-    // surfaces for the caller's full-retry path to diagnose loudly
+    // a patch winning mid-race deletes positions of existing files only:
+    // our new files hold none of them, so the append rebases onto it
     val dir2 = tmp()
     VT.create(Seq((1L, "a")).toDF("k", "s").coalesce(1), dir2, Seq("k"))
     raceOnce(VT.commitPatch(Seq((1L, "p", false)).toDF("k", "s", "del"),
         dir2, Seq("k"), Seq.empty, $"del")) {
-      intercept[VT.ConcurrentCommitException](
-        VT.commitAppend(Seq((2L, "b")).toDF("k", "s").coalesce(1), dir2))
+      assert(VT.commitAppend(Seq((2L, "b")).toDF("k", "s").coalesce(1), dir2) == 3L)
     }
     assert(VT.read(spark, dir2).as[(Long, String)].collect().toSet ==
-      Set((1L, "p")), "the refused append must leave the winner's state intact")
+      Set((1L, "p"), (2L, "b")), "the rebased append must keep the winner's patch")
   }
 
-  test("patch rebase: a lost race stacks the batch on the new head, data written once") {
+  test("patch race: a lost race throws, and withCommitRetry re-derives positions on the new head") {
     val dir = tmp()
     VT.create(Seq((1L, 10L), (2L, 20L)).toDF("k", "x").coalesce(1), dir, Seq("k"))
-    // the winner is ANOTHER patch: ours must stack AFTER it (chain order)
-    raceOnce(VT.commitPatch(Seq((2L, 21L, false)).toDF("k", "x", "del"),
-        dir, Seq("k"), Seq.empty, $"del")) {
-      val v = VT.commitPatch(Seq((2L, 22L, false), (3L, 30L, false))
-        .toDF("k", "x", "del"), dir, Seq("k"), Seq.empty, $"del")
-      assert(v == 3L, s"patch rebase must land at the next free version, got $v")
+    val ours = Seq((2L, 22L, false), (3L, 30L, false)).toDF("k", "x", "del")
+    def patch(df: org.apache.spark.sql.DataFrame): Long =
+      VT.commitPatch(df, dir, Seq("k"), Seq.empty, $"del")
+    // the winner re-writes k=2 into its own file, so positions derived
+    // from v1 would miss that row: the loser must not publish them
+    raceOnce(patch(Seq((2L, 21L, false)).toDF("k", "x", "del"))) {
+      intercept[VT.ConcurrentCommitException](patch(ours))
     }
-    // serialized-equivalent fold: our batch wins key 2 (later in the chain)
+    assert(VT.read(spark, dir).as[(Long, Long)].collect().toSet ==
+      Set((1L, 10L), (2L, 21L)))
+    // under withCommitRetry the batch re-runs against the winner's head
+    raceOnce(patch(Seq((2L, 23L, false)).toDF("k", "x", "del"))) {
+      assert(VT.withCommitRetry()(patch(ours)) == 4L)
+    }
     assert(VT.read(spark, dir).as[(Long, Long)].collect().toSet ==
       Set((1L, 10L), (2L, 22L), (3L, 30L)))
-    // no orphaned data dirs: the loser's patch files were reused
-    val m = VT.readManifest(spark, dir, 3L)
-    val referenced = (m.files ++ m.patches.flatten)
-      .map(_.path.split('/')(1)).toSet
-    assert(dataDirsOf(dir) == referenced,
-      s"patch rebase must reuse the written files: dirs=${dataDirsOf(dir)} refs=$referenced")
-    // a winner that COMPACTED the chain: our batch becomes the whole chain
-    raceOnce({ VT.compactPatches(spark, dir); () }) {
-      val v = VT.commitPatch(Seq((1L, 11L, false)).toDF("k", "x", "del"),
-        dir, Seq("k"), Seq.empty, $"del")
-      assert(v == 5L, s"rebase over a compaction, got $v")
-    }
-    assert(VT.read(spark, dir).as[(Long, Long)].collect().toSet ==
-      Set((1L, 11L), (2L, 22L), (3L, 30L)))
-    // a constraint added mid-race re-validates LIVE rows only: a batch
-    // whose only live rows conform passes even with a violating tombstone
+    // a constraint added mid-race: the retry's in-frame guard enforces it
+    // on live rows, and a tombstone's payload stays exempt
     raceOnce(VT.addCheckConstraint(spark, dir, "x_pos", "x >= 0")) {
-      val v = VT.commitPatch(
-        Seq((2L, -99L, true), (4L, 40L, false)).toDF("k", "x", "del"),
-        dir, Seq("k"), Seq.empty, $"del")
-      assert(v == 7L)
+      assert(VT.withCommitRetry()(patch(
+        Seq((2L, -99L, true), (4L, 40L, false)).toDF("k", "x", "del"))) == 6L)
     }
     assert(VT.read(spark, dir).as[(Long, Long)].collect().toSet ==
-      Set((1L, 11L), (3L, 30L), (4L, 40L)))
-    // ...and a violating LIVE row aborts with the constraint named
+      Set((1L, 10L), (3L, 30L), (4L, 40L)))
     raceOnce(VT.addCheckConstraint(spark, dir, "x_cap", "x < 1000")) {
-      val e = intercept[IllegalArgumentException](VT.commitPatch(
-        Seq((5L, 5000L, false)).toDF("k", "x", "del"),
-        dir, Seq("k"), Seq.empty, $"del"))
-      assert(e.getMessage.contains("x_cap"), e.getMessage)
+      val e = intercept[Exception](VT.withCommitRetry()(patch(
+        Seq((5L, 5000L, false)).toDF("k", "x", "del"))))
+      def msgs(t: Throwable): Seq[String] =
+        Option(t).toSeq.flatMap(c => Option(c.getMessage).toSeq ++ msgs(c.getCause))
+      assert(msgs(e).exists(_.contains("x_cap")), msgs(e).mkString(" | "))
     }
+    assert(VT.currentVersion(spark, dir).contains(7L), "the violating patch published nothing")
   }
 }

@@ -181,11 +181,13 @@ class VtableSkippingSpec extends SparkSuite {
 
   test("a patch chain declines the metadata answer; the fold stays exact") {
     val dir = tmp(); mkTable(dir)
-    VT.commitPatch(Seq((500L, "new", false)).toDF("k", "s", "__del"),
+    // k=5 is re-written (its old row's position dies), k=500 is new: the
+    // header counts 102 rows, 101 are live
+    VT.commitPatch(Seq((5L, "upd", false), (500L, "new", false)).toDF("k", "s", "__del"),
       dir, Seq("k"), tiebreak = Seq.empty, deleteCond = col("__del"))
     val df = spark.sql(s"SELECT COUNT(*) AS n FROM graft_vtable('$dir')")
     assert(df.as[Long].head() == 101L,
-      "count under a patch chain must fold the chain, not read the manifest")
+      "count under a patch must apply its deletion vector, not read the manifest")
   }
 
   test("pruned file set equals the library-level pruning decision") {
