@@ -163,8 +163,7 @@ object ScaleBench {
     VT.create(scaled.repartition(math.min(64, math.max(4, mult))), src,
       statsCols = Seq("o_orderkey"))
     def refresh(): Long = ViewOps.refreshAggView(spark, src, view,
-      Seq("o_orderkey"), Seq("o_orderpriority"), Seq("cents"),
-      appId = "scale-mv")
+      Seq("o_orderpriority"), Seq("cents"), appId = "scale-mv")
     refresh() // bootstrap
     // fixed-size churn regardless of table size: the refresh cost being
     // measured is the INCREMENTAL one. First churn+refresh warms (plan

@@ -1199,9 +1199,13 @@ private[graft] object Queries {
       .orderBy("id_a", "id_b")
   }
 
-  /** GLOBAL exact Jaccard join via the prefix filter — no blocking column;
-    * candidates from rarest-first prefix tokens, exact verify. Same answer
-    * as the quadratic form (oracle computes all pairs), sub-quadratic plan.
+  /** GLOBAL exact Jaccard join — no blocking column; the engine picks the
+    * tier. The oracle is an independent DuckDB prefix-filter join:
+    * candidates share one of their rarest-first prefix tokens, and each
+    * candidate's overlap is counted exactly over per-doc token-id bit
+    * words. Equal to the quadratic all-pairs SQL (checked at sf0.001 and
+    * sf0.01), it runs in seconds at sf0.1, where the quadratic form times
+    * out.
     */
   /** STATED CANDIDATE BUDGET for the global-Jaccard family at scale:
     * ~3×10⁹ evaluated candidate pairs — the measured sf1 (50k-doc)
@@ -1227,12 +1231,36 @@ private[graft] object Queries {
       | SELECT doc_id,
       |  list_distinct(list_transform(range(1, greatest(len(text)-2, 1)+1),
       |    i -> substring(text, CAST(i AS INT), 3))) AS s
-      | FROM documents)
+      | FROM documents),
+      |tok AS (SELECT doc_id, len(s) AS sz, unnest(s) AS t FROM sh),
+      |tf AS (SELECT t, COUNT(*) AS f FROM tok GROUP BY t),
+      |pre AS (
+      | SELECT doc_id, sz, t FROM (
+      |  SELECT tok.doc_id, tok.sz, tok.t,
+      |   row_number() OVER (PARTITION BY tok.doc_id ORDER BY tf.f, tok.t) AS pos
+      |  FROM tok JOIN tf USING (t))
+      | WHERE pos <= sz - CEIL(0.8 * sz) + 1),
+      |cand AS (
+      | SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b, a.sz AS sz_a, b.sz AS sz_b
+      | FROM pre a JOIN pre b ON a.t = b.t AND a.doc_id < b.doc_id
+      | WHERE b.sz >= CEIL(0.8 * a.sz) AND a.sz >= CEIL(0.8 * b.sz)),
+      |tid AS (SELECT t, row_number() OVER (ORDER BY t) - 1 AS i FROM tf),
+      |wd AS (
+      | SELECT tok.doc_id, tid.i // 62 AS w,
+      |  bit_or(CAST(1 AS BIGINT) << CAST(tid.i % 62 AS BIGINT)) AS b
+      | FROM tok JOIN tid USING (t) GROUP BY tok.doc_id, tid.i // 62),
+      |bits AS (
+      | SELECT d.doc_id, list(COALESCE(wd.b, CAST(0 AS BIGINT)) ORDER BY g.w) AS ws
+      | FROM (SELECT DISTINCT doc_id FROM tok) d
+      | CROSS JOIN (SELECT unnest(range((SELECT MAX(i) FROM tid) // 62 + 1)) AS w) g
+      | LEFT JOIN wd ON wd.doc_id = d.doc_id AND wd.w = g.w
+      | GROUP BY d.doc_id)
       |SELECT id_a, id_b, jac FROM (
-      | SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-      |  CAST(len(list_intersect(a.s, b.s)) AS DOUBLE) /
-      |  CAST(len(list_distinct(list_concat(a.s, b.s))) AS DOUBLE) AS jac
-      | FROM sh a JOIN sh b ON a.doc_id < b.doc_id)
+      | SELECT id_a, id_b,
+      |  CAST(inter AS DOUBLE) / CAST(sz_a + sz_b - inter AS DOUBLE) AS jac FROM (
+      |  SELECT c.id_a, c.id_b, c.sz_a, c.sz_b,
+      |   list_sum(list_transform(list_zip(a.ws, b.ws), x -> bit_count(x[1] & x[2]))) AS inter
+      |  FROM cand c JOIN bits a ON a.doc_id = c.id_a JOIN bits b ON b.doc_id = c.id_b))
       |WHERE jac >= 0.8 ORDER BY id_a, id_b""".stripMargin
 
   /** Connected components over an adversarial max-diameter graph: chain
@@ -1300,8 +1328,10 @@ private[graft] object Queries {
   /** End-to-end near-dup REMOVAL: exact Jaccard pairs (≥0.8 on 3-shingles)
     * → connected components → keep the smallest doc_id per cluster plus all
     * untouched docs. The oracle recomputes the same pipeline in DuckDB,
-    * with the transitive closure as a recursive CTE — a full differential
-    * of pair generation AND cluster resolution AND the final anti-join.
+    * with the pairs from the [[dedupJaccardGlobal]] oracle's prefix-filter
+    * join (materialized once, not per recursion step) and the transitive
+    * closure as a recursive CTE — a full differential of pair generation
+    * AND cluster resolution AND the final anti-join.
     */
   def dedupNear(s: SparkSession, d: String): DataFrame = {
     val docs = Tables.documents(s, d)
@@ -1319,13 +1349,37 @@ private[graft] object Queries {
       |  list_distinct(list_transform(range(1, greatest(len(text)-2, 1)+1),
       |    i -> substring(text, CAST(i AS INT), 3))) AS s
       | FROM documents),
-      |p AS (
-      | SELECT id_a, id_b FROM (
-      |  SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-      |   CAST(len(list_intersect(a.s, b.s)) AS DOUBLE) /
-      |   CAST(len(list_distinct(list_concat(a.s, b.s))) AS DOUBLE) AS jac
-      |  FROM sh a JOIN sh b ON a.doc_id < b.doc_id)
-      | WHERE jac >= 0.8),
+      |tok AS (SELECT doc_id, len(s) AS sz, unnest(s) AS t FROM sh),
+      |tf AS (SELECT t, COUNT(*) AS f FROM tok GROUP BY t),
+      |pre AS (
+      | SELECT doc_id, sz, t FROM (
+      |  SELECT tok.doc_id, tok.sz, tok.t,
+      |   row_number() OVER (PARTITION BY tok.doc_id ORDER BY tf.f, tok.t) AS pos
+      |  FROM tok JOIN tf USING (t))
+      | WHERE pos <= sz - CEIL(0.8 * sz) + 1),
+      |cand AS (
+      | SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b, a.sz AS sz_a, b.sz AS sz_b
+      | FROM pre a JOIN pre b ON a.t = b.t AND a.doc_id < b.doc_id
+      | WHERE b.sz >= CEIL(0.8 * a.sz) AND a.sz >= CEIL(0.8 * b.sz)),
+      |tid AS (SELECT t, row_number() OVER (ORDER BY t) - 1 AS i FROM tf),
+      |wd AS (
+      | SELECT tok.doc_id, tid.i // 62 AS w,
+      |  bit_or(CAST(1 AS BIGINT) << CAST(tid.i % 62 AS BIGINT)) AS b
+      | FROM tok JOIN tid USING (t) GROUP BY tok.doc_id, tid.i // 62),
+      |bits AS (
+      | SELECT d.doc_id, list(COALESCE(wd.b, CAST(0 AS BIGINT)) ORDER BY g.w) AS ws
+      | FROM (SELECT DISTINCT doc_id FROM tok) d
+      | CROSS JOIN (SELECT unnest(range((SELECT MAX(i) FROM tid) // 62 + 1)) AS w) g
+      | LEFT JOIN wd ON wd.doc_id = d.doc_id AND wd.w = g.w
+      | GROUP BY d.doc_id),
+      |p AS MATERIALIZED (
+      | SELECT id_a, id_b FROM (SELECT id_a, id_b, jac FROM (
+      | SELECT id_a, id_b,
+      |  CAST(inter AS DOUBLE) / CAST(sz_a + sz_b - inter AS DOUBLE) AS jac FROM (
+      |  SELECT c.id_a, c.id_b, c.sz_a, c.sz_b,
+      |   list_sum(list_transform(list_zip(a.ws, b.ws), x -> bit_count(x[1] & x[2]))) AS inter
+      |  FROM cand c JOIN bits a ON a.doc_id = c.id_a JOIN bits b ON b.doc_id = c.id_b))
+      |WHERE jac >= 0.8)),
       |e AS (SELECT id_a AS a, id_b AS b FROM p
       |      UNION ALL SELECT id_b, id_a FROM p),
       |reach(node, label) AS (
@@ -2582,7 +2636,7 @@ private[graft] object Queries {
       .sortWithinPartitions("o_orderkey")
     VT.create(snap, src, statsCols = Seq("o_orderkey"))
     def refresh(): Long = graft.ops.ViewOps.refreshAggView(s, src, view,
-      srcKeys = Seq("o_orderkey"), groupCols = Seq("o_orderstatus"),
+      groupCols = Seq("o_orderstatus"),
       measures = Seq("cents"), appId = "q_ivm")
     refresh() // bootstrap from v1
     val p1 = ord(s, d).filter(col("o_orderkey") % 2 === 0)
@@ -2632,7 +2686,7 @@ private[graft] object Queries {
     VT.create(slice(0).repartitionByRange(4, col("o_orderkey"))
       .sortWithinPartitions("o_orderkey"), src, statsCols = Seq("o_orderkey"))
     def refresh(): Long = graft.ops.ViewOps.refreshAggView(s, src, view,
-      srcKeys = Seq("o_orderkey"), groupCols = Seq("o_orderpriority"),
+      groupCols = Seq("o_orderpriority"),
       measures = Seq("cents"), appId = "q_mv")
     refresh() // bootstrap from v1
     VT.commitAppend(slice(1), src) // v2

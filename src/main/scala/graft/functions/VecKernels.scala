@@ -371,6 +371,40 @@ object VecKernels {
     inter.toDouble / union.toDouble
   }
 
+  /** Row i's pairs in an all-pairs exact Jaccard join over packed
+    * bitsets sorted by set size: `bits(k)` has popcount `sz(k)`, ascending
+    * in k. It checks each j > i while sz(i) ≥ ⌈t·sz(j)⌉, the size band
+    * J ≥ t needs, which the sort turns into a loop bound (its ceiling errs
+    * loose by 1e-6, as the exact check follows). A pair costs one
+    * popcount(a AND b) per word, since |a ∪ b| = sz(i) + sz(j) − inter,
+    * and jac is the same inter/union double division as [[bitsetJaccard]].
+    * Rows of equal `rank` never pair; `emit` gets (lower-rank row,
+    * higher-rank row, jac) for every jac ≥ t.
+    */
+  def bitsetPairsOf(bits: Array[Array[Long]], sz: Array[Int], rank: Array[Int],
+                    threshold: Double, i: Int)(emit: (Int, Int, Double) => Unit): Unit = {
+    val n = sz.length
+    val a = bits(i)
+    val si = sz(i)
+    var j = i + 1
+    while (j < n && si >= math.ceil(sz(j) * threshold - 1e-6)) {
+      if (rank(i) != rank(j)) {
+        val b = bits(j)
+        var inter = 0
+        var w = 0
+        while (w < a.length) {
+          inter += java.lang.Long.bitCount(a(w) & b(w))
+          w += 1
+        }
+        val jac = inter.toDouble / (si + sz(j) - inter).toDouble
+        if (jac >= threshold) {
+          if (rank(i) < rank(j)) emit(i, j, jac) else emit(j, i, jac)
+        }
+      }
+      j += 1
+    }
+  }
+
   /** Jaccard over two SORTED-DISTINCT string arrays (binary order, as
     * produced by `array_sort`; no null elements) with a threshold
     * early-exit: returns the exact Jaccard when it is ≥ `thresh`, else

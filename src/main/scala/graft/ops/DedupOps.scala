@@ -288,9 +288,9 @@ object DedupOps {
     */
   private def ceilSafe(c: Column): Column = ceil(c - lit(1e-6))
 
-  /** Per-doc token-id bitsets (`keyCols`, `sz`, `bits`) over the broadcast
-    * binary-sorted dictionary `dict` (≤ [[MaxBitsetUniverse]] tokens): one
-    * narrow native projection
+  /** Per-doc token-id bitsets (`keyCols`, `sz`, `bits`) for the blocked
+    * bitset tier, over the broadcast binary-sorted dictionary `dict`
+    * (≤ [[MaxBitsetUniverse]] tokens): one narrow native projection
     * ([[graft.functions.VectorExpressions.ShinglesToBitset]]) that binary-
     * searches each shingle, so the relation keeps `docs`' partitioning —
     * no explode, join or shuffle. A doc whose shingle array is null or
@@ -305,12 +305,12 @@ object DedupOps {
   /** GLOBAL exact Jaccard similarity join — every pair with J ≥ threshold
     * across the whole corpus, NO blocking column. Tiers ([[JaccardPlan]]):
     *  - bitset: ≤ `bruteMaxDocs` docs whose token universe fits
-    *    `maxBitsetUniverse` brute-force all pairs as a broadcast nested
-    *    loop over per-doc bitsets, popcount verify in the join condition.
-    *    One capped distinct pass over the pinned docs is both the universe
-    *    and the dictionary; a narrow native projection turns each doc's
-    *    shingles into its bitset (no shuffle), and the bitset pin has
-    *    min(cores, docs) partitions, so the nested loop runs on every core;
+    *    `maxBitsetUniverse` brute-force all pairs over per-doc bitsets
+    *    ([[BitsetTier]]): after the doc count, one probe pass (no shuffle,
+    *    no pin) returns each partition's token dictionary and its docs'
+    *    token ids, which the driver merges into the universe and the
+    *    bitsets; one job of min(cores, docs) tasks then checks every pair
+    *    in the size band with popcount(a AND b);
     *  - prefix: the AllPairs/PPJoin prefix filter. Under any canonical
     *    token order, sets with J ≥ t share a token in their first
     *    |X| − ⌈t·|X|⌉ + 1 tokens (given the size filter t·|A| ≤ |B| ≤
@@ -320,10 +320,10 @@ object DedupOps {
     *    ~73% of pairs on a 377-gram corpus, far more on Zipfian text;
     *  - escalated: sampled prefix-join total over `candidatePairBudget`.
     *
-    * Pins the result holds until Spark's ContextCleaner drops it with the
-    * plan: bitset — one localCheckpoint of (id, sz, bits); prefix — none;
-    * escalated — the DISK_ONLY raw-text pin with one band chunk, else one
-    * DISK_ONLY pin of verified pairs per chunk.
+    * What the result holds until Spark's ContextCleaner drops it with the
+    * plan: bitset — one broadcast of the size-sorted bitsets and no pin;
+    * prefix — nothing; escalated — the DISK_ONLY raw-text pin with one
+    * band chunk, else one DISK_ONLY pin of verified pairs per chunk.
     */
   def jaccardPairsGlobal(df: DataFrame, idCol: String, textCol: String,
                          n: Int = 3, threshold: Double = 0.6,
@@ -336,10 +336,10 @@ object DedupOps {
   /** Exact Jaccard pairs WITHIN a blocking column — corpora with a natural
     * partition key (source, shard, cluster id). Null keys never pair.
     * Tiers ([[JaccardPlan]]): the block equi-join verified by dense-id
-    * bitsets when the token universe fits `maxBitsetUniverse` (built as in
-    * [[jaccardPairsGlobal]]: one capped dictionary pass, over a pin of the
-    * docs when a budget counts them ≤ 10k, and a narrow native projection
-    * to bitsets; the pin is not spread), by the sorted merge-scan
+    * bitsets when the token universe fits `maxBitsetUniverse` (one capped
+    * distinct dictionary pass, over a pin of the docs when a budget counts
+    * them ≤ 10k, and a narrow native projection to bitsets; the pin is not
+    * spread), by the sorted merge-scan
     * kernel otherwise; within-block MinHash-LSH when the exact pair total
     * Σ C(n_blk, 2) exceeds `candidatePairBudget`.
     *
@@ -402,8 +402,12 @@ object DedupOps {
     * [[JaccardPlan.choose]] reads, then build the chosen tier over all docs
     * (`blockCol` None) or within blocks (an equi-join on `blk`).
     *
-    * It pins only what the returned plan reads. Construction-only state —
-    * the dictionary broadcast, and the bounded pin taken on ≤
+    * On bounded global input the universe comes from the bitset tier's
+    * probe pass ([[BitsetTier.probe]]), whose answer the tier then reuses;
+    * no pin is taken. It pins only what the returned plan reads, and the
+    * result of the global bitset tier holds one broadcast, no pin.
+    * Construction-only state of the blocked route — the dictionary
+    * broadcast, and the bounded pin taken when a budget counts ≤
     * `bruteMaxDocs` docs so the universe probe and the bitset attachment
     * share one scan + shingle pass — is released before return; a tier
     * that falls through re-reads the unpinned input.
@@ -419,8 +423,8 @@ object DedupOps {
     val keys = keyNames.map(col)
     def project(text: String) = df.select(col(idCol).as("id") +:
       blockCol.toSeq.map(c => col(c).as("blk")) :+ col(textCol).as(text): _*)
-    val docs = ScanSpread.spread(project("__t"), col("id"))
-      .select(keys :+ sortedShingles(col("__t"), n).as("sh"): _*)
+    val spread = ScanSpread.spread(project("__t"), col("id"))
+    val docs = spread.select(keys :+ sortedShingles(col("__t"), n).as("sh"): _*)
     // null-keyed rows never satisfy `a.blk === b.blk`
     val joinable = blk.fold(docs)(b => docs.filter(col(b).isNotNull))
     val (budget, budgetSource) = resolveCandidateBudget(spark, candidatePairBudget)
@@ -439,16 +443,22 @@ object DedupOps {
       if (blk.isEmpty) Some(df.select(col(idCol)).queryExecution.toRdd.count())
       else budget.map(_ => blockHist._2)
     lazy val bounded = nDocs.exists(_ <= bruteMaxDocs)
+    val cap = math.min(math.max(maxBitsetUniverse, 0L), Int.MaxValue - 1L).toInt
+    // bounded global input: ONE probe pass is the universe the decision
+    // reads, the dictionary, and every doc's token ids (BitsetTier). The
+    // probe needs no shingle order, so it skips the sort
+    lazy val probe = BitsetTier.probe(
+      spread.select(col("id"), shingles(col("__t"), n).as("sh")), cap)
+    // blocked input: the docs, pinned when counted bounded, and ONE
+    // distinct pass capped at cap + 1 tokens, both the universe (its
+    // length; cap + 1 means "over the cap") and the dictionary
     lazy val exactIn =
       if (bounded) construction(joinable.localCheckpoint()) else joinable
-    // ONE distinct pass, capped at cap + 1 tokens, is both the universe the
-    // decision reads (its length; cap + 1 means "over the cap") and the
-    // dictionary
     lazy val capped = exactIn.select(explode(col("sh"))).distinct()
-      .limit((math.min(math.max(maxBitsetUniverse, 0L), Int.MaxValue - 1L) + 1).toInt)
-      .as[String].collect()
+      .limit(cap + 1).as[String].collect()
     def universe: Long =
-      if (bounded) capped.length
+      if (blk.isEmpty && bounded) probe.universe
+      else if (bounded) capped.length
       else {
         // unbounded input: a 1000-doc sample's universe is a lower bound, so
         // when even it overflows the cap the full distinct pass is skipped
@@ -469,19 +479,14 @@ object DedupOps {
       (hist.iterator.map { case (c, m) => m * (c * (c - 1) / 2.0) }.sum *
         invP * invP).toLong
     }
-    // both exact tiers reject by size band first: J ≥ t needs
-    // b.sz ≥ ⌈a.sz·t⌉ and symmetrically, precomputed per ROW as `lo`. The
-    // jac filter is pushed INTO the join condition, so a failing pair dies
-    // before a join row materializes (pinned in DedupSpec)
-    def pairsOf(sides: DataFrame, jac: Column): DataFrame = {
+    // both blocked exact tiers reject by size band first: J ≥ t needs
+    // b.sz ≥ ⌈a.sz·t⌉ and symmetrically, precomputed per ROW as `lo`
+    def blockPairs(sides: DataFrame, jac: Column): DataFrame = {
       val banded = sides.withColumn("lo", ceilSafe(col("sz") * threshold).cast("long"))
-      val cond = col("a.id") < col("b.id") &&
-        col("b.sz") >= col("a.lo") && col("a.sz") >= col("b.lo")
-      (blk match {
-        case None => broadcast(banded.as("a")).join(banded.as("b"), cond)
-        case Some(b) => banded.as("a").join(banded.as("b"),
-          col(s"a.$b") === col(s"b.$b") && cond)
-      }).select(col("a.id").as("id_a"), col("b.id").as("id_b"), jac.as("jac"))
+      banded.as("a").join(banded.as("b"), col("a.blk") === col("b.blk") &&
+          col("a.id") < col("b.id") &&
+          col("b.sz") >= col("a.lo") && col("a.sz") >= col("b.lo"))
+        .select(col("a.id").as("id_a"), col("b.id").as("id_b"), jac.as("jac"))
         .filter(col("jac") >= threshold)
     }
 
@@ -503,27 +508,21 @@ object DedupOps {
         case _ => None
       }
       tier match {
+        case JaccardPlan.Bitset if blk.isEmpty =>
+          // one pair task per core, or per doc when there are fewer docs
+          val width = math.max(1L, math.min(
+            spark.sparkContext.defaultParallelism.toLong, nDocs.get)).toInt
+          BitsetTier.pairs(spark, probe, docs.schema("id"), threshold, width)
         case JaccardPlan.Bitset =>
           val dict = spark.sparkContext.broadcast(
             capped.map(UTF8String.fromString).sortWith(_.binaryCompare(_) < 0))
           scratch += (() => dict.destroy())
-          // materialized, so both join sides read one attach pass. The pin
-          // keeps exactIn's partitioning, and the global nested-loop join
-          // runs one task per partition of it: a global pin narrower than
-          // min(cores, docs) is spread first so every core verifies pairs.
-          // The blocked equi-join shuffles on `blk` itself
-          val bits = attachBitsets(exactIn, keyNames, dict)
-          val width = math.min(spark.sparkContext.defaultParallelism.toLong,
-            nDocs.getOrElse(0L)).toInt
-          val wide = exactIn.queryExecution.logical match {
-            case r: LogicalRDD if blk.isEmpty && r.rdd.getNumPartitions < width =>
-              bits.repartition(width, col("id"))
-            case _ => bits
-          }
-          pairsOf(wide.localCheckpoint(),
+          // materialized, so both join sides read one attach pass; the
+          // equi-join shuffles on `blk`
+          blockPairs(attachBitsets(exactIn, keyNames, dict).localCheckpoint(),
             graft.functions.VectorExpressions.bitsetJaccard(col("a.bits"), col("b.bits")))
         case JaccardPlan.MergeScan if blk.nonEmpty =>
-          pairsOf(joinable.withColumn("sz", size(col("sh"))),
+          blockPairs(joinable.withColumn("sz", size(col("sh"))),
             graft.functions.VectorExpressions
               .jaccardSortedGE(col("a.sh"), col("b.sh"), threshold))
         case JaccardPlan.MergeScan =>
@@ -743,7 +742,7 @@ object DedupOps {
         if (hotRows.isEmpty) return naive
         val gs = hotRows.map(r =>
           math.ceil(r.getLong(keyNames.length).toDouble / s).toInt)
-        println(s"[graft] bandedCandidatePairs: salting ${hotRows.length} " +
+        System.err.println(s"[graft] bandedCandidatePairs: salting ${hotRows.length} " +
           s"hot bucket(s) over $s rows (max sub-groups ${gs.max}) — " +
           "triangle-cover cells replace single-task enumeration")
         val keySchema = org.apache.spark.sql.types.StructType(

@@ -335,13 +335,11 @@ object ViewOps {
     *
     * `measures` must be integral-typed (LONG sums): exact, associative,
     * and replay-stable — float sums would drift between the incremental
-    * and from-scratch paths. Cast money to cents upstream. `srcKeys` names
-    * the source's key columns; the signed feed needs no row identity, so
-    * the refresh itself does not read them.
+    * and from-scratch paths. Cast money to cents upstream. The signed feed
+    * needs no row identity, so the source's keys are not an argument.
     */
   def refreshAggView(spark: SparkSession, srcDir: String, viewDir: String,
-                     srcKeys: Seq[String], groupCols: Seq[String],
-                     measures: Seq[String],
+                     groupCols: Seq[String], measures: Seq[String],
                      appId: String = "graft-ivm"): Long = {
     val v = refreshAggViewImpl(spark, srcDir, viewDir, groupCols, measures, appId)
     // a refreshed view is an automatic-rewrite candidate from here on —
@@ -654,7 +652,7 @@ object ViewOps {
       : org.apache.spark.sql.streaming.StreamingQuery = {
     val VT = VersionedTable
     if (VT.currentVersion(spark, viewDir).isEmpty)
-      refreshAggView(spark, srcDir, viewDir, srcKeys, groupCols, measures,
+      refreshAggView(spark, srcDir, viewDir, groupCols, measures,
         appId = appId) // bootstrap pins the ledger at the source version
     val startV = VT.readManifest(spark, viewDir,
       VT.currentVersion(spark, viewDir).get).txns(appId)

@@ -52,35 +52,35 @@ class ViewOpsSpec extends SparkSuite {
 
   test("folded view equals re-aggregation through updates, inserts, deletes") {
     val src = tmp(); val view = tmp(); mkSource(src)
-    ViewOps.refreshAggView(spark, src, view, Seq("k"), Seq("g"), Seq("v"))
+    ViewOps.refreshAggView(spark, src, view, Seq("g"), Seq("v"))
     assert(viewNow(view) == reAgg(src))
     // batch 1: update inside a group, insert a new key, delete one
     VT.commitMerge(Seq((2L, "a", 25L, false), (6L, "c", 60L, false),
         (3L, "b", 0L, true)).toDF("k", "g", "v", "del"),
       src, Seq("k"), Seq.empty, $"del")
-    ViewOps.refreshAggView(spark, src, view, Seq("k"), Seq("g"), Seq("v"))
+    ViewOps.refreshAggView(spark, src, view, Seq("g"), Seq("v"))
     assert(viewNow(view) == reAgg(src))
     // batch 2: consume group b entirely; touch c
     VT.commitMerge(Seq((4L, "b", 0L, true), (5L, "c", 55L, false))
         .toDF("k", "g", "v", "del"),
       src, Seq("k"), Seq.empty, $"del")
-    ViewOps.refreshAggView(spark, src, view, Seq("k"), Seq("g"), Seq("v"))
+    ViewOps.refreshAggView(spark, src, view, Seq("g"), Seq("v"))
     assert(viewNow(view) == reAgg(src))
     assert(!viewNow(view).exists(_._1 == "b"), "consumed group must leave the view")
   }
 
   test("refresh is exactly-once: replay and no-change calls do not commit") {
     val src = tmp(); val view = tmp(); mkSource(src)
-    val v1 = ViewOps.refreshAggView(spark, src, view, Seq("k"), Seq("g"), Seq("v"))
+    val v1 = ViewOps.refreshAggView(spark, src, view, Seq("g"), Seq("v"))
     // source unchanged → no new view version
-    assert(ViewOps.refreshAggView(spark, src, view, Seq("k"), Seq("g"), Seq("v")) == v1)
+    assert(ViewOps.refreshAggView(spark, src, view, Seq("g"), Seq("v")) == v1)
     VT.commitMerge(Seq((1L, "a", 11L, false)).toDF("k", "g", "v", "del"),
       src, Seq("k"), Seq.empty, $"del")
-    val v2 = ViewOps.refreshAggView(spark, src, view, Seq("k"), Seq("g"), Seq("v"))
+    val v2 = ViewOps.refreshAggView(spark, src, view, Seq("g"), Seq("v"))
     assert(v2 == v1 + 1)
     val after = viewNow(view)
     // replay (same source version) → same view version, same rows
-    assert(ViewOps.refreshAggView(spark, src, view, Seq("k"), Seq("g"), Seq("v")) == v2)
+    assert(ViewOps.refreshAggView(spark, src, view, Seq("g"), Seq("v")) == v2)
     assert(viewNow(view) == after && after == reAgg(src))
   }
 
@@ -91,7 +91,7 @@ class ViewOpsSpec extends SparkSuite {
       .select($"id".as("k"), concat(lit("g"), ($"id" % 4)).as("g"), lit(1L).as("v"))
       .repartitionByRange(2, $"k")
     VT.create(base, src, statsCols = Seq("k"))
-    ViewOps.refreshAggView(spark, src, view, Seq("k"), Seq("g"), Seq("v"))
+    ViewOps.refreshAggView(spark, src, view, Seq("g"), Seq("v"))
     // re-cluster the view into one file per group so pruning is visible
     VT.commitCompact(spark, view, targetBytes = 1L, smallBytes = Long.MaxValue,
       clusterBy = Seq("g"))
@@ -100,7 +100,7 @@ class ViewOpsSpec extends SparkSuite {
     // touch ONLY group g1 in the source
     VT.commitMerge(Seq((401L, "g1", 5L, false)).toDF("k", "g", "v", "del"),
       src, Seq("k"), Seq.empty, $"del")
-    ViewOps.refreshAggView(spark, src, view, Seq("k"), Seq("g"), Seq("v"))
+    ViewOps.refreshAggView(spark, src, view, Seq("g"), Seq("v"))
     val mAfter = VT.readManifest(spark, view,
       VT.currentVersion(spark, view).get)
     val carried = mAfter.files.map(_.path).toSet
@@ -114,7 +114,7 @@ class ViewOpsSpec extends SparkSuite {
     val dir = tmp(); mkSource(dir)
     val view = tmp()
     def refresh(v: String): Unit = ViewOps.refreshAggView(spark, dir, v,
-      srcKeys = Seq("k"), groupCols = Seq("g"), measures = Seq("v"),
+      groupCols = Seq("g"), measures = Seq("v"),
       appId = "localfold")
     refresh(view) // bootstrap
     VT.commitMerge(Seq((2L, "a", 25L, false), (6L, "c", 60L, false),
@@ -150,7 +150,7 @@ class ViewOpsSpec extends SparkSuite {
     val base = Seq((1L, "a", Some(10L)), (2L, "b", None), (3L, "b", None))
       .toDF("k", "g", "v")
     VT.create(base, src, statsCols = Seq("k"))
-    ViewOps.refreshAggView(spark, src, view, Seq("k"), Seq("g"), Seq("v"))
+    ViewOps.refreshAggView(spark, src, view, Seq("g"), Seq("v"))
     val got = ViewOps.present(VT.read(spark, view), Seq("v"))
       .select($"g", $"n", $"sum_v").as[(String, Long, Option[Long])]
       .collect().toSet
@@ -158,7 +158,7 @@ class ViewOpsSpec extends SparkSuite {
     // a non-null value arriving in b flips the sum non-null incrementally
     VT.commitMerge(Seq((4L, "b", Some(7L), false)).toDF("k", "g", "v", "del"),
       src, Seq("k"), Seq.empty, $"del")
-    ViewOps.refreshAggView(spark, src, view, Seq("k"), Seq("g"), Seq("v"))
+    ViewOps.refreshAggView(spark, src, view, Seq("g"), Seq("v"))
     val got2 = ViewOps.present(VT.read(spark, view), Seq("v"))
       .select($"g", $"n", $"sum_v").as[(String, Long, Option[Long])]
       .collect().toSet
@@ -171,12 +171,12 @@ class ViewOpsSpec extends SparkSuite {
     val base = Seq((1L, "a", 10L, "x"), (2L, "b", 20L, "y"))
       .toDF("k", "g", "v", "note")
     VT.create(base, src, statsCols = Seq("k"))
-    ViewOps.refreshAggView(spark, src, view, Seq("k"), Seq("g"), Seq("v"))
+    ViewOps.refreshAggView(spark, src, view, Seq("g"), Seq("v"))
     val mBefore = VT.readManifest(spark, view, VT.currentVersion(spark, view).get)
     // an update touching ONLY the unmaintained column
     VT.commitMerge(Seq((1L, "a", 10L, "x2", false)).toDF("k", "g", "v", "note", "del"),
       src, Seq("k"), Seq.empty, $"del")
-    ViewOps.refreshAggView(spark, src, view, Seq("k"), Seq("g"), Seq("v"))
+    ViewOps.refreshAggView(spark, src, view, Seq("g"), Seq("v"))
     val mAfter = VT.readManifest(spark, view, VT.currentVersion(spark, view).get)
     assert(mAfter.files.map(_.path) == mBefore.files.map(_.path),
       "a zero-net delta must carry every view file by reference")
@@ -194,7 +194,7 @@ class ViewOpsSpec extends SparkSuite {
     val feed = s"$root/feed"; val src = s"$root/tbl"
     val view = s"$root/view"; val ckpt = s"$root/ckpt"
     mkSource(src)
-    ViewOps.refreshAggView(spark, src, view, Seq("k"), Seq("g"), Seq("v"))
+    ViewOps.refreshAggView(spark, src, view, Seq("g"), Seq("v"))
     val ddl = "k BIGINT, g STRING, v BIGINT, del BOOLEAN"
     def drain(): Unit = {
       val q = graft.streaming.StreamOps.streamingCdcApplyVersioned(spark, feed,
@@ -204,13 +204,13 @@ class ViewOpsSpec extends SparkSuite {
     Seq((2L, "a", 25L, false), (6L, "c", 60L, false)).toDF("k", "g", "v", "del")
       .repartition(1).write.mode("append").parquet(feed)
     drain()
-    ViewOps.refreshAggView(spark, src, view, Seq("k"), Seq("g"), Seq("v"))
+    ViewOps.refreshAggView(spark, src, view, Seq("g"), Seq("v"))
     assert(viewNow(view) == reAgg(src))
     // second wave: a delete consuming part of a group + resume from ckpt
     Seq((3L, "b", 0L, true), (7L, "d", 70L, false)).toDF("k", "g", "v", "del")
       .repartition(1).write.mode("append").parquet(feed)
     drain()
-    ViewOps.refreshAggView(spark, src, view, Seq("k"), Seq("g"), Seq("v"))
+    ViewOps.refreshAggView(spark, src, view, Seq("g"), Seq("v"))
     assert(viewNow(view) == reAgg(src))
     assert(viewNow(view).exists(_._1 == "d"), "streamed insert must reach the view")
   }
@@ -227,7 +227,7 @@ class ViewOpsSpec extends SparkSuite {
       Iterator.iterate(t)(_.getCause).takeWhile(_ != null)
         .map(e => Option(e.getMessage).getOrElse("")).mkString(" | ")
     val ex = intercept[Throwable] {
-      ViewOps.refreshAggView(spark, src, view, Seq("k"), Seq("g"), Seq("v"))
+      ViewOps.refreshAggView(spark, src, view, Seq("g"), Seq("v"))
     }
     assert(messageChain(ex).contains("NULL value in group column"))
     assert(VT.currentVersion(spark, view).isEmpty,
@@ -236,13 +236,13 @@ class ViewOpsSpec extends SparkSuite {
     val src2 = tmp(); val view2 = tmp()
     VT.create(Seq((1L, Some("a"), 10L)).toDF("k", "g", "v"),
       src2, statsCols = Seq("k"))
-    ViewOps.refreshAggView(spark, src2, view2, Seq("k"), Seq("g"), Seq("v"))
+    ViewOps.refreshAggView(spark, src2, view2, Seq("g"), Seq("v"))
     VT.commitMerge(Seq((2L, None: Option[String], 30L, false))
         .toDF("k", "g", "v", "del"),
       src2, Seq("k"), Seq.empty, $"del")
     val v2Before = VT.currentVersion(spark, view2)
     val ex2 = intercept[Throwable] {
-      ViewOps.refreshAggView(spark, src2, view2, Seq("k"), Seq("g"), Seq("v"))
+      ViewOps.refreshAggView(spark, src2, view2, Seq("g"), Seq("v"))
     }
     assert(messageChain(ex2).contains("NULL value in group column"))
     assert(VT.currentVersion(spark, view2) == v2Before,
@@ -253,7 +253,7 @@ class ViewOpsSpec extends SparkSuite {
     val src = tmp(); val view = tmp()
     VT.create(Seq((1L, "a", 1.5)).toDF("k", "g", "v"), src, statsCols = Seq("k"))
     val ex = intercept[IllegalArgumentException] {
-      ViewOps.refreshAggView(spark, src, view, Seq("k"), Seq("g"), Seq("v"))
+      ViewOps.refreshAggView(spark, src, view, Seq("g"), Seq("v"))
     }
     assert(ex.getMessage.contains("integral"))
   }
@@ -300,7 +300,7 @@ class ViewOpsSpec extends SparkSuite {
     // batch-cursor interop: a plain refreshAggView on the same view/app
     // id sees the stream's cursor and no-ops
     val vAfter = VT.currentVersion(spark, view).get
-    ViewOps.refreshAggView(spark, src, view, Seq("k"), Seq("g"), Seq("v"),
+    ViewOps.refreshAggView(spark, src, view, Seq("g"), Seq("v"),
       appId = "graft-ivm-stream")
     assert(VT.currentVersion(spark, view).contains(vAfter))
   }
@@ -311,24 +311,24 @@ class ViewOpsSpec extends SparkSuite {
     // it, and advanced the cursor — the view then served the deleted
     // rows' aggregates as FRESH. The fold must retract them instead.
     val src = tmp(); val view = tmp(); mkSource(src)
-    ViewOps.refreshAggView(spark, src, view, Seq("k"), Seq("g"), Seq("v"))
+    ViewOps.refreshAggView(spark, src, view, Seq("g"), Seq("v"))
     assert(viewNow(view) == reAgg(src))
     // pure-DV window: one DELETE, nothing else
     VT.commitDeleteDv(spark, src, $"k" === 3L)            // group b loses 30
-    ViewOps.refreshAggView(spark, src, view, Seq("k"), Seq("g"), Seq("v"))
+    ViewOps.refreshAggView(spark, src, view, Seq("g"), Seq("v"))
     assert(viewNow(view) == reAgg(src),
       "a deletion-vector DELETE window must retract, not fold empty")
     // mixed window: DV update + DV delete + ordinary append, one refresh
     VT.commitUpdateDv(spark, src, $"k" === 2L, Seq("v" -> lit(99L)))
     VT.commitDeleteDv(spark, src, $"k" === 5L)            // group c loses 50
     VT.commitAppend(Seq((7L, "c", 70L)).toDF("k", "g", "v"), src)
-    ViewOps.refreshAggView(spark, src, view, Seq("k"), Seq("g"), Seq("v"))
+    ViewOps.refreshAggView(spark, src, view, Seq("g"), Seq("v"))
     assert(viewNow(view) == reAgg(src),
       "DV commits must compose with appends inside one refresh window")
     // and the refresh stays incremental afterwards: the cursor really
     // did advance through the DV window
     VT.commitAppend(Seq((8L, "a", 80L)).toDF("k", "g", "v"), src)
-    ViewOps.refreshAggView(spark, src, view, Seq("k"), Seq("g"), Seq("v"))
+    ViewOps.refreshAggView(spark, src, view, Seq("g"), Seq("v"))
     assert(viewNow(view) == reAgg(src))
   }
 
@@ -340,7 +340,7 @@ class ViewOpsSpec extends SparkSuite {
     val root = Files.createTempDirectory("ivmdvpar").toString
     val src = s"$root/src"; val bview = s"$root/bv"; val sview = s"$root/sv"
     mkSource(src)
-    ViewOps.refreshAggView(spark, src, bview, Seq("k"), Seq("g"), Seq("v"))
+    ViewOps.refreshAggView(spark, src, bview, Seq("g"), Seq("v"))
     def drainStream(): Unit = {
       val q = ViewOps.maintainFromStream(spark, src, sview,
         Seq("k"), Seq("g"), Seq("v"), s"$root/ckpt")
@@ -349,7 +349,7 @@ class ViewOpsSpec extends SparkSuite {
     drainStream() // bootstrap
     VT.commitDeleteDv(spark, src, $"k" === 5L)            // group c loses 50
     VT.commitUpdateDv(spark, src, $"k" === 1L, Seq("v" -> lit(13L)))
-    ViewOps.refreshAggView(spark, src, bview, Seq("k"), Seq("g"), Seq("v"))
+    ViewOps.refreshAggView(spark, src, bview, Seq("g"), Seq("v"))
     drainStream()
     assert(viewNow(bview) == reAgg(src), "batch fold diverged from the source")
     assert(viewNow(sview) == viewNow(bview),
@@ -368,7 +368,7 @@ class ViewOpsSpec extends SparkSuite {
   test("refresh spans a source ALTER ADD COLUMNS: ledger advances, view exact") {
     val src = tmp(); val view = tmp(); mkSource(src)
     def refresh(): Long = ViewOps.refreshAggView(spark, src, view,
-      Seq("k"), Seq("g"), Seq("v"), appId = "evolve-ivm")
+      Seq("g"), Seq("v"), appId = "evolve-ivm")
     refresh() // bootstrap at v1
     // metadata-only evolution + an update that touches ONLY the new
     // column: the maintained measures' signed delta nets to zero

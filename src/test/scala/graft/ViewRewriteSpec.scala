@@ -40,7 +40,7 @@ class ViewRewriteSpec extends SparkSuite {
 
   test("fresh view answers COUNT/SUM/AVG; results equal the scan; plan reads the view") {
     val src = tmp(); val view = tmp(); mkSrc(src)
-    ViewOps.refreshAggView(spark, src, view, Seq("k"), Seq("g"), Seq("m", "o"))
+    ViewOps.refreshAggView(spark, src, view, Seq("g"), Seq("m", "o"))
     val q = VT.read(spark, src).groupBy("g")
       .agg(count(lit(1)).as("n_rows"), sum("m").as("sum_m"),
         count($"o").as("n_o"), sum("o").as("sum_o"), avg("m").as("avg_m"))
@@ -56,7 +56,7 @@ class ViewRewriteSpec extends SparkSuite {
 
   test("FRESH DRIVER still rewrites: the registry is durable sidecars, not memory") {
     val src = tmp(); val view = tmp(); mkSrc(src)
-    ViewOps.refreshAggView(spark, src, view, Seq("k"), Seq("g"), Seq("m"))
+    ViewOps.refreshAggView(spark, src, view, Seq("g"), Seq("m"))
     // simulate a restarted driver: in-memory registry (and its durable
     // listing cache) gone. The sidecar under <src>/_views must still
     // route the aggregate to the view — with the SAME freshness gates.
@@ -83,14 +83,14 @@ class ViewRewriteSpec extends SparkSuite {
 
   test("stale view falls back to the scan; the next refresh re-enables the rewrite") {
     val src = tmp(); val view = tmp(); mkSrc(src)
-    ViewOps.refreshAggView(spark, src, view, Seq("k"), Seq("g"), Seq("m"))
+    ViewOps.refreshAggView(spark, src, view, Seq("g"), Seq("m"))
     VT.commitAppend(Seq((7L, "c", 70L, Option.empty[java.lang.Long]))
       .toDF("k", "g", "m", "o"), src)
     val stale = VT.read(spark, src).groupBy("g").agg(sum("m").as("s"))
     assert(scannedDirs(stale) == Set(src),
       "a view one version behind must NOT answer the query")
     assert(stale.where($"g" === "c").head().getLong(1) == 180L)
-    ViewOps.refreshAggView(spark, src, view, Seq("k"), Seq("g"), Seq("m"))
+    ViewOps.refreshAggView(spark, src, view, Seq("g"), Seq("m"))
     val fresh = VT.read(spark, src).groupBy("g").agg(sum("m").as("s"))
     assert(scannedDirs(fresh) == Set(view))
     assert(fresh.where($"g" === "c").head().getLong(1) == 180L)
@@ -102,7 +102,7 @@ class ViewRewriteSpec extends SparkSuite {
     // judged the view FRESH, and the rewrite silently served the deleted
     // rows' aggregates. Pin all three stages.
     val src = tmp(); val view = tmp(); mkSrc(src)
-    ViewOps.refreshAggView(spark, src, view, Seq("k"), Seq("g"), Seq("m"))
+    ViewOps.refreshAggView(spark, src, view, Seq("g"), Seq("m"))
     assert(scannedDirs(VT.read(spark, src).groupBy("g")
       .agg(sum("m").as("s"))) == Set(view))
     VT.commitDeleteDv(spark, src, $"k" === 3L)   // group b loses m=30
@@ -113,7 +113,7 @@ class ViewRewriteSpec extends SparkSuite {
       "a view behind a DV commit must NOT answer the query")
     assert(stale.collect().map(r => (r.getString(0), r.getLong(1))).toSet ==
       Set(("a", 30L), ("b", 40L), ("c", 110L)))
-    ViewOps.refreshAggView(spark, src, view, Seq("k"), Seq("g"), Seq("m"))
+    ViewOps.refreshAggView(spark, src, view, Seq("g"), Seq("m"))
     val q = VT.read(spark, src).groupBy("g").agg(sum("m").as("s"))
     assert(scannedDirs(q) == Set(view),
       "the refreshed view must answer again after the DV window")
@@ -125,7 +125,7 @@ class ViewRewriteSpec extends SparkSuite {
   test("rollup to a group subset and group-column filters rewrite; others refuse") {
     val src = tmp(); val view = tmp(); mkSrc(src)
     // two group columns; queries may roll up to either
-    ViewOps.refreshAggView(spark, src, view, Seq("k"), Seq("g", "k"), Seq("m"))
+    ViewOps.refreshAggView(spark, src, view, Seq("g", "k"), Seq("m"))
     val roll = VT.read(spark, src).groupBy("g").agg(sum("m").as("s"),
       count(lit(1)).as("n"))
     assert(scannedDirs(roll) == Set(view), "subset grouping must roll up from the view")
@@ -155,7 +155,7 @@ class ViewRewriteSpec extends SparkSuite {
 
   test("SQL through the graft_vtable TVF rewrites; groups that empty out drop") {
     val src = tmp(); val view = tmp(); mkSrc(src)
-    ViewOps.refreshAggView(spark, src, view, Seq("k"), Seq("g"), Seq("m"))
+    ViewOps.refreshAggView(spark, src, view, Seq("g"), Seq("m"))
     val sql = spark.sql(
       s"""SELECT g, COUNT(*) AS n, SUM(m) AS s
          |FROM graft_vtable('$src') GROUP BY g ORDER BY g""".stripMargin)
@@ -165,7 +165,7 @@ class ViewRewriteSpec extends SparkSuite {
     // delete group b entirely; after refresh the view dropped its row and
     // the rewritten answer matches
     VT.commitDelete(spark, src, col("g") === "b")
-    ViewOps.refreshAggView(spark, src, view, Seq("k"), Seq("g"), Seq("m"))
+    ViewOps.refreshAggView(spark, src, view, Seq("g"), Seq("m"))
     val after = spark.sql(
       s"SELECT g, COUNT(*) AS n FROM graft_vtable('$src') GROUP BY g")
     assert(scannedDirs(after) == Set(view))
@@ -175,7 +175,7 @@ class ViewRewriteSpec extends SparkSuite {
 
   test("a recreated source never rewrites: identity beats a matching version cursor") {
     val src = tmp(); val view = tmp(); mkSrc(src)
-    ViewOps.refreshAggView(spark, src, view, Seq("k"), Seq("g"), Seq("m"))
+    ViewOps.refreshAggView(spark, src, view, Seq("g"), Seq("m"))
     // drop + recreate at the SAME path: versions restart at 1, so the
     // view's ledger cursor (src v1) MATCHES the new scan's pinned version
     // — only the table id tells them apart
@@ -191,7 +191,7 @@ class ViewRewriteSpec extends SparkSuite {
       == Set(("z", 999L)))
     // and the refresh path refuses loudly instead of freezing the view
     val ex = intercept[IllegalStateException](
-      ViewOps.refreshAggView(spark, src, view, Seq("k"), Seq("g"), Seq("m")))
+      ViewOps.refreshAggView(spark, src, view, Seq("g"), Seq("m")))
     assert(ex.getMessage.contains("recreated"), s"undiagnostic: ${ex.getMessage}")
   }
 
@@ -200,7 +200,7 @@ class ViewRewriteSpec extends SparkSuite {
     // vacuously satisfied — without the determinism gate the sample would
     // run over one-row-per-group VIEW rows instead of source rows
     val src = tmp(); val view = tmp(); mkSrc(src)
-    ViewOps.refreshAggView(spark, src, view, Seq("k"), Seq("g"), Seq("m"))
+    ViewOps.refreshAggView(spark, src, view, Seq("g"), Seq("m"))
     val sampled = VT.read(spark, src).where(rand(7) < 0.5)
       .groupBy("g").agg(count(lit(1)).as("n"))
     assert(scannedDirs(sampled) == Set(src),
@@ -215,7 +215,7 @@ class ViewRewriteSpec extends SparkSuite {
     val src = tmp(); val view = tmp(); mkSrc(src)
     VT.commitAppend(Seq((7L, "d", 70L, Option.empty[java.lang.Long]))
       .toDF("k", "g", "m", "o"), src)
-    ViewOps.refreshAggView(spark, src, view, Seq("k"), Seq("g"), Seq("m"))
+    ViewOps.refreshAggView(spark, src, view, Seq("g"), Seq("m"))
     // current scan (v2) rewrites; the v1 time travel must not
     val cur = VT.read(spark, src).groupBy("g").agg(count(lit(1)).as("n"))
     assert(scannedDirs(cur) == Set(view))
