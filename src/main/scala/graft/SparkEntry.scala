@@ -1120,7 +1120,7 @@ private[graft] object Queries {
       | FROM documents) WHERE rn = 1 ORDER BY doc_id""".stripMargin
 
   /** Exact 3-gram Jaccard near-dup pairs, blocked by source. The oracle
-    * replicates shingling + set ops in DuckDB list functions.
+    * is the prefix-filter join of [[prefixJaccardSql]] within each source.
     */
   def ngramJaccard(s: SparkSession, d: String): DataFrame =
     // Adaptive exact verification (DedupOps.jaccardPairsBlocked): this
@@ -1133,18 +1133,62 @@ private[graft] object Queries {
         candidatePairBudget = Some(JaccardCandidateBudget))
       .orderBy("id_a", "id_b")
 
-  private val ngramJaccardSql =
-    """WITH sh AS (
-      | SELECT doc_id, source,
-      |  list_distinct(list_transform(range(1, greatest(len(text)-2, 1)+1),
-      |    i -> substring(text, CAST(i AS INT), 3))) AS s
-      | FROM documents)
-      |SELECT id_a, id_b, jac FROM (
-      | SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-      |  CAST(len(list_intersect(a.s, b.s)) AS DOUBLE)
-      |    / len(list_distinct(a.s || b.s)) AS jac
-      | FROM sh a JOIN sh b ON a.source = b.source AND a.doc_id < b.doc_id)
-      |WHERE jac >= 0.6 ORDER BY id_a, id_b""".stripMargin
+  private val ngramJaccardSql = {
+    val (ctes, pairs) = prefixJaccardSql("0.6", Some("source"))
+    s"WITH $ctes\n$pairs ORDER BY id_a, id_b"
+  }
+
+  /** An exact trigram Jaccard self-join at threshold `t` (a SQL decimal
+    * literal, so `CEIL(t * sz)` is exact) in DuckDB, as its CTEs `sh` …
+    * `bits` and the (id_a, id_b, jac) query over them: a prefix-filter
+    * join. Candidates share one of their rarest-first prefix tokens (and
+    * the `block` column's value, when given), and each candidate's overlap
+    * is counted exactly over per-doc token-id bit words. Equal to the
+    * quadratic all-pairs SQL (checked at sf0.001 and sf0.01), it runs in
+    * seconds at sf0.1, where the quadratic form times out.
+    */
+  private def prefixJaccardSql(t: String, block: Option[String]): (String, String) = {
+    val blk = block.fold("")(b => s", $b")
+    val sameBlock = block.fold("")(b => s" AND a.$b = b.$b")
+    val ctes =
+      s"""sh AS (
+        | SELECT doc_id$blk,
+        |  list_distinct(list_transform(range(1, greatest(len(text)-2, 1)+1),
+        |    i -> substring(text, CAST(i AS INT), 3))) AS s
+        | FROM documents),
+        |tok AS (SELECT doc_id$blk, len(s) AS sz, unnest(s) AS t FROM sh),
+        |tf AS (SELECT t, COUNT(*) AS f FROM tok GROUP BY t),
+        |pre AS (
+        | SELECT doc_id$blk, sz, t FROM (
+        |  SELECT tok.*,
+        |   row_number() OVER (PARTITION BY tok.doc_id ORDER BY tf.f, tok.t) AS pos
+        |  FROM tok JOIN tf USING (t))
+        | WHERE pos <= sz - CEIL($t * sz) + 1),
+        |cand AS (
+        | SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b, a.sz AS sz_a, b.sz AS sz_b
+        | FROM pre a JOIN pre b ON a.t = b.t AND a.doc_id < b.doc_id$sameBlock
+        | WHERE b.sz >= CEIL($t * a.sz) AND a.sz >= CEIL($t * b.sz)),
+        |tid AS (SELECT t, row_number() OVER (ORDER BY t) - 1 AS i FROM tf),
+        |wd AS (
+        | SELECT tok.doc_id, tid.i // 62 AS w,
+        |  bit_or(CAST(1 AS BIGINT) << CAST(tid.i % 62 AS BIGINT)) AS b
+        | FROM tok JOIN tid USING (t) GROUP BY tok.doc_id, tid.i // 62),
+        |bits AS (
+        | SELECT d.doc_id, list(COALESCE(wd.b, CAST(0 AS BIGINT)) ORDER BY g.w) AS ws
+        | FROM (SELECT DISTINCT doc_id FROM tok) d
+        | CROSS JOIN (SELECT unnest(range((SELECT MAX(i) FROM tid) // 62 + 1)) AS w) g
+        | LEFT JOIN wd ON wd.doc_id = d.doc_id AND wd.w = g.w
+        | GROUP BY d.doc_id)""".stripMargin
+    val pairs =
+      s"""SELECT id_a, id_b, jac FROM (
+        | SELECT id_a, id_b,
+        |  CAST(inter AS DOUBLE) / CAST(sz_a + sz_b - inter AS DOUBLE) AS jac FROM (
+        |  SELECT c.id_a, c.id_b, c.sz_a, c.sz_b,
+        |   list_sum(list_transform(list_zip(a.ws, b.ws), x -> bit_count(x[1] & x[2]))) AS inter
+        |  FROM cand c JOIN bits a ON a.doc_id = c.id_a JOIN bits b ON b.doc_id = c.id_b))
+        |WHERE jac >= $t""".stripMargin
+    (ctes, pairs)
+  }
 
   /** MinHash+LSH near-dup candidates — hash-dependent, so no SQL oracle;
     * recall vs exact Jaccard is unit-tested (DedupSpec).
@@ -1226,42 +1270,10 @@ private[graft] object Queries {
       candidatePairBudget = Some(JaccardCandidateBudget))
       .orderBy("id_a", "id_b")
 
-  private val dedupJaccardGlobalSql =
-    """WITH sh AS (
-      | SELECT doc_id,
-      |  list_distinct(list_transform(range(1, greatest(len(text)-2, 1)+1),
-      |    i -> substring(text, CAST(i AS INT), 3))) AS s
-      | FROM documents),
-      |tok AS (SELECT doc_id, len(s) AS sz, unnest(s) AS t FROM sh),
-      |tf AS (SELECT t, COUNT(*) AS f FROM tok GROUP BY t),
-      |pre AS (
-      | SELECT doc_id, sz, t FROM (
-      |  SELECT tok.doc_id, tok.sz, tok.t,
-      |   row_number() OVER (PARTITION BY tok.doc_id ORDER BY tf.f, tok.t) AS pos
-      |  FROM tok JOIN tf USING (t))
-      | WHERE pos <= sz - CEIL(0.8 * sz) + 1),
-      |cand AS (
-      | SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b, a.sz AS sz_a, b.sz AS sz_b
-      | FROM pre a JOIN pre b ON a.t = b.t AND a.doc_id < b.doc_id
-      | WHERE b.sz >= CEIL(0.8 * a.sz) AND a.sz >= CEIL(0.8 * b.sz)),
-      |tid AS (SELECT t, row_number() OVER (ORDER BY t) - 1 AS i FROM tf),
-      |wd AS (
-      | SELECT tok.doc_id, tid.i // 62 AS w,
-      |  bit_or(CAST(1 AS BIGINT) << CAST(tid.i % 62 AS BIGINT)) AS b
-      | FROM tok JOIN tid USING (t) GROUP BY tok.doc_id, tid.i // 62),
-      |bits AS (
-      | SELECT d.doc_id, list(COALESCE(wd.b, CAST(0 AS BIGINT)) ORDER BY g.w) AS ws
-      | FROM (SELECT DISTINCT doc_id FROM tok) d
-      | CROSS JOIN (SELECT unnest(range((SELECT MAX(i) FROM tid) // 62 + 1)) AS w) g
-      | LEFT JOIN wd ON wd.doc_id = d.doc_id AND wd.w = g.w
-      | GROUP BY d.doc_id)
-      |SELECT id_a, id_b, jac FROM (
-      | SELECT id_a, id_b,
-      |  CAST(inter AS DOUBLE) / CAST(sz_a + sz_b - inter AS DOUBLE) AS jac FROM (
-      |  SELECT c.id_a, c.id_b, c.sz_a, c.sz_b,
-      |   list_sum(list_transform(list_zip(a.ws, b.ws), x -> bit_count(x[1] & x[2]))) AS inter
-      |  FROM cand c JOIN bits a ON a.doc_id = c.id_a JOIN bits b ON b.doc_id = c.id_b))
-      |WHERE jac >= 0.8 ORDER BY id_a, id_b""".stripMargin
+  private val dedupJaccardGlobalSql = {
+    val (ctes, pairs) = prefixJaccardSql("0.8", None)
+    s"WITH $ctes\n$pairs ORDER BY id_a, id_b"
+  }
 
   /** Connected components over an adversarial max-diameter graph: chain
     * consecutive doc_ids within each `lang`, so every component is a path
@@ -1343,43 +1355,10 @@ private[graft] object Queries {
       .orderBy("doc_id")
   }
 
-  private val dedupNearSql =
-    """WITH RECURSIVE sh AS (
-      | SELECT doc_id,
-      |  list_distinct(list_transform(range(1, greatest(len(text)-2, 1)+1),
-      |    i -> substring(text, CAST(i AS INT), 3))) AS s
-      | FROM documents),
-      |tok AS (SELECT doc_id, len(s) AS sz, unnest(s) AS t FROM sh),
-      |tf AS (SELECT t, COUNT(*) AS f FROM tok GROUP BY t),
-      |pre AS (
-      | SELECT doc_id, sz, t FROM (
-      |  SELECT tok.doc_id, tok.sz, tok.t,
-      |   row_number() OVER (PARTITION BY tok.doc_id ORDER BY tf.f, tok.t) AS pos
-      |  FROM tok JOIN tf USING (t))
-      | WHERE pos <= sz - CEIL(0.8 * sz) + 1),
-      |cand AS (
-      | SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b, a.sz AS sz_a, b.sz AS sz_b
-      | FROM pre a JOIN pre b ON a.t = b.t AND a.doc_id < b.doc_id
-      | WHERE b.sz >= CEIL(0.8 * a.sz) AND a.sz >= CEIL(0.8 * b.sz)),
-      |tid AS (SELECT t, row_number() OVER (ORDER BY t) - 1 AS i FROM tf),
-      |wd AS (
-      | SELECT tok.doc_id, tid.i // 62 AS w,
-      |  bit_or(CAST(1 AS BIGINT) << CAST(tid.i % 62 AS BIGINT)) AS b
-      | FROM tok JOIN tid USING (t) GROUP BY tok.doc_id, tid.i // 62),
-      |bits AS (
-      | SELECT d.doc_id, list(COALESCE(wd.b, CAST(0 AS BIGINT)) ORDER BY g.w) AS ws
-      | FROM (SELECT DISTINCT doc_id FROM tok) d
-      | CROSS JOIN (SELECT unnest(range((SELECT MAX(i) FROM tid) // 62 + 1)) AS w) g
-      | LEFT JOIN wd ON wd.doc_id = d.doc_id AND wd.w = g.w
-      | GROUP BY d.doc_id),
-      |p AS MATERIALIZED (
-      | SELECT id_a, id_b FROM (SELECT id_a, id_b, jac FROM (
-      | SELECT id_a, id_b,
-      |  CAST(inter AS DOUBLE) / CAST(sz_a + sz_b - inter AS DOUBLE) AS jac FROM (
-      |  SELECT c.id_a, c.id_b, c.sz_a, c.sz_b,
-      |   list_sum(list_transform(list_zip(a.ws, b.ws), x -> bit_count(x[1] & x[2]))) AS inter
-      |  FROM cand c JOIN bits a ON a.doc_id = c.id_a JOIN bits b ON b.doc_id = c.id_b))
-      |WHERE jac >= 0.8)),
+  private val dedupNearSql = {
+    val (ctes, pairs) = prefixJaccardSql("0.8", None)
+    s"""WITH RECURSIVE $ctes,
+      |p AS MATERIALIZED (SELECT id_a, id_b FROM ($pairs)),
       |e AS (SELECT id_a AS a, id_b AS b FROM p
       |      UNION ALL SELECT id_b, id_a FROM p),
       |reach(node, label) AS (
@@ -1391,6 +1370,7 @@ private[graft] object Queries {
       |FROM documents d LEFT JOIN comp ON d.doc_id = comp.node
       |WHERE comp.node IS NULL OR comp.node = comp.c
       |ORDER BY d.doc_id""".stripMargin
+  }
 
   /** EXACT Levenshtein-≤1 similarity self-join over customer names via
     * FastSS deletion-neighborhood blocking ([[graft.ops.DedupOps

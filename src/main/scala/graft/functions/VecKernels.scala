@@ -577,6 +577,34 @@ object VecKernels {
     if (f >= floor) f else -1.0
   }
 
+  /** Row i's pairs in a MinHash-LSH self-join over docs in id order:
+    * `bh(r·bands + b)` is row r's band-b hash and `next(r·bands + b)` the
+    * next row r' > r of its band-b bucket, -1 at the bucket's end. For
+    * each band b it walks row i's later bucket-mates j and checks a pair
+    * only in the FIRST band where the two rows' hashes agree, so a pair
+    * sharing several buckets is checked once. `emit` gets (j, est) for
+    * every est = [[sigEqFracGE]](sig i, sig j, t) ≥ t.
+    */
+  def lshPairsOf(sigs: Array[ArrayData], bh: Array[Int], next: Array[Int], bands: Int,
+                 threshold: Double, i: Int)(emit: (Int, Double) => Unit): Unit = {
+    val bi = i * bands
+    var b = 0
+    while (b < bands) {
+      var j = next(bi + b)
+      while (j >= 0) {
+        val bj = j * bands
+        var c = 0
+        while (c < b && bh(bi + c) != bh(bj + c)) c += 1
+        if (c == b) {
+          val est = sigEqFracGE(sigs(i), sigs(j), threshold)
+          if (est >= threshold) emit(j, est)
+        }
+        j = next(bj + b)
+      }
+      b += 1
+    }
+  }
+
   /** 64-bit SimHash over a token array: per-token xxhash64 (seed 42, same
     * as Spark's builtin), ±1 vote per bit, sign → bit.
     */

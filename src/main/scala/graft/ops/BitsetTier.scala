@@ -1,6 +1,7 @@
 package graft.ops
 
 import scala.collection.mutable.{ArrayBuffer, ArrayBuilder}
+import scala.reflect.ClassTag
 
 import org.apache.spark.sql.{DataFrame, GraftShim, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
@@ -137,6 +138,19 @@ private[graft] object BitsetTier {
       }
     }
     val n = ids.length
+    val rankOf = ranks(ids, idType)
+    val sizes = bits.map(_.iterator.map(java.lang.Long.bitCount).sum).toArray
+    val bySize = Array.range(0, n).sortBy(sizes(_))
+    new Corpus(bySize.map(bits(_)), bySize.map(sizes(_)), bySize.map(rankOf(_)),
+      bySize.map(ids(_)))
+  }
+
+  /** Each id's rank under the id type's Spark ordering
+    * (`InterpretedOrdering`), equal for equal ids: the ranks keep any id
+    * type's `a.id < b.id` order.
+    */
+  def ranks(ids: collection.IndexedSeq[Any], idType: DataType): Array[Int] = {
+    val n = ids.length
     val ord = InterpretedOrdering.forSchema(Seq(idType))
     val keys = ids.map(InternalRow(_))
     val byId = Array.range(0, n).sortWith((x, y) => ord.lt(keys(x), keys(y)))
@@ -146,10 +160,7 @@ private[graft] object BitsetTier {
       if (k > 0 && ord.compare(keys(byId(k - 1)), keys(byId(k))) != 0) r += 1
       rankOf(byId(k)) = r
     }
-    val sizes = bits.map(_.iterator.map(java.lang.Long.bitCount).sum).toArray
-    val bySize = Array.range(0, n).sortBy(sizes(_))
-    new Corpus(bySize.map(bits(_)), bySize.map(sizes(_)), bySize.map(rankOf(_)),
-      bySize.map(ids(_)))
+    rankOf
   }
 
   /** Stripe p of `width`: the (id_a, id_b, jac) rows of the corpus rows
@@ -165,18 +176,30 @@ private[graft] object BitsetTier {
     }
 
   /** Step 2: the (id_a, id_b, jac) pairs with jac ≥ `threshold` and id_a <
-    * id_b, over the one broadcast of [[corpus]] (the result holds it, and
-    * Spark's ContextCleaner drops it with the plan).
+    * id_b, over the one broadcast of [[corpus]].
     */
   def pairs(spark: SparkSession, probe: Probe, idField: StructField,
-            threshold: Double, width: Int): DataFrame = {
-    val bc = spark.sparkContext.broadcast(corpus(probe, idField.dataType))
-    val rows = spark.sparkContext.parallelize(0 until width, width)
-      .mapPartitions(_.flatMap(p => stripe(bc.value, threshold, p, width)))
-    val output = Seq(
+            threshold: Double, docs: Long): DataFrame =
+    striped(spark, corpus(probe, idField.dataType), docs, Seq(
       AttributeReference("id_a", idField.dataType, idField.nullable)(),
       AttributeReference("id_b", idField.dataType, idField.nullable)(),
-      AttributeReference("jac", DoubleType, nullable = false)())
+      AttributeReference("jac", DoubleType, nullable = false)())) {
+      (c, p, width) => stripe(c, threshold, p, width)
+    }
+
+  /** The pair job of a driver-built corpus: `corpus` is broadcast once,
+    * and the returned DataFrame is a `LogicalRDD` over one RDD job of
+    * `width` = min(`defaultParallelism`, `docs`) tasks, task p returning
+    * `stripe(corpus, p, width)`. The result holds the broadcast, and
+    * Spark's ContextCleaner drops it with the plan.
+    */
+  def striped[C: ClassTag](spark: SparkSession, corpus: C, docs: Long,
+                           output: Seq[AttributeReference])
+                          (stripe: (C, Int, Int) => Iterator[InternalRow]): DataFrame = {
+    val width = math.max(1L, math.min(spark.sparkContext.defaultParallelism.toLong, docs)).toInt
+    val bc = spark.sparkContext.broadcast(corpus)
+    val rows = spark.sparkContext.parallelize(0 until width, width)
+      .mapPartitions(_.flatMap(p => stripe(bc.value, p, width)))
     GraftShim.dataFrame(spark, LogicalRDD(output, rows)(
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]))
   }

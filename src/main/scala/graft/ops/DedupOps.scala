@@ -11,8 +11,9 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * Scale design: exact/hash dedup is one shuffle on the hash key; MinHash
   * signatures and SimHash are per-row expressions (no shuffle); LSH candidate
-  * generation shuffles (band_idx, band_hash) — a high-cardinality key that
-  * partitions evenly — and never materializes the O(n²) pair space.
+  * generation past [[BruteForceMaxDocs]] docs shuffles (band_idx,
+  * band_hash) — a high-cardinality key that partitions evenly — and never
+  * materializes the O(n²) pair space.
   */
 object DedupOps {
 
@@ -91,19 +92,52 @@ object DedupOps {
     sigs.select(col("id"), col("sig"),
       posexplode(lshBandHashes(col("sig"), bands, k / bands)).as(Seq("band", "bhash")))
 
-  /** MinHash-LSH candidate pairs above an estimated-Jaccard threshold.
+  /** MinHash-LSH candidate pairs above an estimated-Jaccard threshold:
+    * (id_a, id_b, est_jaccard) with id_a < id_b under the id column's
+    * ordering, for every pair sharing a (band, band hash) bucket whose
+    * signature estimate is ≥ `threshold`. `bands` must lie in 1..k.
     *
-    * Plan shape (the part that must survive 100×): per-row signature +
-    * band hashes (narrow) → posexplode to (band, hash) → self-equi-join on
-    * the band key (shuffle partitions by band hash — uniform) → distinct
-    * pair ids → verify with the signature estimate. The quadratic blowup is
-    * confined to rows sharing a band hash, i.e. actual near-dup clusters.
+    * Two routes, equal in rows, estimates and schema:
+    *  - bounded: non-streaming input of at most [[BruteForceMaxDocs]] rows
+    *    (one `toRdd.count()` over the input) runs [[MinhashTier]]: one
+    *    probe job computes each doc's signature and band hashes once, the
+    *    driver broadcasts them in id order, and one striped job of
+    *    min(`defaultParallelism`, docs) tasks checks each bucket pair in
+    *    the first band its docs share, so no join, shuffle or distinct
+    *    runs. The driver holds at most [[BruteForceMaxDocs]] × (8·k +
+    *    4·bands) bytes plus the ids. The salt confs do not apply there: the
+    *    stripes already spread a hot bucket's pairs over the tasks. Two
+    *    docs with one id send the input to the join route.
+    *  - the join route ([[minhashLshPairsFromSignatures]]) for anything
+    *    else: per-row signature + band hashes (narrow) → posexplode to
+    *    (band, hash) → self-equi-join on the band key (shuffle partitions
+    *    by band hash — uniform; hot buckets salted) → distinct pair ids →
+    *    verify with the signature estimate. The quadratic blowup is
+    *    confined to rows sharing a band hash, i.e. actual near-dup
+    *    clusters.
     */
   def minhashLshPairs(df: DataFrame, idCol: String, textCol: String,
                       n: Int = 3, k: Int = 64, bands: Int = 16,
-                      threshold: Double = 0.5): DataFrame =
-    minhashLshPairsFromSignatures(minhashSignatures(df, idCol, textCol, n, k),
-      k, bands, threshold)
+                      threshold: Double = 0.5): DataFrame = {
+    requireBands(k, bands)
+    val sigs = minhashSignatures(df, idCol, textCol, n, k)
+    Option.when(!df.isStreaming)(inputRows(df, idCol)).filter(_ <= BruteForceMaxDocs)
+      .flatMap(rows => MinhashTier.pairs(sigs.select(col("id"), col("sig"),
+        lshBandHashes(col("sig"), bands, k / bands).as("bh")), bands, threshold, rows))
+      .getOrElse(minhashLshPairsFromSignatures(sigs, k, bands, threshold))
+  }
+
+  /** The input's row count: one job over its own splits, without a
+    * spread shuffle or `Dataset.count`'s aggregate exchange.
+    */
+  private def inputRows(df: DataFrame, idCol: String): Long =
+    df.select(col(idCol)).queryExecution.toRdd.count()
+
+  /** `k / bands` rows per band needs 1 ≤ bands ≤ k: past k every band is
+    * an empty slice, one bucket holding every doc.
+    */
+  private def requireBands(k: Int, bands: Int): Unit =
+    require(bands >= 1 && bands <= k, s"LSH bands must lie in 1..k = $k, got $bands")
 
   /** INCREMENTAL MinHash-LSH: near-dup pairs BETWEEN an existing corpus
     * and a new batch — the daily-crawl shape. Re-running
@@ -143,6 +177,7 @@ object DedupOps {
   def minhashLshPairsAgainstSignatures(corpusSigs: DataFrame, batchSigs: DataFrame,
                                        k: Int = 64, bands: Int = 16,
                                        threshold: Double = 0.5): DataFrame = {
+    requireBands(k, bands)
     val a = bandExplode(corpusSigs, k, bands).alias("a")
     val b = bandExplode(batchSigs, k, bands).alias("b")
     a.join(b,
@@ -159,7 +194,8 @@ object DedupOps {
     * batch's one shingling pass with the cross-pairs half.
     */
   def minhashLshPairsFromSignatures(sigs: DataFrame, k: Int = 64, bands: Int = 16,
-                                    threshold: Double = 0.5): DataFrame =
+                                    threshold: Double = 0.5): DataFrame = {
+    requireBands(k, bands)
     // Verify BEFORE deduplicating: the estimator is a cheap native kernel,
     // so re-evaluating it once per agreeing band costs less than shuffling
     // both 8·k-byte signatures through dropDuplicates. The surviving rows
@@ -169,6 +205,7 @@ object DedupOps {
     bandedCandidatePairs(bandExplode(sigs, k, bands), Nil, threshold)
       .dropDuplicates("id_a", "id_b")
       .select("id_a", "id_b", "est_jaccard")
+  }
 
   /** The FULL daily ingest round over a persisted signature table, as one
     * call: read the corpus's stored signatures, emit every near-dup pair
@@ -436,11 +473,8 @@ object DedupOps {
       .agg(coalesce(sum((col("c") * (col("c") - lit(1)) / 2).cast("long")), lit(0L)),
         coalesce(sum(col("c")), lit(0L)))
       .as[(Long, Long)].first()
-    // the global doc count is the input's row count: one job over the
-    // input's own splits, without the spread shuffle or Dataset.count's
-    // aggregate exchange
     lazy val nDocs: Option[Long] =
-      if (blk.isEmpty) Some(df.select(col(idCol)).queryExecution.toRdd.count())
+      if (blk.isEmpty) Some(inputRows(df, idCol))
       else budget.map(_ => blockHist._2)
     lazy val bounded = nDocs.exists(_ <= bruteMaxDocs)
     val cap = math.min(math.max(maxBitsetUniverse, 0L), Int.MaxValue - 1L).toInt
@@ -509,10 +543,7 @@ object DedupOps {
       }
       tier match {
         case JaccardPlan.Bitset if blk.isEmpty =>
-          // one pair task per core, or per doc when there are fewer docs
-          val width = math.max(1L, math.min(
-            spark.sparkContext.defaultParallelism.toLong, nDocs.get)).toInt
-          BitsetTier.pairs(spark, probe, docs.schema("id"), threshold, width)
+          BitsetTier.pairs(spark, probe, docs.schema("id"), threshold, nDocs.get)
         case JaccardPlan.Bitset =>
           val dict = spark.sparkContext.broadcast(
             capped.map(UTF8String.fromString).sortWith(_.binaryCompare(_) < 0))
@@ -915,7 +946,8 @@ object DedupOps {
     * 10k docs → ≤50M size-band checks, mostly rejected before any popcount
     * — cheaper than the prefix join's explode/shuffle/distinct pipeline.
     * Past this, quadratic growth loses to the prefix filter no matter how
-    * cheap the per-pair verify is.
+    * cheap the per-pair verify is. [[minhashLshPairs]] takes its driver
+    * tier ([[MinhashTier]]) up to the same count.
     */
   val BruteForceMaxDocs: Long = 10000L
 

@@ -41,8 +41,10 @@ class DedupSpec extends SparkSuite {
       "spark.sql.adaptive.coalescePartitions.enabled" -> "false",
       "spark.sql.autoBroadcastJoinThreshold" -> "-1",
       "spark.sql.adaptive.autoBroadcastJoinThreshold" -> "-1") {
-      val pairs = DedupOps.minhashLshPairs(df, "doc_id", "text",
-        n = 3, k = 64, bands = 1, threshold = 0.9)
+      // the join route: 808 docs would take the bounded driver tier
+      val pairs = DedupOps.minhashLshPairsFromSignatures(
+        DedupOps.minhashSignatures(df, "doc_id", "text", n = 3, k = 64),
+        k = 64, bands = 1, threshold = 0.9)
       val qe = pairs.queryExecution
       // execute THIS plan (a fresh count() would build a different one)
       val n = qe.executedPlan.execute().count()
@@ -301,9 +303,11 @@ class DedupSpec extends SparkSuite {
     // must reproduce the unsalted join's pair set and estimates. salt=2
     // forces every bucket through the sub-group path (g = ceil(m/2)).
     val sample = docs.limit(400).cache()
+    // the join route: 400 docs would take the bounded driver tier
     def runPlain() =
-      DedupOps.minhashLshPairs(sample, "doc_id", "text",
-          n = 3, k = 64, bands = 8, threshold = 0.5)
+      DedupOps.minhashLshPairsFromSignatures(
+          DedupOps.minhashSignatures(sample, "doc_id", "text", n = 3, k = 64),
+          k = 64, bands = 8, threshold = 0.5)
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
     def runGlobal() =
       DedupOps.jaccardPairsGlobal(sample, "doc_id", "text", 3, 0.6,
@@ -795,5 +799,72 @@ class DedupSpec extends SparkSuite {
       Thread.sleep(200)
     }
     assert(leftover == ((Set.empty, Set.empty)), s"left behind (pins, broadcasts): $leftover")
+  }
+
+  test("minhash-LSH tier == join route: rows, estimates and schema on edge-case docs") {
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.catalyst.plans.logical.Join
+    val base = docs.limit(60).select($"doc_id", $"text").as[(Long, String)].collect().toSeq
+    val t0 = base.head._2
+    val edge = base.map { case (i, t) => (Option(i), t) } ++ Seq[(Option[Long], String)](
+      (None, t0), (None, t0), // null ids never pair
+      (Some(9001L), null), (Some(9002L), null), // null texts never pair
+      (Some(9003L), "ab"), (Some(9004L), "ab"), // shorter than n
+      (Some(9005L), ""), (Some(9006L), ""), // empty texts
+      (Some(9007L), t0)) // a copy of the first doc
+    val inputs = Seq[(String, DataFrame, Boolean)](
+      ("non-null ids", base.toDF("doc_id", "text"), false),
+      ("long ids", edge.toDF("doc_id", "text"), false),
+      ("string ids", edge.map { case (i, t) => (i.map(v => s"d$v"), t) }.toDF("doc_id", "text"),
+        false),
+      // one id twice, on equal texts, so the join route's estimate is unique
+      ("duplicate ids", (edge :+ ((Some(9007L), t0))).toDF("doc_id", "text"), true))
+    def joins(df: DataFrame) = df.queryExecution.analyzed.collect { case j: Join => j }.size
+    for ((name, df, fallback) <- inputs; (k, bands, t) <- Seq((64, 16, 0.5), (60, 7, 0.3))) {
+      val tier = DedupOps.minhashLshPairs(df, "doc_id", "text", 3, k, bands, t)
+      val join = DedupOps.minhashLshPairsFromSignatures(
+        DedupOps.minhashSignatures(df, "doc_id", "text", 3, k), k, bands, t)
+      assert((joins(tier) > 0) == fallback, s"$name: the tier ran ${if (fallback) "" else "no "}join")
+      assert(tier.schema == join.schema, s"$name: ${tier.schema} vs ${join.schema}")
+      val (got, want) = (tier.collect().toSeq, join.collect().toSeq)
+      assert(got.size == got.toSet.size, s"$name: a pair emitted twice")
+      assert(got.toSet == want.toSet, s"$name, k $k, bands $bands: " +
+        s"missing ${(want.toSet -- got).take(3)}, extra ${(got.toSet -- want).take(3)}")
+      assert(want.nonEmpty, s"$name: no pairs to compare")
+    }
+  }
+
+  test("minhash-LSH tier: a bounded call + collect runs <= 3 jobs, no join, pairs on every core") {
+    val input = docs.limit(400).select($"doc_id", $"text").cache()
+    input.count()
+    val width = math.min(spark.sparkContext.defaultParallelism, 400)
+    var pairs: org.apache.spark.sql.DataFrame = null
+    val jobs = jobTasksOf {
+      pairs = DedupOps.minhashLshPairs(input, "doc_id", "text")
+      pairs.collect()
+    }
+    // the doc count, the probe and the pair job
+    assert(jobs.size <= 3, s"bounded minhash-LSH call + collect: ${jobs.size} jobs " +
+      s"(tasks per job ${jobs.mkString(", ")}), want <= 3")
+    assert(jobs.last == width, s"pair job ran ${jobs.last} tasks, want $width")
+    // no pair row passes through a join, an exchange or an aggregate
+    val plan = pairs.queryExecution.executedPlan
+    assert(!plan.collect { case p => p.nodeName }.exists(n =>
+      Seq("Join", "Exchange", "Aggregate").exists(n.contains)), s"tier result plan:\n$plan")
+    input.unpersist()
+  }
+
+  test("LSH bands outside 1..k are rejected on every entry point") {
+    val df = Seq((1L, "abcdef"), (2L, "abcdeg")).toDF("doc_id", "text")
+    val sigs = DedupOps.minhashSignatures(df, "doc_id", "text", 3, 8)
+    for (bands <- Seq(-1, 0, 9, 64)) {
+      intercept[IllegalArgumentException](
+        DedupOps.minhashLshPairs(df, "doc_id", "text", 3, 8, bands, 0.5))
+      intercept[IllegalArgumentException](
+        DedupOps.minhashLshPairsFromSignatures(sigs, 8, bands, 0.5))
+      intercept[IllegalArgumentException](
+        DedupOps.minhashLshPairsAgainstSignatures(sigs, sigs, 8, bands, 0.5))
+    }
+    assert(DedupOps.minhashLshPairs(df, "doc_id", "text", 3, 8, 8, 0.5).count() <= 1)
   }
 }
