@@ -3,6 +3,8 @@ package graft.ops
 import scala.collection.mutable.{ArrayBuffer, ArrayBuilder}
 import scala.reflect.ClassTag
 
+import org.apache.spark.SparkContext
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, GraftShim, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{AttributeReference, InterpretedOrdering}
@@ -195,12 +197,20 @@ private[graft] object BitsetTier {
     */
   def striped[C: ClassTag](spark: SparkSession, corpus: C, docs: Long,
                            output: Seq[AttributeReference])
-                          (stripe: (C, Int, Int) => Iterator[InternalRow]): DataFrame = {
-    val width = math.max(1L, math.min(spark.sparkContext.defaultParallelism.toLong, docs)).toInt
-    val bc = spark.sparkContext.broadcast(corpus)
-    val rows = spark.sparkContext.parallelize(0 until width, width)
-      .mapPartitions(_.flatMap(p => stripe(bc.value, p, width)))
+                          (stripe: (C, Int, Int) => Iterator[InternalRow]): DataFrame =
+    frame(spark, output, stripedRows(spark.sparkContext, corpus, docs)(stripe))
+
+  /** The RDD of [[striped]]: one broadcast of `corpus`, `width` tasks. */
+  def stripedRows[C: ClassTag](sc: SparkContext, corpus: C, docs: Long)
+                              (stripe: (C, Int, Int) => Iterator[InternalRow]): RDD[InternalRow] = {
+    val width = math.max(1L, math.min(sc.defaultParallelism.toLong, docs)).toInt
+    val bc = sc.broadcast(corpus)
+    sc.parallelize(0 until width, width).mapPartitions(_.flatMap(p => stripe(bc.value, p, width)))
+  }
+
+  /** A DataFrame of `output` columns over `rows`, a `LogicalRDD`. */
+  def frame(spark: SparkSession, output: Seq[AttributeReference],
+            rows: RDD[InternalRow]): DataFrame =
     GraftShim.dataFrame(spark, LogicalRDD(output, rows)(
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]))
-  }
 }

@@ -99,15 +99,15 @@ object DedupOps {
     *
     * Two routes, equal in rows, estimates and schema:
     *  - bounded: non-streaming input of at most [[BruteForceMaxDocs]] rows
-    *    (one `toRdd.count()` over the input) runs [[MinhashTier]]: one
-    *    probe job computes each doc's signature and band hashes once, the
-    *    driver broadcasts them in id order, and one striped job of
-    *    min(`defaultParallelism`, docs) tasks checks each bucket pair in
-    *    the first band its docs share, so no join, shuffle or distinct
-    *    runs. The driver holds at most [[BruteForceMaxDocs]] × (8·k +
-    *    4·bands) bytes plus the ids. The salt confs do not apply there: the
-    *    stripes already spread a hot bucket's pairs over the tasks. Two
-    *    docs with one id send the input to the join route.
+    *    runs [[MinhashTier]]: one probe job computes each doc's signature
+    *    and band hashes once, the driver broadcasts them in id order, and
+    *    one striped job of min(`defaultParallelism`, docs) tasks checks
+    *    each bucket pair in the first band its docs share, so no join,
+    *    shuffle or distinct runs. The driver holds at most
+    *    [[BruteForceMaxDocs]] × (8·k + 4·bands) bytes plus the ids. The
+    *    salt confs do not apply there: the stripes already spread a hot
+    *    bucket's pairs over the tasks. Two docs with one id send the input
+    *    to the join route.
     *  - the join route ([[minhashLshPairsFromSignatures]]) for anything
     *    else: per-row signature + band hashes (narrow) → posexplode to
     *    (band, hash) → self-equi-join on the band key (shuffle partitions
@@ -115,16 +115,25 @@ object DedupOps {
     *    verify with the signature estimate. The quadratic blowup is
     *    confined to rows sharing a band hash, i.e. actual near-dup
     *    clusters.
+    *
+    * Building the result runs no job on non-streaming input either: the
+    * count (one job over the input's splits, each partition reading at
+    * most [[BruteForceMaxDocs]] + 1 rows), the probe and the route choice
+    * run when the first action over the result needs its rows. That
+    * action's answer is a snapshot: later actions on the same DataFrame
+    * reuse its route and, on the bounded route, its probed docs, without
+    * re-reading the input (the join route reuses its shuffle outputs).
     */
   def minhashLshPairs(df: DataFrame, idCol: String, textCol: String,
                       n: Int = 3, k: Int = 64, bands: Int = 16,
                       threshold: Double = 0.5): DataFrame = {
     requireBands(k, bands)
     val sigs = minhashSignatures(df, idCol, textCol, n, k)
-    Option.when(!df.isStreaming)(inputRows(df, idCol)).filter(_ <= BruteForceMaxDocs)
-      .flatMap(rows => MinhashTier.pairs(sigs.select(col("id"), col("sig"),
-        lshBandHashes(col("sig"), bands, k / bands).as("bh")), bands, threshold, rows))
-      .getOrElse(minhashLshPairsFromSignatures(sigs, k, bands, threshold))
+    if (df.isStreaming) minhashLshPairsFromSignatures(sigs, k, bands, threshold)
+    else MinhashTier.pairs(sigs.select(col("id"), col("sig"),
+        lshBandHashes(col("sig"), bands, k / bands).as("bh")), bands, threshold,
+        rowsUpTo(df, idCol, BruteForceMaxDocs))(
+      minhashLshPairsFromSignatures(sigs, k, bands, threshold))
   }
 
   /** The input's row count: one job over its own splits, without a
@@ -132,6 +141,14 @@ object DedupOps {
     */
   private def inputRows(df: DataFrame, idCol: String): Long =
     df.select(col(idCol)).queryExecution.toRdd.count()
+
+  /** The input's row count when it is at most `cap`, else None: the
+    * [[inputRows]] job with each partition stopping at cap + 1 rows.
+    */
+  private def rowsUpTo(df: DataFrame, idCol: String, cap: Long): Option[Long] =
+    Some(df.select(col(idCol)).queryExecution.toRdd
+      .mapPartitions(rows => Iterator(rows.take(cap.toInt + 1).length.toLong))
+      .collect().sum).filter(_ <= cap)
 
   /** `k / bands` rows per band needs 1 ≤ bands ≤ k: past k every band is
     * an empty slice, one bucket holding every doc.

@@ -56,7 +56,6 @@ class ContractSpec extends SparkSuite {
       "q_heavy_hitters",        // MG candidate pass before pass 2 plans
       "q_ngram_jaccard",        // sampled tier probe + localCheckpoint
       "q_dedup_jaccard_global", // corpus/universe counts for tier choice
-      "q_dedup_minhash",        // corpus count + MinHash tier probe
       "q_dedup_near",           // localCheckpoint per CC round
       "q_dedup_cluster",        // localCheckpoint per CC round
       "q_components_sql",       // graft_components TVF resolves at analysis

@@ -802,8 +802,10 @@ class DedupSpec extends SparkSuite {
   }
 
   test("minhash-LSH tier == join route: rows, estimates and schema on edge-case docs") {
+    import org.apache.spark.ShuffleDependency
+    import org.apache.spark.rdd.RDD
     import org.apache.spark.sql.DataFrame
-    import org.apache.spark.sql.catalyst.plans.logical.Join
+    import org.apache.spark.sql.execution.LogicalRDD
     val base = docs.limit(60).select($"doc_id", $"text").as[(Long, String)].collect().toSeq
     val t0 = base.head._2
     val edge = base.map { case (i, t) => (Option(i), t) } ++ Seq[(Option[Long], String)](
@@ -819,14 +821,20 @@ class DedupSpec extends SparkSuite {
         false),
       // one id twice, on equal texts, so the join route's estimate is unique
       ("duplicate ids", (edge :+ ((Some(9007L), t0))).toDF("doc_id", "text"), true))
-    def joins(df: DataFrame) = df.queryExecution.analyzed.collect { case j: Join => j }.size
+    // the join route's rows come through a shuffle; the tier's never do
+    def shuffles(rdd: RDD[_]): Boolean = rdd.dependencies.exists {
+      case _: ShuffleDependency[_, _, _] => true
+      case d => shuffles(d.rdd)
+    }
+    def joined(df: DataFrame) =
+      shuffles(df.queryExecution.analyzed.collectFirst { case l: LogicalRDD => l.rdd }.get)
     for ((name, df, fallback) <- inputs; (k, bands, t) <- Seq((64, 16, 0.5), (60, 7, 0.3))) {
       val tier = DedupOps.minhashLshPairs(df, "doc_id", "text", 3, k, bands, t)
       val join = DedupOps.minhashLshPairsFromSignatures(
         DedupOps.minhashSignatures(df, "doc_id", "text", 3, k), k, bands, t)
-      assert((joins(tier) > 0) == fallback, s"$name: the tier ran ${if (fallback) "" else "no "}join")
       assert(tier.schema == join.schema, s"$name: ${tier.schema} vs ${join.schema}")
       val (got, want) = (tier.collect().toSeq, join.collect().toSeq)
+      assert(joined(tier) == fallback, s"$name: the tier ran ${if (fallback) "" else "no "}join")
       assert(got.size == got.toSet.size, s"$name: a pair emitted twice")
       assert(got.toSet == want.toSet, s"$name, k $k, bands $bands: " +
         s"missing ${(want.toSet -- got).take(3)}, extra ${(got.toSet -- want).take(3)}")
@@ -834,15 +842,14 @@ class DedupSpec extends SparkSuite {
     }
   }
 
-  test("minhash-LSH tier: a bounded call + collect runs <= 3 jobs, no join, pairs on every core") {
+  test("minhash-LSH tier: building runs no job, a collect <= 3, no join, pairs on every core") {
     val input = docs.limit(400).select($"doc_id", $"text").cache()
     input.count()
     val width = math.min(spark.sparkContext.defaultParallelism, 400)
     var pairs: org.apache.spark.sql.DataFrame = null
-    val jobs = jobTasksOf {
-      pairs = DedupOps.minhashLshPairs(input, "doc_id", "text")
-      pairs.collect()
-    }
+    val built = jobTasksOf { pairs = DedupOps.minhashLshPairs(input, "doc_id", "text") }
+    assert(built.isEmpty, s"building the result ran ${built.size} jobs, want 0")
+    val jobs = jobTasksOf(pairs.collect())
     // the doc count, the probe and the pair job
     assert(jobs.size <= 3, s"bounded minhash-LSH call + collect: ${jobs.size} jobs " +
       s"(tasks per job ${jobs.mkString(", ")}), want <= 3")
